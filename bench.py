@@ -24,323 +24,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES
+from glue_etl_nyc_yellow_taxi_analysis_spark.registry import HEADLINE
 from glue_etl_nyc_yellow_taxi_analysis_spark.session import get_spark
-
-HEADLINE = [
-    "q_scan_project_filter",
-    "q_rename_cast",
-    "q_dedup_exact",
-    "q_join_broadcast_dim",
-    "q_join_semi",
-    "q_star_agg",
-    "q_window_rank",
-    "q_sort_limit_topk",
-    "q_event_sessionize",
-    "q_session_windows",
-    "q_text_stats",
-    "q_lang_id",
-    "q_doc_fingerprint",
-    "q_similarity_topk",
-    "q_generator_dim_date",
-    "q_json_extract",
-    "q_running_total",
-    "q_rollup_agg",
-    "q_asof_join",
-    "q_range_join_bands",
-    "q_cube_agg",
-    "q_word_count",
-    "q_lag_lead_delta",
-    "q_corr_stats",
-    "q_grouping_sets",
-    "q_conditional_agg",
-    "q_moving_avg",
-    "q_sliding_windows",
-    "q_sql_local_supplier",
-    # extension-II batch (round 1, appended after first green run —
-    # BASELINE.md carries their first-run numbers in the same table)
-    "q_gap_fill",
-    "q_funnel",
-    "q_rolling_anomaly",
-    "q_cohort_retention",
-    "q_stratified_sample",
-    "q_incremental_agg",
-    "q_zorder_code",
-    "q_scd2_pit",
-    "q_median_mode",
-    "q_sql_volume_shipping",
-    # extension-III batch (round 1): TPC-H completion + quality ops
-    "q_sql_market_share",
-    "q_sql_cust_distribution",
-    "q_sql_top_supplier",
-    "q_sql_large_volume_cust",
-    "q_sql_waiting_suppliers",
-    "q_pii_scrub",
-    "q_token_entropy",
-    "q_repetition_ratio",
-    "q_bigram_topk",
-    # extension-IV batch (round 1): sequence analytics + exact-at-scale
-    "q_islands_gaps",
-    "q_interval_overlap",
-    "q_weighted_stats",
-    "q_markov_transitions",
-    "q_listagg",
-    "q_bitmap_distinct",
-    "q_salted_agg",
-    "q_struct_ops",
-    "q_time_weighted_avg",
-    "q_char_ngram_profile",
-    # extension-V/VI batches (round 1): numeric, window-frame, set/binary
-    "q_math_battery",
-    "q_trailing_window_range",
-    "q_pivot_dynamic",
-    "q_set_ops_all",
-    "q_binary_funcs",
-    # extension-VII batch (round 1): indexing, skyline, profile, checksum
-    "q_global_index",
-    "q_pareto_frontier",
-    "q_summary_stats",
-    "q_table_checksum",
-    # extension-VIII batch (round 1): analytics & change management
-    "q_pareto_share",
-    "q_rfm_segmentation",
-    "q_price_volume_bridge",
-    "q_nest_orders",
-    "q_snapshot_diff",
-    "q_inverted_index",
-    # extension-IX batch (round 1): integrity, retrieval, sequence, graph
-    "q_fk_orphans",
-    "q_bm25_search",
-    "q_event_pattern",
-    "q_attribution",
-    "q_key_skew_profile",
-    "q_triangle_count",
-    # extension-X batch (round 1): TPC-H completion + curation gates
-    "q_sql_min_cost_supplier",
-    "q_sql_product_profit",
-    "q_contamination_check",
-    "q_quality_filter_funnel",
-    # extension-XI batch (round 1): Spark-4 platform surfaces
-    "q_python_datasource",
-    "q_session_window_native",
-    # extension-XII / late additions: graph + pandas API
-    "q_graph_bfs",
-    "q_pandas_api",
-    # round-2 batch: oracle-lane dedup/ANN twins + training-pipeline ops
-    # (BASELINE.md carries their first-run numbers, same convention as
-    # the round-1 extension batches)
-    "q_minhash_dedup_oracle",
-    "q_simhash_oracle",
-    "q_ann_ivf_oracle",
-    "q_boilerplate_ratio",
-    "q_hash_sample",
-    "q_embedding_quantize",
-    "q_bpe_pair_counts",
-    "q_sequence_packing",
-    "q_winnow_fingerprints",
-    "q_multimodal_framesample",
-    # round-3 batch: flagship star pipeline + LSH oracle lane + curation
-    "q_taxi_star_deterministic",
-    "q_ann_lsh_oracle",
-    "q_multimodal_resize",
-    "q_dedup_cross_source",
-    "q_doc_logprob",
-    "q_semdedup",
-    "q_line_dedup",
-    "q_bpe_merge_train",
-    "q_bpe_apply",
-    "q_quality_classifier",
-    "q_kanonymity",
-    "q_stream_quality_filter",
-    # round-3 third-pass batch: split/containment/PCA/compaction/calibration
-    "q_train_split",
-    "q_containment_dedup",
-    "q_pca_power",
-    "q_compaction_plan",
-    "q_quality_calibration",
-    "q_doc_ppl_bigram",
-    # round-3 fourth-pass batch: shuffle/shard, dedup eval, embedding
-    # health, PMI association
-    "q_global_shuffle",
-    "q_dedup_recall",
-    "q_embedding_dim_stats",
-    "q_pmi_bigrams",
-    # round-3 fifth-pass batch: skew planning, dedup telemetry, corpus laws
-    "q_salt_plan",
-    "q_dup_graph_degree",
-    "q_zipf_fit",
-    "q_corpus_drift_js",
-    "q_dedup_incremental",
-    # round-3 sixth-pass: exact-substring dedup with reconstruction
-    "q_substr_dedup",
-    # round-3 seventh-pass: tokenizer coverage + Heaps' law
-    "q_tokenizer_oov",
-    "q_heaps_fit",
-    "q_ann_recall_oracle",
-    # round-3 eighth-pass: objective construction + dataset card
-    "q_span_mask_plan",
-    "q_dataset_card",
-    "q_audio_energy_windows",
-    "q_image_blockhash_neardup",
-    "q_video_scene_cut",
-    "q_langid_confusion",
-    "q_embedding_outliers",
-    "q_stream_dedup_incremental",
-    "q_length_moments",
-    "q_dedup_savings",
-    # round-4 batch: hybrid retrieval + diversified re-rank + packing
-    "q_hybrid_retrieval",
-    "q_mmr_rerank",
-    "q_rag_context_pack",
-    "q_contrastive_pairs",
-    "q_batch_padding_plan",
-    "q_arrow_map",
-    "q_arrow_grouped",
-    "q_silhouette",
-    "q_dedup_threshold_sweep",
-    # round-5 batch: corpus-curation selection lanes
-    "q_dsir_weights",
-    "q_domain_cap",
-    "q_token_fertility",
-    "q_ccnet_buckets",
-    "q_minhash_calibration",
-    # round-6 batch: real stdlib codec lanes
-    "q_wav_decode",
-    "q_bmp_decode",
-    "q_y4m_decode",
-    # round-6 second batch: sketch-backed scale operators
-    "q_bloom_semijoin",
-    "q_cms_heavy_hitters",
-    "q_dp_noisy_counts",
-    "q_bloom_pruned_join",
-    "q_sketch_merge",
-    "q_stream_bloom_admission",
-    # round-6 third batch: curation-quality + data-skipping lanes
-    "q_kn_bigram_ppl",
-    "q_ngram_novelty",
-    "q_zonemap_prune",
-    "q_hist_equidepth",
-    "q_weighted_sample",
-    "q_lsa_topic",
-    # round-6 fourth batch: web-curation + eval-metric lanes
-    "q_url_canonicalize",
-    "q_keyword_tag",
-    "q_token_budget_pack",
-    "q_bleu_pairs",
-    # round-6 fifth batch: HLL sketch, exact AUC, l-diversity
-    "q_hll_distinct",
-    "q_quality_auc",
-    "q_l_diversity",
-    # round-6 sixth batch: ROUGE pairs, Kendall tau, blocklist gate
-    "q_rouge_pairs",
-    "q_rank_correlation",
-    "q_blocklist_filter",
-    # round-6 seventh batch: graded NDCG@10 + windowless MRR
-    "q_ndcg_at_k",
-    "q_mrr",
-    # round-6 eighth batch: full-outer lane, sqrt-temperature mixture,
-    # dialect-shared GROUP BY ALL
-    "q_join_full_outer",
-    "q_mixture_temperature",
-    "q_sql_group_by_all",
-    # round-7: capped twins of the two output-bound enumeration lanes
-    # (value-space-collapsed Levenshtein; exact capped; LSH-banded)
-    "q_edit_distance_topk",
-    "q_embedding_neardup_topk",
-    "q_embedding_neardup_banded",
-    # round-7: positional phrase search (k-way posting intersection)
-    "q_phrase_search",
-    # round-8: real baseline-JPEG codec lanes (encode+decode / full
-    # resize pipeline, executor-side mapInPandas)
-    "q_jpeg_decode",
-    "q_jpeg_resize",
-    # round-8: iterative BPE tokenizer training + merge application
-    "q_bpe_train",
-    "q_bpe_fertility",
-    # round-8: lossless PNG codec lanes (content-verified round trip,
-    # content-verified resize, real-dispatch feature extraction, and
-    # the in-stream encode+decode micro-batch twin)
-    "q_png_decode",
-    "q_png_resize",
-    "q_png_features",
-    "q_stream_png_ingest",
-    # round-8: tokenizer-aware packing (train → encode → pack)
-    "q_bpe_pack",
-    # round-8: product-quantization ANN (train→encode→ADC, exact
-    # re-rank, and the recall adjudication dial)
-    "q_ann_pq_oracle",
-    "q_pq_rerank",
-    "q_pq_recall",
-    # round-8: audio fingerprint near-dup (real WAV decode → band-energy
-    # delta hashes → shingle-join dedup) + the in-stream twin
-    "q_audio_fingerprint",
-    "q_audio_neardup",
-    "q_stream_audio_fingerprint",
-    # round-8: persisted PQ index (train/encode once → catalog tables →
-    # incoming batch probes by ADC without touching base floats)
-    "q_pq_index_persist",
-    # round-8: video near-dup (Y4M decode → luma-quadrant delta hashes)
-    "q_video_neardup",
-    # round-8: IVFADC — IVF coarse cells + PQ on residuals, composed
-    "q_ann_ivfpq_oracle",
-    # round-8: online ANN enrichment (micro-batches probe the standing
-    # PQ index in foreachBatch; shares the persisted-index oracle)
-    "q_stream_ann_enrich",
-    # round-8: GIF LZW codec round trip (shares the PNG content oracle)
-    "q_gif_decode",
-    # round-9: RIFF AVI container lanes (MJPEG full decode, sampled
-    # demux-then-decode, content-exact uncompressed-DIB replay)
-    "q_mjpeg_decode",
-    "q_avi_framesample",
-    "q_avi_dib_decode",
-    # round-9: media format-seam closures (PCM8/24/f32 WAV, 8bpp
-    # palette BMP, Y4M 422/444/mono chroma)
-    "q_wav_formats",
-    "q_bmp_palette_decode",
-    "q_y4m_chroma_decode",
-    # round-9: FLAC compressed-audio codec (rice/LPC, CRC+MD5 gate)
-    "q_flac_roundtrip",
-    "q_flac_transcode",
-    # round-9: audio DSP conditioning (exact-integer, SQL-replayed)
-    "q_audio_decimate",
-    "q_audio_normalize",
-    # round-9: WebDataset-style ustar shard round trips (raw + gzip)
-    "q_tar_shard_roundtrip",
-    "q_targz_shard_roundtrip",
-    # round-10: WARC/HTML web on-ramp (ISO 28500 shards raw + per-record
-    # gzip members; pure-expression tag-strip extraction; link frontier)
-    "q_warc_ingest",
-    "q_warcgz_ingest",
-    "q_html_extract",
-    "q_html_links",
-    "q_stream_warc_ingest",
-    "q_robots_filter",
-    # round-10 second wave: ZIP shards, sitemap discovery, NFC cleanup
-    "q_zip_shard_roundtrip",
-    "q_sitemap_parse",
-    "q_unicode_normalize",
-    "q_pdf_extract",
-    "q_docx_extract",
-    "q_markdown_extract",
-    "q_tarxz_shard_roundtrip",
-    "q_tarbz2_shard_roundtrip",
-    "q_sft_chat_mask",
-    "q_preference_pairs",
-    "q_epub_extract",
-    "q_jsonlgz_source",
-    # round-10: SemDeDup scale path (IVF-probed rep assignment)
-    "q_semdedup_ivf",
-    # round-11: REP politeness (Crawl-delay per-host pacing plan)
-    "q_crawl_schedule",
-    # round-11: SemDeDup multi-rep regime forced at shipped SFs
-    "q_semdedup_multirep",
-    # round-11: MP3 demux accounting (header-math frame walk)
-    "q_mp3_framewalk",
-    # round-11: per-URL politeness slots + the stateful streaming twin
-    "q_crawl_slots",
-    "q_stream_crawl_pacing",
-    # round-11: ID3v2.4 metadata layer
-    "q_mp3_metadata",
-]
 
 # recent-window anchor (r9 verdict item 4): the all-time anchor is a
 # min over EVERY committed artifact, so it only ratchets down as rounds

@@ -26,8 +26,14 @@ replaced with idiomatic open-source Spark:
                     semantics).
 - ``streaming``   — Structured Streaming file-source ingest replacing the
                     Lambda/EventBridge arrive-and-process loop.
+- ``registry``    — ``QUERIES`` / ``ORACLE`` / ``HEADLINE`` and ``register``:
+                    every query module declares its queries here.
+- ``tables``      — the shared testdata readers (``_t``) and SQL fragments
+                    the query modules and their DuckDB oracles build on.
 - ``queries``     — the declared query inventory (SURVEY.md §2.9) consumed by
-                    ``__spark_entry__.py`` for the driver correctness gate.
+                    ``__spark_entry__.py`` for the driver correctness gate;
+                    importing it registers the core and ``queries_ext*``
+                    modules in inventory order.
 
 Design rules (100 TB posture): DataFrame/SQL only — no RDDs; no ``collect()``
 in any operator hot path; broadcast hints on small dimensions; partition
@@ -36,25 +42,3 @@ JVM-expressible, Arrow-batched Pandas UDFs only where not.
 """
 
 __version__ = "0.1.0"
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark, sf_dir, names=TABLES):
-    """Load the driver testdata tables as a dict of DataFrames.
-
-    Plain ``spark.read.parquet`` — Catalyst gets predicate pushdown and
-    column pruning for free on every downstream query.
-    """
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}

@@ -81,9 +81,6 @@ def curate(spark, source: str, output: str, threshold: float = 0.6, shards: int 
     exact_kept.unpersist()
 
     # 3. quality filter: centi-integer logit classifier
-    from .. import queries as _queries  # noqa: F401  (finish the registry
-    # import chain first: importing queries_ext16 directly mid-chain is a
-    # circular import)
     from ..queries_ext16 import quality_scores
 
     scores = quality_scores(near_kept).select("doc_id", "keep")

@@ -43,10 +43,6 @@ from .notify import JobNotifier, jsonl_sink, run_with_notification, stderr_sink
 
 def build_report(spark, docs_path: str, output: str) -> dict:
     """Run the evaluation pass; returns the report card."""
-    # enter through the registry module FIRST: the ext modules and
-    # .queries import each other (registry wiring), so an ext module
-    # must never be the cycle's entry point
-    from .. import queries as _queries  # noqa: F401
     from ..queries_ext30 import bleu_pair_metrics
     from ..queries_ext31 import quality_auc_of
     from ..queries_ext32 import (

@@ -78,10 +78,6 @@ def prepare(
     bpe_merges: int | None = None,
 ) -> dict:
     """Run the full preparation pipeline; returns the dataset card."""
-    # enter through the registry module FIRST (the jobs-module rule:
-    # ext modules and .queries import each other, so an ext module must
-    # never be the import cycle's entry point)
-    from .. import queries as _queries  # noqa: F401
     from ..queries_ext10 import contamination_hits, gopher_rules
     from ..queries_ext26 import dsir_weights_of
     from ..queries_ext34 import mixture_shares_of

@@ -137,8 +137,6 @@ def process_media(
     bands: int = 4,
 ) -> dict:
     """Run the pipeline; returns the accounting card."""
-    from .. import queries as _registry_root  # noqa: F401  (break the
-    # queries<->ext import cycle: ext modules import from .queries)
     from ..queries_ext41 import _shingle_pairs
 
     n_media = media.count()

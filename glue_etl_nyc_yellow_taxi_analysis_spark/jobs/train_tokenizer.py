@@ -39,10 +39,6 @@ from .notify import JobNotifier, jsonl_sink, run_with_notification, stderr_sink
 
 def train(spark, docs_path: str, output: str, n_merges: int = 12) -> dict:
     """Run the BPE loop; write artifacts; return the accounting card."""
-    # import the registry root FIRST: queries_ext38 imports .queries,
-    # whose tail imports queries_ext38 back — entering through the ext
-    # module trips the cycle, entering through .queries does not
-    from .. import queries as _q  # noqa: F401
     from .. import queries_ext38 as bpe
 
     docs = spark.read.parquet(docs_path)

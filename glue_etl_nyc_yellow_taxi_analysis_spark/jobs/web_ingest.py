@@ -191,10 +191,6 @@ def run_ingest(
     a (host, txt) parquet of robots.txt bodies; absent → all allowed),
     already-fetched URLs are removed, and the remainder is written as
     ``{output}/frontier`` — the next crawl's input."""
-    # enter through the registry module FIRST: queries_ext30 and
-    # .queries import each other (registry wiring), so the ext module
-    # must never be the cycle's entry point
-    from .. import queries as _queries  # noqa: F401
     from ..queries_ext30 import _messy_url, canonical_url, keyword_tags
 
     n_corrupt_shards = 0

@@ -1,9 +1,12 @@
 """Declared query inventory (SURVEY.md §2.9) — the driver correctness gate.
 
-Each entry: name → (spark_fn, oracle_sql | None).  ``spark_fn(spark, sf_dir)``
-returns a DataFrame; the oracle is ANSI SQL DuckDB runs on the same parquet
-(views pre-registered).  Column names are aliased identically on both sides
-(the driver sorts columns by name before value-hashing).
+Each query is one ``register(spark_fn, oracle_sql)`` call (registry.py):
+``spark_fn(spark, sf_dir)`` returns a DataFrame; the required oracle is ANSI
+SQL DuckDB runs on the same parquet (views pre-registered).  Column names
+are aliased identically on both sides (the driver sorts columns by name
+before value-hashing).  This module registers the core queries, then
+imports the ``queries_ext*`` modules, which register the rest;
+``QUERIES`` and ``ORACLE`` are re-exported from the registry.
 
 Cross-engine determinism rules used throughout:
 - sums of double columns go through DECIMAL(18,4) so partial-aggregation
@@ -12,15 +15,16 @@ Cross-engine determinism rules used throughout:
 - ratios of integers / single divisions are computed once and rounded —
   deterministic in both engines.
 - non-deterministic or engine-specific ops (uuid, xxhash64 banding,
-  streaming, writes) are declared WITHOUT an oracle → rows-only check.
+  streaming, writes) get an oracle on a deterministic contract of their
+  output (counts, bounds verdicts, a replayable hash family), or are not
+  registered at all (see the notes in the registration block below).
 """
 
 from __future__ import annotations
 
 import tempfile
-from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,75 +33,21 @@ from .operators import dedup, multimodal, sessionize, similarity, text
 from .operators.joins import anti_join, broadcast_dim_join, semi_join
 from .operators.transforms import dedup_exact
 from .plans import dims, star, warehouse
+from .registry import ORACLE, QUERIES, register  # noqa: F401  (ORACLE/QUERIES re-exported)
 from .sources.writers import ParquetWarehouse, write_partitioned_parquet
-
-
-TABLES_SQL_NAMES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+from .sql import PRICING_SUMMARY_SQL, SHIPPING_PRIORITY_SQL
+from .tables import (
+    _COSINE_SQL,
+    DSUM_SQL,
+    NORM_SQL,
+    SQL_LANG_ID,
+    SQL_SIMILARITY_TOPK,
+    TOKS_SQL,
+    _hits_sql,
+    _t,
+    _taxi_fixture,
+    dsum,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return _events(spark, sf_dir)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name in ("documents", "embeddings"):
-        # these arrive as one small file = one scan partition; the operators
-        # over them (shingling, minhash, cosine) are compute-bound — widen
-        from .operators.partitioning import spread
-
-        df = spread(df)
-    return df
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet carries TIMESTAMP(NANOS), which Spark's parquet reader
-    rejects; read nanos as long (legacy conf) and convert with exact integer
-    division (micros precision — matches DuckDB's own nanos→micros cast).
-
-    The result is TIMESTAMP_NTZ (naive wall-clock, like the other tables'
-    timestamps): date_format / window / collect are then independent of the
-    session timezone, so results match the (tz-naive) oracle under ANY
-    driver session configuration.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, CAST((ts div 1000) % 1000000 AS INT), "
-                "timestampadd(SECOND, CAST(ts div 1000000000 AS INT), "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00'))"
-            ),
-        )
-    return raw
-
-
-def dsum(col: str | F.Column, scale_out: int = 2) -> F.Column:
-    """Order-independent sum of a double column via decimal(18,4)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(c.cast("decimal(18,4)")), scale_out).cast("double")
-
-
-DSUM_SQL = "CAST(ROUND(SUM(CAST({col} AS DECIMAL(18,4))), 2) AS DOUBLE)"
-
-# DuckDB-side canonical text normalization / tokenization (mirrors
-# operators.text.normalized / tokens).
-NORM_SQL = "trim(regexp_replace(lower({c}), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))"
-TOKS_SQL = f"string_split({NORM_SQL.format(c='{c}')}, ' ')"
-
-
-def _sw_list(lang: str) -> str:
-    return "[" + ", ".join(f"'{w}'" for w in text.STOPWORDS[lang]) + "]"
-
-
-def _hits_sql(lang: str) -> str:
-    return (
-        "COALESCE(list_sum(list_transform(toks, t -> CASE WHEN "
-        f"list_contains({_sw_list(lang)}, t) THEN 1 ELSE 0 END)), 0)"
-    )
 
 
 # --------------------------------------------------------------------------
@@ -576,28 +526,6 @@ def q_lang_id(spark, sf_dir):
     return text.lang_id(docs).select("doc_id", "lang", "lang_pred")
 
 
-SQL_LANG_ID = f"""
-WITH t AS (
-    SELECT doc_id, lang, {TOKS_SQL.format(c='text')} AS toks FROM documents
-), s AS (
-    SELECT doc_id, lang,
-           {_hits_sql('en')} AS hits_en,
-           {_hits_sql('es')} AS hits_es,
-           {_hits_sql('fr')} AS hits_fr,
-           {_hits_sql('de')} AS hits_de
-    FROM t
-)
-SELECT doc_id, lang,
-       CASE WHEN best = 0 THEN 'und'
-            WHEN hits_en = best THEN 'en'
-            WHEN hits_es = best THEN 'es'
-            WHEN hits_fr = best THEN 'fr'
-            WHEN hits_de = best THEN 'de'
-            ELSE 'und' END AS lang_pred
-FROM (SELECT *, greatest(hits_en, hits_es, hits_fr, hits_de) AS best FROM s)
-"""
-
-
 def q_token_count(spark, sf_dir):
     """Corpus token accounting per source (whitespace + BPE-ish regex)."""
     docs = _t(spark, sf_dir, "documents")
@@ -687,21 +615,6 @@ WHERE raw_j >= 0.5
 # Embedding similarity (LLM-data-pipeline extensions)
 # --------------------------------------------------------------------------
 
-# NULL on length mismatch: Spark's zip_with pads the shorter array with
-# NULL elements, which NULL the aggregate dot product; DuckDB's list_sum
-# SKIPS the NULL pads and would silently return a prefix dot — the CASE
-# makes both engines agree that mismatched dims have no cosine (caught by
-# the hostile-corpus agreement gate, round 5).
-_COSINE_SQL = """
-CASE WHEN len({a}) <> len({b}) THEN NULL ELSE
-ROUND(list_sum(list_transform(list_zip({a}, {b}),
-                              p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)
-END
-"""
-
-
 def q_similarity_topk(spark, sf_dir):
     """Exact brute-force cosine top-10 for 3 query vectors (the ANN
     correctness baseline)."""
@@ -710,21 +623,6 @@ def q_similarity_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return similarity.cosine_topk(emb, queries, k=10)
-
-
-SQL_SIMILARITY_TOPK = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-           WHERE vec_id IN (0, 1, 2)),
-scored AS (
-    SELECT q.query_id, e.vec_id,
-           {_COSINE_SQL.format(a='e.embedding', b='q.qvec')} AS cosine_sim
-    FROM embeddings e, q WHERE e.vec_id <> q.query_id)
-SELECT query_id, vec_id, cosine_sim, rank FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine_sim DESC, vec_id) AS rank
-    FROM scored)
-WHERE rank <= 10
-"""
 
 
 def q_embedding_neardup(spark, sf_dir):
@@ -1857,483 +1755,146 @@ SELECT * FROM (VALUES
 """
 
 
-def _taxi_fixture(spark) -> DataFrame:
-    """Deterministic raw yellow-trip rows in the FIXTURES.md A1 shape."""
-    import datetime as dt
-
-    schema = T.StructType(
-        [
-            T.StructField("VendorID", T.LongType()),
-            T.StructField("tpep_pickup_datetime", T.TimestampType()),
-            T.StructField("tpep_dropoff_datetime", T.TimestampType()),
-            T.StructField("passenger_count", T.DoubleType()),
-            T.StructField("trip_distance", T.DoubleType()),
-            T.StructField("RatecodeID", T.DoubleType()),
-            T.StructField("store_and_fwd_flag", T.StringType()),
-            T.StructField("PULocationID", T.LongType()),
-            T.StructField("DOLocationID", T.LongType()),
-            T.StructField("payment_type", T.LongType()),
-            T.StructField("fare_amount", T.DoubleType()),
-            T.StructField("extra", T.DoubleType()),
-            T.StructField("mta_tax", T.DoubleType()),
-            T.StructField("tip_amount", T.DoubleType()),
-            T.StructField("tolls_amount", T.DoubleType()),
-            T.StructField("improvement_surcharge", T.DoubleType()),
-            T.StructField("total_amount", T.DoubleType()),
-            T.StructField("congestion_surcharge", T.DoubleType()),
-            T.StructField("airport_fee", T.DoubleType()),
-        ]
-    )
-
-    def trip(i, minute_of_day, minutes, pax=1.0, dist=10.0, fare=20.0, flag="N", af=None):
-        p = dt.datetime(2021, 1, 1 + (i % 28), minute_of_day // 60, minute_of_day % 60)
-        d = p + dt.timedelta(minutes=minutes)
-        return (
-            1 + i % 2, p, d, pax, dist, 1.0, flag, 100 + i % 5, 200 + i % 7,
-            1 + i % 4, fare, 0.5, 0.5, 2.0, 0.0, 0.3, fare + 3.3, 2.5, af,
-        )
-
-    rows = [trip(i, minute_of_day=(360 + i * 7) % 1440, minutes=15 + i % 90) for i in range(200)]
-    rows += [rows[0], rows[1]]  # exact duplicates → dedup
-    rows += [
-        trip(900, 600, 30, pax=0.0),       # dropped: passenger_count < 1
-        trip(901, 600, 30, pax=7.0),       # dropped: passenger_count > 6
-        trip(902, 600, 30, dist=4.99),     # dropped: distance < 5
-        trip(903, 600, 30, dist=501.0),    # dropped: distance > 500
-        trip(904, 600, 30, fare=0.0),      # dropped: fare not > 0
-        trip(905, 600, 1500),              # dropped: duration ≥ 1440 min
-        trip(906, 600, 30, flag="Y", af=1.25),  # kept: Y-flag + airport fee
-    ]
-    return spark.createDataFrame(rows, schema)
-
-
 # --------------------------------------------------------------------------
-# Registry
+# Registration, in inventory order
 # --------------------------------------------------------------------------
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q_scan_project_filter": q_scan_project_filter,
-    "q_rename_cast": q_rename_cast,
-    "q_derived_columns": q_derived_columns,
-    "q_case_recode": q_case_recode,
-    "q_dedup_exact": q_dedup_exact,
-    "q_distinct_project": q_distinct_project,
-    "q_generator_dim_date": q_generator_dim_date,
-    "q_generator_dim_time": q_generator_dim_time,
-    "q_join_broadcast_dim": q_join_broadcast_dim,
-    "q_join_semi": q_join_semi,
-    "q_join_anti": q_join_anti,
-    "q_star_agg": q_star_agg,
-    "q_window_rank": q_window_rank,
-    "q_sort_limit_topk": q_sort_limit_topk,
-    "q_event_sessionize": q_event_sessionize,
-    "q_session_windows": q_session_windows,
-    "q_text_stats": q_text_stats,
-    "q_lang_id": q_lang_id,
-    "q_token_count": q_token_count,
-    "q_doc_fingerprint": q_doc_fingerprint,
-    "q_dedup_exact_docs": q_dedup_exact_docs,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_similarity_topk": q_similarity_topk,
-    "q_embedding_neardup": q_embedding_neardup,
-    "q_json_extract": q_json_extract,
-    "q_salted_join": q_salted_join,
-    "q_word_count": q_word_count,
-    "q_sql_pricing_summary": q_sql_pricing_summary,
-    "q_sql_shipping_priority": q_sql_shipping_priority,
-    "q_centroids": q_centroids,
-    "q_normalize_embeddings": q_normalize_embeddings,
-    "q_winnow_fingerprints": q_winnow_fingerprints,
-    "q_set_ops": q_set_ops,
-    "q_string_funcs": q_string_funcs,
-    "q_array_ops": q_array_ops,
-    "q_null_handling": q_null_handling,
-    "q_data_quality": q_data_quality,
-    "q_percentile": q_percentile,
-    "q_approx_stats": q_approx_stats,
-    "q_rollup_agg": q_rollup_agg,
-    "q_date_arith": q_date_arith,
-    "q_collect_agg": q_collect_agg,
-    "q_regexp_extract": q_regexp_extract,
-    "q_cube_agg": q_cube_agg,
-    "q_lag_lead_delta": q_lag_lead_delta,
-    "q_histogram": q_histogram,
-    "q_corr_stats": q_corr_stats,
-    "q_pivot_status": q_pivot_status,
-    "q_running_total": q_running_total,
-    "q_asof_join": q_asof_join,
-    "q_range_join_bands": q_range_join_bands,
-    "q_union_backfill": q_union_backfill,
-    "q_csv_lookup": q_csv_lookup,
-    "q_multimodal_features": q_multimodal_features,
-    # q_dedup_fuzzy_minhash / q_dedup_simhash / q_similarity_ann_ivf /
-    # q_similarity_ann_lsh are NOT declared (the q_taxi_star_build
-    # precedent): their outputs depend on hash families a SQL oracle
-    # cannot replay (xxhash64 bands, numpy-seeded hyperplanes), so they
-    # would sit as eternal `err: no_oracle` rows for near-zero evidence.
-    # Their operators are fully covered by the hash-exact twins
-    # q_minhash_dedup_oracle, q_simhash_oracle, q_ann_ivf_oracle and
-    # q_ann_lsh_oracle (same plans over replicable hash families) plus
-    # the recall dials (q_dedup_recall, q_ann_recall_oracle); the
-    # production-hash functions stay defined above and are exercised by
-    # tests/test_adversarial_inputs.py and tests/test_similarity.py.
-    "q_uuid_pk": q_uuid_pk,
-    "q_partitioned_write_prune": q_partitioned_write_prune,
-    "q_warehouse_roundtrip": q_warehouse_roundtrip,
-    "q_stream_ingest": q_stream_ingest,
-    # q_taxi_star_build (the uuid-PK star build) is NOT declared: it can
-    # never hash-match (uuid column), so it would add an eternal err row
-    # to every driver report for near-zero evidence.  Its pipeline is
-    # fully covered by q_taxi_star_deterministic (hash-green on all 25
-    # non-uuid columns) plus tests/test_ext15.py, which proves the uuid
-    # lane row-identical (minus trip_id) to the deterministic twin.
-    "q_warehouse_load_plan": q_warehouse_load_plan,
-}
-
-ORACLE: dict[str, str] = {
-    "q_scan_project_filter": SQL_SCAN_PROJECT_FILTER,
-    "q_rename_cast": SQL_RENAME_CAST,
-    "q_derived_columns": SQL_DERIVED_COLUMNS,
-    "q_case_recode": SQL_CASE_RECODE,
-    "q_dedup_exact": SQL_DEDUP_EXACT,
-    "q_distinct_project": SQL_DISTINCT_PROJECT,
-    "q_generator_dim_date": SQL_GENERATOR_DIM_DATE,
-    "q_generator_dim_time": SQL_GENERATOR_DIM_TIME,
-    "q_join_broadcast_dim": SQL_JOIN_BROADCAST_DIM,
-    "q_join_semi": SQL_JOIN_SEMI,
-    "q_join_anti": SQL_JOIN_ANTI,
-    "q_star_agg": SQL_STAR_AGG,
-    "q_window_rank": SQL_WINDOW_RANK,
-    "q_sort_limit_topk": SQL_SORT_LIMIT_TOPK,
-    "q_event_sessionize": SQL_EVENT_SESSIONIZE,
-    "q_session_windows": SQL_SESSION_WINDOWS,
-    "q_text_stats": SQL_TEXT_STATS,
-    "q_lang_id": SQL_LANG_ID,
-    "q_token_count": SQL_TOKEN_COUNT,
-    "q_doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "q_dedup_exact_docs": SQL_DEDUP_EXACT_DOCS,
-    "q_ngram_jaccard": SQL_NGRAM_JACCARD,
-    "q_similarity_topk": SQL_SIMILARITY_TOPK,
-    "q_embedding_neardup": SQL_EMBEDDING_NEARDUP,
-    "q_json_extract": SQL_JSON_EXTRACT,
-    "q_salted_join": SQL_SALTED_JOIN,
-    "q_uuid_pk": SQL_UUID_PK,
-    "q_word_count": SQL_WORD_COUNT,
-    "q_sql_pricing_summary": None,  # filled below: oracle == the query itself
-    "q_sql_shipping_priority": None,
-    "q_centroids": SQL_CENTROIDS,
-    "q_normalize_embeddings": SQL_NORMALIZE_EMBEDDINGS,
-    "q_set_ops": SQL_SET_OPS,
-    "q_string_funcs": SQL_STRING_FUNCS,
-    "q_array_ops": SQL_ARRAY_OPS,
-    "q_null_handling": SQL_NULL_HANDLING,
-    "q_data_quality": SQL_DATA_QUALITY,
-    "q_percentile": SQL_PERCENTILE,
-    "q_rollup_agg": SQL_ROLLUP_AGG,
-    "q_date_arith": SQL_DATE_ARITH,
-    "q_collect_agg": SQL_COLLECT_AGG,
-    "q_regexp_extract": SQL_REGEXP_EXTRACT,
-    "q_cube_agg": SQL_CUBE_AGG,
-    "q_lag_lead_delta": SQL_LAG_LEAD_DELTA,
-    "q_histogram": SQL_HISTOGRAM,
-    "q_corr_stats": SQL_CORR_STATS,
-    "q_pivot_status": SQL_PIVOT_STATUS,
-    "q_running_total": SQL_RUNNING_TOTAL,
-    "q_asof_join": SQL_ASOF_JOIN,
-    "q_winnow_fingerprints": SQL_WINNOW_FINGERPRINTS,
-    "q_range_join_bands": SQL_RANGE_JOIN_BANDS,
-    "q_union_backfill": SQL_UNION_BACKFILL,
-    "q_csv_lookup": SQL_CSV_LOOKUP,
-    # write-path / streaming queries with deterministic drained outputs:
-    # the oracle is the batch equivalent — a REAL stream/batch-equivalence
-    # check at the driver gate, not just a row count
-    "q_stream_ingest": SQL_STREAM_INGEST,
-    "q_partitioned_write_prune": SQL_PARTITIONED_WRITE_PRUNE,
-    "q_warehouse_roundtrip": SQL_WAREHOUSE_ROUNDTRIP,
-    "q_warehouse_load_plan": SQL_WAREHOUSE_LOAD_PLAN,
-    # r4: the Arrow/mapInPandas decode lane, byte-exact SQL replay on the
-    # integer feat_ppm fingerprint (VERDICT r3 item 2)
-    "q_multimodal_features": SQL_MULTIMODAL_FEATURES,
-    # r4: bounds oracle — exact counts + in-tolerance verdicts on the
-    # engine-specific sketch values (VERDICT r3 item 7)
-    "q_approx_stats": SQL_APPROX_STATS_BOUNDS,
-}
-
+register(q_scan_project_filter, SQL_SCAN_PROJECT_FILTER)
+register(q_rename_cast, SQL_RENAME_CAST)
+register(q_derived_columns, SQL_DERIVED_COLUMNS, bench=False)
+register(q_case_recode, SQL_CASE_RECODE, bench=False)
+register(q_dedup_exact, SQL_DEDUP_EXACT)
+register(q_distinct_project, SQL_DISTINCT_PROJECT, bench=False)
+register(q_generator_dim_date, SQL_GENERATOR_DIM_DATE)
+register(q_generator_dim_time, SQL_GENERATOR_DIM_TIME, bench=False)
+register(q_join_broadcast_dim, SQL_JOIN_BROADCAST_DIM)
+register(q_join_semi, SQL_JOIN_SEMI)
+register(q_join_anti, SQL_JOIN_ANTI, bench=False)
+register(q_star_agg, SQL_STAR_AGG)
+register(q_window_rank, SQL_WINDOW_RANK)
+register(q_sort_limit_topk, SQL_SORT_LIMIT_TOPK)
+register(q_event_sessionize, SQL_EVENT_SESSIONIZE)
+register(q_session_windows, SQL_SESSION_WINDOWS)
+register(q_text_stats, SQL_TEXT_STATS)
+register(q_lang_id, SQL_LANG_ID)
+register(q_token_count, SQL_TOKEN_COUNT, bench=False)
+register(q_doc_fingerprint, SQL_DOC_FINGERPRINT)
+register(q_dedup_exact_docs, SQL_DEDUP_EXACT_DOCS, bench=False)
+register(q_ngram_jaccard, SQL_NGRAM_JACCARD, bench=False)
+register(q_similarity_topk, SQL_SIMILARITY_TOPK)
+register(q_embedding_neardup, SQL_EMBEDDING_NEARDUP, bench=False)
+register(q_json_extract, SQL_JSON_EXTRACT)
+register(q_salted_join, SQL_SALTED_JOIN, bench=False)
+register(q_word_count, SQL_WORD_COUNT)
 # the ad-hoc SQL layer's oracle is the very same dialect-neutral string
-from .sql import PRICING_SUMMARY_SQL, SHIPPING_PRIORITY_SQL  # noqa: E402
-
-ORACLE["q_sql_pricing_summary"] = PRICING_SUMMARY_SQL
-ORACLE["q_sql_shipping_priority"] = SHIPPING_PRIORITY_SQL
-
-# extended inventory (analytics/window/function batteries) — queries_ext.py
-from .queries_ext import ORACLE_EXT, QUERIES_EXT  # noqa: E402
-
-QUERIES.update(QUERIES_EXT)
-ORACLE.update(ORACLE_EXT)
-
-# extended inventory II (time-series/behavioral/maintenance) — queries_ext2.py
-from .queries_ext2 import ORACLE_EXT2, QUERIES_EXT2  # noqa: E402
-
-QUERIES.update(QUERIES_EXT2)
-ORACLE.update(ORACLE_EXT2)
-
-# extended inventory III (TPC-H SQL-shape completion) — queries_ext3.py
-from .queries_ext3 import ORACLE_EXT3, QUERIES_EXT3  # noqa: E402
-
-QUERIES.update(QUERIES_EXT3)
-ORACLE.update(ORACLE_EXT3)
-
-# extended inventory IV (sequence analytics + exact-at-scale patterns)
-from .queries_ext4 import ORACLE_EXT4, QUERIES_EXT4  # noqa: E402
-
-QUERIES.update(QUERIES_EXT4)
-ORACLE.update(ORACLE_EXT4)
-
-# extended inventory V (source/sink roundtrips + numeric/graph ops)
-from .queries_ext5 import ORACLE_EXT5, QUERIES_EXT5  # noqa: E402
-
-QUERIES.update(QUERIES_EXT5)
-ORACLE.update(ORACLE_EXT5)
-
-# extended inventory VI (bag set ops, binary funcs, schema evolution)
-from .queries_ext6 import ORACLE_EXT6, QUERIES_EXT6  # noqa: E402
-
-QUERIES.update(QUERIES_EXT6)
-ORACLE.update(ORACLE_EXT6)
-
-# extended inventory VII (global index, skyline, profile, checksum, resilience)
-from .queries_ext7 import ORACLE_EXT7, QUERIES_EXT7  # noqa: E402
-
-QUERIES.update(QUERIES_EXT7)
-ORACLE.update(ORACLE_EXT7)
-
-# extended inventory VIII (pareto share, RFM, price/volume bridge, nest,
-# snapshot diff, inverted index)
-from .queries_ext8 import ORACLE_EXT8, QUERIES_EXT8  # noqa: E402
-
-QUERIES.update(QUERIES_EXT8)
-ORACLE.update(ORACLE_EXT8)
-
-# extended inventory IX (integrity/retrieval/sequence/graph + Spark-4
-# VARIANT & LATERAL surfaces)
-from .queries_ext9 import ORACLE_EXT9, QUERIES_EXT9  # noqa: E402
-
-QUERIES.update(QUERIES_EXT9)
-ORACLE.update(ORACLE_EXT9)
-
-# extended inventory X (TPC-H completion adapted + corpus-curation gates)
-from .queries_ext10 import ORACLE_EXT10, QUERIES_EXT10  # noqa: E402
-
-QUERIES.update(QUERIES_EXT10)
-ORACLE.update(ORACLE_EXT10)
-
-# extended inventory XI (Spark-4 platform surfaces: Python DataSource,
-# parameterized SQL, native session windows, observed metrics)
-from .queries_ext11 import ORACLE_EXT11, QUERIES_EXT11  # noqa: E402
-
-QUERIES.update(QUERIES_EXT11)
-ORACLE.update(ORACLE_EXT11)
-
-# extended inventory XII (physical-layout levers: bucketing, codecs, cache)
-from .queries_ext12 import ORACLE_EXT12, QUERIES_EXT12  # noqa: E402
-
-QUERIES.update(QUERIES_EXT12)
-ORACLE.update(ORACLE_EXT12)
-
-# extended inventory XIII (oracle-checked md5-lane twins of the hash-family
-# dedup/ANN pipelines)
-from .queries_ext13 import ORACLE_EXT13, QUERIES_EXT13  # noqa: E402
-
-QUERIES.update(QUERIES_EXT13)
-ORACLE.update(ORACLE_EXT13)
-
-# extended inventory XIV (training-data pipeline round 2: boilerplate,
-# hash sampling, quantization, BPE pairs, sequence packing)
-from .queries_ext14 import ORACLE_EXT14, QUERIES_EXT14  # noqa: E402
-
-QUERIES.update(QUERIES_EXT14)
-ORACLE.update(ORACLE_EXT14)
-
-from .queries_ext15 import ORACLE_EXT15, QUERIES_EXT15  # noqa: E402
-
-QUERIES.update(QUERIES_EXT15)
-ORACLE.update(ORACLE_EXT15)
-
-from .queries_ext16 import ORACLE_EXT16, QUERIES_EXT16  # noqa: E402
-
-QUERIES.update(QUERIES_EXT16)
-ORACLE.update(ORACLE_EXT16)
-
-from .queries_ext17 import ORACLE_EXT17, QUERIES_EXT17  # noqa: E402
-
-QUERIES.update(QUERIES_EXT17)
-ORACLE.update(ORACLE_EXT17)
-
-from .queries_ext18 import ORACLE_EXT18, QUERIES_EXT18  # noqa: E402
-
-QUERIES.update(QUERIES_EXT18)
-ORACLE.update(ORACLE_EXT18)
-
-from .queries_ext19 import ORACLE_EXT19, QUERIES_EXT19  # noqa: E402
-
-QUERIES.update(QUERIES_EXT19)
-ORACLE.update(ORACLE_EXT19)
-
-from .queries_ext20 import ORACLE_EXT20, QUERIES_EXT20  # noqa: E402
-
-QUERIES.update(QUERIES_EXT20)
-ORACLE.update(ORACLE_EXT20)
-
-from .queries_ext21 import ORACLE_EXT21, QUERIES_EXT21  # noqa: E402
-
-QUERIES.update(QUERIES_EXT21)
-ORACLE.update(ORACLE_EXT21)
-
-from .queries_ext22 import ORACLE_EXT22, QUERIES_EXT22  # noqa: E402
-
-QUERIES.update(QUERIES_EXT22)
-ORACLE.update(ORACLE_EXT22)
-
-from .queries_ext23 import ORACLE_EXT23, QUERIES_EXT23  # noqa: E402
-
-QUERIES.update(QUERIES_EXT23)
-ORACLE.update(ORACLE_EXT23)
-
-from .queries_ext24 import ORACLE_EXT24, QUERIES_EXT24  # noqa: E402
-
-QUERIES.update(QUERIES_EXT24)
-ORACLE.update(ORACLE_EXT24)
-
-from .queries_ext25 import ORACLE_EXT25, QUERIES_EXT25  # noqa: E402
-from .queries_ext26 import ORACLE_EXT26, QUERIES_EXT26  # noqa: E402
-
-QUERIES.update(QUERIES_EXT25)
-ORACLE.update(ORACLE_EXT25)
-
-QUERIES.update(QUERIES_EXT26)
-ORACLE.update(ORACLE_EXT26)
-
-from .queries_ext27 import ORACLE_EXT27, QUERIES_EXT27  # noqa: E402
-
-QUERIES.update(QUERIES_EXT27)
-ORACLE.update(ORACLE_EXT27)
-
-from .queries_ext28 import ORACLE_EXT28, QUERIES_EXT28  # noqa: E402
-
-QUERIES.update(QUERIES_EXT28)
-ORACLE.update(ORACLE_EXT28)
-
-from .queries_ext29 import ORACLE_EXT29, QUERIES_EXT29  # noqa: E402
-
-QUERIES.update(QUERIES_EXT29)
-ORACLE.update(ORACLE_EXT29)
-
-from .queries_ext30 import ORACLE_EXT30, QUERIES_EXT30  # noqa: E402
-
-QUERIES.update(QUERIES_EXT30)
-ORACLE.update(ORACLE_EXT30)
-
-from .queries_ext31 import ORACLE_EXT31, QUERIES_EXT31  # noqa: E402
-
-QUERIES.update(QUERIES_EXT31)
-ORACLE.update(ORACLE_EXT31)
-
-from .queries_ext32 import ORACLE_EXT32, QUERIES_EXT32  # noqa: E402
-
-QUERIES.update(QUERIES_EXT32)
-ORACLE.update(ORACLE_EXT32)
-
-from .queries_ext33 import ORACLE_EXT33, QUERIES_EXT33  # noqa: E402
-
-QUERIES.update(QUERIES_EXT33)
-ORACLE.update(ORACLE_EXT33)
-
-from .queries_ext34 import ORACLE_EXT34, QUERIES_EXT34  # noqa: E402
-
-QUERIES.update(QUERIES_EXT34)
-ORACLE.update(ORACLE_EXT34)
-
-from .queries_ext35 import ORACLE_EXT35, QUERIES_EXT35  # noqa: E402
-
-QUERIES.update(QUERIES_EXT35)
-ORACLE.update(ORACLE_EXT35)
-
-from .queries_ext36 import ORACLE_EXT36, QUERIES_EXT36  # noqa: E402
-
-QUERIES.update(QUERIES_EXT36)
-ORACLE.update(ORACLE_EXT36)
-
-from .queries_ext37 import ORACLE_EXT37, QUERIES_EXT37  # noqa: E402
-
-QUERIES.update(QUERIES_EXT37)
-ORACLE.update(ORACLE_EXT37)
-
-from .queries_ext38 import ORACLE_EXT38, QUERIES_EXT38  # noqa: E402
-
-QUERIES.update(QUERIES_EXT38)
-ORACLE.update(ORACLE_EXT38)
-
-from .queries_ext39 import ORACLE_EXT39, QUERIES_EXT39  # noqa: E402
-
-QUERIES.update(QUERIES_EXT39)
-ORACLE.update(ORACLE_EXT39)
-
-from .queries_ext40 import ORACLE_EXT40, QUERIES_EXT40  # noqa: E402
-
-QUERIES.update(QUERIES_EXT40)
-ORACLE.update(ORACLE_EXT40)
-
-from .queries_ext41 import ORACLE_EXT41, QUERIES_EXT41  # noqa: E402
-
-QUERIES.update(QUERIES_EXT41)
-ORACLE.update(ORACLE_EXT41)
-
-from .queries_ext42 import ORACLE_EXT42, QUERIES_EXT42  # noqa: E402
-
-QUERIES.update(QUERIES_EXT42)
-ORACLE.update(ORACLE_EXT42)
-
-from .queries_ext43 import ORACLE_EXT43, QUERIES_EXT43  # noqa: E402
-
-QUERIES.update(QUERIES_EXT43)
-ORACLE.update(ORACLE_EXT43)
-
-from .queries_ext44 import ORACLE_EXT44, QUERIES_EXT44  # noqa: E402
-
-QUERIES.update(QUERIES_EXT44)
-ORACLE.update(ORACLE_EXT44)
-
-from .queries_ext45 import ORACLE_EXT45, QUERIES_EXT45  # noqa: E402
-
-QUERIES.update(QUERIES_EXT45)
-ORACLE.update(ORACLE_EXT45)
-
-from .queries_ext46 import ORACLE_EXT46, QUERIES_EXT46  # noqa: E402
-
-QUERIES.update(QUERIES_EXT46)
-ORACLE.update(ORACLE_EXT46)
-
-from .queries_ext47 import ORACLE_EXT47, QUERIES_EXT47  # noqa: E402
-
-QUERIES.update(QUERIES_EXT47)
-ORACLE.update(ORACLE_EXT47)
-
-from .queries_ext48 import ORACLE_EXT48, QUERIES_EXT48  # noqa: E402
-
-QUERIES.update(QUERIES_EXT48)
-ORACLE.update(ORACLE_EXT48)
-
-from .queries_ext49 import ORACLE_EXT49, QUERIES_EXT49  # noqa: E402
-
-QUERIES.update(QUERIES_EXT49)
-ORACLE.update(ORACLE_EXT49)
-
-from .queries_ext50 import ORACLE_EXT50, QUERIES_EXT50  # noqa: E402
-
-QUERIES.update(QUERIES_EXT50)
-ORACLE.update(ORACLE_EXT50)
-
-from .queries_ext51 import ORACLE_EXT51, QUERIES_EXT51  # noqa: E402
-
-QUERIES.update(QUERIES_EXT51)
-ORACLE.update(ORACLE_EXT51)
+register(q_sql_pricing_summary, PRICING_SUMMARY_SQL, bench=False)
+register(q_sql_shipping_priority, SHIPPING_PRIORITY_SQL, bench=False)
+register(q_centroids, SQL_CENTROIDS, bench=False)
+register(q_normalize_embeddings, SQL_NORMALIZE_EMBEDDINGS, bench=False)
+register(q_winnow_fingerprints, SQL_WINNOW_FINGERPRINTS)
+register(q_set_ops, SQL_SET_OPS, bench=False)
+register(q_string_funcs, SQL_STRING_FUNCS, bench=False)
+register(q_array_ops, SQL_ARRAY_OPS, bench=False)
+register(q_null_handling, SQL_NULL_HANDLING, bench=False)
+register(q_data_quality, SQL_DATA_QUALITY, bench=False)
+register(q_percentile, SQL_PERCENTILE, bench=False)
+# bounds oracle: exact counts + in-tolerance verdicts on the
+# engine-specific sketch values
+register(q_approx_stats, SQL_APPROX_STATS_BOUNDS, bench=False)
+register(q_rollup_agg, SQL_ROLLUP_AGG)
+register(q_date_arith, SQL_DATE_ARITH, bench=False)
+register(q_collect_agg, SQL_COLLECT_AGG, bench=False)
+register(q_regexp_extract, SQL_REGEXP_EXTRACT, bench=False)
+register(q_cube_agg, SQL_CUBE_AGG)
+register(q_lag_lead_delta, SQL_LAG_LEAD_DELTA)
+register(q_histogram, SQL_HISTOGRAM, bench=False)
+register(q_corr_stats, SQL_CORR_STATS)
+register(q_pivot_status, SQL_PIVOT_STATUS, bench=False)
+register(q_running_total, SQL_RUNNING_TOTAL)
+register(q_asof_join, SQL_ASOF_JOIN)
+register(q_range_join_bands, SQL_RANGE_JOIN_BANDS)
+register(q_union_backfill, SQL_UNION_BACKFILL, bench=False)
+register(q_csv_lookup, SQL_CSV_LOOKUP, bench=False)
+# the Arrow/mapInPandas decode lane: byte-exact SQL replay on the integer
+# feat_ppm fingerprint
+register(q_multimodal_features, SQL_MULTIMODAL_FEATURES, bench=False)
+# q_dedup_fuzzy_minhash / q_dedup_simhash / q_similarity_ann_ivf /
+# q_similarity_ann_lsh are NOT registered (the q_taxi_star_build
+# precedent): their outputs depend on hash families a SQL oracle
+# cannot replay (xxhash64 bands, numpy-seeded hyperplanes), so they
+# would sit as eternal `err: no_oracle` rows for near-zero evidence.
+# Their operators are fully covered by the hash-exact twins
+# q_minhash_dedup_oracle, q_simhash_oracle, q_ann_ivf_oracle and
+# q_ann_lsh_oracle (same plans over replicable hash families) plus
+# the recall dials (q_dedup_recall, q_ann_recall_oracle); the
+# production-hash functions stay defined above and are exercised by
+# tests/test_adversarial_inputs.py and tests/test_similarity.py.
+register(q_uuid_pk, SQL_UUID_PK, bench=False)
+# write-path / streaming queries with deterministic drained outputs:
+# the oracle is the batch equivalent — a REAL stream/batch-equivalence
+# check at the driver gate, not just a row count
+register(q_partitioned_write_prune, SQL_PARTITIONED_WRITE_PRUNE, bench=False)
+register(q_warehouse_roundtrip, SQL_WAREHOUSE_ROUNDTRIP, bench=False)
+register(q_stream_ingest, SQL_STREAM_INGEST, bench=False)
+# q_taxi_star_build (the uuid-PK star build) is NOT registered: it can
+# never hash-match (uuid column), so it would add an eternal err row
+# to every driver report for near-zero evidence.  Its pipeline is
+# fully covered by q_taxi_star_deterministic (hash-green on all 25
+# non-uuid columns) plus tests/test_ext15.py, which proves the uuid
+# lane row-identical (minus trip_id) to the deterministic twin.
+register(q_warehouse_load_plan, SQL_WAREHOUSE_LOAD_PLAN, bench=False)
+
+# The extended inventory registers itself on import, in this order.
+from . import (  # noqa: E402, F401
+    queries_ext,
+    queries_ext2,
+    queries_ext3,
+    queries_ext4,
+    queries_ext5,
+    queries_ext6,
+    queries_ext7,
+    queries_ext8,
+    queries_ext9,
+    queries_ext10,
+    queries_ext11,
+    queries_ext12,
+    queries_ext13,
+    queries_ext14,
+    queries_ext15,
+    queries_ext16,
+    queries_ext17,
+    queries_ext18,
+    queries_ext19,
+    queries_ext20,
+    queries_ext21,
+    queries_ext22,
+    queries_ext23,
+    queries_ext24,
+    queries_ext25,
+    queries_ext26,
+    queries_ext27,
+    queries_ext28,
+    queries_ext29,
+    queries_ext30,
+    queries_ext31,
+    queries_ext32,
+    queries_ext33,
+    queries_ext34,
+    queries_ext35,
+    queries_ext36,
+    queries_ext37,
+    queries_ext38,
+    queries_ext39,
+    queries_ext40,
+    queries_ext41,
+    queries_ext42,
+    queries_ext43,
+    queries_ext44,
+    queries_ext45,
+    queries_ext46,
+    queries_ext47,
+    queries_ext48,
+    queries_ext49,
+    queries_ext50,
+    queries_ext51,
+)

@@ -21,7 +21,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import DSUM_SQL, TOKS_SQL, _t, dsum
+from .registry import register
+from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
 
 # --------------------------------------------------------------------------
@@ -549,41 +550,21 @@ def q_sql_returned_items(spark, sf_dir):
     return run_sql(spark, RETURNED_ITEM_REVENUE_SQL)
 
 
-QUERIES_EXT = {
-    "q_grouping_sets": q_grouping_sets,
-    "q_window_navigation": q_window_navigation,
-    "q_moving_avg": q_moving_avg,
-    "q_argmax": q_argmax,
-    "q_conditional_agg": q_conditional_agg,
-    "q_string_funcs2": q_string_funcs2,
-    "q_array_funcs2": q_array_funcs2,
-    "q_bitwise_ops": q_bitwise_ops,
-    "q_date_trunc": q_date_trunc,
-    "q_regr_stats": q_regr_stats,
-    "q_unpivot_long": q_unpivot_long,
-    "q_posexplode_tokens": q_posexplode_tokens,
-    "q_sliding_windows": q_sliding_windows,
-    "q_sql_local_supplier": q_sql_local_supplier,
-    "q_sql_returned_items": q_sql_returned_items,
-}
-
-ORACLE_EXT = {
-    "q_grouping_sets": SQL_GROUPING_SETS,
-    "q_window_navigation": SQL_WINDOW_NAVIGATION,
-    "q_moving_avg": SQL_MOVING_AVG,
-    "q_argmax": SQL_ARGMAX,
-    "q_conditional_agg": SQL_CONDITIONAL_AGG,
-    "q_string_funcs2": SQL_STRING_FUNCS2,
-    "q_array_funcs2": SQL_ARRAY_FUNCS2,
-    "q_bitwise_ops": SQL_BITWISE_OPS,
-    "q_date_trunc": SQL_DATE_TRUNC,
-    "q_regr_stats": SQL_REGR_STATS,
-    "q_unpivot_long": SQL_UNPIVOT_LONG,
-    "q_posexplode_tokens": SQL_POSEXPLODE_TOKENS,
-    "q_sliding_windows": SQL_SLIDING_WINDOWS,
-    "q_sql_local_supplier": LOCAL_SUPPLIER_REVENUE_SQL,
-    "q_sql_returned_items": RETURNED_ITEM_REVENUE_SQL,
-}
+register(q_grouping_sets, SQL_GROUPING_SETS)
+register(q_window_navigation, SQL_WINDOW_NAVIGATION, bench=False)
+register(q_moving_avg, SQL_MOVING_AVG)
+register(q_argmax, SQL_ARGMAX, bench=False)
+register(q_conditional_agg, SQL_CONDITIONAL_AGG)
+register(q_string_funcs2, SQL_STRING_FUNCS2, bench=False)
+register(q_array_funcs2, SQL_ARRAY_FUNCS2, bench=False)
+register(q_bitwise_ops, SQL_BITWISE_OPS, bench=False)
+register(q_date_trunc, SQL_DATE_TRUNC, bench=False)
+register(q_regr_stats, SQL_REGR_STATS, bench=False)
+register(q_unpivot_long, SQL_UNPIVOT_LONG, bench=False)
+register(q_posexplode_tokens, SQL_POSEXPLODE_TOKENS, bench=False)
+register(q_sliding_windows, SQL_SLIDING_WINDOWS)
+register(q_sql_local_supplier, LOCAL_SUPPLIER_REVENUE_SQL)
+register(q_sql_returned_items, RETURNED_ITEM_REVENUE_SQL, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -793,29 +774,13 @@ def q_sql_order_priority(spark, sf_dir):
     return run_sql(spark, ORDER_PRIORITY_CHECK_SQL)
 
 
-QUERIES_EXT.update(
-    {
-        "q_multi_distinct": q_multi_distinct,
-        "q_dedup_keyed": q_dedup_keyed,
-        "q_hof_battery": q_hof_battery,
-        "q_map_ops": q_map_ops,
-        "q_try_arith": q_try_arith,
-        "q_cross_join_small": q_cross_join_small,
-        "q_sql_order_priority": q_sql_order_priority,
-    }
-)
-
-ORACLE_EXT.update(
-    {
-        "q_multi_distinct": SQL_MULTI_DISTINCT,
-        "q_dedup_keyed": SQL_DEDUP_KEYED,
-        "q_hof_battery": SQL_HOF_BATTERY,
-        "q_map_ops": SQL_MAP_OPS,
-        "q_try_arith": SQL_TRY_ARITH,
-        "q_cross_join_small": SQL_CROSS_JOIN_SMALL,
-        "q_sql_order_priority": ORDER_PRIORITY_CHECK_SQL,
-    }
-)
+register(q_multi_distinct, SQL_MULTI_DISTINCT, bench=False)
+register(q_dedup_keyed, SQL_DEDUP_KEYED, bench=False)
+register(q_hof_battery, SQL_HOF_BATTERY, bench=False)
+register(q_map_ops, SQL_MAP_OPS, bench=False)
+register(q_try_arith, SQL_TRY_ARITH, bench=False)
+register(q_cross_join_small, SQL_CROSS_JOIN_SMALL, bench=False)
+register(q_sql_order_priority, ORDER_PRIORITY_CHECK_SQL, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -950,23 +915,10 @@ FROM l JOIN d ON l.status_n IS NOT DISTINCT FROM d.status_n
 """
 
 
-QUERIES_EXT.update(
-    {
-        "q_scd2_history": q_scd2_history,
-        "q_upsert_merge": q_upsert_merge,
-        "q_json_roundtrip": q_json_roundtrip,
-        "q_join_null_safe": q_join_null_safe,
-    }
-)
-
-ORACLE_EXT.update(
-    {
-        "q_scd2_history": SQL_SCD2_HISTORY,
-        "q_upsert_merge": SQL_UPSERT_MERGE,
-        "q_json_roundtrip": SQL_JSON_ROUNDTRIP,
-        "q_join_null_safe": SQL_JOIN_NULL_SAFE,
-    }
-)
+register(q_scd2_history, SQL_SCD2_HISTORY, bench=False)
+register(q_upsert_merge, SQL_UPSERT_MERGE, bench=False)
+register(q_json_roundtrip, SQL_JSON_ROUNDTRIP, bench=False)
+register(q_join_null_safe, SQL_JOIN_NULL_SAFE, bench=False)
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -1031,8 +983,7 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
 """
 
-QUERIES_EXT["q_dedup_clusters"] = q_dedup_clusters
-ORACLE_EXT["q_dedup_clusters"] = SQL_DEDUP_CLUSTERS
+register(q_dedup_clusters, SQL_DEDUP_CLUSTERS, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -1133,9 +1084,7 @@ def q_stream_join(spark, sf_dir):
     )
 
 
-QUERIES_EXT["q_kmeans_train"] = q_kmeans_train
-ORACLE_EXT["q_kmeans_train"] = SQL_KMEANS_TRAIN_BOUNDS
-QUERIES_EXT["q_stream_join"] = q_stream_join
+register(q_kmeans_train, SQL_KMEANS_TRAIN_BOUNDS, bench=False)
 
 # stream-stream interval join drains deterministically under availableNow
 # (single micro-batch; no late data to drop), so the batch self-join IS
@@ -1148,7 +1097,7 @@ FROM events l JOIN events r
  AND r.ts BETWEEN l.ts - INTERVAL 10 MINUTE AND l.ts
 GROUP BY l.user_id
 """
-ORACLE_EXT["q_stream_join"] = SQL_STREAM_JOIN
+register(q_stream_join, SQL_STREAM_JOIN, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -1360,27 +1309,12 @@ FROM documents
 """
 
 
-QUERIES_EXT.update(
-    {
-        "q_jsonl_source": q_jsonl_source,
-        "q_orc_roundtrip": q_orc_roundtrip,
-        "q_sql_ctas": q_sql_ctas,
-        "q_doc_chunk": q_doc_chunk,
-        "q_tf_idf": q_tf_idf,
-        "q_text_scrub": q_text_scrub,
-    }
-)
-
-ORACLE_EXT.update(
-    {
-        "q_jsonl_source": SQL_JSONL_SOURCE,
-        "q_orc_roundtrip": SQL_ORC_ROUNDTRIP,
-        "q_sql_ctas": SQL_CTAS,
-        "q_doc_chunk": SQL_DOC_CHUNK,
-        "q_tf_idf": SQL_TF_IDF,
-        "q_text_scrub": SQL_TEXT_SCRUB,
-    }
-)
+register(q_jsonl_source, SQL_JSONL_SOURCE, bench=False)
+register(q_orc_roundtrip, SQL_ORC_ROUNDTRIP, bench=False)
+register(q_sql_ctas, SQL_CTAS, bench=False)
+register(q_doc_chunk, SQL_DOC_CHUNK, bench=False)
+register(q_tf_idf, SQL_TF_IDF, bench=False)
+register(q_text_scrub, SQL_TEXT_SCRUB, bench=False)
 
 
 def q_groupwise_zscore(spark, sf_dir):
@@ -1410,5 +1344,4 @@ FROM customer
 WINDOW w AS (PARTITION BY c_nationkey)
 """
 
-QUERIES_EXT["q_groupwise_zscore"] = q_groupwise_zscore
-ORACLE_EXT["q_groupwise_zscore"] = SQL_GROUPWISE_ZSCORE
+register(q_groupwise_zscore, SQL_GROUPWISE_ZSCORE, bench=False)

@@ -43,27 +43,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
-
-QUERIES_EXT10 = {}
-ORACLE_EXT10 = {}
-
-
-def _sql_query(name, sql, tables, doc):
-    """Register a same-string-on-both-engines SQL query."""
-
-    def fn(spark, sf_dir, _sql=sql, _tables=tables):
-        from .sql import register_views, run_sql
-
-        register_views(spark, sf_dir, tables=_tables)
-        return run_sql(spark, _sql)
-
-    fn.__name__ = name
-    fn.__qualname__ = name
-    fn.__doc__ = doc
-    QUERIES_EXT10[name] = fn
-    ORACLE_EXT10[name] = sql
-    return fn
+from .registry import register, sql_query
+from .tables import TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -94,7 +75,7 @@ ORDER BY s.s_name, p_partkey
 LIMIT 100
 """
 
-_sql_query(
+sql_query(
     "q_sql_min_cost_supplier",
     MIN_COST_SUPPLIER_SQL,
     ("lineitem", "supplier", "nation", "region", "part"),
@@ -124,7 +105,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_quantity < 24
 """
 
-_sql_query(
+sql_query(
     "q_sql_forecast_revenue",
     FORECAST_REVENUE_SQL,
     ("lineitem",),
@@ -134,6 +115,7 @@ _sql_query(
     pushdown showcase — every predicate reaches the parquet row-group
     stats, no shuffle at all (partial aggregates merge into one row).
     Oracle is the same string.""",
+    bench=False,
 )
 
 
@@ -160,7 +142,7 @@ FROM (
 GROUP BY nation, o_year
 """
 
-_sql_query(
+sql_query(
     "q_sql_product_profit",
     PRODUCT_PROFIT_SQL,
     ("lineitem", "supplier", "part", "orders", "nation"),
@@ -194,7 +176,7 @@ WHERE inv_value > (SELECT CAST(SUM(inv_value) AS DECIMAL(24,4))
                           * CAST(0.001 AS DECIMAL(6,3)) FROM v)
 """
 
-_sql_query(
+sql_query(
     "q_sql_important_parts",
     IMPORTANT_PARTS_SQL,
     ("lineitem", "supplier", "nation"),
@@ -204,6 +186,7 @@ _sql_query(
     re-cast narrow before the fraction multiply so both engines stay in
     exact decimal (DuckDB's SUM widens to precision 38 — multiplying
     THAT overflows).  Oracle is the same string.""",
+    bench=False,
 )
 
 
@@ -227,7 +210,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 LIMIT 50
 """
 
-_sql_query(
+sql_query(
     "q_sql_parts_supplier_cnt",
     PARTS_SUPPLIER_CNT_SQL,
     ("part", "lineitem", "supplier"),
@@ -237,6 +220,7 @@ _sql_query(
     safe and becomes a broadcast anti-join; COUNT(DISTINCT) rides the
     same shuffle as the group-by.  Group key is unique so the
     ORDER BY + LIMIT is deterministic.  Oracle is the same string.""",
+    bench=False,
 )
 
 
@@ -268,7 +252,7 @@ WHERE n.n_name IN ('NATION_5', 'NATION_15')
 ORDER BY s_name
 """
 
-_sql_query(
+sql_query(
     "q_sql_promo_suppliers",
     PROMO_SUPPLIERS_SQL,
     ("lineitem", "supplier", "nation", "part"),
@@ -280,6 +264,7 @@ _sql_query(
     the heavy table is touched exactly once.  The ×2 comparison stays
     in narrow exact decimal on both engines.  Oracle is the same
     string.""",
+    bench=False,
 )
 
 
@@ -369,8 +354,7 @@ WHERE d.doc_id % 97 != 0
 GROUP BY 1
 """
 
-QUERIES_EXT10["q_contamination_check"] = q_contamination_check
-ORACLE_EXT10["q_contamination_check"] = SQL_CONTAMINATION_CHECK
+register(q_contamination_check, SQL_CONTAMINATION_CHECK)
 
 
 # --------------------------------------------------------------------------
@@ -457,5 +441,4 @@ FROM flags
 GROUP BY source
 """
 
-QUERIES_EXT10["q_quality_filter_funnel"] = q_quality_filter_funnel
-ORACLE_EXT10["q_quality_filter_funnel"] = SQL_QUALITY_FILTER_FUNNEL
+register(q_quality_filter_funnel, SQL_QUALITY_FILTER_FUNNEL)

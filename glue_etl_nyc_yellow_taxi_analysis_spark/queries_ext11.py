@@ -21,10 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import _t
-
-QUERIES_EXT11 = {}
-ORACLE_EXT11 = {}
+from .registry import register
+from .tables import _t
 
 
 # --------------------------------------------------------------------------
@@ -66,8 +64,7 @@ FROM (SELECT UNNEST(range(0, 10000)) AS seq)
 GROUP BY 1
 """
 
-QUERIES_EXT11["q_python_datasource"] = q_python_datasource
-ORACLE_EXT11["q_python_datasource"] = SQL_PYTHON_DATASOURCE
+register(q_python_datasource, SQL_PYTHON_DATASOURCE)
 
 
 # --------------------------------------------------------------------------
@@ -119,8 +116,7 @@ WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
 GROUP BY o_orderpriority
 """
 
-QUERIES_EXT11["q_sql_parameterized"] = q_sql_parameterized
-ORACLE_EXT11["q_sql_parameterized"] = SQL_PARAMETERIZED
+register(q_sql_parameterized, SQL_PARAMETERIZED, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -193,8 +189,7 @@ FROM numbered
 GROUP BY user_id, session_id
 """
 
-QUERIES_EXT11["q_session_window_native"] = q_session_window_native
-ORACLE_EXT11["q_session_window_native"] = SQL_SESSION_WINDOW_NATIVE
+register(q_session_window_native, SQL_SESSION_WINDOW_NATIVE)
 
 
 # --------------------------------------------------------------------------
@@ -283,5 +278,4 @@ SELECT COUNT(*) AS n_rows,
 FROM events
 """
 
-QUERIES_EXT11["q_observe_metrics"] = q_observe_metrics
-ORACLE_EXT11["q_observe_metrics"] = SQL_OBSERVE_METRICS
+register(q_observe_metrics, SQL_OBSERVE_METRICS, bench=False)

@@ -28,10 +28,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from .queries import DSUM_SQL, _t, dsum
-
-QUERIES_EXT12 = {}
-ORACLE_EXT12 = {}
+from .registry import register
+from .tables import DSUM_SQL, _t, dsum
 
 
 # --------------------------------------------------------------------------
@@ -91,8 +89,7 @@ JOIN orders o ON l.l_orderkey = o.o_orderkey
 GROUP BY o.o_orderpriority
 """
 
-QUERIES_EXT12["q_bucketed_join"] = q_bucketed_join
-ORACLE_EXT12["q_bucketed_join"] = SQL_BUCKETED_JOIN
+register(q_bucketed_join, SQL_BUCKETED_JOIN, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -127,8 +124,7 @@ FROM orders
 GROUP BY o_orderstatus
 """
 
-QUERIES_EXT12["q_zstd_roundtrip"] = q_zstd_roundtrip
-ORACLE_EXT12["q_zstd_roundtrip"] = SQL_ZSTD_ROUNDTRIP
+register(q_zstd_roundtrip, SQL_ZSTD_ROUNDTRIP, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -180,8 +176,7 @@ SELECT 'by_status', l_linestatus, COUNT(*),
 FROM base GROUP BY l_linestatus
 """
 
-QUERIES_EXT12["q_cached_multi_agg"] = q_cached_multi_agg
-ORACLE_EXT12["q_cached_multi_agg"] = SQL_CACHED_MULTI_AGG
+register(q_cached_multi_agg, SQL_CACHED_MULTI_AGG, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -220,7 +215,7 @@ def q_stream_sessions(spark, sf_dir):
     # the corpus max; the watermark is GLOBAL, not per key) closes every
     # real session; maxFilesPerTrigger=1 guarantees the flush lands in a
     # later micro-batch than the data it flushes.
-    from .queries import _events
+    from .tables import _events
 
     mx = _events(spark, sf_dir).agg(F.max("ts")).collect()[0][0]
     if mx is None:
@@ -288,8 +283,6 @@ def q_stream_sessions(spark, sf_dir):
     )
 
 
-QUERIES_EXT12["q_stream_sessions"] = q_stream_sessions
-
 # session_window merges on pure event-time gaps (no tz-dependent
 # alignment) and the drained output is integer counts — the batch
 # lag-sessionization with the SAME boundary (strict >: an exact-gap
@@ -315,7 +308,7 @@ SELECT user_id,
 FROM numbered
 GROUP BY user_id
 """
-ORACLE_EXT12["q_stream_sessions"] = SQL_STREAM_SESSIONS
+register(q_stream_sessions, SQL_STREAM_SESSIONS, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -387,8 +380,6 @@ def q_stream_static_join(spark, sf_dir):
     )
 
 
-QUERIES_EXT12["q_stream_static_join"] = q_stream_static_join
-
 SQL_STREAM_STATIC_JOIN = """
 WITH dim AS (
   SELECT * FROM (VALUES
@@ -408,7 +399,7 @@ SELECT category,
 FROM windows
 GROUP BY category
 """
-ORACLE_EXT12["q_stream_static_join"] = SQL_STREAM_STATIC_JOIN
+register(q_stream_static_join, SQL_STREAM_STATIC_JOIN, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -498,8 +489,6 @@ def q_stream_upsert_apply(spark, sf_dir):
     )
 
 
-QUERIES_EXT12["q_stream_upsert_apply"] = q_stream_upsert_apply
-
 # last-writer-wins over the three ordered change sets is closed-form:
 # %17 keys take batch-1's whole row (status 'X', ORIGINAL price — b1 was
 # built from the source, so it overwrites b0's reprice), else %13 keys
@@ -525,7 +514,7 @@ SELECT o_orderstatus,
 FROM final
 GROUP BY o_orderstatus
 """
-ORACLE_EXT12["q_stream_upsert_apply"] = SQL_STREAM_UPSERT_APPLY
+register(q_stream_upsert_apply, SQL_STREAM_UPSERT_APPLY, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -568,5 +557,4 @@ WHERE o_totalprice > 1000.0
 GROUP BY o_orderstatus
 """
 
-QUERIES_EXT12["q_pandas_api"] = q_pandas_api
-ORACLE_EXT12["q_pandas_api"] = SQL_PANDAS_API
+register(q_pandas_api, SQL_PANDAS_API)

@@ -16,10 +16,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import dedup, similarity
-from .queries import _COSINE_SQL, TOKS_SQL, _t
-
-QUERIES_EXT13 = {}
-ORACLE_EXT13 = {}
+from .registry import register
+from .tables import _COSINE_SQL, TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -113,8 +111,7 @@ WHERE jaccard_raw >= {tau}
 
 SQL_MINHASH_DEDUP_ORACLE = sql_minhash_pairs(_MH_TAU)
 
-QUERIES_EXT13["q_minhash_dedup_oracle"] = q_minhash_dedup_oracle
-ORACLE_EXT13["q_minhash_dedup_oracle"] = SQL_MINHASH_DEDUP_ORACLE
+register(q_minhash_dedup_oracle, SQL_MINHASH_DEDUP_ORACLE)
 
 
 # --------------------------------------------------------------------------
@@ -163,8 +160,7 @@ FROM banded a JOIN banded b
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 8
 """
 
-QUERIES_EXT13["q_simhash_oracle"] = q_simhash_oracle
-ORACLE_EXT13["q_simhash_oracle"] = SQL_SIMHASH_ORACLE
+register(q_simhash_oracle, SQL_SIMHASH_ORACLE)
 
 
 # --------------------------------------------------------------------------
@@ -214,5 +210,4 @@ SELECT query_id, vec_id, cosine_sim, rank FROM (
 WHERE rank <= 10
 """
 
-QUERIES_EXT13["q_ann_ivf_oracle"] = q_ann_ivf_oracle
-ORACLE_EXT13["q_ann_ivf_oracle"] = SQL_ANN_IVF_ORACLE
+register(q_ann_ivf_oracle, SQL_ANN_IVF_ORACLE)

@@ -25,10 +25,8 @@ from pyspark.sql import functions as F
 
 from .operators import text
 from .operators.indexing import global_running_sum
-from .queries import NORM_SQL, TOKS_SQL, _t
-
-QUERIES_EXT14 = {}
-ORACLE_EXT14 = {}
+from .registry import register
+from .tables import NORM_SQL, TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -84,8 +82,7 @@ FROM sh JOIN dfc USING (s)
 GROUP BY doc_id
 """
 
-QUERIES_EXT14["q_boilerplate_ratio"] = q_boilerplate_ratio
-ORACLE_EXT14["q_boilerplate_ratio"] = SQL_BOILERPLATE_RATIO
+register(q_boilerplate_ratio, SQL_BOILERPLATE_RATIO)
 
 
 # --------------------------------------------------------------------------
@@ -112,8 +109,7 @@ FROM orders
 WHERE ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 100 < 5
 """
 
-QUERIES_EXT14["q_hash_sample"] = q_hash_sample
-ORACLE_EXT14["q_hash_sample"] = SQL_HASH_SAMPLE
+register(q_hash_sample, SQL_HASH_SAMPLE)
 
 
 # --------------------------------------------------------------------------
@@ -212,8 +208,7 @@ SELECT vec_id,
 FROM embeddings, b
 """
 
-QUERIES_EXT14["q_embedding_quantize"] = q_embedding_quantize
-ORACLE_EXT14["q_embedding_quantize"] = SQL_EMBEDDING_QUANTIZE
+register(q_embedding_quantize, SQL_EMBEDDING_QUANTIZE)
 
 
 # --------------------------------------------------------------------------
@@ -256,8 +251,7 @@ ORDER BY cnt DESC, pair
 LIMIT 20
 """
 
-QUERIES_EXT14["q_bpe_pair_counts"] = q_bpe_pair_counts
-ORACLE_EXT14["q_bpe_pair_counts"] = SQL_BPE_PAIR_COUNTS
+register(q_bpe_pair_counts, SQL_BPE_PAIR_COUNTS)
 
 
 # --------------------------------------------------------------------------
@@ -312,8 +306,7 @@ FROM cum
 GROUP BY 1
 """
 
-QUERIES_EXT14["q_sequence_packing"] = q_sequence_packing
-ORACLE_EXT14["q_sequence_packing"] = SQL_SEQUENCE_PACKING
+register(q_sequence_packing, SQL_SEQUENCE_PACKING)
 
 
 # --------------------------------------------------------------------------
@@ -346,8 +339,7 @@ SELECT media_id,
 FROM m, unnest(range(0, CAST(ceil(nb / 32.0) AS BIGINT), 4)) AS t(i)
 """
 
-QUERIES_EXT14["q_multimodal_framesample"] = q_multimodal_framesample
-ORACLE_EXT14["q_multimodal_framesample"] = SQL_MULTIMODAL_FRAMESAMPLE
+register(q_multimodal_framesample, SQL_MULTIMODAL_FRAMESAMPLE)
 
 
 # --------------------------------------------------------------------------
@@ -433,8 +425,7 @@ GROUP BY f.cluster, c.centroid
     return "".join(parts)
 
 
-QUERIES_EXT14["q_kmeans_oracle"] = q_kmeans_oracle
-ORACLE_EXT14["q_kmeans_oracle"] = build_kmeans_oracle_sql()
+register(q_kmeans_oracle, build_kmeans_oracle_sql(), bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -496,8 +487,7 @@ FROM scored
 GROUP BY fingerprint
 """
 
-QUERIES_EXT14["q_dedup_keep_best"] = q_dedup_keep_best
-ORACLE_EXT14["q_dedup_keep_best"] = SQL_DEDUP_KEEP_BEST
+register(q_dedup_keep_best, SQL_DEDUP_KEEP_BEST, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -563,5 +553,4 @@ SELECT source, n_docs, CAST(n_tokens AS BIGINT) AS n_tokens,
 FROM per_source, tot
 """
 
-QUERIES_EXT14["q_dataset_mixture"] = q_dataset_mixture
-ORACLE_EXT14["q_dataset_mixture"] = SQL_DATASET_MIXTURE
+register(q_dataset_mixture, SQL_DATASET_MIXTURE, bench=False)

@@ -20,10 +20,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .plans import star
-from .queries import TOKS_SQL, _t, _taxi_fixture
-
-QUERIES_EXT15 = {}
-ORACLE_EXT15 = {}
+from .registry import register
+from .tables import _COSINE_SQL, TOKS_SQL, _t, _taxi_fixture
 
 
 # --------------------------------------------------------------------------
@@ -164,8 +162,7 @@ FROM filtered
 WHERE trip_duration_minutes < 1440
 """
 
-QUERIES_EXT15["q_taxi_star_deterministic"] = q_taxi_star_deterministic
-ORACLE_EXT15["q_taxi_star_deterministic"] = SQL_TAXI_STAR_DETERMINISTIC
+register(q_taxi_star_deterministic, SQL_TAXI_STAR_DETERMINISTIC)
 
 
 # --------------------------------------------------------------------------
@@ -277,9 +274,6 @@ def q_ann_lsh_oracle(spark, sf_dir):
     return lsh_ann_topk_md5(spark, sf_dir, _LSH_TABLES, _LSH_PLANES)
 
 
-from .queries import _COSINE_SQL  # noqa: E402
-
-
 def sql_ann_lsh_md5(tables: int = _LSH_TABLES, planes: int = _LSH_PLANES) -> str:
     """SQL twin of lsh_ann_topk_md5 at the same (tables, planes)."""
     return f"""
@@ -322,8 +316,7 @@ WHERE rank <= 10
 
 SQL_ANN_LSH_ORACLE = sql_ann_lsh_md5(_LSH_TABLES, _LSH_PLANES)
 
-QUERIES_EXT15["q_ann_lsh_oracle"] = q_ann_lsh_oracle
-ORACLE_EXT15["q_ann_lsh_oracle"] = SQL_ANN_LSH_ORACLE
+register(q_ann_lsh_oracle, SQL_ANN_LSH_ORACLE)
 
 
 # --------------------------------------------------------------------------
@@ -370,8 +363,7 @@ SELECT doc_id AS media_id,
 FROM documents
 """
 
-QUERIES_EXT15["q_multimodal_resize"] = q_multimodal_resize
-ORACLE_EXT15["q_multimodal_resize"] = SQL_MULTIMODAL_RESIZE
+register(q_multimodal_resize, SQL_MULTIMODAL_RESIZE)
 
 
 # --------------------------------------------------------------------------
@@ -464,8 +456,7 @@ FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
 GROUP BY 1, 2
 """
 
-QUERIES_EXT15["q_dedup_cross_source"] = q_dedup_cross_source
-ORACLE_EXT15["q_dedup_cross_source"] = SQL_DEDUP_CROSS_SOURCE
+register(q_dedup_cross_source, SQL_DEDUP_CROSS_SOURCE)
 
 
 # --------------------------------------------------------------------------
@@ -540,5 +531,4 @@ GROUP BY doc_id
 """
 
 
-QUERIES_EXT15["q_doc_logprob"] = q_doc_logprob
-ORACLE_EXT15["q_doc_logprob"] = _sql_doc_logprob()
+register(q_doc_logprob, _sql_doc_logprob())

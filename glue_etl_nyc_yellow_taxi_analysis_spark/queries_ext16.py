@@ -32,10 +32,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import similarity, text
-from .queries import _COSINE_SQL, TOKS_SQL, _t
-
-QUERIES_EXT16 = {}
-ORACLE_EXT16 = {}
+from .registry import register
+from .tables import _COSINE_SQL, TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -181,8 +179,7 @@ SELECT s.vec_id, s.cluster,
 FROM assigned s LEFT JOIN dups d ON s.vec_id = d.vec_id
 """
 
-QUERIES_EXT16["q_semdedup"] = q_semdedup
-ORACLE_EXT16["q_semdedup"] = SQL_SEMDEDUP
+register(q_semdedup, SQL_SEMDEDUP)
 
 
 # --------------------------------------------------------------------------
@@ -265,8 +262,7 @@ FROM seg s JOIN df d USING (seg)
 GROUP BY s.doc_id
 """
 
-QUERIES_EXT16["q_line_dedup"] = q_line_dedup
-ORACLE_EXT16["q_line_dedup"] = SQL_LINE_DEDUP
+register(q_line_dedup, SQL_LINE_DEDUP)
 
 
 # --------------------------------------------------------------------------
@@ -415,8 +411,7 @@ def _sql_bpe_merge_train() -> str:
     return _sql_bpe_chain() + "\n" + sel
 
 
-QUERIES_EXT16["q_bpe_merge_train"] = q_bpe_merge_train
-ORACLE_EXT16["q_bpe_merge_train"] = _sql_bpe_merge_train()
+register(q_bpe_merge_train, _sql_bpe_merge_train())
 
 
 # --------------------------------------------------------------------------
@@ -464,8 +459,7 @@ GROUP BY source
 """
 
 
-QUERIES_EXT16["q_bpe_apply"] = q_bpe_apply
-ORACLE_EXT16["q_bpe_apply"] = _sql_bpe_apply()
+register(q_bpe_apply, _sql_bpe_apply())
 
 
 # --------------------------------------------------------------------------
@@ -539,5 +533,4 @@ SELECT doc_id, source, n_tok, n_stop, n_types,
 FROM f
 """
 
-QUERIES_EXT16["q_quality_classifier"] = q_quality_classifier
-ORACLE_EXT16["q_quality_classifier"] = SQL_QUALITY_CLASSIFIER
+register(q_quality_classifier, SQL_QUALITY_CLASSIFIER)

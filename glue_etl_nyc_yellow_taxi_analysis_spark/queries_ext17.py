@@ -18,10 +18,8 @@ import tempfile
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
-
-QUERIES_EXT17 = {}
-ORACLE_EXT17 = {}
+from .registry import register
+from .tables import TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -102,8 +100,7 @@ SELECT 2, COUNT(*),
 FROM g2
 """
 
-QUERIES_EXT17["q_kanonymity"] = q_kanonymity
-ORACLE_EXT17["q_kanonymity"] = SQL_KANONYMITY
+register(q_kanonymity, SQL_KANONYMITY)
 
 
 # --------------------------------------------------------------------------
@@ -193,5 +190,4 @@ FROM f
 GROUP BY source
 """
 
-QUERIES_EXT17["q_stream_quality_filter"] = q_stream_quality_filter
-ORACLE_EXT17["q_stream_quality_filter"] = SQL_STREAM_QUALITY_FILTER
+register(q_stream_quality_filter, SQL_STREAM_QUALITY_FILTER)

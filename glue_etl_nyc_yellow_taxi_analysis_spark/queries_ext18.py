@@ -27,10 +27,8 @@ from pyspark.sql import functions as F
 from .operators import text
 from .operators.dedup import containment_pairs
 from .operators.similarity import pca_power_exact
-from .queries import TOKS_SQL, _t
-
-QUERIES_EXT18 = {}
-ORACLE_EXT18 = {}
+from .registry import register
+from .tables import TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -84,8 +82,7 @@ SELECT split, source, COUNT(*) AS n_docs,
 FROM b GROUP BY split, source
 """
 
-QUERIES_EXT18["q_train_split"] = q_train_split
-ORACLE_EXT18["q_train_split"] = SQL_TRAIN_SPLIT
+register(q_train_split, SQL_TRAIN_SPLIT)
 
 
 # --------------------------------------------------------------------------
@@ -176,8 +173,7 @@ FROM directed
 WHERE n_src > 0 AND inter * 1000000 // n_src >= {_CT_TAU_PPM}
 """
 
-QUERIES_EXT18["q_containment_dedup"] = q_containment_dedup
-ORACLE_EXT18["q_containment_dedup"] = SQL_CONTAINMENT_DEDUP
+register(q_containment_dedup, SQL_CONTAINMENT_DEDUP)
 
 
 # --------------------------------------------------------------------------
@@ -248,8 +244,7 @@ FROM v{iters}, unnest(range(1, len(v) + 1)) AS u(j)
     return "".join(parts)
 
 
-QUERIES_EXT18["q_pca_power"] = q_pca_power
-ORACLE_EXT18["q_pca_power"] = build_pca_oracle_sql()
+register(q_pca_power, build_pca_oracle_sql())
 
 
 # --------------------------------------------------------------------------
@@ -308,8 +303,7 @@ SELECT ship_ym, n_rows, est_bytes,
 FROM g
 """
 
-QUERIES_EXT18["q_compaction_plan"] = q_compaction_plan
-ORACLE_EXT18["q_compaction_plan"] = SQL_COMPACTION_PLAN
+register(q_compaction_plan, SQL_COMPACTION_PLAN)
 
 
 # --------------------------------------------------------------------------
@@ -382,8 +376,7 @@ FROM j GROUP BY logit_band
 """
 
 
-QUERIES_EXT18["q_quality_calibration"] = q_quality_calibration
-ORACLE_EXT18["q_quality_calibration"] = _sql_quality_calibration()
+register(q_quality_calibration, _sql_quality_calibration())
 
 
 # --------------------------------------------------------------------------
@@ -480,5 +473,4 @@ FROM terms GROUP BY doc_id
 """
 
 
-QUERIES_EXT18["q_doc_ppl_bigram"] = q_doc_ppl_bigram
-ORACLE_EXT18["q_doc_ppl_bigram"] = _sql_doc_ppl_bigram()
+register(q_doc_ppl_bigram, _sql_doc_ppl_bigram())

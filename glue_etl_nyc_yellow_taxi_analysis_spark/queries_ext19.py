@@ -31,7 +31,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import dedup
-from .queries import TOKS_SQL, _t
 from .queries_ext13 import (
     _BAND_COLS_SQL,
     _BAND_UNION_SQL,
@@ -42,9 +41,8 @@ from .queries_ext13 import (
     _MINHASH_COLS_SQL,
     _SHINGLES_SQL,
 )
-
-QUERIES_EXT19 = {}
-ORACLE_EXT19 = {}
+from .registry import register
+from .tables import TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -119,8 +117,7 @@ SELECT shard, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
 FROM p GROUP BY shard
 """
 
-QUERIES_EXT19["q_global_shuffle"] = q_global_shuffle
-ORACLE_EXT19["q_global_shuffle"] = SQL_GLOBAL_SHUFFLE
+register(q_global_shuffle, SQL_GLOBAL_SHUFFLE)
 
 
 # --------------------------------------------------------------------------
@@ -271,8 +268,7 @@ SELECT n_truth, n_cand, n_hit,
 FROM truth, nc, nh
 """
 
-QUERIES_EXT19["q_dedup_recall"] = q_dedup_recall
-ORACLE_EXT19["q_dedup_recall"] = SQL_DEDUP_RECALL
+register(q_dedup_recall, SQL_DEDUP_RECALL)
 
 
 # --------------------------------------------------------------------------
@@ -346,8 +342,7 @@ SELECT dim, n,
 FROM agg
 """
 
-QUERIES_EXT19["q_embedding_dim_stats"] = q_embedding_dim_stats
-ORACLE_EXT19["q_embedding_dim_stats"] = SQL_EMBEDDING_DIM_STATS
+register(q_embedding_dim_stats, SQL_EMBEDDING_DIM_STATS)
 
 
 # --------------------------------------------------------------------------
@@ -430,5 +425,4 @@ FROM c2 JOIN cl USING (w1) JOIN cr USING (w2), tot
 WHERE c2 >= {_PMI_MIN_COUNT}
 """
 
-QUERIES_EXT19["q_pmi_bigrams"] = q_pmi_bigrams
-ORACLE_EXT19["q_pmi_bigrams"] = SQL_PMI_BIGRAMS
+register(q_pmi_bigrams, SQL_PMI_BIGRAMS)

@@ -20,10 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .queries import DSUM_SQL, TOKS_SQL, _t, dsum
-
-QUERIES_EXT2 = {}
-ORACLE_EXT2 = {}
+from .registry import register
+from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
 
 # --------------------------------------------------------------------------
@@ -94,8 +92,7 @@ FROM calendar c LEFT JOIN daily d
   ON c.o_orderpriority = d.o_orderpriority AND c.day = d.day
 """
 
-QUERIES_EXT2["q_gap_fill"] = q_gap_fill
-ORACLE_EXT2["q_gap_fill"] = SQL_GAP_FILL
+register(q_gap_fill, SQL_GAP_FILL)
 
 
 # --------------------------------------------------------------------------
@@ -174,8 +171,7 @@ SELECT CAST(SUM(s1) AS BIGINT) AS n_view,
 FROM staged
 """
 
-QUERIES_EXT2["q_funnel"] = q_funnel
-ORACLE_EXT2["q_funnel"] = SQL_FUNNEL
+register(q_funnel, SQL_FUNNEL)
 
 
 # --------------------------------------------------------------------------
@@ -269,8 +265,7 @@ SELECT event_id, user_id, value, mu, sd
 FROM stats WHERE ABS(value - mu) > {_SIGMA} * sd
 """
 
-QUERIES_EXT2["q_rolling_anomaly"] = q_rolling_anomaly
-ORACLE_EXT2["q_rolling_anomaly"] = SQL_ROLLING_ANOMALY
+register(q_rolling_anomaly, SQL_ROLLING_ANOMALY)
 
 
 # --------------------------------------------------------------------------
@@ -340,8 +335,7 @@ FROM part a JOIN part b
 WHERE levenshtein(a.p_name, b.p_name) <= {_ED_K}
 """
 
-QUERIES_EXT2["q_edit_distance"] = q_edit_distance
-ORACLE_EXT2["q_edit_distance"] = SQL_EDIT_DISTANCE
+register(q_edit_distance, SQL_EDIT_DISTANCE, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -395,8 +389,7 @@ FROM o JOIN cohort ON o.o_custkey = cohort.o_custkey
 GROUP BY 1, 2, 3
 """
 
-QUERIES_EXT2["q_cohort_retention"] = q_cohort_retention
-ORACLE_EXT2["q_cohort_retention"] = SQL_COHORT_RETENTION
+register(q_cohort_retention, SQL_COHORT_RETENTION)
 
 
 # --------------------------------------------------------------------------
@@ -442,8 +435,7 @@ WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 4) <
                          WHEN 'P' THEN '0ccd' END
 """
 
-QUERIES_EXT2["q_stratified_sample"] = q_stratified_sample
-ORACLE_EXT2["q_stratified_sample"] = SQL_STRATIFIED_SAMPLE
+register(q_stratified_sample, SQL_STRATIFIED_SAMPLE)
 
 
 # --------------------------------------------------------------------------
@@ -494,8 +486,7 @@ FROM orders
 GROUP BY o_orderstatus, o_orderpriority
 """
 
-QUERIES_EXT2["q_incremental_agg"] = q_incremental_agg
-ORACLE_EXT2["q_incremental_agg"] = SQL_INCREMENTAL_AGG
+register(q_incremental_agg, SQL_INCREMENTAL_AGG)
 
 
 # --------------------------------------------------------------------------
@@ -572,8 +563,7 @@ SELECT o_orderkey, bx, by,
 FROM keyed
 """
 
-QUERIES_EXT2["q_zorder_code"] = q_zorder_code
-ORACLE_EXT2["q_zorder_code"] = SQL_ZORDER_CODE
+register(q_zorder_code, SQL_ZORDER_CODE)
 
 
 # --------------------------------------------------------------------------
@@ -647,8 +637,7 @@ JOIN hist h ON h.dim_key = p.dim_key
   AND (h.valid_to IS NULL OR h.valid_to > d.as_of)
 """
 
-QUERIES_EXT2["q_scd2_pit"] = q_scd2_pit
-ORACLE_EXT2["q_scd2_pit"] = SQL_SCD2_PIT
+register(q_scd2_pit, SQL_SCD2_PIT)
 
 
 # --------------------------------------------------------------------------
@@ -701,8 +690,7 @@ SELECT med.c_nationkey, median_bal, mode_segment
 FROM med JOIN mode ON med.c_nationkey = mode.c_nationkey
 """
 
-QUERIES_EXT2["q_median_mode"] = q_median_mode
-ORACLE_EXT2["q_median_mode"] = SQL_MEDIAN_MODE
+register(q_median_mode, SQL_MEDIAN_MODE)
 
 
 # --------------------------------------------------------------------------
@@ -847,8 +835,6 @@ def q_stream_dedup(spark, sf_dir):
     )
 
 
-QUERIES_EXT2["q_stream_dedup"] = q_stream_dedup
-
 # dropDuplicatesWithinWatermark keeps ≥1 row per (user, type) and the
 # output is a distinct-count — deterministic after the drain, so the batch
 # COUNT(DISTINCT) is the oracle
@@ -856,7 +842,7 @@ SQL_STREAM_DEDUP = """
 SELECT event_type, COUNT(DISTINCT user_id) AS n_users
 FROM events GROUP BY event_type
 """
-ORACLE_EXT2["q_stream_dedup"] = SQL_STREAM_DEDUP
+register(q_stream_dedup, SQL_STREAM_DEDUP, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -913,8 +899,7 @@ SELECT CAST(v AS BIGINT) AS query_id,
 FROM (VALUES (0), (1), (2)) t(v)
 """
 
-QUERIES_EXT2["q_ann_recall"] = q_ann_recall
-ORACLE_EXT2["q_ann_recall"] = SQL_ANN_RECALL_BOUNDS
+register(q_ann_recall, SQL_ANN_RECALL_BOUNDS, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -963,12 +948,8 @@ ORDER BY n DESC, bigram
 LIMIT 20
 """
 
-QUERIES_EXT2["q_bigram_topk"] = q_bigram_topk
-ORACLE_EXT2["q_bigram_topk"] = SQL_BIGRAM_TOPK
+register(q_bigram_topk, SQL_BIGRAM_TOPK)
 
-QUERIES_EXT2["q_sql_volume_shipping"] = q_sql_volume_shipping
-ORACLE_EXT2["q_sql_volume_shipping"] = VOLUME_SHIPPING_SQL
-QUERIES_EXT2["q_sql_promo_revenue"] = q_sql_promo_revenue
-ORACLE_EXT2["q_sql_promo_revenue"] = PROMO_REVENUE_SQL
-QUERIES_EXT2["q_sql_discounted_revenue"] = q_sql_discounted_revenue
-ORACLE_EXT2["q_sql_discounted_revenue"] = DISCOUNTED_REVENUE_SQL
+register(q_sql_volume_shipping, VOLUME_SHIPPING_SQL)
+register(q_sql_promo_revenue, PROMO_REVENUE_SQL, bench=False)
+register(q_sql_discounted_revenue, DISCOUNTED_REVENUE_SQL, bench=False)

@@ -25,7 +25,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import dedup, text
-from .queries import TOKS_SQL, _t
 from .queries_ext13 import (
     _MH_BANDS,
     _MH_K,
@@ -34,9 +33,8 @@ from .queries_ext13 import (
     SQL_MINHASH_DEDUP_ORACLE,
 )
 from .queries_ext18 import _PCA_DEC18
-
-QUERIES_EXT20 = {}
-ORACLE_EXT20 = {}
+from .registry import register
+from .tables import TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -83,8 +81,7 @@ SELECT event_type, n_rows,
 FROM c, t
 """
 
-QUERIES_EXT20["q_salt_plan"] = q_salt_plan
-ORACLE_EXT20["q_salt_plan"] = SQL_SALT_PLAN
+register(q_salt_plan, SQL_SALT_PLAN)
 
 
 # --------------------------------------------------------------------------
@@ -145,8 +142,7 @@ SELECT CAST(0 AS BIGINT) AS degree,
            AS n_docs
 """
 
-QUERIES_EXT20["q_dup_graph_degree"] = q_dup_graph_degree
-ORACLE_EXT20["q_dup_graph_degree"] = SQL_DUP_GRAPH_DEGREE
+register(q_dup_graph_degree, SQL_DUP_GRAPH_DEGREE)
 
 
 # --------------------------------------------------------------------------
@@ -252,8 +248,7 @@ FROM s
 """
 
 
-QUERIES_EXT20["q_zipf_fit"] = q_zipf_fit
-ORACLE_EXT20["q_zipf_fit"] = _sql_zipf_fit()
+register(q_zipf_fit, _sql_zipf_fit())
 
 
 # --------------------------------------------------------------------------
@@ -375,8 +370,7 @@ FROM folded
 """
 
 
-QUERIES_EXT20["q_corpus_drift_js"] = q_corpus_drift_js
-ORACLE_EXT20["q_corpus_drift_js"] = _sql_corpus_drift_js()
+register(q_corpus_drift_js, _sql_corpus_drift_js())
 
 
 # --------------------------------------------------------------------------
@@ -521,5 +515,4 @@ WHERE s.id % 7 = 0
 """
 
 
-QUERIES_EXT20["q_dedup_incremental"] = q_dedup_incremental
-ORACLE_EXT20["q_dedup_incremental"] = _sql_dedup_incremental()
+register(q_dedup_incremental, _sql_dedup_incremental())

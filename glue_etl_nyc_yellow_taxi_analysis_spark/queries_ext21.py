@@ -21,10 +21,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
+from .registry import register
+from .tables import TOKS_SQL, _t
 
-QUERIES_EXT21 = {}
-ORACLE_EXT21 = {}
 
 _SS_K = 8  # span width in tokens; production ExactSubstr uses ~50 BPE
 # tokens — the plan is width-invariant, only the shingle map changes
@@ -146,5 +145,4 @@ SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
 FROM cov
 """
 
-QUERIES_EXT21["q_substr_dedup"] = q_substr_dedup
-ORACLE_EXT21["q_substr_dedup"] = SQL_SUBSTR_DEDUP
+register(q_substr_dedup, SQL_SUBSTR_DEDUP)

@@ -23,11 +23,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
 from .queries_ext18 import _PCA_DEC18
-
-QUERIES_EXT22 = {}
-ORACLE_EXT22 = {}
+from .registry import register
+from .tables import TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -91,8 +89,7 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_tokens,
 FROM flagged GROUP BY source
 """
 
-QUERIES_EXT22["q_tokenizer_oov"] = q_tokenizer_oov
-ORACLE_EXT22["q_tokenizer_oov"] = SQL_TOKENIZER_OOV
+register(q_tokenizer_oov, SQL_TOKENIZER_OOV)
 
 
 # --------------------------------------------------------------------------
@@ -226,8 +223,7 @@ FROM s
 """
 
 
-QUERIES_EXT22["q_heaps_fit"] = q_heaps_fit
-ORACLE_EXT22["q_heaps_fit"] = _sql_heaps_fit()
+register(q_heaps_fit, _sql_heaps_fit())
 
 
 # --------------------------------------------------------------------------
@@ -341,7 +337,7 @@ def q_ann_recall_oracle(spark, sf_dir):
 
 
 def _sql_ann_recall_oracle() -> str:
-    from .queries import SQL_SIMILARITY_TOPK
+    from .tables import SQL_SIMILARITY_TOPK
     from .queries_ext15 import sql_ann_lsh_md5
 
     return f"""
@@ -361,5 +357,4 @@ GROUP BY e.query_id
 """
 
 
-QUERIES_EXT22["q_ann_recall_oracle"] = q_ann_recall_oracle
-ORACLE_EXT22["q_ann_recall_oracle"] = _sql_ann_recall_oracle()
+register(q_ann_recall_oracle, _sql_ann_recall_oracle())

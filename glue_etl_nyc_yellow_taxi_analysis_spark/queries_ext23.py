@@ -21,10 +21,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
-
-QUERIES_EXT23 = {}
-ORACLE_EXT23 = {}
+from .registry import register
+from .tables import TOKS_SQL, _t
 
 
 # --------------------------------------------------------------------------
@@ -140,8 +138,7 @@ SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
 FROM cov
 """
 
-QUERIES_EXT23["q_span_mask_plan"] = q_span_mask_plan
-ORACLE_EXT23["q_span_mask_plan"] = SQL_SPAN_MASK_PLAN
+register(q_span_mask_plan, SQL_SPAN_MASK_PLAN)
 
 
 # --------------------------------------------------------------------------
@@ -229,8 +226,7 @@ SELECT n_docs, n_tokens, n_chars, n_sources, n_langs, vocab,
 FROM card, v, dup
 """
 
-QUERIES_EXT23["q_dataset_card"] = q_dataset_card
-ORACLE_EXT23["q_dataset_card"] = SQL_DATASET_CARD
+register(q_dataset_card, SQL_DATASET_CARD)
 
 
 # --------------------------------------------------------------------------
@@ -282,8 +278,7 @@ SELECT media_id, CAST(n_bytes AS INTEGER) AS n_bytes,
 FROM prof
 """
 
-QUERIES_EXT23["q_audio_energy_windows"] = q_audio_energy_windows
-ORACLE_EXT23["q_audio_energy_windows"] = SQL_AUDIO_ENERGY_WINDOWS
+register(q_audio_energy_windows, SQL_AUDIO_ENERGY_WINDOWS)
 
 
 # --------------------------------------------------------------------------
@@ -441,8 +436,7 @@ WHERE bit_count(xor(h_a, h_b)) <= {_BH_MAX_HAMMING}
 """
 
 
-QUERIES_EXT23["q_image_blockhash_neardup"] = q_image_blockhash_neardup
-ORACLE_EXT23["q_image_blockhash_neardup"] = _sql_image_blockhash()
+register(q_image_blockhash_neardup, _sql_image_blockhash())
 
 
 # --------------------------------------------------------------------------
@@ -524,8 +518,7 @@ SELECT media_id, CAST(len(e) AS BIGINT) AS n_frames,
 FROM cut
 """
 
-QUERIES_EXT23["q_video_scene_cut"] = q_video_scene_cut
-ORACLE_EXT23["q_video_scene_cut"] = SQL_VIDEO_SCENE_CUT
+register(q_video_scene_cut, SQL_VIDEO_SCENE_CUT)
 
 
 # --------------------------------------------------------------------------
@@ -560,7 +553,7 @@ def q_langid_confusion(spark, sf_dir):
 
 
 def _sql_langid_confusion() -> str:
-    from .queries import SQL_LANG_ID
+    from .tables import SQL_LANG_ID
 
     return f"""
 WITH pred AS (
@@ -576,8 +569,7 @@ FROM cm JOIN tot USING (lang)
 """
 
 
-QUERIES_EXT23["q_langid_confusion"] = q_langid_confusion
-ORACLE_EXT23["q_langid_confusion"] = _sql_langid_confusion()
+register(q_langid_confusion, _sql_langid_confusion())
 
 
 # --------------------------------------------------------------------------
@@ -661,8 +653,7 @@ SELECT z_band, CAST(COUNT(*) AS BIGINT) AS n_vecs,
 FROM banded GROUP BY z_band
 """
 
-QUERIES_EXT23["q_embedding_outliers"] = q_embedding_outliers
-ORACLE_EXT23["q_embedding_outliers"] = SQL_EMBEDDING_OUTLIERS
+register(q_embedding_outliers, SQL_EMBEDDING_OUTLIERS)
 
 
 # --------------------------------------------------------------------------
@@ -747,5 +738,4 @@ SELECT source, n,
 FROM c
 """
 
-QUERIES_EXT23["q_length_moments"] = q_length_moments
-ORACLE_EXT23["q_length_moments"] = SQL_LENGTH_MOMENTS
+register(q_length_moments, SQL_LENGTH_MOMENTS)

@@ -20,12 +20,10 @@ import tempfile
 from pyspark.sql import functions as F
 
 from .operators import dedup
-from .queries import _t
 from .queries_ext13 import _MH_BANDS, _MH_K, _MH_N
 from .queries_ext20 import _sql_dedup_incremental
-
-QUERIES_EXT24 = {}
-ORACLE_EXT24 = {}
+from .registry import register
+from .tables import _t
 
 
 def q_stream_dedup_incremental(spark, sf_dir):
@@ -135,9 +133,8 @@ def q_stream_dedup_incremental(spark, sf_dir):
     )
 
 
-QUERIES_EXT24["q_stream_dedup_incremental"] = q_stream_dedup_incremental
 # the streaming path reproduces the batch operator exactly — same oracle
-ORACLE_EXT24["q_stream_dedup_incremental"] = _sql_dedup_incremental()
+register(q_stream_dedup_incremental, _sql_dedup_incremental())
 
 
 def q_dedup_index_persist(spark, sf_dir):
@@ -238,9 +235,8 @@ def q_dedup_index_persist(spark, sf_dir):
     )
 
 
-QUERIES_EXT24["q_dedup_index_persist"] = q_dedup_index_persist
 # the persisted-index probe reproduces the batch operator — same oracle
-ORACLE_EXT24["q_dedup_index_persist"] = _sql_dedup_incremental()
+register(q_dedup_index_persist, _sql_dedup_incremental(), bench=False)
 
 
 def q_dedup_savings(spark, sf_dir):
@@ -291,5 +287,4 @@ FROM j GROUP BY band
 """
 
 
-QUERIES_EXT24["q_dedup_savings"] = q_dedup_savings
-ORACLE_EXT24["q_dedup_savings"] = _sql_dedup_savings()
+register(q_dedup_savings, _sql_dedup_savings())

@@ -14,11 +14,11 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import dedup, similarity
-from .queries import _COSINE_SQL, _t
 from .queries_ext9 import BM25_CTES, bm25_parts
+from .queries_ext13 import sql_minhash_pairs
+from .registry import register
+from .tables import _COSINE_SQL, _t
 
-QUERIES_EXT25 = {}
-ORACLE_EXT25 = {}
 
 _RRF_K = 60        # the canonical RRF damping constant
 _FUSE_TOPN = 20    # per-channel candidate depth
@@ -129,8 +129,7 @@ WITH {_HYBRID_CTES}
 SELECT doc_id, rank_lex, rank_dense, rrf_e8 FROM hybrid_topk
 """
 
-QUERIES_EXT25["q_hybrid_retrieval"] = q_hybrid_retrieval
-ORACLE_EXT25["q_hybrid_retrieval"] = SQL_HYBRID_RETRIEVAL
+register(q_hybrid_retrieval, SQL_HYBRID_RETRIEVAL)
 
 
 # --------------------------------------------------------------------------
@@ -150,7 +149,7 @@ def _mmr_cand_sims(spark, sf_dir):
     no matter the corpus size.  The corpus-sized scan runs exactly twice
     (top-N carve, then the isin-pruned pairwise pass — a pushed-down
     20-key scan, cheaper than caching the corpus)."""
-    from .queries import _t
+    from .tables import _t
 
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(
@@ -286,8 +285,7 @@ selall{k} AS MATERIALIZED (
     return "".join(parts)
 
 
-QUERIES_EXT25["q_mmr_rerank"] = q_mmr_rerank
-ORACLE_EXT25["q_mmr_rerank"] = _sql_mmr_chain()
+register(q_mmr_rerank, _sql_mmr_chain())
 
 
 # --------------------------------------------------------------------------
@@ -355,8 +353,7 @@ SELECT h.doc_id,
 FROM hybrid_topk h LEFT JOIN dl ON h.doc_id = dl.doc_id
 """
 
-QUERIES_EXT25["q_rag_context_pack"] = q_rag_context_pack
-ORACLE_EXT25["q_rag_context_pack"] = SQL_RAG_CONTEXT_PACK
+register(q_rag_context_pack, SQL_RAG_CONTEXT_PACK)
 
 
 # --------------------------------------------------------------------------
@@ -380,7 +377,7 @@ def q_contrastive_pairs(spark, sf_dir):
     pre-filter (IVF cells / LSH buckets — the proven lanes above);
     semantics here are the exact form.  cos_e6 is the floor integer
     lane, so ranks and scores replicate bit-for-bit."""
-    from .queries import _t
+    from .tables import _t
 
     emb = _t(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id").isin(0, 1, 2)).select(
@@ -437,8 +434,7 @@ FROM ranked
 WHERE (role = 'pos' AND rank <= 1) OR (role = 'neg' AND rank <= {_CP_NEGS})
 """
 
-QUERIES_EXT25["q_contrastive_pairs"] = q_contrastive_pairs
-ORACLE_EXT25["q_contrastive_pairs"] = SQL_CONTRASTIVE_PAIRS
+register(q_contrastive_pairs, SQL_CONTRASTIVE_PAIRS)
 
 
 # --------------------------------------------------------------------------
@@ -465,7 +461,7 @@ def q_batch_padding_plan(spark, sf_dir):
     Token counts per doc are one combine-heavy keyed shuffle; bucketing
     is a pure-integer CASE ladder (no log2/pow floats); everything after
     is an O(|buckets|) aggregate."""
-    from .queries import _t
+    from .tables import _t
 
     d = _t(spark, sf_dir, "documents")
     dl = (
@@ -532,8 +528,7 @@ SELECT bucket_len, n_docs,
 FROM per_bucket
 """
 
-QUERIES_EXT25["q_batch_padding_plan"] = q_batch_padding_plan
-ORACLE_EXT25["q_batch_padding_plan"] = SQL_BATCH_PADDING_PLAN
+register(q_batch_padding_plan, SQL_BATCH_PADDING_PLAN)
 
 
 # --------------------------------------------------------------------------
@@ -550,7 +545,7 @@ def q_arrow_map(spark, sf_dir):
     output a SQL oracle replays byte-for-byte.  For expressible logic
     the JVM expression lanes remain the scale path; this is the proof
     the Arrow-native escape hatch works end-to-end."""
-    from .queries import _t
+    from .tables import _t
 
     def _byte_stats(batches):
         import numpy as np
@@ -594,8 +589,7 @@ SELECT doc_id, n AS n_bytes,
 FROM b
 """
 
-QUERIES_EXT25["q_arrow_map"] = q_arrow_map
-ORACLE_EXT25["q_arrow_map"] = SQL_ARROW_MAP
+register(q_arrow_map, SQL_ARROW_MAP)
 
 
 def q_arrow_grouped(spark, sf_dir):
@@ -605,7 +599,7 @@ def q_arrow_grouped(spark, sf_dir):
     declared once with an oracle).  Per-source byte statistics computed
     with numpy over each group's Arrow table; groups must fit in
     executor memory (the applyInPandas contract, same here)."""
-    from .queries import _t
+    from .tables import _t
 
     def _per_source(table):
         import numpy as np
@@ -664,8 +658,7 @@ SELECT source, COUNT(*) AS n_docs,
 FROM b GROUP BY source
 """
 
-QUERIES_EXT25["q_arrow_grouped"] = q_arrow_grouped
-ORACLE_EXT25["q_arrow_grouped"] = SQL_ARROW_GROUPED
+register(q_arrow_grouped, SQL_ARROW_GROUPED)
 
 
 # --------------------------------------------------------------------------
@@ -687,7 +680,7 @@ def q_silhouette(spark, sf_dir):
     Scale shape: reps are O(labels) and broadcast; one corpus pass
     scores every point against all reps (labels ≪ corpus, same cost
     class as the IVF probe), then two keyed aggregates."""
-    from .queries import _t
+    from .tables import _t
 
     emb = _t(spark, sf_dir, "embeddings")
     w = Window.partitionBy("label").orderBy("vec_id")
@@ -773,8 +766,7 @@ SELECT label, COUNT(*) AS n_points,
 FROM per_point GROUP BY label
 """
 
-QUERIES_EXT25["q_silhouette"] = q_silhouette
-ORACLE_EXT25["q_silhouette"] = SQL_SILHOUETTE
+register(q_silhouette, SQL_SILHOUETTE)
 
 
 # --------------------------------------------------------------------------
@@ -794,7 +786,7 @@ def q_dedup_threshold_sweep(spark, sf_dir):
     works: candidate recall is a banding property, the sweep varies
     only the verify cut.  The cumulative window runs over ≤ 8 bucket
     rows."""
-    from .queries import _t
+    from .tables import _t
 
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_dedup_pairs(
@@ -814,8 +806,6 @@ def q_dedup_threshold_sweep(spark, sf_dir):
     return counts.withColumn("n_pairs_at_or_above", F.sum("n_pairs").over(w))
 
 
-from .queries_ext13 import sql_minhash_pairs  # noqa: E402
-
 SQL_DEDUP_THRESHOLD_SWEEP = f"""
 WITH pairs AS ({sql_minhash_pairs(_SWEEP_FLOOR)}),
 c AS (
@@ -830,5 +820,4 @@ SELECT tau_tenths, n_pairs,
 FROM c
 """
 
-QUERIES_EXT25["q_dedup_threshold_sweep"] = q_dedup_threshold_sweep
-ORACLE_EXT25["q_dedup_threshold_sweep"] = SQL_DEDUP_THRESHOLD_SWEEP
+register(q_dedup_threshold_sweep, SQL_DEDUP_THRESHOLD_SWEEP)

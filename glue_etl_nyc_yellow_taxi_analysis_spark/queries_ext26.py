@@ -27,10 +27,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
+from .registry import register
+from .tables import TOKS_SQL, _t
 
-QUERIES_EXT26 = {}
-ORACLE_EXT26 = {}
 
 # --------------------------------------------------------------------------
 # DSIR importance weights
@@ -151,8 +150,7 @@ FROM doc_counts JOIN buckets USING (b), totals
 GROUP BY doc_id, nt, nr
 """
 
-QUERIES_EXT26["q_dsir_weights"] = q_dsir_weights
-ORACLE_EXT26["q_dsir_weights"] = SQL_DSIR_WEIGHTS
+register(q_dsir_weights, SQL_DSIR_WEIGHTS)
 
 
 # --------------------------------------------------------------------------
@@ -211,8 +209,7 @@ SELECT doc_id, source,
 FROM pri
 """
 
-QUERIES_EXT26["q_domain_cap"] = q_domain_cap
-ORACLE_EXT26["q_domain_cap"] = SQL_DOMAIN_CAP
+register(q_domain_cap, SQL_DOMAIN_CAP)
 
 
 # --------------------------------------------------------------------------
@@ -263,8 +260,7 @@ FROM documents
 GROUP BY lang
 """
 
-QUERIES_EXT26["q_token_fertility"] = q_token_fertility
-ORACLE_EXT26["q_token_fertility"] = SQL_TOKEN_FERTILITY
+register(q_token_fertility, SQL_TOKEN_FERTILITY)
 
 
 # --------------------------------------------------------------------------
@@ -321,8 +317,7 @@ SELECT s.doc_id, d.lang, s.mean_logprob,
 FROM scores s JOIN documents d ON s.doc_id = d.doc_id
 """
 
-QUERIES_EXT26["q_ccnet_buckets"] = q_ccnet_buckets
-ORACLE_EXT26["q_ccnet_buckets"] = SQL_CCNET_BUCKETS
+register(q_ccnet_buckets, SQL_CCNET_BUCKETS)
 
 
 # --------------------------------------------------------------------------
@@ -465,5 +460,4 @@ FROM ppm GROUP BY 1
 """
 
 
-QUERIES_EXT26["q_minhash_calibration"] = q_minhash_calibration
-ORACLE_EXT26["q_minhash_calibration"] = _sql_minhash_calibration()
+register(q_minhash_calibration, _sql_minhash_calibration())

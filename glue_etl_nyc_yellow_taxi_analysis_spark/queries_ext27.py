@@ -26,10 +26,9 @@ driver involvement, no shuffle).
 from __future__ import annotations
 
 from .operators import multimodal
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT27 = {}
-ORACLE_EXT27 = {}
 
 _WAV_RATE = 16000
 
@@ -84,8 +83,7 @@ SELECT media_id,
 FROM sampled
 """
 
-QUERIES_EXT27["q_wav_decode"] = q_wav_decode
-ORACLE_EXT27["q_wav_decode"] = SQL_WAV_DECODE
+register(q_wav_decode, SQL_WAV_DECODE)
 
 
 _BMP_W = 6      # row stride 18 + 2 padding bytes — padding is load-bearing
@@ -137,8 +135,7 @@ SELECT media_id,
 FROM pix
 """
 
-QUERIES_EXT27["q_bmp_decode"] = q_bmp_decode
-ORACLE_EXT27["q_bmp_decode"] = SQL_BMP_DECODE
+register(q_bmp_decode, SQL_BMP_DECODE)
 
 
 _Y4M_W, _Y4M_H = 6, 4
@@ -218,5 +215,4 @@ SELECT media_id,
 FROM planes
 """
 
-QUERIES_EXT27["q_y4m_decode"] = q_y4m_decode
-ORACLE_EXT27["q_y4m_decode"] = SQL_Y4M_DECODE
+register(q_y4m_decode, SQL_Y4M_DECODE)

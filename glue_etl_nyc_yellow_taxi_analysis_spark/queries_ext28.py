@@ -51,10 +51,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import joins, sketches, text
-from .queries import DSUM_SQL, TOKS_SQL, _t, dsum
-
-QUERIES_EXT28 = {}
-ORACLE_EXT28 = {}
+from .registry import register
+from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
 
 # Primitives live in operators/sketches.py (the reusable library
@@ -164,8 +162,7 @@ SELECT COUNT(*) AS n_fact,
 FROM probed
 """
 
-QUERIES_EXT28["q_bloom_semijoin"] = q_bloom_semijoin
-ORACLE_EXT28["q_bloom_semijoin"] = SQL_BLOOM_SEMIJOIN
+register(q_bloom_semijoin, SQL_BLOOM_SEMIJOIN)
 
 
 def q_bloom_pruned_join(spark, sf_dir):
@@ -205,8 +202,7 @@ WHERE c.c_mktsegment = '{_SEGMENT}'
 GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
 
-QUERIES_EXT28["q_bloom_pruned_join"] = q_bloom_pruned_join
-ORACLE_EXT28["q_bloom_pruned_join"] = SQL_BLOOM_PRUNED_JOIN
+register(q_bloom_pruned_join, SQL_BLOOM_PRUNED_JOIN)
 
 
 # ---------------------------------------------------------------------------
@@ -275,8 +271,7 @@ SELECT token, CAST(est_n AS BIGINT) AS est_n,
 FROM est ORDER BY est_n DESC, token LIMIT {_CMS_TOPK}
 """
 
-QUERIES_EXT28["q_cms_heavy_hitters"] = q_cms_heavy_hitters
-ORACLE_EXT28["q_cms_heavy_hitters"] = SQL_CMS_HEAVY_HITTERS
+register(q_cms_heavy_hitters, SQL_CMS_HEAVY_HITTERS)
 
 
 def q_sketch_merge(spark, sf_dir):
@@ -448,8 +443,7 @@ SELECT 'bloom' AS sketch,
 FROM bloom_cmp
 """
 
-QUERIES_EXT28["q_sketch_merge"] = q_sketch_merge
-ORACLE_EXT28["q_sketch_merge"] = SQL_SKETCH_MERGE
+register(q_sketch_merge, SQL_SKETCH_MERGE)
 
 
 def q_stream_bloom_admission(spark, sf_dir):
@@ -557,8 +551,7 @@ SELECT doc_id,
 FROM probed
 """
 
-QUERIES_EXT28["q_stream_bloom_admission"] = q_stream_bloom_admission
-ORACLE_EXT28["q_stream_bloom_admission"] = SQL_STREAM_BLOOM_ADMISSION
+register(q_stream_bloom_admission, SQL_STREAM_BLOOM_ADMISSION)
 
 
 # ---------------------------------------------------------------------------
@@ -615,5 +608,4 @@ SELECT event_type, CAST(true_n AS BIGINT) AS true_n,
 FROM drawn
 """
 
-QUERIES_EXT28["q_dp_noisy_counts"] = q_dp_noisy_counts
-ORACLE_EXT28["q_dp_noisy_counts"] = SQL_DP_NOISY_COUNTS
+register(q_dp_noisy_counts, SQL_DP_NOISY_COUNTS)

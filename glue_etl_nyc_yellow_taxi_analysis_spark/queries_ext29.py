@@ -58,10 +58,9 @@ import tempfile
 from pyspark.sql import functions as F
 
 from .operators import indexing, layout, sketches, text
-from .queries import DSUM_SQL, TOKS_SQL, _t, dsum
+from .registry import register
+from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
-QUERIES_EXT29 = {}
-ORACLE_EXT29 = {}
 
 _PPL_DEC18 = "CAST(CAST({v} AS VARCHAR) AS DECIMAL(27,18))"
 
@@ -196,8 +195,7 @@ FROM terms GROUP BY doc_id
 """
 
 
-QUERIES_EXT29["q_kn_bigram_ppl"] = q_kn_bigram_ppl
-ORACLE_EXT29["q_kn_bigram_ppl"] = _sql_kn_bigram_ppl()
+register(q_kn_bigram_ppl, _sql_kn_bigram_ppl())
 
 
 # ---------------------------------------------------------------------------
@@ -244,8 +242,7 @@ FROM doc_bg JOIN c2 USING (w1, w2)
 GROUP BY doc_id
 """
 
-QUERIES_EXT29["q_ngram_novelty"] = q_ngram_novelty
-ORACLE_EXT29["q_ngram_novelty"] = SQL_NGRAM_NOVELTY
+register(q_ngram_novelty, SQL_NGRAM_NOVELTY)
 
 
 # ---------------------------------------------------------------------------
@@ -297,8 +294,7 @@ WHERE o_totalprice >= {_ZM_LO} AND o_totalprice <= {_ZM_HI}
 GROUP BY o_orderstatus
 """
 
-QUERIES_EXT29["q_zonemap_prune"] = q_zonemap_prune
-ORACLE_EXT29["q_zonemap_prune"] = SQL_ZONEMAP_PRUNE
+register(q_zonemap_prune, SQL_ZONEMAP_PRUNE)
 
 
 # ---------------------------------------------------------------------------
@@ -362,8 +358,7 @@ FROM r, n
 GROUP BY 1
 """
 
-QUERIES_EXT29["q_hist_equidepth"] = q_hist_equidepth
-ORACLE_EXT29["q_hist_equidepth"] = SQL_HIST_EQUIDEPTH
+register(q_hist_equidepth, SQL_HIST_EQUIDEPTH)
 
 
 # ---------------------------------------------------------------------------
@@ -443,8 +438,7 @@ SELECT draw_id, c.doc_id, c.n_chars
 FROM draws JOIN c ON pos >= hi - c.n_chars AND pos < hi
 """
 
-QUERIES_EXT29["q_weighted_sample"] = q_weighted_sample
-ORACLE_EXT29["q_weighted_sample"] = SQL_WEIGHTED_SAMPLE
+register(q_weighted_sample, SQL_WEIGHTED_SAMPLE)
 
 
 # ---------------------------------------------------------------------------
@@ -600,5 +594,4 @@ FROM v{iters}, n{iters}
     return "".join(parts)
 
 
-QUERIES_EXT29["q_lsa_topic"] = q_lsa_topic
-ORACLE_EXT29["q_lsa_topic"] = build_lsa_oracle_sql()
+register(q_lsa_topic, build_lsa_oracle_sql())

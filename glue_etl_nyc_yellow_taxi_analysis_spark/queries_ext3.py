@@ -20,30 +20,14 @@ reference's SQL-over-tables surface; SURVEY §3.3).
 
 from __future__ import annotations
 
-QUERIES_EXT3 = {}
-ORACLE_EXT3 = {}
+from .queries_ext import SQL_DOC_CHUNK
+from .registry import register, sql_query
+from .tables import TOKS_SQL
 
 _REV = (
     "SUM(CAST(l_extendedprice AS DECIMAL(18,4))"
     " * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))"
 )
-
-
-def _sql_query(name, sql, tables, doc):
-    """Register a same-string-on-both-engines SQL query."""
-
-    def fn(spark, sf_dir, _sql=sql, _tables=tables):
-        from .sql import register_views, run_sql
-
-        register_views(spark, sf_dir, tables=_tables)
-        return run_sql(spark, _sql)
-
-    fn.__name__ = name
-    fn.__qualname__ = name
-    fn.__doc__ = doc
-    QUERIES_EXT3[name] = fn
-    ORACLE_EXT3[name] = sql
-    return fn
 
 
 # --------------------------------------------------------------------------
@@ -79,7 +63,7 @@ GROUP BY o_year
 ORDER BY o_year
 """
 
-_sql_query(
+sql_query(
     "q_sql_market_share",
     MARKET_SHARE_SQL,
     ("part", "supplier", "lineitem", "orders", "customer", "nation", "region"),
@@ -110,7 +94,7 @@ GROUP BY l.l_returnflag
 ORDER BY l.l_returnflag
 """
 
-_sql_query(
+sql_query(
     "q_sql_priority_classes",
     SHIP_PRIORITY_CLASSES_SQL,
     ("orders", "lineitem"),
@@ -119,6 +103,7 @@ _sql_query(
     testdata lacks).  Conditional COUNT(CASE...) is the map-side-combinable
     form — one shuffle on the join, partial aggregation before it.
     Oracle is the same string.""",
+    bench=False,
 )
 
 
@@ -140,7 +125,7 @@ GROUP BY c_count
 ORDER BY custdist DESC, c_count DESC
 """
 
-_sql_query(
+sql_query(
     "q_sql_cust_distribution",
     CUST_DISTRIBUTION_SQL,
     ("customer", "orders"),
@@ -173,7 +158,7 @@ WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue0)
 ORDER BY s.s_suppkey
 """
 
-_sql_query(
+sql_query(
     "q_sql_top_supplier",
     TOP_SUPPLIER_SQL,
     ("supplier", "lineitem"),
@@ -206,7 +191,7 @@ WHERE p.p_brand = 'Brand#1'
   AND CAST(l.l_quantity AS DECIMAL(18,4)) * pq.cnt * 5 < pq.total_qty
 """
 
-_sql_query(
+sql_query(
     "q_sql_small_qty_revenue",
     SMALL_QTY_REVENUE_SQL,
     ("lineitem", "part"),
@@ -219,6 +204,7 @@ _sql_query(
     summation-order ulp can flip boundary rows (quantities here are
     integral, so `qty == 0.2*avg` genuinely occurs).  Oracle is the same
     string.""",
+    bench=False,
 )
 
 
@@ -244,7 +230,7 @@ ORDER BY o.o_totalprice DESC, o.o_orderkey
 LIMIT 100
 """
 
-_sql_query(
+sql_query(
     "q_sql_large_volume_cust",
     LARGE_VOLUME_CUST_SQL,
     ("customer", "orders", "lineitem"),
@@ -291,7 +277,7 @@ ORDER BY numwait DESC, s.s_name
 LIMIT 20
 """
 
-_sql_query(
+sql_query(
     "q_sql_waiting_suppliers",
     WAITING_SUPPLIERS_SQL,
     ("lineitem", "orders", "supplier", "nation"),
@@ -334,7 +320,7 @@ GROUP BY cntrycode
 ORDER BY cntrycode
 """
 
-_sql_query(
+sql_query(
     "q_sql_global_sales_opp",
     GLOBAL_SALES_OPP_SQL,
     ("customer", "orders"),
@@ -346,6 +332,7 @@ _sql_query(
     decimal arithmetic; the one-row `pos` CTE cross-joins (broadcast) and
     the NOT EXISTS becomes a left-anti join on o_custkey.  Oracle is the
     same string.""",
+    bench=False,
 )
 
 
@@ -362,7 +349,7 @@ def q_pii_scrub(spark, sf_dir):
     hash proves both engines scrub identically."""
     from pyspark.sql import functions as F
 
-    from .queries import _t
+    from .tables import _t
 
     d = _t(spark, sf_dir, "documents")
     aug = F.concat(
@@ -400,8 +387,7 @@ SELECT doc_id,
 FROM aug
 """
 
-QUERIES_EXT3["q_pii_scrub"] = q_pii_scrub
-ORACLE_EXT3["q_pii_scrub"] = PII_SCRUB_SQL
+register(q_pii_scrub, PII_SCRUB_SQL)
 
 
 def q_token_entropy(spark, sf_dir):
@@ -414,7 +400,7 @@ def q_token_entropy(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from .operators import text
-    from .queries import _t
+    from .tables import _t
 
     d = _t(spark, sf_dir, "documents")
     cnts = (
@@ -453,8 +439,6 @@ FROM cnt
 GROUP BY doc_id
 """
 
-QUERIES_EXT3["q_token_entropy"] = q_token_entropy
-
 
 def q_repetition_ratio(spark, sf_dir):
     """Gopher-style repetition quality signals: duplicate-token and
@@ -465,7 +449,7 @@ def q_repetition_ratio(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from .operators import text
-    from .queries import _t
+    from .tables import _t
 
     d = _t(spark, sf_dir, "documents")
     toks = text.tokens("text")
@@ -511,16 +495,10 @@ SELECT doc_id,
 FROM b
 """
 
-QUERIES_EXT3["q_repetition_ratio"] = q_repetition_ratio
-
-
-# TOKS_SQL lives in queries.py, which imports this module at its bottom —
-# by then TOKS_SQL is bound (same circular-import convention as queries_ext2)
-from .queries import TOKS_SQL  # noqa: E402
 
 _TOKS = TOKS_SQL.format(c="text")
-ORACLE_EXT3["q_token_entropy"] = TOKEN_ENTROPY_SQL.format(toks=_TOKS)
-ORACLE_EXT3["q_repetition_ratio"] = REPETITION_RATIO_SQL.format(toks=_TOKS)
+register(q_token_entropy, TOKEN_ENTROPY_SQL.format(toks=_TOKS))
+register(q_repetition_ratio, REPETITION_RATIO_SQL.format(toks=_TOKS))
 
 
 # --------------------------------------------------------------------------
@@ -554,8 +532,7 @@ def q_sql_recursive_months(spark, sf_dir):
     return run_sql(spark, RECURSIVE_MONTHS_SQL)
 
 
-QUERIES_EXT3["q_sql_recursive_months"] = q_sql_recursive_months
-ORACLE_EXT3["q_sql_recursive_months"] = RECURSIVE_MONTHS_SQL
+register(q_sql_recursive_months, RECURSIVE_MONTHS_SQL, bench=False)
 
 
 def q_xml_roundtrip(spark, sf_dir):
@@ -567,7 +544,7 @@ def q_xml_roundtrip(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from .queries import _t
+    from .tables import _t
 
     n = _t(spark, sf_dir, "nation")
     out_dir = tempfile.mkdtemp(prefix="sg_xml_") + "/data"
@@ -592,8 +569,7 @@ FROM nation
 GROUP BY n_regionkey
 """
 
-QUERIES_EXT3["q_xml_roundtrip"] = q_xml_roundtrip
-ORACLE_EXT3["q_xml_roundtrip"] = SQL_XML_ROUNDTRIP
+register(q_xml_roundtrip, SQL_XML_ROUNDTRIP, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -608,16 +584,13 @@ def q_udtf_doc_chunk(spark, sf_dir):
     JVM-expression form.  UDTFs are for logic generators can't express;
     the twin is the scale path."""
     from .operators.udtf import chunk_docs_lateral
-    from .queries import _t
+    from .tables import _t
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return chunk_docs_lateral(spark, docs)
 
 
-from .queries_ext import SQL_DOC_CHUNK  # noqa: E402
-
-QUERIES_EXT3["q_udtf_doc_chunk"] = q_udtf_doc_chunk
-ORACLE_EXT3["q_udtf_doc_chunk"] = SQL_DOC_CHUNK
+register(q_udtf_doc_chunk, SQL_DOC_CHUNK, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -644,7 +617,7 @@ def q_sketch_rollup(spark, sf_dir):
     verdicts hold and the counts match exactly."""
     from pyspark.sql import functions as F
 
-    from .queries import _t
+    from .tables import _t
 
     ev = _t(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
@@ -709,5 +682,4 @@ SELECT event_type, COUNT(*) AS n_events,
 FROM events GROUP BY event_type
 """
 
-QUERIES_EXT3["q_sketch_rollup"] = q_sketch_rollup
-ORACLE_EXT3["q_sketch_rollup"] = SQL_SKETCH_ROLLUP_BOUNDS
+register(q_sketch_rollup, SQL_SKETCH_ROLLUP_BOUNDS, bench=False)

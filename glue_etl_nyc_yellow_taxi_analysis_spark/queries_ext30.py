@@ -48,11 +48,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
 from .queries_ext29 import _BG_SQL, bigrams_of
-
-QUERIES_EXT30 = {}
-ORACLE_EXT30 = {}
+from .registry import register
+from .tables import TOKS_SQL, _t
 
 
 # ---------------------------------------------------------------------------
@@ -207,8 +205,7 @@ SELECT canonical_url, CAST(COUNT(*) AS BIGINT) AS n_docs,
 FROM canon GROUP BY canonical_url
 """
 
-QUERIES_EXT30["q_url_canonicalize"] = q_url_canonicalize
-ORACLE_EXT30["q_url_canonicalize"] = SQL_URL_CANONICALIZE
+register(q_url_canonicalize, SQL_URL_CANONICALIZE)
 
 
 # ---------------------------------------------------------------------------
@@ -290,8 +287,7 @@ FROM tok
 """
 
 
-QUERIES_EXT30["q_keyword_tag"] = q_keyword_tag
-ORACLE_EXT30["q_keyword_tag"] = _sql_keyword_tag()
+register(q_keyword_tag, _sql_keyword_tag())
 
 
 # ---------------------------------------------------------------------------
@@ -370,8 +366,7 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
 FROM cum GROUP BY source
 """
 
-QUERIES_EXT30["q_token_budget_pack"] = q_token_budget_pack
-ORACLE_EXT30["q_token_budget_pack"] = SQL_TOKEN_BUDGET_PACK
+register(q_token_budget_pack, SQL_TOKEN_BUDGET_PACK)
 
 
 # ---------------------------------------------------------------------------
@@ -504,5 +499,4 @@ SELECT u.cand, u.ref_id, u.n_cand_tokens, u.p1_e6, b.p2_e6,
 FROM u LEFT JOIN b ON b.cand = u.cand AND b.ref_id = u.ref_id
 """
 
-QUERIES_EXT30["q_bleu_pairs"] = q_bleu_pairs
-ORACLE_EXT30["q_bleu_pairs"] = SQL_BLEU_PAIRS
+register(q_bleu_pairs, SQL_BLEU_PAIRS)

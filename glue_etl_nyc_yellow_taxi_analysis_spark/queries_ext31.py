@@ -44,11 +44,9 @@ from pyspark.sql import functions as F
 
 from .operators import indexing, text
 from .operators.sketches import DUCK_HASH32, hash32
-from .queries import TOKS_SQL, _t
 from .queries_ext29 import _BG_SQL
-
-QUERIES_EXT31 = {}
-ORACLE_EXT31 = {}
+from .registry import register
+from .tables import TOKS_SQL, _t
 
 
 # ---------------------------------------------------------------------------
@@ -190,8 +188,7 @@ SELECT est.n_present, est.s27,
 FROM est, cmp, ex
 """
 
-QUERIES_EXT31["q_hll_distinct"] = q_hll_distinct
-ORACLE_EXT31["q_hll_distinct"] = SQL_HLL_DISTINCT
+register(q_hll_distinct, SQL_HLL_DISTINCT)
 
 
 # ---------------------------------------------------------------------------
@@ -309,8 +306,7 @@ SELECT CAST(SUM(pos) AS BIGINT) AS n_pos,
 FROM r
 """
 
-QUERIES_EXT31["q_quality_auc"] = q_quality_auc
-ORACLE_EXT31["q_quality_auc"] = SQL_QUALITY_AUC
+register(q_quality_auc, SQL_QUALITY_AUC)
 
 
 # ---------------------------------------------------------------------------
@@ -354,5 +350,4 @@ SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS k_size,
 FROM documents GROUP BY lang, source
 """
 
-QUERIES_EXT31["q_l_diversity"] = q_l_diversity
-ORACLE_EXT31["q_l_diversity"] = SQL_L_DIVERSITY
+register(q_l_diversity, SQL_L_DIVERSITY)

@@ -34,11 +34,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
 from .queries_ext29 import _BG_SQL, bigrams_of
-
-QUERIES_EXT32 = {}
-ORACLE_EXT32 = {}
+from .registry import register
+from .tables import TOKS_SQL, _t
 
 
 # ---------------------------------------------------------------------------
@@ -215,8 +213,7 @@ LEFT JOIN ov1 ON ov1.cand = p.cand AND ov1.ref_id = p.ref_id
 LEFT JOIN ov2 ON ov2.cand = p.cand AND ov2.ref_id = p.ref_id
 """
 
-QUERIES_EXT32["q_rouge_pairs"] = q_rouge_pairs
-ORACLE_EXT32["q_rouge_pairs"] = SQL_ROUGE_PAIRS
+register(q_rouge_pairs, SQL_ROUGE_PAIRS)
 
 
 # ---------------------------------------------------------------------------
@@ -322,8 +319,7 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_pairs,
 FROM pairs GROUP BY source
 """
 
-QUERIES_EXT32["q_rank_correlation"] = q_rank_correlation
-ORACLE_EXT32["q_rank_correlation"] = SQL_RANK_CORRELATION
+register(q_rank_correlation, SQL_RANK_CORRELATION)
 
 
 # ---------------------------------------------------------------------------
@@ -401,5 +397,4 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
 FROM per_doc GROUP BY source
 """
 
-QUERIES_EXT32["q_blocklist_filter"] = q_blocklist_filter
-ORACLE_EXT32["q_blocklist_filter"] = SQL_BLOCKLIST_FILTER
+register(q_blocklist_filter, SQL_BLOCKLIST_FILTER)

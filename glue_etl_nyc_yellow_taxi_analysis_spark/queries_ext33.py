@@ -39,10 +39,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
+from .registry import register
+from .tables import TOKS_SQL, _t
 
-QUERIES_EXT33 = {}
-ORACLE_EXT33 = {}
 
 _EVAL_QUERIES: tuple[tuple[str, tuple[str, ...]], ...] = (
     ("q1", ("spark", "join", "fast")),
@@ -185,8 +184,7 @@ FROM nc JOIN dcg ON dcg.query_id = nc.query_id
         JOIN idcg ON idcg.query_id = nc.query_id
 """
 
-QUERIES_EXT33["q_ndcg_at_k"] = q_ndcg_at_k
-ORACLE_EXT33["q_ndcg_at_k"] = SQL_NDCG_AT_K
+register(q_ndcg_at_k, SQL_NDCG_AT_K)
 
 
 # ---------------------------------------------------------------------------
@@ -284,5 +282,4 @@ SELECT qids.query_id,
 FROM qids LEFT JOIN ranked r ON r.query_id = qids.query_id
 """
 
-QUERIES_EXT33["q_mrr"] = q_mrr
-ORACLE_EXT33["q_mrr"] = SQL_MRR
+register(q_mrr, SQL_MRR)

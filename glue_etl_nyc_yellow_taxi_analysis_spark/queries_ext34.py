@@ -30,10 +30,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import DSUM_SQL, TOKS_SQL, _t, dsum
-
-QUERIES_EXT34 = {}
-ORACLE_EXT34 = {}
+from .registry import register
+from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
 
 # ---------------------------------------------------------------------------
@@ -95,8 +93,7 @@ SELECT CAST(COALESCE(l_key, r_key) AS BIGINT) AS custkey, segment,
 FROM cust FULL JOIN ords ON cust.l_key = ords.r_key
 """
 
-QUERIES_EXT34["q_join_full_outer"] = q_join_full_outer
-ORACLE_EXT34["q_join_full_outer"] = SQL_JOIN_FULL_OUTER
+register(q_join_full_outer, SQL_JOIN_FULL_OUTER)
 
 
 # ---------------------------------------------------------------------------
@@ -164,8 +161,7 @@ SELECT source, n_tokens, s_scaled,
 FROM s, tot
 """
 
-QUERIES_EXT34["q_mixture_temperature"] = q_mixture_temperature
-ORACLE_EXT34["q_mixture_temperature"] = SQL_MIXTURE_TEMPERATURE
+register(q_mixture_temperature, SQL_MIXTURE_TEMPERATURE)
 
 
 # ---------------------------------------------------------------------------
@@ -192,5 +188,4 @@ def q_sql_group_by_all(spark, sf_dir):
     return spark.sql(SQL_GROUP_BY_ALL)
 
 
-QUERIES_EXT34["q_sql_group_by_all"] = q_sql_group_by_all
-ORACLE_EXT34["q_sql_group_by_all"] = SQL_GROUP_BY_ALL
+register(q_sql_group_by_all, SQL_GROUP_BY_ALL)

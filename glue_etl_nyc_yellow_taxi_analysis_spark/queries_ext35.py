@@ -35,10 +35,8 @@ from pyspark.sql import functions as F
 
 from .operators import similarity
 from .operators.partitioning import spread
-from .queries import _COSINE_SQL, _t
-
-QUERIES_EXT35 = {}
-ORACLE_EXT35 = {}
+from .registry import register
+from .tables import _COSINE_SQL, _t
 
 
 # ---------------------------------------------------------------------------
@@ -170,8 +168,7 @@ SELECT brand, part_key, match_key, dist, rank FROM (
 WHERE rank <= {_ED_TOPK}
 """
 
-QUERIES_EXT35["q_edit_distance_topk"] = q_edit_distance_topk
-ORACLE_EXT35["q_edit_distance_topk"] = SQL_EDIT_DISTANCE_TOPK
+register(q_edit_distance_topk, SQL_EDIT_DISTANCE_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -207,8 +204,7 @@ SELECT vec_id, neighbor_id, cosine_sim, rank FROM (
 WHERE rank <= {_ND_TOPK}
 """
 
-QUERIES_EXT35["q_embedding_neardup_topk"] = q_embedding_neardup_topk
-ORACLE_EXT35["q_embedding_neardup_topk"] = SQL_EMBEDDING_NEARDUP_TOPK
+register(q_embedding_neardup_topk, SQL_EMBEDDING_NEARDUP_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -383,5 +379,4 @@ SELECT vec_id, neighbor_id, cosine_sim, rank FROM (
 WHERE rank <= {_ND_TOPK}
 """
 
-QUERIES_EXT35["q_embedding_neardup_banded"] = q_embedding_neardup_banded
-ORACLE_EXT35["q_embedding_neardup_banded"] = SQL_EMBEDDING_NEARDUP_BANDED
+register(q_embedding_neardup_banded, SQL_EMBEDDING_NEARDUP_BANDED)

@@ -28,10 +28,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
+from .registry import register
+from .tables import TOKS_SQL, _t
 
-QUERIES_EXT36 = {}
-ORACLE_EXT36 = {}
 
 # fixed query phrases: high-, mid-, and low-selectivity on the synthetic
 # corpus, incl. a length-3 phrase and a phrase usable at every SF
@@ -107,5 +106,4 @@ SELECT phrase, doc_id,
 FROM starts GROUP BY phrase, doc_id
 """
 
-QUERIES_EXT36["q_phrase_search"] = q_phrase_search
-ORACLE_EXT36["q_phrase_search"] = SQL_PHRASE_SEARCH
+register(q_phrase_search, SQL_PHRASE_SEARCH)

@@ -27,10 +27,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import multimodal
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT37 = {}
-ORACLE_EXT37 = {}
 
 _JW = 16  # raster width documents_as_jpeg plants
 
@@ -64,8 +63,7 @@ SELECT doc_id AS media_id,
 FROM documents
 """
 
-QUERIES_EXT37["q_jpeg_decode"] = q_jpeg_decode
-ORACLE_EXT37["q_jpeg_decode"] = SQL_JPEG_DECODE
+register(q_jpeg_decode, SQL_JPEG_DECODE)
 
 
 _RS = 8  # thumbnail side
@@ -97,5 +95,4 @@ SELECT doc_id AS media_id,
 FROM documents
 """
 
-QUERIES_EXT37["q_jpeg_resize"] = q_jpeg_resize
-ORACLE_EXT37["q_jpeg_resize"] = SQL_JPEG_RESIZE
+register(q_jpeg_resize, SQL_JPEG_RESIZE)

@@ -36,10 +36,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
-from .queries import TOKS_SQL, _t
+from .registry import register
+from .tables import TOKS_SQL, _t
 
-QUERIES_EXT38 = {}
-ORACLE_EXT38 = {}
 
 N_MERGES = 12
 
@@ -255,10 +254,8 @@ FROM occ_f JOIN segn USING (word)
 GROUP BY source"""
 )
 
-QUERIES_EXT38["q_bpe_train"] = q_bpe_train
-ORACLE_EXT38["q_bpe_train"] = SQL_BPE_TRAIN
-QUERIES_EXT38["q_bpe_fertility"] = q_bpe_fertility
-ORACLE_EXT38["q_bpe_fertility"] = SQL_BPE_FERTILITY
+register(q_bpe_train, SQL_BPE_TRAIN)
+register(q_bpe_fertility, SQL_BPE_FERTILITY)
 
 
 _BPE_PACK_BUDGET = 256
@@ -362,5 +359,4 @@ SELECT doc_id,
 FROM cum"""
 )
 
-QUERIES_EXT38["q_bpe_pack"] = q_bpe_pack
-ORACLE_EXT38["q_bpe_pack"] = SQL_BPE_PACK
+register(q_bpe_pack, SQL_BPE_PACK)

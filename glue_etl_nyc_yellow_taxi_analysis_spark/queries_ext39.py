@@ -35,10 +35,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import multimodal
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT39 = {}
-ORACLE_EXT39 = {}
 
 _PW = 16  # raster width documents_as_png plants (JPEG-lane convention)
 
@@ -83,8 +82,7 @@ SELECT media_id,
 FROM pix
 """
 
-QUERIES_EXT39["q_png_decode"] = q_png_decode
-ORACLE_EXT39["q_png_decode"] = SQL_PNG_DECODE
+register(q_png_decode, SQL_PNG_DECODE)
 
 
 _RS = 8  # thumbnail side (JPEG-lane convention)
@@ -131,8 +129,7 @@ SELECT media_id,
 FROM pix
 """
 
-QUERIES_EXT39["q_png_resize"] = q_png_resize
-ORACLE_EXT39["q_png_resize"] = SQL_PNG_RESIZE
+register(q_png_resize, SQL_PNG_RESIZE)
 
 
 def q_png_features(spark, sf_dir):
@@ -186,8 +183,7 @@ SELECT media_id,
 FROM f
 """
 
-QUERIES_EXT39["q_png_features"] = q_png_features
-ORACLE_EXT39["q_png_features"] = SQL_PNG_FEATURES
+register(q_png_features, SQL_PNG_FEATURES)
 
 
 def q_stream_png_ingest(spark, sf_dir):
@@ -241,5 +237,4 @@ def q_stream_png_ingest(spark, sf_dir):
     return spark.table(sink)
 
 
-QUERIES_EXT39["q_stream_png_ingest"] = q_stream_png_ingest
-ORACLE_EXT39["q_stream_png_ingest"] = SQL_PNG_DECODE
+register(q_stream_png_ingest, SQL_PNG_DECODE)

@@ -24,10 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .queries import DSUM_SQL, _t, dsum
-
-QUERIES_EXT4 = {}
-ORACLE_EXT4 = {}
+from .registry import register
+from .tables import _t
 
 
 # --------------------------------------------------------------------------
@@ -99,8 +97,7 @@ FROM ranked
 GROUP BY user_id
 """
 
-QUERIES_EXT4["q_islands_gaps"] = q_islands_gaps
-ORACLE_EXT4["q_islands_gaps"] = SQL_ISLANDS_GAPS
+register(q_islands_gaps, SQL_ISLANDS_GAPS)
 
 
 # --------------------------------------------------------------------------
@@ -167,8 +164,7 @@ FROM (
 GROUP BY event_type
 """
 
-QUERIES_EXT4["q_interval_overlap"] = q_interval_overlap
-ORACLE_EXT4["q_interval_overlap"] = SQL_INTERVAL_OVERLAP
+register(q_interval_overlap, SQL_INTERVAL_OVERLAP)
 
 
 # --------------------------------------------------------------------------
@@ -243,8 +239,7 @@ SELECT s.l_returnflag,
 FROM stats s JOIN med m ON s.l_returnflag = m.l_returnflag
 """
 
-QUERIES_EXT4["q_weighted_stats"] = q_weighted_stats
-ORACLE_EXT4["q_weighted_stats"] = SQL_WEIGHTED_STATS
+register(q_weighted_stats, SQL_WEIGHTED_STATS)
 
 
 # --------------------------------------------------------------------------
@@ -297,8 +292,7 @@ SELECT prev_type, next_type, n,
 FROM pairs
 """
 
-QUERIES_EXT4["q_markov_transitions"] = q_markov_transitions
-ORACLE_EXT4["q_markov_transitions"] = SQL_MARKOV_TRANSITIONS
+register(q_markov_transitions, SQL_MARKOV_TRANSITIONS)
 
 
 # --------------------------------------------------------------------------
@@ -331,8 +325,7 @@ FROM orders
 GROUP BY o_orderpriority
 """
 
-QUERIES_EXT4["q_listagg"] = q_listagg
-ORACLE_EXT4["q_listagg"] = SQL_LISTAGG
+register(q_listagg, SQL_LISTAGG)
 
 
 # --------------------------------------------------------------------------
@@ -377,8 +370,7 @@ FROM events
 GROUP BY event_type
 """
 
-QUERIES_EXT4["q_bitmap_distinct"] = q_bitmap_distinct
-ORACLE_EXT4["q_bitmap_distinct"] = SQL_BITMAP_DISTINCT
+register(q_bitmap_distinct, SQL_BITMAP_DISTINCT)
 
 
 # --------------------------------------------------------------------------
@@ -434,8 +426,7 @@ FROM lineitem
 GROUP BY l_returnflag
 """
 
-QUERIES_EXT4["q_salted_agg"] = q_salted_agg
-ORACLE_EXT4["q_salted_agg"] = SQL_SALTED_AGG
+register(q_salted_agg, SQL_SALTED_AGG)
 
 
 # --------------------------------------------------------------------------
@@ -488,8 +479,7 @@ FROM mx
 GROUP BY l_orderkey
 """
 
-QUERIES_EXT4["q_struct_ops"] = q_struct_ops
-ORACLE_EXT4["q_struct_ops"] = SQL_STRUCT_OPS
+register(q_struct_ops, SQL_STRUCT_OPS)
 
 
 # --------------------------------------------------------------------------
@@ -553,8 +543,7 @@ GROUP BY user_id
 HAVING SUM(dt) > 0
 """
 
-QUERIES_EXT4["q_time_weighted_avg"] = q_time_weighted_avg
-ORACLE_EXT4["q_time_weighted_avg"] = SQL_TIME_WEIGHTED_AVG
+register(q_time_weighted_avg, SQL_TIME_WEIGHTED_AVG)
 
 
 # --------------------------------------------------------------------------
@@ -615,5 +604,4 @@ FROM (
 WHERE rank <= 20
 """
 
-QUERIES_EXT4["q_char_ngram_profile"] = q_char_ngram_profile
-ORACLE_EXT4["q_char_ngram_profile"] = SQL_CHAR_NGRAM_PROFILE
+register(q_char_ngram_profile, SQL_CHAR_NGRAM_PROFILE)

@@ -51,10 +51,9 @@ from pyspark.sql import functions as F
 
 from .operators import pq
 from .operators.similarity import dot as _dot  # noqa: F401 (parity import)
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT40 = {}
-ORACLE_EXT40 = {}
 
 _PQ_M = 4
 _PQ_K = 16
@@ -198,8 +197,7 @@ WHERE rank <= {_PQ_TOPK}
 """
 )
 
-QUERIES_EXT40["q_ann_pq_oracle"] = q_ann_pq_oracle
-ORACLE_EXT40["q_ann_pq_oracle"] = SQL_ANN_PQ_ORACLE
+register(q_ann_pq_oracle, SQL_ANN_PQ_ORACLE)
 
 
 def q_pq_rerank(spark, sf_dir):
@@ -245,8 +243,7 @@ WHERE rank <= {_PQ_TOPK}
 """
 )
 
-QUERIES_EXT40["q_pq_rerank"] = q_pq_rerank
-ORACLE_EXT40["q_pq_rerank"] = SQL_PQ_RERANK
+register(q_pq_rerank, SQL_PQ_RERANK)
 
 
 def q_pq_recall(spark, sf_dir):
@@ -379,8 +376,7 @@ LEFT JOIN hits_r r ON q.qid = r.qid
 """
 )
 
-QUERIES_EXT40["q_pq_recall"] = q_pq_recall
-ORACLE_EXT40["q_pq_recall"] = SQL_PQ_RECALL
+register(q_pq_recall, SQL_PQ_RECALL)
 
 
 # --------------------------------------------------------------------------
@@ -482,8 +478,7 @@ WHERE rank <= {_PQI_TOPK}
 """
 )
 
-QUERIES_EXT40["q_pq_index_persist"] = q_pq_index_persist
-ORACLE_EXT40["q_pq_index_persist"] = SQL_PQ_INDEX_PERSIST
+register(q_pq_index_persist, SQL_PQ_INDEX_PERSIST)
 
 
 # --------------------------------------------------------------------------
@@ -659,8 +654,7 @@ WHERE rank <= {_PQ_TOPK}
 """
 )
 
-QUERIES_EXT40["q_ann_ivfpq_oracle"] = q_ann_ivfpq_oracle
-ORACLE_EXT40["q_ann_ivfpq_oracle"] = SQL_ANN_IVFPQ_ORACLE
+register(q_ann_ivfpq_oracle, SQL_ANN_IVFPQ_ORACLE)
 
 
 def q_stream_ann_enrich(spark, sf_dir):
@@ -724,5 +718,4 @@ def q_stream_ann_enrich(spark, sf_dir):
     return spark.read.parquet(out)
 
 
-QUERIES_EXT40["q_stream_ann_enrich"] = q_stream_ann_enrich
-ORACLE_EXT40["q_stream_ann_enrich"] = SQL_PQ_INDEX_PERSIST
+register(q_stream_ann_enrich, SQL_PQ_INDEX_PERSIST)

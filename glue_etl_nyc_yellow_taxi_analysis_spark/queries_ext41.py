@@ -31,10 +31,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import multimodal
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT41 = {}
-ORACLE_EXT41 = {}
 
 _AF_FRAME = 32  # samples per frame (64 text bytes)
 _AF_BANDS = 4  # bands per frame -> 4-bit frame hash
@@ -117,8 +116,7 @@ FROM fhs JOIN sampled USING (media_id)
 """
 )
 
-QUERIES_EXT41["q_audio_fingerprint"] = q_audio_fingerprint
-ORACLE_EXT41["q_audio_fingerprint"] = SQL_AUDIO_FINGERPRINT
+register(q_audio_fingerprint, SQL_AUDIO_FINGERPRINT)
 
 
 def _shingle_pairs(fh):
@@ -243,8 +241,7 @@ def q_audio_neardup(spark, sf_dir):
 
 SQL_AUDIO_NEARDUP = _WAV_SAMPLES_CTE + _WAV_HASHES_CTE + _SHINGLE_SQL
 
-QUERIES_EXT41["q_audio_neardup"] = q_audio_neardup
-ORACLE_EXT41["q_audio_neardup"] = SQL_AUDIO_NEARDUP
+register(q_audio_neardup, SQL_AUDIO_NEARDUP)
 
 
 def q_stream_audio_fingerprint(spark, sf_dir):
@@ -292,8 +289,7 @@ def q_stream_audio_fingerprint(spark, sf_dir):
     return spark.table(sink)
 
 
-QUERIES_EXT41["q_stream_audio_fingerprint"] = q_stream_audio_fingerprint
-ORACLE_EXT41["q_stream_audio_fingerprint"] = SQL_AUDIO_FINGERPRINT
+register(q_stream_audio_fingerprint, SQL_AUDIO_FINGERPRINT)
 
 
 # --------------------------------------------------------------------------
@@ -371,5 +367,4 @@ SQL_VIDEO_NEARDUP = (
     _Y4M_LUMA_CTE.replace("FROM sized_src", "FROM documents") + _SHINGLE_SQL
 )
 
-QUERIES_EXT41["q_video_neardup"] = q_video_neardup
-ORACLE_EXT41["q_video_neardup"] = SQL_VIDEO_NEARDUP
+register(q_video_neardup, SQL_VIDEO_NEARDUP)

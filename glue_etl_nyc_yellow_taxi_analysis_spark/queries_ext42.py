@@ -22,11 +22,9 @@ documents, zero shuffle; payloads never leave the encoding executor.
 from __future__ import annotations
 
 from .operators import multimodal
-from .queries import _t
 from .queries_ext39 import _PW, SQL_PNG_DECODE
-
-QUERIES_EXT42 = {}
-ORACLE_EXT42 = {}
+from .registry import register
+from .tables import _t
 
 
 def q_gif_decode(spark, sf_dir):
@@ -41,5 +39,4 @@ def q_gif_decode(spark, sf_dir):
     return multimodal.decode_gif(media)
 
 
-QUERIES_EXT42["q_gif_decode"] = q_gif_decode
-ORACLE_EXT42["q_gif_decode"] = SQL_PNG_DECODE
+register(q_gif_decode, SQL_PNG_DECODE)

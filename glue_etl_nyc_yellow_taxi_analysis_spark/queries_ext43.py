@@ -26,10 +26,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import avi
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT43 = {}
-ORACLE_EXT43 = {}
 
 # MJPEG raster geometry (per frame): text bytes fill W×H grayscale.
 _MW, _MH = 16, 8
@@ -70,8 +69,7 @@ SELECT doc_id AS media_id,
 FROM documents
 """
 
-QUERIES_EXT43["q_mjpeg_decode"] = q_mjpeg_decode
-ORACLE_EXT43["q_mjpeg_decode"] = SQL_MJPEG_DECODE
+register(q_mjpeg_decode, SQL_MJPEG_DECODE)
 
 
 _STRIDE = 3
@@ -108,8 +106,7 @@ SELECT media_id,
 FROM shaped
 """
 
-QUERIES_EXT43["q_avi_framesample"] = q_avi_framesample
-ORACLE_EXT43["q_avi_framesample"] = SQL_AVI_FRAMESAMPLE
+register(q_avi_framesample, SQL_AVI_FRAMESAMPLE)
 
 
 def q_avi_dib_decode(spark, sf_dir):
@@ -154,5 +151,4 @@ SELECT media_id,
 FROM vals
 """
 
-QUERIES_EXT43["q_avi_dib_decode"] = q_avi_dib_decode
-ORACLE_EXT43["q_avi_dib_decode"] = SQL_AVI_DIB_DECODE
+register(q_avi_dib_decode, SQL_AVI_DIB_DECODE)

@@ -33,10 +33,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import multimodal
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT44 = {}
-ORACLE_EXT44 = {}
 
 _WAV_RATE = 16000
 
@@ -122,8 +121,7 @@ SELECT media_id,
 FROM dec
 """
 
-QUERIES_EXT44["q_wav_formats"] = q_wav_formats
-ORACLE_EXT44["q_wav_formats"] = SQL_WAV_FORMATS
+register(q_wav_formats, SQL_WAV_FORMATS)
 
 
 _PAL_W = 6  # 8bpp row stride 8 → 2 pad bytes per row (strip load-bearing)
@@ -175,8 +173,7 @@ SELECT media_id,
 FROM pix
 """
 
-QUERIES_EXT44["q_bmp_palette_decode"] = q_bmp_palette_decode
-ORACLE_EXT44["q_bmp_palette_decode"] = SQL_BMP_PALETTE_DECODE
+register(q_bmp_palette_decode, SQL_BMP_PALETTE_DECODE)
 
 
 _Y4M_W, _Y4M_H = 6, 4
@@ -266,5 +263,4 @@ SQL_Y4M_CHROMA_DECODE = "\nUNION ALL\n".join(
     for k, (chroma, c_len) in enumerate(_CHROMAS)
 )
 
-QUERIES_EXT44["q_y4m_chroma_decode"] = q_y4m_chroma_decode
-ORACLE_EXT44["q_y4m_chroma_decode"] = SQL_Y4M_CHROMA_DECODE
+register(q_y4m_chroma_decode, SQL_Y4M_CHROMA_DECODE)

@@ -23,11 +23,9 @@ documented in flac.py's module docstring.
 from __future__ import annotations
 
 from .operators import multimodal
-from .queries import _t
 from .queries_ext27 import SQL_WAV_DECODE, _WAV_RATE
-
-QUERIES_EXT45 = {}
-ORACLE_EXT45 = {}
+from .registry import register
+from .tables import _t
 
 
 def q_flac_roundtrip(spark, sf_dir):
@@ -41,8 +39,7 @@ def q_flac_roundtrip(spark, sf_dir):
     return multimodal.decode_flac(media)
 
 
-QUERIES_EXT45["q_flac_roundtrip"] = q_flac_roundtrip
-ORACLE_EXT45["q_flac_roundtrip"] = SQL_WAV_DECODE
+register(q_flac_roundtrip, SQL_WAV_DECODE)
 
 
 def q_flac_transcode(spark, sf_dir):
@@ -87,5 +84,4 @@ def q_flac_transcode(spark, sf_dir):
     return multimodal.decode_wav(wav)
 
 
-QUERIES_EXT45["q_flac_transcode"] = q_flac_transcode
-ORACLE_EXT45["q_flac_transcode"] = SQL_WAV_DECODE
+register(q_flac_transcode, SQL_WAV_DECODE)

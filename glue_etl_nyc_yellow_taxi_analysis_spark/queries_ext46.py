@@ -30,10 +30,9 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from .operators import multimodal
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT46 = {}
-ORACLE_EXT46 = {}
 
 _WAV_RATE = 16000
 
@@ -158,8 +157,7 @@ SELECT media_id,
 FROM dec
 """
 
-QUERIES_EXT46["q_audio_decimate"] = q_audio_decimate
-ORACLE_EXT46["q_audio_decimate"] = SQL_AUDIO_DECIMATE
+register(q_audio_decimate, SQL_AUDIO_DECIMATE)
 
 
 _NORM_PEAK = 30000
@@ -215,5 +213,4 @@ SELECT media_id,
 FROM norm
 """
 
-QUERIES_EXT46["q_audio_normalize"] = q_audio_normalize
-ORACLE_EXT46["q_audio_normalize"] = SQL_AUDIO_NORMALIZE
+register(q_audio_normalize, SQL_AUDIO_NORMALIZE)

@@ -30,10 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import tar
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT47 = {}
-ORACLE_EXT47 = {}
 
 _N_SHARDS = 8
 
@@ -123,8 +122,7 @@ SELECT doc_id % {_N_SHARDS} AS shard_id,
 FROM documents
 """
 
-QUERIES_EXT47["q_tar_shard_roundtrip"] = q_tar_shard_roundtrip
-ORACLE_EXT47["q_tar_shard_roundtrip"] = SQL_TAR_SHARD_ROUNDTRIP
+register(q_tar_shard_roundtrip, SQL_TAR_SHARD_ROUNDTRIP)
 
 
 def q_targz_shard_roundtrip(spark, sf_dir):
@@ -189,5 +187,4 @@ def q_targz_shard_roundtrip(spark, sf_dir):
     return shards.mapInPandas(walk, _MEMBER_SCHEMA)
 
 
-QUERIES_EXT47["q_targz_shard_roundtrip"] = q_targz_shard_roundtrip
-ORACLE_EXT47["q_targz_shard_roundtrip"] = SQL_TAR_SHARD_ROUNDTRIP
+register(q_targz_shard_roundtrip, SQL_TAR_SHARD_ROUNDTRIP)

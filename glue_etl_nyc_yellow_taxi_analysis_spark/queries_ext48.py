@@ -41,10 +41,9 @@ from pyspark.sql import types as T
 
 from .operators import html as H
 from .operators import warc
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT48 = {}
-ORACLE_EXT48 = {}
 
 _DOCS_PER_SHARD = 250  # shard count GROWS with the corpus (the 10x-rows
 # probe measured the gz lane at 13x wall with a fixed 4-shard layout:
@@ -180,10 +179,8 @@ SELECT {_BAD_SHARD}, CAST(NULL AS INTEGER), CAST(NULL AS BIGINT),
        CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR)
 """
 
-QUERIES_EXT48["q_warc_ingest"] = q_warc_ingest
-ORACLE_EXT48["q_warc_ingest"] = SQL_WARC_INGEST
-QUERIES_EXT48["q_warcgz_ingest"] = q_warcgz_ingest
-ORACLE_EXT48["q_warcgz_ingest"] = SQL_WARC_INGEST
+register(q_warc_ingest, SQL_WARC_INGEST)
+register(q_warcgz_ingest, SQL_WARC_INGEST)
 
 
 def q_html_extract(spark, sf_dir):
@@ -221,8 +218,7 @@ SELECT doc_id,
 FROM x
 """
 
-QUERIES_EXT48["q_html_extract"] = q_html_extract
-ORACLE_EXT48["q_html_extract"] = SQL_HTML_EXTRACT
+register(q_html_extract, SQL_HTML_EXTRACT)
 
 
 def q_html_links(spark, sf_dir):
@@ -259,8 +255,7 @@ SELECT host, COUNT(*) AS n_links, COUNT(DISTINCT doc_id) AS n_docs
 FROM h WHERE host <> '' GROUP BY host
 """
 
-QUERIES_EXT48["q_html_links"] = q_html_links
-ORACLE_EXT48["q_html_links"] = SQL_HTML_LINKS
+register(q_html_links, SQL_HTML_LINKS)
 
 
 def q_stream_warc_ingest(spark, sf_dir):
@@ -356,8 +351,7 @@ def q_stream_warc_ingest(spark, sf_dir):
     return spark.table(sink)
 
 
-QUERIES_EXT48["q_stream_warc_ingest"] = q_stream_warc_ingest
-ORACLE_EXT48["q_stream_warc_ingest"] = SQL_HTML_EXTRACT
+register(q_stream_warc_ingest, SQL_HTML_EXTRACT)
 
 
 # --------------------------------------------------------------------------
@@ -490,8 +484,7 @@ SELECT f.doc_id, f.url, f.host,
 FROM frontier f LEFT JOIN best b ON f.doc_id = b.doc_id AND f.url = b.url
 """
 
-QUERIES_EXT48["q_robots_filter"] = q_robots_filter
-ORACLE_EXT48["q_robots_filter"] = SQL_ROBOTS_FILTER
+register(q_robots_filter, SQL_ROBOTS_FILTER)
 
 
 def q_crawl_schedule(spark, sf_dir):
@@ -558,5 +551,4 @@ SELECT c.host,
 FROM counts c LEFT JOIN delays d ON c.host = d.host
 """
 
-QUERIES_EXT48["q_crawl_schedule"] = q_crawl_schedule
-ORACLE_EXT48["q_crawl_schedule"] = SQL_CRAWL_SCHEDULE
+register(q_crawl_schedule, SQL_CRAWL_SCHEDULE)

@@ -41,11 +41,10 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import similarity
-from .queries import _COSINE_SQL, _t
 from .queries_ext16 import _SD_TARGET, _SD_TAU
+from .registry import register
+from .tables import _COSINE_SQL, _t
 
-QUERIES_EXT49 = {}
-ORACLE_EXT49 = {}
 
 _NPROBE = 3
 
@@ -285,10 +284,11 @@ def q_semdedup_multirep(spark, sf_dir):
 
 SQL_SEMDEDUP_IVF = _sql_semdedup_ivf(_SD_TARGET)
 
-QUERIES_EXT49["q_semdedup_ivf"] = q_semdedup_ivf
-ORACLE_EXT49["q_semdedup_ivf"] = SQL_SEMDEDUP_IVF
-QUERIES_EXT49["q_semdedup_multirep"] = q_semdedup_multirep
-ORACLE_EXT49["q_semdedup_multirep"] = _sql_semdedup_ivf(
-    f"(greatest({_SD_MULTI_MIN_TARGET}, "
-    f"(SELECT COUNT(*) FROM embeddings) // {_SD_MULTI_DIVISOR}))"
+register(q_semdedup_ivf, SQL_SEMDEDUP_IVF)
+register(
+    q_semdedup_multirep,
+    _sql_semdedup_ivf(
+        f"(greatest({_SD_MULTI_MIN_TARGET}, "
+        f"(SELECT COUNT(*) FROM embeddings) // {_SD_MULTI_DIVISOR}))"
+    ),
 )

@@ -25,10 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .queries import DSUM_SQL, _t, dsum
-
-QUERIES_EXT5 = {}
-ORACLE_EXT5 = {}
+from .registry import register
+from .tables import _t
 
 
 # --------------------------------------------------------------------------
@@ -84,8 +82,7 @@ FROM events
 GROUP BY event_type
 """
 
-QUERIES_EXT5["q_text_roundtrip"] = q_text_roundtrip
-ORACLE_EXT5["q_text_roundtrip"] = SQL_TEXT_ROUNDTRIP
+register(q_text_roundtrip, SQL_TEXT_ROUNDTRIP, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -133,8 +130,7 @@ FROM documents
 GROUP BY source
 """
 
-QUERIES_EXT5["q_csv_roundtrip"] = q_csv_roundtrip
-ORACLE_EXT5["q_csv_roundtrip"] = SQL_CSV_ROUNDTRIP
+register(q_csv_roundtrip, SQL_CSV_ROUNDTRIP, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -208,8 +204,7 @@ FROM per_row
 GROUP BY event_type
 """
 
-QUERIES_EXT5["q_math_battery"] = q_math_battery
-ORACLE_EXT5["q_math_battery"] = SQL_MATH_BATTERY
+register(q_math_battery, SQL_MATH_BATTERY)
 
 
 # --------------------------------------------------------------------------
@@ -266,8 +261,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY epoch_s
              RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
 """
 
-QUERIES_EXT5["q_trailing_window_range"] = q_trailing_window_range
-ORACLE_EXT5["q_trailing_window_range"] = SQL_TRAILING_WINDOW_RANGE
+register(q_trailing_window_range, SQL_TRAILING_WINDOW_RANGE)
 
 
 # --------------------------------------------------------------------------
@@ -308,8 +302,7 @@ WHERE event_type IS NOT NULL
 GROUP BY user_id
 """
 
-QUERIES_EXT5["q_pivot_dynamic"] = q_pivot_dynamic
-ORACLE_EXT5["q_pivot_dynamic"] = SQL_PIVOT_DYNAMIC
+register(q_pivot_dynamic, SQL_PIVOT_DYNAMIC)
 
 
 # --------------------------------------------------------------------------
@@ -363,8 +356,6 @@ def q_stream_stateful(spark, sf_dir):
     )
 
 
-QUERIES_EXT5["q_stream_stateful"] = q_stream_stateful
-
 # the state accumulates integer ten-thousandths (floor(v*10000 + 0.5) per
 # row — bit-identical IEEE ops in numpy and SQL), so the final per-user
 # state is exactly the batch rollup: a hash-checked proof that the custom
@@ -377,7 +368,7 @@ SELECT user_id,
 FROM events
 GROUP BY user_id
 """
-ORACLE_EXT5["q_stream_stateful"] = SQL_STREAM_STATEFUL
+register(q_stream_stateful, SQL_STREAM_STATEFUL, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -464,9 +455,6 @@ def q_pagerank(spark, sf_dir):
     )
 
 
-QUERIES_EXT5["q_pagerank"] = q_pagerank
-
-
 # ---------------------------------------------------------------------------
 # q_pagerank oracle: a GENERATED 20-iteration chained-CTE replay.
 #
@@ -540,5 +528,4 @@ SELECT node, ROUND(CAST(rank AS DOUBLE), 8) AS pagerank FROM rank{iters}
     return "".join(parts)
 
 
-ORACLE_EXT5["q_pagerank"] = build_pagerank_oracle_sql()
-
+register(q_pagerank, build_pagerank_oracle_sql(), bench=False)

@@ -44,11 +44,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import pkzip
-from .queries import _t
 from .queries_ext47 import _MEMBER_SCHEMA, _N_SHARDS, _SHARD_SCHEMA, SQL_TAR_SHARD_ROUNDTRIP
-
-QUERIES_EXT50 = {}
-ORACLE_EXT50 = {}
+from .registry import register
+from .tables import _t
 
 
 def q_zip_shard_roundtrip(spark, sf_dir):
@@ -111,8 +109,7 @@ def q_zip_shard_roundtrip(spark, sf_dir):
     return shards.mapInPandas(walk, _MEMBER_SCHEMA)
 
 
-QUERIES_EXT50["q_zip_shard_roundtrip"] = q_zip_shard_roundtrip
-ORACLE_EXT50["q_zip_shard_roundtrip"] = SQL_TAR_SHARD_ROUNDTRIP
+register(q_zip_shard_roundtrip, SQL_TAR_SHARD_ROUNDTRIP)
 
 
 # --------------------------------------------------------------------------
@@ -178,8 +175,7 @@ SELECT 'm' || (doc_id % 5) || '.example.org' AS host,
 FROM documents
 """
 
-QUERIES_EXT50["q_sitemap_parse"] = q_sitemap_parse
-ORACLE_EXT50["q_sitemap_parse"] = SQL_SITEMAP_PARSE
+register(q_sitemap_parse, SQL_SITEMAP_PARSE)
 
 
 # --------------------------------------------------------------------------
@@ -242,8 +238,7 @@ SELECT doc_id,
 FROM n
 """
 
-QUERIES_EXT50["q_unicode_normalize"] = q_unicode_normalize
-ORACLE_EXT50["q_unicode_normalize"] = SQL_UNICODE_NORMALIZE
+register(q_unicode_normalize, SQL_UNICODE_NORMALIZE)
 
 
 # --------------------------------------------------------------------------
@@ -353,8 +348,7 @@ SELECT doc_id,
 FROM documents
 """
 
-QUERIES_EXT50["q_pdf_extract"] = q_pdf_extract
-ORACLE_EXT50["q_pdf_extract"] = SQL_PDF_EXTRACT
+register(q_pdf_extract, SQL_PDF_EXTRACT)
 
 
 # --------------------------------------------------------------------------
@@ -446,8 +440,7 @@ SELECT doc_id,
 FROM documents
 """
 
-QUERIES_EXT50["q_docx_extract"] = q_docx_extract
-ORACLE_EXT50["q_docx_extract"] = SQL_DOCX_EXTRACT
+register(q_docx_extract, SQL_DOCX_EXTRACT)
 
 
 # --------------------------------------------------------------------------
@@ -531,10 +524,8 @@ def q_tarbz2_shard_roundtrip(spark, sf_dir):
     return _tar_compressed_lane(spark, sf_dir, "bz2")
 
 
-QUERIES_EXT50["q_tarxz_shard_roundtrip"] = q_tarxz_shard_roundtrip
-ORACLE_EXT50["q_tarxz_shard_roundtrip"] = SQL_TAR_SHARD_ROUNDTRIP
-QUERIES_EXT50["q_tarbz2_shard_roundtrip"] = q_tarbz2_shard_roundtrip
-ORACLE_EXT50["q_tarbz2_shard_roundtrip"] = SQL_TAR_SHARD_ROUNDTRIP
+register(q_tarxz_shard_roundtrip, SQL_TAR_SHARD_ROUNDTRIP)
+register(q_tarbz2_shard_roundtrip, SQL_TAR_SHARD_ROUNDTRIP)
 
 
 # --------------------------------------------------------------------------
@@ -584,8 +575,7 @@ FROM x
 """
 
 
-QUERIES_EXT50["q_markdown_extract"] = q_markdown_extract
-ORACLE_EXT50["q_markdown_extract"] = _sql_markdown_extract()
+register(q_markdown_extract, _sql_markdown_extract())
 
 
 # --------------------------------------------------------------------------
@@ -695,8 +685,7 @@ SELECT doc_id, n_turns,
 FROM m
 """
 
-QUERIES_EXT50["q_sft_chat_mask"] = q_sft_chat_mask
-ORACLE_EXT50["q_sft_chat_mask"] = SQL_SFT_CHAT_MASK
+register(q_sft_chat_mask, SQL_SFT_CHAT_MASK)
 
 
 # --------------------------------------------------------------------------
@@ -777,8 +766,7 @@ WHERE h.logit_centi > l.logit_centi
 """
 
 
-QUERIES_EXT50["q_preference_pairs"] = q_preference_pairs
-ORACLE_EXT50["q_preference_pairs"] = _sql_preference_pairs()
+register(q_preference_pairs, _sql_preference_pairs())
 
 
 # --------------------------------------------------------------------------
@@ -867,8 +855,7 @@ SELECT doc_id,
 FROM documents
 """
 
-QUERIES_EXT50["q_epub_extract"] = q_epub_extract
-ORACLE_EXT50["q_epub_extract"] = SQL_EPUB_EXTRACT
+register(q_epub_extract, SQL_EPUB_EXTRACT)
 
 
 # --------------------------------------------------------------------------
@@ -914,5 +901,4 @@ SELECT source, COUNT(*) AS n_docs,
 FROM documents GROUP BY source
 """
 
-QUERIES_EXT50["q_jsonlgz_source"] = q_jsonlgz_source
-ORACLE_EXT50["q_jsonlgz_source"] = SQL_JSONLGZ_SOURCE
+register(q_jsonlgz_source, SQL_JSONLGZ_SOURCE)

@@ -26,10 +26,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import mp3
-from .queries import _t
+from .registry import register
+from .tables import _t
 
-QUERIES_EXT51 = {}
-ORACLE_EXT51 = {}
 
 _MAX_FRAMES = 25  # n_frames = 1 + len(text) % 24  ∈  [1, 25)
 
@@ -177,10 +176,8 @@ SELECT doc_id,
 FROM agg
 """
 
-QUERIES_EXT51["q_mp3_framewalk"] = q_mp3_framewalk
-ORACLE_EXT51["q_mp3_framewalk"] = SQL_MP3_FRAMEWALK
-QUERIES_EXT51["q_stream_mp3_ingest"] = q_stream_mp3_ingest
-ORACLE_EXT51["q_stream_mp3_ingest"] = SQL_MP3_FRAMEWALK
+register(q_mp3_framewalk, SQL_MP3_FRAMEWALK)
+register(q_stream_mp3_ingest, SQL_MP3_FRAMEWALK, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -242,8 +239,7 @@ WHERE p.is_allowed = 1
 """
 
 
-QUERIES_EXT51["q_crawl_slots"] = q_crawl_slots
-ORACLE_EXT51["q_crawl_slots"] = _sql_crawl_slots("p.url")
+register(q_crawl_slots, _sql_crawl_slots("p.url"))
 
 
 def q_stream_crawl_pacing(spark, sf_dir):
@@ -378,9 +374,11 @@ def q_stream_crawl_pacing(spark, sf_dir):
     return spark.table(sink)
 
 
-QUERIES_EXT51["q_stream_crawl_pacing"] = q_stream_crawl_pacing
-ORACLE_EXT51["q_stream_crawl_pacing"] = _sql_crawl_slots(
-    "length(p.url) % 3, p.url"
+register(
+    q_stream_crawl_pacing,
+    _sql_crawl_slots(
+        "length(p.url) % 3, p.url"
+    ),
 )
 
 
@@ -471,8 +469,7 @@ SELECT doc_id,
 FROM documents
 """
 
-QUERIES_EXT51["q_mp3_metadata"] = q_mp3_metadata
-ORACLE_EXT51["q_mp3_metadata"] = SQL_MP3_METADATA
+register(q_mp3_metadata, SQL_MP3_METADATA)
 
 
 def q_robots_sitemaps(spark, sf_dir):
@@ -502,8 +499,7 @@ WHERE lower(trim(line)) LIKE 'sitemap:%'
 """
 
 
-QUERIES_EXT51["q_robots_sitemaps"] = q_robots_sitemaps
-ORACLE_EXT51["q_robots_sitemaps"] = _sql_robots_sitemaps()
+register(q_robots_sitemaps, _sql_robots_sitemaps(), bench=False)
 
 
 def q_warc_revisit(spark, sf_dir):
@@ -651,5 +647,4 @@ FROM recs
 """
 
 
-QUERIES_EXT51["q_warc_revisit"] = q_warc_revisit
-ORACLE_EXT51["q_warc_revisit"] = _sql_warc_revisit()
+register(q_warc_revisit, _sql_warc_revisit(), bench=False)

@@ -20,10 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import _t
-
-QUERIES_EXT6 = {}
-ORACLE_EXT6 = {}
+from .registry import register
+from .tables import _t
 
 
 # --------------------------------------------------------------------------
@@ -76,8 +74,7 @@ FROM tagged
 GROUP BY op, l_returnflag, l_linestatus
 """
 
-QUERIES_EXT6["q_set_ops_all"] = q_set_ops_all
-ORACLE_EXT6["q_set_ops_all"] = SQL_SET_OPS_ALL
+register(q_set_ops_all, SQL_SET_OPS_ALL)
 
 
 # --------------------------------------------------------------------------
@@ -116,8 +113,7 @@ SELECT doc_id,
 FROM documents
 """
 
-QUERIES_EXT6["q_binary_funcs"] = q_binary_funcs
-ORACLE_EXT6["q_binary_funcs"] = SQL_BINARY_FUNCS
+register(q_binary_funcs, SQL_BINARY_FUNCS)
 
 
 # --------------------------------------------------------------------------
@@ -161,8 +157,7 @@ FROM u
 GROUP BY priority_code
 """
 
-QUERIES_EXT6["q_union_mixed_schema"] = q_union_mixed_schema
-ORACLE_EXT6["q_union_mixed_schema"] = SQL_UNION_MIXED_SCHEMA
+register(q_union_mixed_schema, SQL_UNION_MIXED_SCHEMA, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -226,5 +221,4 @@ FROM events
 GROUP BY event_type
 """
 
-QUERIES_EXT6["q_schema_evolution"] = q_schema_evolution
-ORACLE_EXT6["q_schema_evolution"] = SQL_SCHEMA_EVOLUTION
+register(q_schema_evolution, SQL_SCHEMA_EVOLUTION, bench=False)

@@ -30,10 +30,8 @@ from pyspark.sql import functions as F
 
 from .operators.indexing import global_index
 from .operators.skyline import skyline_2d
-from .queries import _t
-
-QUERIES_EXT7 = {}
-ORACLE_EXT7 = {}
+from .registry import register
+from .tables import _t
 
 
 # --------------------------------------------------------------------------
@@ -55,8 +53,7 @@ SELECT event_id, ROW_NUMBER() OVER (ORDER BY event_id) AS idx
 FROM events
 """
 
-QUERIES_EXT7["q_global_index"] = q_global_index
-ORACLE_EXT7["q_global_index"] = SQL_GLOBAL_INDEX
+register(q_global_index, SQL_GLOBAL_INDEX)
 
 
 # --------------------------------------------------------------------------
@@ -94,8 +91,7 @@ WHERE NOT EXISTS (
 )
 """
 
-QUERIES_EXT7["q_pareto_frontier"] = q_pareto_frontier
-ORACLE_EXT7["q_pareto_frontier"] = SQL_PARETO_FRONTIER
+register(q_pareto_frontier, SQL_PARETO_FRONTIER)
 
 
 # --------------------------------------------------------------------------
@@ -164,8 +160,7 @@ SQL_SUMMARY_STATS = " UNION ALL ".join(
     _profile_lane_sql(c) for c in _PROFILE_COLS
 )
 
-QUERIES_EXT7["q_summary_stats"] = q_summary_stats
-ORACLE_EXT7["q_summary_stats"] = SQL_SUMMARY_STATS
+register(q_summary_stats, SQL_SUMMARY_STATS)
 
 
 # --------------------------------------------------------------------------
@@ -224,8 +219,7 @@ FROM h
 GROUP BY o_orderpriority
 """
 
-QUERIES_EXT7["q_table_checksum"] = q_table_checksum
-ORACLE_EXT7["q_table_checksum"] = SQL_TABLE_CHECKSUM
+register(q_table_checksum, SQL_TABLE_CHECKSUM)
 
 
 # --------------------------------------------------------------------------
@@ -276,5 +270,4 @@ SELECT * FROM (VALUES
 ) AS t(id, val, tag, is_bad)
 """
 
-QUERIES_EXT7["q_csv_malformed"] = q_csv_malformed
-ORACLE_EXT7["q_csv_malformed"] = SQL_CSV_MALFORMED
+register(q_csv_malformed, SQL_CSV_MALFORMED, bench=False)

@@ -30,10 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import DSUM_SQL, _t, dsum
-
-QUERIES_EXT8 = {}
-ORACLE_EXT8 = {}
+from .registry import register
+from .tables import DSUM_SQL, _t, dsum
 
 
 # --------------------------------------------------------------------------
@@ -116,8 +114,7 @@ FROM flagged
 GROUP BY c_mktsegment
 """
 
-QUERIES_EXT8["q_pareto_share"] = q_pareto_share
-ORACLE_EXT8["q_pareto_share"] = SQL_PARETO_SHARE
+register(q_pareto_share, SQL_PARETO_SHARE)
 
 
 # --------------------------------------------------------------------------
@@ -192,8 +189,7 @@ SELECT r_score, f_score, m_score, COUNT(*) AS n,
 FROM rfm GROUP BY 1, 2, 3
 """
 
-QUERIES_EXT8["q_rfm_segmentation"] = q_rfm_segmentation
-ORACLE_EXT8["q_rfm_segmentation"] = SQL_RFM_SEGMENTATION
+register(q_rfm_segmentation, SQL_RFM_SEGMENTATION)
 
 
 # --------------------------------------------------------------------------
@@ -266,8 +262,7 @@ FROM agg
 WHERE qty1 > 0 AND qty2 > 0
 """
 
-QUERIES_EXT8["q_price_volume_bridge"] = q_price_volume_bridge
-ORACLE_EXT8["q_price_volume_bridge"] = SQL_PRICE_VOLUME_BRIDGE
+register(q_price_volume_bridge, SQL_PRICE_VOLUME_BRIDGE)
 
 
 # --------------------------------------------------------------------------
@@ -331,8 +326,7 @@ WHERE l_orderkey % 50 = 0
 GROUP BY l_orderkey
 """
 
-QUERIES_EXT8["q_nest_orders"] = q_nest_orders
-ORACLE_EXT8["q_nest_orders"] = SQL_NEST_ORDERS
+register(q_nest_orders, SQL_NEST_ORDERS)
 
 
 # --------------------------------------------------------------------------
@@ -420,8 +414,7 @@ SELECT change_type, COUNT(*) AS n,
 FROM typed GROUP BY change_type
 """
 
-QUERIES_EXT8["q_snapshot_diff"] = q_snapshot_diff
-ORACLE_EXT8["q_snapshot_diff"] = SQL_SNAPSHOT_DIFF
+register(q_snapshot_diff, SQL_SNAPSHOT_DIFF)
 
 
 # --------------------------------------------------------------------------
@@ -481,5 +474,4 @@ ORDER BY df DESC, token
 LIMIT 20
 """
 
-QUERIES_EXT8["q_inverted_index"] = q_inverted_index
-ORACLE_EXT8["q_inverted_index"] = SQL_INVERTED_INDEX
+register(q_inverted_index, SQL_INVERTED_INDEX)

@@ -43,10 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .queries import DSUM_SQL, _t, dsum
-
-QUERIES_EXT9 = {}
-ORACLE_EXT9 = {}
+from .registry import register
+from .tables import DSUM_SQL, _t, dsum
 
 
 # --------------------------------------------------------------------------
@@ -140,8 +138,7 @@ SELECT 'orders->customer', COUNT(*),
 FROM orders o LEFT JOIN customer cu ON o.o_custkey = cu.c_custkey
 """
 
-QUERIES_EXT9["q_fk_orphans"] = q_fk_orphans
-ORACLE_EXT9["q_fk_orphans"] = SQL_FK_ORPHANS
+register(q_fk_orphans, SQL_FK_ORPHANS)
 
 
 # --------------------------------------------------------------------------
@@ -283,8 +280,7 @@ ORDER BY bm25 DESC, doc_id
 LIMIT 15
 """
 
-QUERIES_EXT9["q_bm25_search"] = q_bm25_search
-ORACLE_EXT9["q_bm25_search"] = SQL_BM25_SEARCH
+register(q_bm25_search, SQL_BM25_SEARCH)
 
 
 # --------------------------------------------------------------------------
@@ -340,8 +336,7 @@ SELECT user_id, n_events,
 FROM seqs
 """
 
-QUERIES_EXT9["q_event_pattern"] = q_event_pattern
-ORACLE_EXT9["q_event_pattern"] = SQL_EVENT_PATTERN
+register(q_event_pattern, SQL_EVENT_PATTERN)
 
 
 # --------------------------------------------------------------------------
@@ -413,8 +408,7 @@ SELECT COALESCE(ft.channel, lt.channel) AS channel,
 FROM ft FULL OUTER JOIN lt ON ft.channel = lt.channel
 """
 
-QUERIES_EXT9["q_attribution"] = q_attribution
-ORACLE_EXT9["q_attribution"] = SQL_ATTRIBUTION
+register(q_attribution, SQL_ATTRIBUTION)
 
 
 # --------------------------------------------------------------------------
@@ -477,8 +471,7 @@ SELECT digit, n,
 FROM grouped
 """
 
-QUERIES_EXT9["q_benford"] = q_benford
-ORACLE_EXT9["q_benford"] = SQL_BENFORD
+register(q_benford, SQL_BENFORD, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -543,8 +536,7 @@ SELECT user_id, event_id,
 FROM lagged
 """
 
-QUERIES_EXT9["q_ewma_smooth"] = q_ewma_smooth
-ORACLE_EXT9["q_ewma_smooth"] = SQL_EWMA_SMOOTH
+register(q_ewma_smooth, SQL_EWMA_SMOOTH, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -573,8 +565,7 @@ def q_sql_lateral_topn(spark, sf_dir):
     return run_sql(spark, LATERAL_TOPN_SQL)
 
 
-QUERIES_EXT9["q_sql_lateral_topn"] = q_sql_lateral_topn
-ORACLE_EXT9["q_sql_lateral_topn"] = LATERAL_TOPN_SQL
+register(q_sql_lateral_topn, LATERAL_TOPN_SQL, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -610,8 +601,7 @@ FROM events
 GROUP BY 1
 """
 
-QUERIES_EXT9["q_variant_json"] = q_variant_json
-ORACLE_EXT9["q_variant_json"] = SQL_VARIANT_JSON
+register(q_variant_json, SQL_VARIANT_JSON, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -663,8 +653,7 @@ FROM documents
 WHERE doc_id % 50 = 0
 """
 
-QUERIES_EXT9["q_binaryfile_source"] = q_binaryfile_source
-ORACLE_EXT9["q_binaryfile_source"] = SQL_BINARYFILE_SOURCE
+register(q_binaryfile_source, SQL_BINARYFILE_SOURCE, bench=False)
 
 
 # --------------------------------------------------------------------------
@@ -747,8 +736,7 @@ SELECT 'orders.o_custkey', COUNT(*), CAST(SUM(cnt) AS BIGINT), MAX(cnt),
 FROM r2
 """
 
-QUERIES_EXT9["q_key_skew_profile"] = q_key_skew_profile
-ORACLE_EXT9["q_key_skew_profile"] = SQL_KEY_SKEW_PROFILE
+register(q_key_skew_profile, SQL_KEY_SKEW_PROFILE)
 
 
 # --------------------------------------------------------------------------
@@ -825,8 +813,7 @@ SELECT (SELECT COUNT(*) FROM nodes) AS n_nodes,
         JOIN edges e3 ON e1.u = e3.u AND e2.v = e3.v) AS n_triangles
 """
 
-QUERIES_EXT9["q_triangle_count"] = q_triangle_count
-ORACLE_EXT9["q_triangle_count"] = SQL_TRIANGLE_COUNT
+register(q_triangle_count, SQL_TRIANGLE_COUNT)
 
 
 # --------------------------------------------------------------------------
@@ -904,5 +891,4 @@ SELECT hop, COUNT(*) AS n_nodes, CAST(SUM(node) AS BIGINT) AS node_checksum
 FROM best GROUP BY hop
 """
 
-QUERIES_EXT9["q_graph_bfs"] = q_graph_bfs
-ORACLE_EXT9["q_graph_bfs"] = SQL_GRAPH_BFS
+register(q_graph_bfs, SQL_GRAPH_BFS)

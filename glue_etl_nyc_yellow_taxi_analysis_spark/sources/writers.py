@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType
 
 
 def write_partitioned_parquet(
@@ -131,11 +132,30 @@ class JdbcWarehouse(Warehouse):
         except Exception:
             return False
 
+    def _write_properties(self, df: DataFrame) -> dict:
+        """Connection properties for a write that may create ``table``.
+
+        Spark's Derby dialect creates string columns as CLOB, and Derby
+        cannot compare a CLOB: once the fact exists, the ``skip_if_loaded``
+        probe's pushed-down filter on the string partition columns fails
+        with SQLState 42818.  On Derby the strings are created as VARCHAR
+        of Derby's maximum length (32672 characters) instead; Spark applies
+        ``createTableColumnTypes`` only when the write creates the table.
+        """
+        props = dict(self.properties)
+        if self.dialect(self.url) == "derby" and "createTableColumnTypes" not in props:
+            strings = [f.name for f in df.schema.fields if isinstance(f.dataType, StringType)]
+            if strings:
+                props["createTableColumnTypes"] = ", ".join(
+                    f"`{c}` VARCHAR(32672)" for c in strings
+                )
+        return props
+
     def create(self, df: DataFrame, table: str) -> None:
-        df.write.jdbc(self.url, table, properties=self.properties)
+        df.write.jdbc(self.url, table, properties=self._write_properties(df))
 
     def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").jdbc(self.url, table, properties=self.properties)
+        df.write.mode("append").jdbc(self.url, table, properties=self._write_properties(df))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         reader = spark.read.format("jdbc").option("url", self.url).option("dbtable", table)

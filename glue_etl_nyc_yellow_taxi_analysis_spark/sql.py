@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import TABLES
+from .tables import TABLES, _t
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
@@ -20,8 +20,6 @@ def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
     On a cluster this is `spark.table` over the real catalog instead —
     views here keep the ad-hoc layer warehouse-independent.
     """
-    from .queries import _t
-
     for name in tables:
         _t(spark, sf_dir, name).createOrReplaceTempView(name)
 

@@ -75,7 +75,7 @@ def test_jdbc_partitioned_parallel_read(spark, sf_dir):
 def test_jdbc_warehouse_load_cli(spark):
     """Job 1 (build star) then Job 2 with --jdbc-url against embedded
     Derby — the reference's exact two-job chain, warehouse included."""
-    from glue_etl_nyc_yellow_taxi_analysis_spark.queries import _taxi_fixture
+    from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
 
     work = tempfile.mkdtemp(prefix="sg_jdbc_cli_")
     raw_dir = f"{work}/raw"
@@ -175,6 +175,56 @@ def test_jdbc_warehouse_probe_create_append(spark, sf_dir):
         assert wh.read(spark, "dim_nation").count() == 2 * n.count()
     finally:
         drop_derby_memory_db(spark, url)
+
+
+def test_jdbc_incremental_monthly_load(spark):
+    """Job 2's monthly path on ONE Derby warehouse with the defaults:
+    month 1 then month 2 append, and a re-run of month 1 is skipped by
+    the ``skip_if_loaded`` probe, which filters the warehouse fact on
+    its string partition columns (CLOB on Derby would reject it with
+    SQLState 42818)."""
+    import shutil
+    from urllib.parse import urlparse
+
+    from glue_etl_nyc_yellow_taxi_analysis_spark import catalog
+    from glue_etl_nyc_yellow_taxi_analysis_spark.plans import star, warehouse
+    from glue_etl_nyc_yellow_taxi_analysis_spark.sources.config import (
+        drop_derby_memory_db,
+        resolve_warehouse_config,
+    )
+    from glue_etl_nyc_yellow_taxi_analysis_spark.sources.writers import JdbcWarehouse
+    from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
+
+    db = "sg_jdbc_incremental"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    wh_root = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    shutil.rmtree(f"{wh_root}/{db}.db", ignore_errors=True)
+    catalog.ensure_database(spark, db)
+    star.ensure_dimensions(spark, db)
+    raw = _taxi_fixture(spark)
+    for month in ("1", "2"):
+        catalog.save_table(
+            star.build_fact(raw, "2021", month), db, "fact_uber_trips",
+            partition_by=["processed_year", "processed_month"],
+        )
+
+    url, props = resolve_warehouse_config()
+    wh = JdbcWarehouse(spark, url, props)
+    try:
+        actions = [
+            warehouse.load_star_to_warehouse(spark, wh, db, "2021", m)["fact_uber_trips"]
+            for m in ("1", "2", "1")
+        ]
+        assert actions == [
+            "appended 2021-1",
+            "appended 2021-2",
+            "skipped 2021-1 (already loaded)",
+        ]
+        fact = wh.read(spark, "fact_uber_trips")
+        assert fact.count() == spark.table(f"{db}.fact_uber_trips").count()
+    finally:
+        drop_derby_memory_db(spark, url)
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
 def test_dialect_gated_catalog_probe_sql(spark):

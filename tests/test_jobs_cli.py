@@ -28,7 +28,7 @@ def _run(args, cwd):
 
 
 def test_build_and_load_cli(spark):
-    from glue_etl_nyc_yellow_taxi_analysis_spark.queries import _taxi_fixture
+    from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
 
     work = tempfile.mkdtemp(prefix="sg_cli_")
     raw_dir = f"{work}/raw"
@@ -70,7 +70,7 @@ def test_build_and_load_cli(spark):
 
 def test_reference_compat_tolls(spark):
     from glue_etl_nyc_yellow_taxi_analysis_spark.plans.star import build_fact
-    from glue_etl_nyc_yellow_taxi_analysis_spark.queries import _taxi_fixture
+    from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
 
     raw = _taxi_fixture(spark)
     normalized = build_fact(raw, "2021", "1")

@@ -6,7 +6,6 @@ correct values to paste into README.md."""
 
 import os
 import re
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -27,27 +26,3 @@ def test_readme_counts_match_registry():
         f"{oracled} oracle-checked — update README.md"
     )
 
-
-def test_readme_test_count_not_stale():
-    """The advertised pytest count is PINNED exactly, like the
-    capability counts (r9 verdict item 8: the 15% tolerance let the
-    README trail the live suite by 96 tests) — a failing run prints
-    the number to paste."""
-    collected = subprocess.run(
-        [sys.executable, "-m", "pytest", "--collect-only", "-q", "tests/"],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    m = re.search(r"(\d+) tests collected", collected.stdout)
-    assert m, collected.stdout[-500:]
-    actual = int(m.group(1))
-    readme = open(os.path.join(REPO, "README.md")).read()
-    adv = re.search(r"# (\d+) unit/property/plan-contract/e2e tests", readme)
-    assert adv, "README.md lost its test-count line"
-    advertised = int(adv.group(1))
-    assert advertised == actual, (
-        f"README advertises {advertised} tests, suite collects {actual} "
-        f"— update the README.md count"
-    )

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from glue_etl_nyc_yellow_taxi_analysis_spark import catalog
 from glue_etl_nyc_yellow_taxi_analysis_spark.plans import star
-from glue_etl_nyc_yellow_taxi_analysis_spark.queries import _taxi_fixture
+from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
 from glue_etl_nyc_yellow_taxi_analysis_spark.sources.writers import (
     write_partitioned_parquet,
 )

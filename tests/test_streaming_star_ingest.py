@@ -10,7 +10,7 @@ from urllib.parse import urlparse
 from pyspark.sql import functions as F
 
 from glue_etl_nyc_yellow_taxi_analysis_spark import catalog
-from glue_etl_nyc_yellow_taxi_analysis_spark.queries import _taxi_fixture
+from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
 from glue_etl_nyc_yellow_taxi_analysis_spark.streaming.ingest import monthly_star_ingest
 
 

@@ -18,7 +18,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from glue_etl_nyc_yellow_taxi_analysis_spark.queries import ORACLE, QUERIES, TABLES_SQL_NAMES
+from glue_etl_nyc_yellow_taxi_analysis_spark.queries import ORACLE, QUERIES
+from glue_etl_nyc_yellow_taxi_analysis_spark.tables import TABLES
 from glue_etl_nyc_yellow_taxi_analysis_spark.session import get_spark
 
 
@@ -117,7 +118,7 @@ def main():
     else:
         spark = get_spark()
     con = duckdb.connect()
-    for t in TABLES_SQL_NAMES:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )

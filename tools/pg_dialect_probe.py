@@ -48,7 +48,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from glue_etl_nyc_yellow_taxi_analysis_spark.plans import star
-    from glue_etl_nyc_yellow_taxi_analysis_spark.queries import _taxi_fixture
+    from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
     from glue_etl_nyc_yellow_taxi_analysis_spark.sources.writers import JdbcWarehouse
 
     props = {"user": user, "driver": "org.postgresql.Driver"}

@@ -119,7 +119,7 @@ def full_suite(dirs: list[str], everything: bool = False) -> None:
     ``everything`` sweeps the ENTIRE declared registry instead (the
     headline list covers ~60% of it; the rest is equally capable of
     hiding a corpus-constant-bound stage)."""
-    from bench import HEADLINE
+    from glue_etl_nyc_yellow_taxi_analysis_spark.registry import HEADLINE
 
     names = list(QUERIES) if everything else HEADLINE
     spark = get_spark(app_name="scale-rehearsal-full")
