@@ -37,6 +37,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every SQL-expressible query; rows-only
-    queries (uuid / hash-family / streaming / write-path) are omitted."""
+    """DuckDB-equivalent SQL for every registered query: ``register``
+    requires an oracle, so the keys equal those of ``queries()``."""
     return dict(ORACLE)

@@ -35,15 +35,22 @@ NULL stats row) keeps a poisoned file from killing a 100 TB sweep.
 
 from __future__ import annotations
 
+import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .multimodal import _map_stage
+from .multimodal import (
+    _DOC_COLS,
+    _JPEG_ERRORS,
+    _MEDIA_COLS,
+    _PARSE_ERRORS,
+    _PAYLOAD_SCHEMA,
+    _row_stage,
+    _utf8,
+)
 
 _AVIIF_KEYFRAME = 0x10
 
@@ -267,8 +274,6 @@ def parse_dib_frame(frame: bytes, width: int, height: int) -> bytes:
 
 def documents_as_avi(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     width: int = 16,
     height: int = 8,
     codec: str = "MJPG",
@@ -289,44 +294,25 @@ def documents_as_avi(
     n_frames = max(1, n_bytes // frame_len) either way, so the SQL side
     derives the frame count from ``octet_length`` alone.
     """
+    from . import jpeg
+
     frame_len = width * height * (3 if codec == "DIB " else 1)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(mid, text):
+        b = _utf8(text)
+        n = max(1, len(b) // frame_len)
+        raw = b[: frame_len * n].ljust(frame_len * n, b"\x00")
+        frames = []
+        for f in range(n):
+            fb = raw[f * frame_len : (f + 1) * frame_len]
+            if codec == "DIB ":
+                frames.append(dib_frame(fb, width, height))
+            else:
+                pix = np.frombuffer(fb, dtype=np.uint8).reshape(height, width)
+                frames.append(jpeg.encode_baseline(pix, 90))
+        yield mid, avi_container(frames, width, height, codec)
 
-        from . import jpeg
-
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                n = max(1, len(b) // frame_len)
-                raw = b[: frame_len * n].ljust(frame_len * n, b"\x00")
-                frames = []
-                for f in range(n):
-                    fb = raw[f * frame_len : (f + 1) * frame_len]
-                    if codec == "DIB ":
-                        frames.append(dib_frame(fb, width, height))
-                    else:
-                        pix = np.frombuffer(fb, dtype=np.uint8).reshape(
-                            height, width
-                        )
-                        frames.append(jpeg.encode_baseline(pix, 90))
-                rows.append(
-                    (mid, avi_container(frames, width, height, codec))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
 _DIB_DECODE_SCHEMA = T.StructType(
@@ -349,48 +335,28 @@ def decode_avi_dib(df: DataFrame) -> DataFrame:
     over the comma-joined top-down byte stream.  A walker that misses a
     pad byte, skips JUNK wrong, or flips rows incorrectly fails the
     value hash.  Per-row fail-soft on corrupt containers."""
-    import hashlib
 
-    import numpy as np
+    def row(mid, payload):
+        w, h, codec, frames = parse_avi(bytes(payload))
+        if codec != "DIB ":
+            raise ValueError("not a DIB stream")
+        tops = [parse_dib_frame(fr, w, h) for fr in frames]
+        arrs = [np.frombuffer(t, dtype=np.uint8) for t in tops]
+        diff = sum(
+            int(np.abs(a.astype(np.int64) - b.astype(np.int64)).sum())
+            for a, b in zip(arrs, arrs[1:])
+        )
+        yield (
+            mid,
+            w,
+            h,
+            len(frames),
+            int(sum(int(a.sum()) for a in arrs)),
+            diff,
+            hashlib.md5(",".join(map(str, b"".join(tops))).encode()).hexdigest(),
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, codec, frames = parse_avi(bytes(payload))
-                    if codec != "DIB ":
-                        raise ValueError("not a DIB stream")
-                    tops = [parse_dib_frame(fr, w, h) for fr in frames]
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((mid,) + (None,) * 6)
-                    continue
-                arrs = [np.frombuffer(t, dtype=np.uint8) for t in tops]
-                diff = sum(
-                    int(
-                        np.abs(
-                            a.astype(np.int64) - b.astype(np.int64)
-                        ).sum()
-                    )
-                    for a, b in zip(arrs, arrs[1:])
-                )
-                allb = b"".join(tops)
-                rows.append(
-                    (
-                        mid,
-                        w,
-                        h,
-                        len(frames),
-                        int(sum(int(a.sum()) for a in arrs)),
-                        diff,
-                        hashlib.md5(
-                            ",".join(map(str, allb)).encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in _DIB_DECODE_SCHEMA])
-
-    return _map_stage(df, ("media_id", "payload"), run, _DIB_DECODE_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _DIB_DECODE_SCHEMA, row, _PARSE_ERRORS)
 
 
 _MJPEG_DECODE_SCHEMA = T.StructType(
@@ -414,38 +380,19 @@ def decode_mjpeg(df: DataFrame, every_nth: int = 1) -> DataFrame:
     spec-stream tests, codec-defined so it stays out of SQL oracles).
     NULL stats row if the container is corrupt or ANY sampled frame
     fails to decode at the container's declared geometry."""
-    import hashlib
-
     from . import jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, codec, frames = parse_avi(bytes(payload))
-                    if codec != "MJPG":
-                        raise ValueError("not an MJPG stream")
-                    kept = frames[:: max(1, every_nth)]
-                    digest = hashlib.md5()
-                    for fr in kept:
-                        fh, fw, px = jpeg.decode_baseline(fr)
-                        if (fw, fh) != (w, h):
-                            raise ValueError("frame/container dim mismatch")
-                        digest.update(px.tobytes())
-                except (
-                    ValueError,
-                    NotImplementedError,
-                    IndexError,
-                    struct.error,
-                ):
-                    rows.append((mid,) + (None,) * 5)
-                    continue
-                rows.append(
-                    (mid, w, h, len(frames), len(kept), digest.hexdigest())
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _MJPEG_DECODE_SCHEMA]
-            )
+    def row(mid, payload):
+        w, h, codec, frames = parse_avi(bytes(payload))
+        if codec != "MJPG":
+            raise ValueError("not an MJPG stream")
+        kept = frames[:: max(1, every_nth)]
+        digest = hashlib.md5()
+        for fr in kept:
+            fh, fw, px = jpeg.decode_baseline(fr)
+            if (fw, fh) != (w, h):
+                raise ValueError("frame/container dim mismatch")
+            digest.update(px.tobytes())
+        yield mid, w, h, len(frames), len(kept), digest.hexdigest()
 
-    return _map_stage(df, ("media_id", "payload"), run, _MJPEG_DECODE_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _MJPEG_DECODE_SCHEMA, row, _JPEG_ERRORS)

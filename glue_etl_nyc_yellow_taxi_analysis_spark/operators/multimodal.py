@@ -33,9 +33,12 @@ Decode support is two-tier:
 
 from __future__ import annotations
 
+import hashlib
+import math
 import struct
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -69,22 +72,74 @@ def _map_stage(df: DataFrame, cols, run, schema) -> DataFrame:
     the composition batch-by-batch inside one Python worker, so the
     container bytes never cross at all.  Row-identical by construction
     (same kernels, same order, same batches — downstream kernels read
-    columns by NAME, and every stage yields named frames).  Fusion
+    columns by NAME, and every stage yields named frames).
+
+    Fusion requires every one of the stage's declared ``cols`` to be in
+    the parent stage's output schema.  A stage naming a column its
+    parent never produced stacks as the unfused path does, so Spark
+    rejects the plan with ``AnalysisException`` when it is built instead
+    of a ``KeyError`` on an executor at the first action.  Fusion also
     stops at any Spark-side boundary (select/filter/checkpoint drop the
     stage tag), so a chain interrupted by JVM work keeps its stages.
     """
     chain = getattr(df, "_sg_stage", None)
-    if chain is not None:
-        parent, parent_cols, runs = chain
+    if chain is not None and set(cols) <= set(chain[3].fieldNames()):
+        parent, parent_cols, runs, _ = chain
         all_runs = runs + [run]
         out = parent.select(*parent_cols).mapInPandas(
             _compose(all_runs), schema
         )
-        out._sg_stage = (parent, parent_cols, all_runs)
+        out._sg_stage = (parent, parent_cols, all_runs, schema)
         return out
     out = df.select(*cols).mapInPandas(run, schema)
-    out._sg_stage = (df, tuple(cols), [run])
+    out._sg_stage = (df, tuple(cols), [run], schema)
     return out
+
+
+def _row_stage(df: DataFrame, cols, schema, row, errors=()) -> DataFrame:
+    """One per-row media kernel as a fusable ``_map_stage``.
+    ``row(*values)`` receives one input row's ``cols`` values and yields
+    that row's output tuples in ``schema`` order (none, one or many);
+    each Arrow batch's tuples become one pandas frame.  An exception
+    listed in ``errors`` turns its input row into one ``(key, NULL, …)``
+    row, key being the row's first value: per-row fail-soft, so ONE
+    corrupt payload never kills the whole 100 TB job (an exception here
+    aborts every task retry)."""
+    names = schema.fieldNames()
+    blank = (None,) * (len(names) - 1)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for values in zip(*(pdf[c] for c in cols)):
+                try:
+                    rows.extend(list(row(*values)))
+                except errors:
+                    rows.append((values[0],) + blank)
+            yield pd.DataFrame(rows, columns=names)
+
+    return _map_stage(df, cols, run, schema)
+
+
+_DOC_COLS = ("doc_id", "text")
+_MEDIA_COLS = ("media_id", "payload")
+
+_PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+)
+
+
+# what a container parser raises on a corrupt or unsupported payload;
+# the JPEG codec's bit reader adds IndexError on truncated scans
+_PARSE_ERRORS = (ValueError, NotImplementedError, struct.error)
+_JPEG_ERRORS = _PARSE_ERRORS + (IndexError,)
+
+
+def _utf8(text) -> bytes:
+    return ("" if text is None else text).encode("utf-8")
 
 
 MEDIA_SCHEMA = T.StructType(
@@ -98,13 +153,13 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 
-def documents_as_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def documents_as_media(df: DataFrame) -> DataFrame:
     """Adapter: pack a text table into the media shape (payload = utf-8
     bytes) so the binary pipeline is exercisable on the driver testdata.
     """
     return df.select(
-        F.col(id_col).alias("media_id"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.col("doc_id").alias("media_id"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.lit("text/plain").alias("media_type"),
         F.lit(None).cast("int").alias("width"),
         F.lit(None).cast("int").alias("height"),
@@ -336,50 +391,40 @@ def parse_bmp(data: bytes) -> tuple[int, int, bytes]:
     return width, height, b"".join(rows)
 
 
-def documents_as_wav(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sample_rate: int = 16000,
-) -> DataFrame:
+def _text_pcm16(text) -> bytes:
+    """The byte-pair sample rule every text→audio builder shares: PCM16
+    sample k is the byte pair (text[2k], text[2k+1]) little-endian, with
+    every ODD sample's high byte (byte 4j+3) XOR 0x80 so the stream
+    carries genuinely negative int16s (ASCII alone never sets the sign
+    bit) — the transform an oracle can replay byte-for-byte from
+    ``text``."""
+    b = _utf8(text)
+    pcm = bytearray(b[: len(b) // 2 * 2])
+    pcm[3::4] = bytes(x ^ 0x80 for x in pcm[3::4])
+    return bytes(pcm)
+
+
+def _text_samples(text) -> list[int]:
+    """``_text_pcm16`` as signed int16 sample values."""
+    pcm = _text_pcm16(text)
+    return list(struct.unpack(f"<{len(pcm) // 2}h", pcm))
+
+
+def documents_as_wav(df: DataFrame, sample_rate: int = 16000) -> DataFrame:
     """Deterministic PCM16 WAV payloads from document text, Arrow-batched:
-    PCM sample k is the byte pair (text[2k], text[2k+1]) little-endian,
-    with every ODD sample's high byte XOR 0x80 so the stream carries
-    genuinely negative int16s (ASCII alone never sets the sign bit) —
-    the transform an oracle can replay byte-for-byte from ``text``."""
+    the samples follow the byte-pair rule of ``_text_pcm16``."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                pcm = bytearray()
-                for k in range(len(b) // 2):
-                    pcm.append(b[2 * k])
-                    pcm.append(b[2 * k + 1] ^ (0x80 if k % 2 else 0))
-                rows.append((mid, wav_container(bytes(pcm), sample_rate)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def row(mid, text):
+        yield mid, wav_container(_text_pcm16(text), sample_rate)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
 _WAV_FORMATS = ((1, 16), (1, 8), (1, 24), (3, 32))  # doc_id % 4 → encoding
 
 
 def documents_as_wav_formats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sample_rate: int = 16000,
+    df: DataFrame, sample_rate: int = 16000
 ) -> DataFrame:
     """One corpus, four WAV encodings: the SAMPLE stream is derived from
     text exactly as documents_as_wav does (byte pairs, odd samples' high
@@ -388,49 +433,15 @@ def documents_as_wav_formats(
     samples bit-exactly; PCM8 quantizes to floor(s/256)*256 — the one
     deterministic lossy lane, which the oracle replays."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                samples = [
-                    struct.unpack(
-                        "<h",
-                        bytes(
-                            (b[2 * k], b[2 * k + 1] ^ (0x80 if k % 2 else 0))
-                        ),
-                    )[0]
-                    for k in range(len(b) // 2)
-                ]
-                fc, bits = _WAV_FORMATS[int(mid) % 4]
-                rows.append(
-                    (
-                        mid,
-                        wav_container(
-                            pack_samples(samples, fc, bits),
-                            sample_rate,
-                            fmt_code=fc,
-                            bits=bits,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def row(mid, text):
+        fc, bits = _WAV_FORMATS[int(mid) % 4]
+        pcm = pack_samples(_text_samples(text), fc, bits)
+        yield mid, wav_container(pcm, sample_rate, fmt_code=fc, bits=bits)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
-def documents_as_bmp_pal8(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", width: int = 6
-) -> DataFrame:
+def documents_as_bmp_pal8(df: DataFrame, width: int = 6) -> DataFrame:
     """Deterministic 8bpp palette BMP payloads from document text: the
     top-down INDEX stream is the first width*height bytes of the text
     (zero-padded), height = max(1, n_bytes // width), and the color
@@ -440,60 +451,30 @@ def documents_as_bmp_pal8(
     load-bearing."""
     palette = [(i, (i * 7) % 256, (i * 13) % 256) for i in range(256)]
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                h = max(1, len(b) // width)
-                idx = b[: width * h].ljust(width * h, b"\x00")
-                rows.append(
-                    (mid, bmp_container_pal8(idx, width, h, palette))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def row(mid, text):
+        b = _utf8(text)
+        h = max(1, len(b) // width)
+        idx = b[: width * h].ljust(width * h, b"\x00")
+        yield mid, bmp_container_pal8(idx, width, h, palette)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
-def documents_as_bmp(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", width: int = 6
-) -> DataFrame:
+def documents_as_bmp(df: DataFrame, width: int = 6) -> DataFrame:
     """Deterministic 24bpp BMP payloads from document text: the top-down
     BGR pixel stream is the first width*3*height bytes of the text
     (zero-padded), height = max(1, n_bytes // (width*3)).  width=6 makes
     the row stride 18 → 2 padding bytes per row, so the decoder's
     padding-strip and bottom-up flip are both load-bearing."""
-    row = width * 3
+    stride = width * 3
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                h = max(1, len(b) // row)
-                pix = b[: row * h].ljust(row * h, b"\x00")
-                rows.append((mid, bmp_container(pix, width, h)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def row(mid, text):
+        b = _utf8(text)
+        h = max(1, len(b) // stride)
+        pix = b[: stride * h].ljust(stride * h, b"\x00")
+        yield mid, bmp_container(pix, width, h)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
 _WAV_DECODE_SCHEMA = T.StructType(
@@ -510,6 +491,27 @@ _WAV_DECODE_SCHEMA = T.StructType(
 )
 
 
+def _sample_stats(rate: int, nch: int, samples) -> tuple:
+    """(sample_rate, n_channels, n_samples, sum|s|, peak|s|,
+    zero-crossings, samples_md5) for one decoded sample stream.
+    numpy-vectorized: the per-sample Python loops were the lane's hot
+    path (repeat >2x bench flag r8) — |s| <= 32768 so int64
+    abs/sum/zero-cross are exact, and the md5 string (decimal reprs,
+    comma-joined) is byte-identical to the loop form the oracle
+    replays."""
+    arr = np.asarray(samples, dtype=np.int64)
+    aabs = np.abs(arr)
+    return (
+        rate,
+        nch,
+        len(samples),
+        int(aabs.sum()),
+        int(aabs.max()) if len(samples) else 0,
+        int(((arr[:-1] < 0) != (arr[1:] < 0)).sum()) if len(samples) else 0,
+        hashlib.md5(",".join(map(str, samples)).encode()).hexdigest(),
+    )
+
+
 def decode_wav(df: DataFrame) -> DataFrame:
     """REAL audio decode lane: parse each payload as a PCM16 WAV
     container (parse_wav — stdlib chunk walk, no fake_decode) and reduce
@@ -518,69 +520,16 @@ def decode_wav(df: DataFrame) -> DataFrame:
     over the comma-joined signed sample values.  Every output is either
     an integer or a digest of integers, so the whole decode path —
     container walk, int16 unpack, sign handling — is value-hash
-    verifiable against a SQL replay of the same bytes."""
-    import hashlib
+    verifiable against a SQL replay of the same bytes.  Per-row
+    fail-soft: a corrupt payload yields one NULL-stats row."""
 
-    import numpy as np
+    def row(mid, payload):
+        yield (mid,) + _sample_stats(*parse_wav(bytes(payload)))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                # per-row fail-soft: ONE corrupt payload must yield one
-                # NULL-stats row, never kill the whole 100 TB job (an
-                # exception here aborts every task retry)
-                try:
-                    rate, nch, samples = parse_wav(bytes(payload))
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((mid,) + (None,) * 7)
-                    continue
-                # numpy-vectorized stats: the per-sample Python loops
-                # were the lane's hot path (repeat >2x bench flag r8) —
-                # |s| <= 32768 so int64 abs/sum/zero-cross are exact,
-                # and the md5 string (decimal reprs, comma-joined) is
-                # byte-identical to the loop form the oracle replays
-                arr = np.asarray(samples, dtype=np.int64)
-                aabs = np.abs(arr)
-                rows.append(
-                    (
-                        mid,
-                        rate,
-                        nch,
-                        len(samples),
-                        int(aabs.sum()),
-                        int(aabs.max()) if len(samples) else 0,
-                        int(((arr[:-1] < 0) != (arr[1:] < 0)).sum())
-                        if len(samples)
-                        else 0,
-                        hashlib.md5(
-                            ",".join(map(str, samples)).encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "sample_rate",
-                    "n_channels",
-                    "n_samples",
-                    "sum_abs",
-                    "peak_abs",
-                    "n_zero_cross",
-                    "samples_md5",
-                ],
-            )
-
-    return _map_stage(df, ("media_id", "payload"), run, _WAV_DECODE_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _WAV_DECODE_SCHEMA, row, _PARSE_ERRORS)
 
 
-def documents_as_flac(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sample_rate: int = 16000,
-) -> DataFrame:
+def documents_as_flac(df: DataFrame, sample_rate: int = 16000) -> DataFrame:
     """Deterministic FLAC payloads from document text: the SAMPLE
     stream is documents_as_wav's byte-pair rule verbatim (so the two
     audio codecs share one oracle), compressed through the in-repo
@@ -588,35 +537,10 @@ def documents_as_flac(
     residuals, STREAMINFO MD5)."""
     from . import flac as _flac
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                samples = [
-                    struct.unpack(
-                        "<h",
-                        bytes(
-                            (b[2 * k], b[2 * k + 1] ^ (0x80 if k % 2 else 0))
-                        ),
-                    )[0]
-                    for k in range(len(b) // 2)
-                ]
-                rows.append(
-                    (mid, _flac.encode_flac(samples, sample_rate))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def row(mid, text):
+        yield mid, _flac.encode_flac(_text_samples(text), sample_rate)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
 def decode_flac(df: DataFrame) -> DataFrame:
@@ -626,55 +550,12 @@ def decode_flac(df: DataFrame) -> DataFrame:
     samples to the SAME exact-integer stats as decode_wav, so a WAV
     lane and a FLAC lane over the same signal are value-hash
     interchangeable."""
-    import hashlib
-
-    import numpy as np
-
     from . import flac as _flac
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                # per-row fail-soft (see decode_wav)
-                try:
-                    rate, nch, samples = _flac.parse_flac(bytes(payload))
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((mid,) + (None,) * 7)
-                    continue
-                arr = np.asarray(samples, dtype=np.int64)
-                aabs = np.abs(arr)
-                rows.append(
-                    (
-                        mid,
-                        rate,
-                        nch,
-                        len(samples),
-                        int(aabs.sum()),
-                        int(aabs.max()) if len(samples) else 0,
-                        int(((arr[:-1] < 0) != (arr[1:] < 0)).sum())
-                        if len(samples)
-                        else 0,
-                        hashlib.md5(
-                            ",".join(map(str, samples)).encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "sample_rate",
-                    "n_channels",
-                    "n_samples",
-                    "sum_abs",
-                    "peak_abs",
-                    "n_zero_cross",
-                    "samples_md5",
-                ],
-            )
+    def row(mid, payload):
+        yield (mid,) + _sample_stats(*_flac.parse_flac(bytes(payload)))
 
-    return _map_stage(df, ("media_id", "payload"), run, _WAV_DECODE_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _WAV_DECODE_SCHEMA, row, _PARSE_ERRORS)
 
 
 _BMP_DECODE_SCHEMA = T.StructType(
@@ -698,48 +579,22 @@ def decode_bmp(df: DataFrame) -> DataFrame:
     per-channel byte sums and an md5 over the comma-joined TOP-DOWN BGR
     byte values.  The md5 pins row ORDER (a decoder that forgets the
     bottom-up flip, or leaks padding bytes, fails the hash), the sums
-    pin channel alignment."""
-    import hashlib
+    pin channel alignment.  Per-row fail-soft."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                # per-row fail-soft (see wav_decode_stats)
-                try:
-                    w, h, pix = parse_bmp(bytes(payload))
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((mid,) + (None,) * 7)
-                    continue
-                rows.append(
-                    (
-                        mid,
-                        w,
-                        h,
-                        w * h,
-                        sum(pix[0::3]),
-                        sum(pix[1::3]),
-                        sum(pix[2::3]),
-                        hashlib.md5(
-                            ",".join(str(b) for b in pix).encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "sum_b",
-                    "sum_g",
-                    "sum_r",
-                    "pixels_md5",
-                ],
-            )
+    def row(mid, payload):
+        w, h, pix = parse_bmp(bytes(payload))
+        yield (
+            mid,
+            w,
+            h,
+            w * h,
+            sum(pix[0::3]),
+            sum(pix[1::3]),
+            sum(pix[2::3]),
+            hashlib.md5(",".join(str(b) for b in pix).encode()).hexdigest(),
+        )
 
-    return _map_stage(df, ("media_id", "payload"), run, _BMP_DECODE_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _BMP_DECODE_SCHEMA, row, _PARSE_ERRORS)
 
 
 def _y4m_plane_lens(width: int, height: int, chroma: str) -> tuple[int, int]:
@@ -844,10 +699,18 @@ def parse_y4m(data: bytes) -> tuple[int, int, list[tuple[bytes, bytes, bytes]]]:
     return width, height, frames
 
 
+def _text_y4m(text, width: int, height: int, chroma: str, frame_len: int) -> bytes:
+    """documents_as_y4m's container for one document."""
+    b = _utf8(text)
+    n = max(1, len(b) // frame_len)
+    raw = b[: frame_len * n].ljust(frame_len * n, b"\x00")
+    frames = [raw[f * frame_len : (f + 1) * frame_len] for f in range(n)]
+    params = tuple((i, b" Xodd") for i in range(1, n, 2))
+    return y4m_container(frames, width, height, params, chroma)
+
+
 def documents_as_y4m(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     width: int = 6,
     height: int = 4,
     chroma: str = "420jpeg",
@@ -861,35 +724,10 @@ def documents_as_y4m(
     y_len, c_len = _y4m_plane_lens(width, height, chroma)
     frame_len = y_len + 2 * c_len
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                n = max(1, len(b) // frame_len)
-                raw = b[: frame_len * n].ljust(frame_len * n, b"\x00")
-                frames = [
-                    raw[f * frame_len : (f + 1) * frame_len] for f in range(n)
-                ]
-                params = tuple((i, b" Xodd") for i in range(1, n, 2))
-                rows.append(
-                    (
-                        mid,
-                        y4m_container(frames, width, height, params, chroma),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def row(mid, text):
+        yield mid, _text_y4m(text, width, height, chroma, frame_len)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
 _Y4M_DECODE_SCHEMA = T.StructType(
@@ -920,13 +758,9 @@ def _y4m_stats_row(payload: bytes):
     decimal join) but value-identical to the original per-byte Python
     loops — integer sums are exact and the md5 input string is the same
     bytes."""
-    import hashlib
-
-    import numpy as np
-
     try:
         w, h, frames = parse_y4m(bytes(payload))
-    except (ValueError, NotImplementedError, struct.error):
+    except _PARSE_ERRORS:
         return None
     all_y = b"".join(fr[0] for fr in frames)
     y_len = len(frames[0][0]) if frames else 0
@@ -956,34 +790,13 @@ def decode_y4m(df: DataFrame) -> DataFrame:
     inter-frame luma delta Σ|y_f - y_{f-1}| (the scene-cut energy
     q_video_scene_cut thresholds), and an md5 over the comma-joined luma
     stream.  A parser that mis-splits planes, skips a FRAME parameter
-    wrong, or drops a frame fails the value hash, not just a count."""
+    wrong, or drops a frame fails the value hash, not just a count.
+    Per-row fail-soft: a corrupt payload yields one NULL-stats row."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                # per-row fail-soft (see wav_decode_stats)
-                stats = _y4m_stats_row(payload)
-                if stats is None:
-                    rows.append((mid,) + (None,) * 8)
-                else:
-                    rows.append((mid,) + stats)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_frames",
-                    "sum_y",
-                    "sum_u",
-                    "sum_v",
-                    "frame_diff_sum",
-                    "y_md5",
-                ],
-            )
+    def row(mid, payload):
+        yield (mid,) + (_y4m_stats_row(payload) or (None,) * 8)
 
-    return _map_stage(df, ("media_id", "payload"), run, _Y4M_DECODE_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _Y4M_DECODE_SCHEMA, row)
 
 
 _Y4M_ROUNDTRIP_SCHEMA = T.StructType(
@@ -995,8 +808,6 @@ _Y4M_ROUNDTRIP_SCHEMA = T.StructType(
 
 def y4m_roundtrip_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     width: int = 6,
     height: int = 4,
     chroma: str = "420jpeg",
@@ -1013,39 +824,17 @@ def y4m_roundtrip_stats(
     byte-stream identity with the two-stage form is pinned by
     tests/test_multimodal_fused.py."""
     tags = chroma_mod if chroma_mod is not None else (chroma,)
-    w, h = width, height
-    build_container, plane_lens = y4m_container, _y4m_plane_lens
-    stats_row = _y4m_stats_row
+    flens = {
+        t: (lambda yl, cl: yl + 2 * cl)(*_y4m_plane_lens(width, height, t))
+        for t in tags
+    }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        flens = {
-            t: (lambda yl, cl: yl + 2 * cl)(*plane_lens(w, h, t))
-            for t in tags
-        }
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                tag = tags[int(mid) % len(tags)]
-                flen = flens[tag]
-                b = ("" if text is None else text).encode("utf-8")
-                n = max(1, len(b) // flen)
-                raw = b[: flen * n].ljust(flen * n, b"\x00")
-                frames = [raw[f * flen : (f + 1) * flen] for f in range(n)]
-                params = tuple((i, b" Xodd") for i in range(1, n, 2))
-                stats = stats_row(build_container(frames, w, h, params, tag))
-                if stats is None:
-                    rows.append((mid, tag) + (None,) * 8)
-                else:
-                    rows.append((mid, tag) + stats)
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in _Y4M_ROUNDTRIP_SCHEMA.fields],
-            )
+    def row(mid, text):
+        tag = tags[int(mid) % len(tags)]
+        payload = _text_y4m(text, width, height, tag, flens[tag])
+        yield (mid, tag) + (_y4m_stats_row(payload) or (None,) * 8)
 
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        run, _Y4M_ROUNDTRIP_SCHEMA,
-    )
+    return _row_stage(df, _DOC_COLS, _Y4M_ROUNDTRIP_SCHEMA, row)
 
 
 def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:
@@ -1063,8 +852,6 @@ def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:
     slicing, the division) is value-hash verifiable with no
     double→string rendering ambiguity anywhere.
     """
-    import math
-
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -1105,94 +892,63 @@ def extract_features(df: DataFrame, fake_decode: bool = True) -> DataFrame:
             "present in this environment — wire librosa/ffmpeg here"
         )
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sizes, feats, ppms = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                ids.append(mid)
-                sizes.append(len(data))
-                # per-stride mean over raw bytes (fake lane) or REAL
-                # decoded sample/pixel values (bytes and int lists both
-                # slice to int sequences, so the fold is shared)
-                vals = data if fake_decode else decode_values(data)
-                f, pp = [], []
-                for d in range(FEATURE_DIM):
-                    sl = vals[d::FEATURE_DIM]
-                    if sl:
-                        f.append(round(sum(sl) / len(sl), 6))
-                        # op order matters: (sum/count)*1e6 + 0.5, left to
-                        # right — the oracle mirrors it term for term
-                        pp.append(
-                            math.floor(sum(sl) / len(sl) * 1000000.0 + 0.5)
-                        )
-                    else:
-                        f.append(0.0)
-                        pp.append(0)
-                feats.append(f)
-                ppms.append(pp)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "n_bytes": sizes,
-                    "features": feats,
-                    "feat_ppm": ppms,
-                }
-            )
+    def row(mid, payload):
+        data = bytes(payload) if payload is not None else b""
+        # per-stride mean over raw bytes (fake lane) or REAL decoded
+        # sample/pixel values (bytes and int lists both slice to int
+        # sequences, so the fold is shared)
+        vals = data if fake_decode else decode_values(data)
+        f, pp = [], []
+        for d in range(FEATURE_DIM):
+            sl = vals[d::FEATURE_DIM]
+            if sl:
+                f.append(round(sum(sl) / len(sl), 6))
+                # op order matters: (sum/count)*1e6 + 0.5, left to
+                # right — the oracle mirrors it term for term
+                pp.append(math.floor(sum(sl) / len(sl) * 1000000.0 + 0.5))
+            else:
+                f.append(0.0)
+                pp.append(0)
+        yield mid, len(data), f, pp
 
-    return _map_stage(df, ("media_id", "payload"), featurize, out_schema)
+    return _row_stage(df, _MEDIA_COLS, out_schema, row)
+
+
+def _text_raster(text, width: int):
+    """The grayscale raster every text→image builder shares: the text's
+    utf-8 bytes fill a width-wide uint8 raster top-down, zero-padded,
+    height = max(1, n_bytes // width) capped at 64 rows."""
+    b = _utf8(text)
+    h = min(64, max(1, len(b) // width))
+    return np.frombuffer(
+        b[: width * h].ljust(width * h, b"\x00"), dtype=np.uint8
+    ).reshape(h, width)
 
 
 def documents_as_jpeg(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     width: int = 16,
     quality: int = 90,
     progressive_every: int | None = None,
 ) -> DataFrame:
     """Deterministic baseline-JPEG payloads from document text: the
-    text's utf-8 bytes fill a width×height grayscale raster top-down
-    (zero-padded, height = max(1, n_bytes // width) capped at 64 rows),
-    encoded through the real ``operators/jpeg.py`` codec.  The planted
-    corpus therefore exercises Huffman coding, FDCT and the decoder's
-    full path on every document.  ``progressive_every=N`` encodes every
-    Nth id as a PROGRESSIVE (SOF2 spectral-selection) stream — decoded
-    pixels are bit-identical either way, so downstream geometry/content
-    contracts hold unchanged while the multi-scan path gets corpus-wide
+    ``_text_raster`` grayscale raster encoded through the real
+    ``operators/jpeg.py`` codec.  The planted corpus therefore
+    exercises Huffman coding, FDCT and the decoder's full path on every
+    document.  ``progressive_every=N`` encodes every Nth id as a
+    PROGRESSIVE (SOF2 spectral-selection) stream — decoded pixels are
+    bit-identical either way, so downstream geometry/content contracts
+    hold unchanged while the multi-scan path gets corpus-wide
     exercise."""
-    import numpy as np
-
     from . import jpeg
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                h = min(64, max(1, len(b) // width))
-                pix = np.frombuffer(
-                    b[: width * h].ljust(width * h, b"\x00"), dtype=np.uint8
-                ).reshape(h, width)
-                prog = (
-                    progressive_every is not None
-                    and mid % progressive_every == 0
-                )
-                rows.append(
-                    (mid, jpeg.encode_baseline(pix, quality, progressive=prog))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def row(mid, text):
+        prog = progressive_every is not None and mid % progressive_every == 0
+        yield mid, jpeg.encode_baseline(
+            _text_raster(text, width), quality, progressive=prog
+        )
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
 _JPEG_DECODE_SCHEMA = T.StructType(
@@ -1216,44 +972,22 @@ def decode_jpeg(df: DataFrame) -> DataFrame:
     uncompressed lanes there is no SQL oracle (a DuckDB replay of
     Huffman+IDCT is not expressible); correctness is pinned by the
     hand-constructed spec streams in tests/test_jpeg_codec.py."""
-    import hashlib
-
     from . import jpeg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    h, w, px = jpeg.decode_baseline(bytes(payload))
-                except (ValueError, NotImplementedError, IndexError, struct.error):
-                    rows.append((mid,) + (None,) * 5)
-                    continue
-                nchan = 1 if px.ndim == 2 else px.shape[2]
-                luma = px if px.ndim == 2 else px[..., 0]
-                rows.append(
-                    (
-                        mid,
-                        w,
-                        h,
-                        nchan,
-                        int(luma.astype("int64").sum()),
-                        hashlib.md5(px.tobytes()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_channels",
-                    "sum_luma",
-                    "pixels_md5",
-                ],
-            )
+    def row(mid, payload):
+        h, w, px = jpeg.decode_baseline(bytes(payload))
+        nchan = 1 if px.ndim == 2 else px.shape[2]
+        luma = px if px.ndim == 2 else px[..., 0]
+        yield (
+            mid,
+            w,
+            h,
+            nchan,
+            int(luma.astype("int64").sum()),
+            hashlib.md5(px.tobytes()).hexdigest(),
+        )
 
-    return _map_stage(df, ("media_id", "payload"), run, _JPEG_DECODE_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _JPEG_DECODE_SCHEMA, row, _JPEG_ERRORS)
 
 
 def resize_images(
@@ -1276,6 +1010,8 @@ def resize_images(
     The fake path re-emits a deterministic payload slice sized
     proportional to the target area and stamps the new dimensions — the
     schema/batch/metadata contract without the codec."""
+    from . import jpeg, png
+
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -1285,88 +1021,43 @@ def resize_images(
         ]
     )
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(mid, payload):
+        data = bytes(payload) if payload is not None else b""
+        if fake_decode:
+            keep = max(1, min(len(data), width * height // 64))
+            yield mid, data[:keep], width, height
+            return
+        is_png = data[:8] == b"\x89PNG\r\n\x1a\n"
+        h0, w0, px = (png.decode_png if is_png else jpeg.decode_baseline)(data)
+        ys = (np.arange(height) * h0) // height
+        xs = (np.arange(width) * w0) // width
+        resized = px[ys][:, xs]
+        enc = png.encode_png(resized) if is_png else jpeg.encode_baseline(resized, 90)
+        yield mid, enc, width, height
 
-        from . import jpeg, png
-
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                if fake_decode:
-                    keep = max(1, min(len(data), width * height // 64))
-                    out.append((mid, data[:keep], width, height))
-                    continue
-                is_png = data[:8] == b"\x89PNG\r\n\x1a\n"
-                try:
-                    if is_png:
-                        h0, w0, px = png.decode_png(data)
-                    else:
-                        h0, w0, px = jpeg.decode_baseline(data)
-                except (ValueError, NotImplementedError, IndexError, struct.error):
-                    out.append((mid, None, None, None))
-                    continue
-                ys = (np.arange(height) * h0) // height
-                xs = (np.arange(width) * w0) // width
-                resized = px[ys][:, xs]
-                enc = (
-                    png.encode_png(resized)
-                    if is_png
-                    else jpeg.encode_baseline(resized, 90)
-                )
-                out.append((mid, enc, width, height))
-            yield pd.DataFrame(out, columns=["media_id", "payload", "width", "height"])
-
-    return _map_stage(df, ("media_id", "payload"), resize, out_schema)
+    return _row_stage(df, _MEDIA_COLS, out_schema, row, _JPEG_ERRORS)
 
 
 def documents_as_png(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     width: int = 16,
     interlace_every: int | None = None,
 ) -> DataFrame:
     """Deterministic PNG payloads from document text: the same
-    width×height grayscale raster convention as ``documents_as_jpeg``
-    (utf-8 bytes top-down, zero-padded, height = max(1, n_bytes//width)
-    capped at 64 rows), encoded through the real ``operators/png.py``
-    codec with adaptive per-row filtering — real corpora exercise all
-    five filter types.  ``interlace_every=N`` emits every Nth id as an
-    Adam7 interlaced stream.  PNG is LOSSLESS, so unlike the JPEG twin
-    the decoded pixels equal the planted raster byte-for-byte — the
-    PNG lanes' oracles pin full content, not just geometry."""
-    import numpy as np
-
+    ``_text_raster`` raster as ``documents_as_jpeg``, encoded through
+    the real ``operators/png.py`` codec with adaptive per-row filtering
+    — real corpora exercise all five filter types.
+    ``interlace_every=N`` emits every Nth id as an Adam7 interlaced
+    stream.  PNG is LOSSLESS, so unlike the JPEG twin the decoded pixels
+    equal the planted raster byte-for-byte — the PNG lanes' oracles pin
+    full content, not just geometry."""
     from . import png
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                h = min(64, max(1, len(b) // width))
-                pix = np.frombuffer(
-                    b[: width * h].ljust(width * h, b"\x00"), dtype=np.uint8
-                ).reshape(h, width)
-                il = (
-                    interlace_every is not None
-                    and mid % interlace_every == 0
-                )
-                rows.append((mid, png.encode_png(pix, interlace=il)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def row(mid, text):
+        il = interlace_every is not None and mid % interlace_every == 0
+        yield mid, png.encode_png(_text_raster(text, width), interlace=il)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
 _PNG_DECODE_SCHEMA = T.StructType(
@@ -1381,55 +1072,37 @@ _PNG_DECODE_SCHEMA = T.StructType(
 )
 
 
+def _raster_stats(h: int, w: int, px) -> tuple:
+    """(width, height, n_channels, exact luma sum, md5 over the
+    comma-joined decimal luma values) for one decoded lossless raster —
+    channel 0 / the luma plane, row-major: the ``array_to_string``
+    rendering DuckDB replays, shared by every lossless codec."""
+    nchan = 1 if px.ndim == 2 else px.shape[2]
+    flat = (px if px.ndim == 2 else px[..., 0]).reshape(-1)
+    return (
+        w,
+        h,
+        nchan,
+        int(flat.astype("int64").sum()),
+        hashlib.md5(",".join(str(int(v)) for v in flat).encode()).hexdigest(),
+    )
+
+
 def decode_png(df: DataFrame) -> DataFrame:
     """REAL lossless-image decode lane: run each payload through the
-    PNG codec and reduce to the exact integer value sum plus an md5
-    over the comma-joined decimal pixel values (channel 0 / luma plane,
-    row-major) — the ``array_to_string`` rendering DuckDB replays, so
-    the oracle verifies CONTENT through deflate+filtering, which the
-    lossy JPEG lanes cannot.  Per-row fail-soft: corrupt containers and
+    PNG codec and reduce it to ``_raster_stats`` — the exact integer
+    value sum plus an md5 over the decimal pixel values, so the oracle
+    verifies CONTENT through deflate+filtering, which the lossy JPEG
+    lanes cannot.  Per-row fail-soft: corrupt containers and
     unsupported depths yield NULLs, never a task failure."""
-    import hashlib
-
     from . import png
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    h, w, px = png.decode_png(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    rows.append((mid,) + (None,) * 5)
-                    continue
-                nchan = 1 if px.ndim == 2 else px.shape[2]
-                luma = px if px.ndim == 2 else px[..., 0]
-                flat = luma.reshape(-1)
-                rows.append(
-                    (
-                        mid,
-                        w,
-                        h,
-                        nchan,
-                        int(flat.astype("int64").sum()),
-                        hashlib.md5(
-                            ",".join(str(int(v)) for v in flat).encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_channels",
-                    "sum_luma",
-                    "pixels_md5",
-                ],
-            )
+    def row(mid, payload):
+        yield (mid,) + _raster_stats(*png.decode_png(bytes(payload)))
 
-    return _map_stage(df, ("media_id", "payload"), run, _PNG_DECODE_SCHEMA)
+    return _row_stage(
+        df, _MEDIA_COLS, _PNG_DECODE_SCHEMA, row, (ValueError, NotImplementedError),
+    )
 
 
 def sample_frames(
@@ -1469,31 +1142,25 @@ def sample_frames(
         ]
     )
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import avi
+    from . import avi
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                if fake_decode:
-                    chunk = max(1, frame_size)
-                    frames = [
-                        data[i : i + chunk] for i in range(0, len(data), chunk)
-                    ]
-                else:
-                    try:
-                        _w, _h, _codec, frames = avi.parse_avi(data)
-                    except (ValueError, NotImplementedError, struct.error):
-                        # MP4/MKV (ffmpeg/PyAV seam) or corrupt container
-                        rows.append((mid, -1, None))
-                        continue
-                kept = range(0, len(frames), max(1, every_nth))
-                for src_idx in list(kept)[:max_frames]:
-                    rows.append((mid, src_idx, frames[src_idx]))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame_payload"])
+    def row(mid, payload):
+        data = bytes(payload) if payload is not None else b""
+        if fake_decode:
+            chunk = max(1, frame_size)
+            frames = [data[i : i + chunk] for i in range(0, len(data), chunk)]
+        else:
+            try:
+                _w, _h, _codec, frames = avi.parse_avi(data)
+            except _PARSE_ERRORS:
+                # MP4/MKV (ffmpeg/PyAV seam) or corrupt container
+                yield mid, -1, None
+                return
+        kept = range(0, len(frames), max(1, every_nth))
+        for src_idx in list(kept)[:max_frames]:
+            yield mid, src_idx, frames[src_idx]
 
-    return _map_stage(df, ("media_id", "payload"), sample, out_schema)
+    return _row_stage(df, _MEDIA_COLS, out_schema, row)
 
 
 def frame_sample(
@@ -1520,31 +1187,14 @@ def frame_sample(
         ]
     )
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import math
+    def row(mid, payload):
+        data = bytes(payload) if payload is not None else b""
+        n_frames = math.ceil(len(data) / frame_size)
+        for i in range(0, n_frames, every):
+            frame = data[i * frame_size : (i + 1) * frame_size]
+            yield mid, i, len(frame), hashlib.md5(frame).hexdigest()
 
-        for pdf in batches:
-            ids, idxs, lens, digests = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                n_frames = math.ceil(len(data) / frame_size)
-                for i in range(0, n_frames, every):
-                    frame = data[i * frame_size : (i + 1) * frame_size]
-                    ids.append(mid)
-                    idxs.append(i)
-                    lens.append(len(frame))
-                    digests.append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "frame_len": pd.array(lens, dtype="int32"),
-                    "frame_md5": digests,
-                }
-            )
-
-    return _map_stage(df, ("media_id", "payload"), sample, out_schema)
+    return _row_stage(df, _MEDIA_COLS, out_schema, row)
 
 
 def audio_energy_windows(df: DataFrame, window_bytes: int = 64) -> DataFrame:
@@ -1562,10 +1212,6 @@ def audio_energy_windows(df: DataFrame, window_bytes: int = 64) -> DataFrame:
     Output: (media_id, n_bytes, n_windows, peak_energy, peak_window,
     energy_md5) — scalars only, canonicalizer-safe.
     """
-    import hashlib
-
-    import numpy as np
-
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType(), False),
@@ -1577,40 +1223,25 @@ def audio_energy_windows(df: DataFrame, window_bytes: int = 64) -> DataFrame:
         ]
     )
 
-    def profile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nb, nw, pe, pw, eh = [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                arr = np.frombuffer(data, dtype=np.uint8)
-                n_win = -(-len(arr) // window_bytes) if len(arr) else 0
-                energies = [
-                    int(arr[w * window_bytes : (w + 1) * window_bytes].sum())
-                    for w in range(n_win)
-                ]
-                ids.append(mid)
-                nb.append(len(arr))
-                nw.append(n_win)
-                pe.append(max(energies) if energies else 0)
-                # first-max tie policy — matches the oracle's list_position
-                pw.append(energies.index(max(energies)) if energies else 0)
-                eh.append(
-                    hashlib.md5(
-                        ",".join(str(e) for e in energies).encode()
-                    ).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "n_bytes": pd.array(nb, dtype="int32"),
-                    "n_windows": pd.array(nw, dtype="int32"),
-                    "peak_energy": pd.array(pe, dtype="int64"),
-                    "peak_window": pd.array(pw, dtype="int32"),
-                    "energy_md5": eh,
-                }
-            )
+    def row(mid, payload):
+        data = bytes(payload) if payload is not None else b""
+        arr = np.frombuffer(data, dtype=np.uint8)
+        n_win = -(-len(arr) // window_bytes) if len(arr) else 0
+        energies = [
+            int(arr[w * window_bytes : (w + 1) * window_bytes].sum())
+            for w in range(n_win)
+        ]
+        yield (
+            mid,
+            len(arr),
+            n_win,
+            max(energies) if energies else 0,
+            # first-max tie policy — matches the oracle's list_position
+            energies.index(max(energies)) if energies else 0,
+            hashlib.md5(",".join(str(e) for e in energies).encode()).hexdigest(),
+        )
 
-    return _map_stage(df, ("media_id", "payload"), profile, out_schema)
+    return _row_stage(df, _MEDIA_COLS, out_schema, row)
 
 
 # ---------------------------------------------------------------------------
@@ -1645,8 +1276,6 @@ def _frame_hashes_np(samples, frame_samples: int, bands: int):
     absolute levels: the hash tracks spectral-envelope MOTION, so it is
     invariant to overall gain — the property that makes it a
     fingerprint rather than a volume meter."""
-    import numpy as np
-
     bw = frame_samples // bands
     n_frames = len(samples) // frame_samples
     if n_frames == 0:
@@ -1670,37 +1299,19 @@ def audio_fingerprint(
     path — container walk, int16 sign handling, band energy, delta
     thresholding — is value-hash verifiable against a SQL replay of the
     same bytes.  Corrupt payloads fail soft to a NULL-stats row."""
-    import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _rate, _nch, samples = parse_wav(bytes(payload))
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((mid,) + (None,) * 4)
-                    continue
-                n_frames, hashes = _frame_hashes_np(
-                    samples, frame_samples, bands
-                )
-                rows.append(
-                    (
-                        mid,
-                        len(samples),
-                        n_frames,
-                        len(hashes),
-                        hashlib.md5(
-                            ",".join(str(h) for h in hashes).encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "n_frames", "n_hashes", "fp_md5"],
-            )
+    def row(mid, payload):
+        _rate, _nch, samples = parse_wav(bytes(payload))
+        n_frames, hashes = _frame_hashes_np(samples, frame_samples, bands)
+        yield (
+            mid,
+            len(samples),
+            n_frames,
+            len(hashes),
+            hashlib.md5(",".join(str(h) for h in hashes).encode()).hexdigest(),
+        )
 
-    return _map_stage(df, ("media_id", "payload"), run, _AUDIO_FP_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _AUDIO_FP_SCHEMA, row, _PARSE_ERRORS)
 
 
 def audio_frame_hashes(
@@ -1712,28 +1323,16 @@ def audio_frame_hashes(
     2·frame_samples samples (or a corrupt container) contributes no
     rows rather than failing the stage."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mids, ts, fhs = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _rate, _nch, samples = parse_wav(bytes(payload))
-                except (ValueError, NotImplementedError, struct.error):
-                    continue
-                _n, hashes = _frame_hashes_np(samples, frame_samples, bands)
-                for t, h in enumerate(hashes):
-                    mids.append(mid)
-                    ts.append(t)
-                    fhs.append(h)
-            yield pd.DataFrame(
-                {
-                    "media_id": mids,
-                    "t": pd.array(ts, dtype="int32"),
-                    "fh": pd.array(fhs, dtype="int32"),
-                }
-            )
+    def row(mid, payload):
+        try:
+            _rate, _nch, samples = parse_wav(bytes(payload))
+        except _PARSE_ERRORS:
+            return
+        _n, hashes = _frame_hashes_np(samples, frame_samples, bands)
+        for t, h in enumerate(hashes):
+            yield mid, t, h
 
-    return _map_stage(df, ("media_id", "payload"), run, _AUDIO_FRAME_HASH_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _AUDIO_FRAME_HASH_SCHEMA, row)
 
 
 def video_frame_hashes(
@@ -1748,116 +1347,46 @@ def video_frame_hashes(
     the audio hash has for gain.  Corrupt containers contribute no rows
     (fail-soft), one linear Arrow pass, zero shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mids, ts, fhs = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _w, _h, frames = parse_y4m(bytes(payload))
-                except (ValueError, NotImplementedError, struct.error):
-                    continue
-                luma = list(b"".join(fr[0] for fr in frames))
-                _n, hashes = _frame_hashes_np(luma, luma_per_frame, bands)
-                for t, h in enumerate(hashes):
-                    mids.append(mid)
-                    ts.append(t)
-                    fhs.append(h)
-            yield pd.DataFrame(
-                {
-                    "media_id": mids,
-                    "t": pd.array(ts, dtype="int32"),
-                    "fh": pd.array(fhs, dtype="int32"),
-                }
-            )
+    def row(mid, payload):
+        try:
+            _w, _h, frames = parse_y4m(bytes(payload))
+        except _PARSE_ERRORS:
+            return
+        luma = list(b"".join(fr[0] for fr in frames))
+        _n, hashes = _frame_hashes_np(luma, luma_per_frame, bands)
+        for t, h in enumerate(hashes):
+            yield mid, t, h
 
-    return _map_stage(df, ("media_id", "payload"), run, _AUDIO_FRAME_HASH_SCHEMA)
+    return _row_stage(df, _MEDIA_COLS, _AUDIO_FRAME_HASH_SCHEMA, row)
 
 
-def documents_as_gif(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int = 16,
-) -> DataFrame:
-    """Deterministic GIF payloads from document text: the SAME raster
-    convention as documents_as_png/jpeg (utf-8 bytes top-down,
-    zero-padded, height = max(1, n_bytes//width) capped at 64 rows)
-    encoded through the real ``operators/gif.py`` LZW codec with the
-    identity-gray palette.  GIF is lossless, so the decoded pixels
-    equal the planted raster byte-for-byte — the decode lane can share
-    the PNG lane's content-exact oracle VERBATIM (same raster, same
-    stats), which is itself the point: the oracle pins CONTENT, so it
-    is codec-independent across every lossless format."""
-    import numpy as np
-
+def documents_as_gif(df: DataFrame, width: int = 16) -> DataFrame:
+    """Deterministic GIF payloads from document text: the SAME
+    ``_text_raster`` raster as documents_as_png/jpeg, encoded through
+    the real ``operators/gif.py`` LZW codec with the identity-gray
+    palette.  GIF is lossless, so the decoded pixels equal the planted
+    raster byte-for-byte — the decode lane can share the PNG lane's
+    content-exact oracle VERBATIM (same raster, same stats), which is
+    itself the point: the oracle pins CONTENT, so it is
+    codec-independent across every lossless format."""
     from . import gif
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                b = ("" if text is None else text).encode("utf-8")
-                h = min(64, max(1, len(b) // width))
-                pix = np.frombuffer(
-                    b[: width * h].ljust(width * h, b"\x00"), dtype=np.uint8
-                ).reshape(h, width)
-                rows.append((mid, gif.encode_gif(pix)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def row(mid, text):
+        yield mid, gif.encode_gif(_text_raster(text, width))
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    return _map_stage(
-        df, (F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)),
-        build, schema,
-    )
+    return _row_stage(df, _DOC_COLS, _PAYLOAD_SCHEMA, row)
 
 
 def decode_gif(df: DataFrame) -> DataFrame:
     """REAL GIF decode lane: run each payload through the LZW codec and
-    reduce to the q_png_decode stats contract — (width, height,
-    n_channels, exact value sum, md5 over comma-joined decimal pixel
-    values) — so the content oracle is shared across lossless codecs.
-    Per-row fail-soft on corrupt containers."""
-    import hashlib
-
+    reduce it to the q_png_decode ``_raster_stats`` contract, so the
+    content oracle is shared across lossless codecs.  Per-row fail-soft
+    on corrupt containers."""
     from . import gif
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    h, w, px = gif.decode_gif(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    rows.append((mid,) + (None,) * 5)
-                    continue
-                flat = px.reshape(-1)
-                rows.append(
-                    (
-                        mid,
-                        w,
-                        h,
-                        1,
-                        int(flat.astype("int64").sum()),
-                        hashlib.md5(
-                            ",".join(str(int(v)) for v in flat).encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "n_channels",
-                    "sum_luma",
-                    "pixels_md5",
-                ],
-            )
+    def row(mid, payload):
+        yield (mid,) + _raster_stats(*gif.decode_gif(bytes(payload)))
 
-    return _map_stage(df, ("media_id", "payload"), run, _PNG_DECODE_SCHEMA)
+    return _row_stage(
+        df, _MEDIA_COLS, _PNG_DECODE_SCHEMA, row, (ValueError, NotImplementedError),
+    )

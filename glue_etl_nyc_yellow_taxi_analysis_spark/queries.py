@@ -34,7 +34,7 @@ from .operators.joins import anti_join, broadcast_dim_join, semi_join
 from .operators.transforms import dedup_exact
 from .plans import dims, star, warehouse
 from .registry import ORACLE, QUERIES, register  # noqa: F401  (ORACLE/QUERIES re-exported)
-from .sources.writers import ParquetWarehouse, write_partitioned_parquet
+from .sources.writers import write_partitioned_parquet
 from .sql import PRICING_SUMMARY_SQL, SHIPPING_PRIORITY_SQL
 from .tables import (
     _COSINE_SQL,

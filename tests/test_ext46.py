@@ -8,7 +8,6 @@ sign cases where floor vs truncate division diverge.
 import hashlib
 import math
 
-from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES  # noqa: F401  (registry root first: ext modules import from .queries)
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext46 import (
     _NORM_PEAK,
     q_audio_decimate,

@@ -13,7 +13,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES  # noqa: F401  (registry root first: ext modules import from .queries)
+from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES
 from glue_etl_nyc_yellow_taxi_analysis_spark.operators import html as H
 from glue_etl_nyc_yellow_taxi_analysis_spark.operators import warc
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext48 import (

@@ -15,7 +15,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES  # noqa: F401  (registry root first)
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext16 import q_semdedup
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext49 import (
     SQL_SEMDEDUP_IVF,

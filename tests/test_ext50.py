@@ -5,7 +5,7 @@ import unicodedata
 
 from pyspark.sql import functions as F
 
-from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES  # noqa: F401  (registry root first)
+from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext50 import (
     q_sitemap_parse,
     q_unicode_normalize,

@@ -4,7 +4,6 @@ and loud seams for every foreign feature the subset rejects."""
 
 import pytest
 
-from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES  # noqa: F401  (registry root first: ext modules import from .queries)
 from glue_etl_nyc_yellow_taxi_analysis_spark.operators import mp3
 
 

@@ -113,6 +113,21 @@ def test_auto_fusion_collapses_chain_to_one_python_stage(spark):
     )
 
 
+def test_fusion_rejects_a_column_the_parent_never_produced(spark):
+    """frame_sample yields no ``payload``: a fused decode_wav would read
+    it by name on the executor (KeyError at the first action), so the
+    stage must stack instead and Spark must reject the plan when it is
+    built."""
+    from pyspark.errors import AnalysisException
+
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(_TEXTS)], "doc_id long, text string"
+    )
+    framed = mm.frame_sample(mm.documents_as_media(docs))
+    with pytest.raises(AnalysisException):
+        mm.decode_wav(framed)
+
+
 def test_auto_fusion_three_stage_jpeg_roundtrip(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(_TEXTS) if t], "doc_id long, text string"

@@ -32,7 +32,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES, _t
-from glue_etl_nyc_yellow_taxi_analysis_spark import queries_ext48  # noqa: E402  (after queries: avoids the circular chain)
+from glue_etl_nyc_yellow_taxi_analysis_spark import queries_ext48
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext25 import (
     _CTX_BUDGET,
     _hybrid_fused,
