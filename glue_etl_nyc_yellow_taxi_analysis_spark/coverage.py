@@ -30,43 +30,38 @@ import re
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Must re-earn a driver row this round: only queries whose Spark or
-# oracle side changed since their latest committed driver row.
-# Round 12 replanned far more lanes than the 10-pin cap (SemDeDup's
-# applyInPandas prune kernel, the auto-fused media stages across ~15
-# codec lanes, seven multi-scan checkpoint rollups, the REP hosts
-# materialization, the graph-edge checkpoints, the PQ write sizing),
-# so the pins take ONE representative per changed MECHANISM, weighted
-# by semantic risk:
-#   * the SemDeDup Arrow kernel (bit-exact float replay — the round's
-#     riskiest change) gets all three consumers;
-#   * q_y4m_chroma_decode is the deepest media-fusion transform
-#     (3 filtered branches -> 1 Arrow pass + vectorized reductions);
-#   * q_kn_bigram_ppl is the most aggressive multi-scan rollup (5->1
-#     corpus passes);
-#   * q_pq_index_persist (content-sized write + read-back) and
-#     q_ann_pq_oracle (r11 expression rewrite + r12 try_element_at)
-#     cover the PQ family;
-#   * q_stream_ann_enrich (code-table sizing + stream machinery) and
-#     q_quality_auc (r11 rewrite, never driver-sampled) carry the r11
-#     debt (verdict item 4);
-#   * q_crawl_schedule covers the REP hosts materialization.
-# Left out deliberately: q_ann_ivfpq/q_pq_recall/q_pq_rerank (same PQ
-# machinery as the two pinned), q_lsa_topic (r11 change was a
-# value-identical localCheckpoint), the rollup/char-staging/graph
-# lanes (integer-identical derivations, collect-compared); all are
-# oracle-proven locally and q_hybrid_retrieval/q_rag_context_pack
-# land in the window's natural stale tail anyway.
+# oracle side changed since their latest committed driver row.  Moving
+# every media, document, audio and shard kernel onto the one kernel
+# path (_row_stage/_shard_stage) rewrote far more lanes than the 10-pin
+# cap, so the pins take ONE lane per changed MECHANISM:
+#   * q_jpeg_resize — a media builder's per-row kernel, fused with its
+#     decode (the media-kernel consolidation);
+#   * q_pdf_extract — a document build → extract pair fused into one
+#     Arrow pass;
+#   * q_flac_transcode — the deepest new fusion (3 stages -> 1);
+#   * q_audio_decimate — a DSP transform fused onto the WAV build, its
+#     fail-soft scoped to the parse inside the row;
+#   * q_zip_shard_roundtrip — the one member-shard builder (its pack
+#     varies method and ZIP64 framing by shard_id);
+#   * q_warc_ingest — the shared WARC pack and a whole-row fail-soft
+#     walk with the hostile marker shard;
+#   * q_stream_warc_ingest — the same pack feeding a fail-hard walk
+#     in a stream;
+#   * q_warc_revisit — a lane-specific pack through _shard_stage;
+#   * q_mp3_framewalk — build + walk in one row, its fail-soft scoped
+#     to the walk.
+# Left out deliberately: the other member-shard, document and media
+# lanes share a pinned lane's code path and are oracle-proven locally.
 PINNED: tuple[str, ...] = (
-    "q_semdedup",
-    "q_semdedup_ivf",
-    "q_semdedup_multirep",
-    "q_y4m_chroma_decode",
-    "q_kn_bigram_ppl",
-    "q_pq_index_persist",
-    "q_ann_pq_oracle",
-    "q_stream_ann_enrich",
-    "q_quality_auc",
-    "q_crawl_schedule",
+    "q_jpeg_resize",
+    "q_pdf_extract",
+    "q_flac_transcode",
+    "q_audio_decimate",
+    "q_zip_shard_roundtrip",
+    "q_warc_ingest",
+    "q_stream_warc_ingest",
+    "q_warc_revisit",
+    "q_mp3_framewalk",
 )
 
 # Rounds 1-2 predate the r3 bit-exact hash canonicalization, so a lane

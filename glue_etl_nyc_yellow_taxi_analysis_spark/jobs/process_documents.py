@@ -35,11 +35,11 @@ from __future__ import annotations
 
 import argparse
 import json
-from typing import Iterator
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.multimodal import _row_stage
 from ..session import get_spark
 from .notify import JobNotifier, jsonl_sink, run_with_notification, stderr_sink
 
@@ -60,8 +60,6 @@ _OUT_SCHEMA = T.StructType(
 def synth_mixed_documents(docs):
     """Mixed-format corpus from a documents table: doc_id % 4 → PDF /
     DOCX / HTML page / Markdown page, all carrying the SAME doc text."""
-    import pandas as pd
-
     from ..operators import docx as docx_mod
     from ..operators import html as html_mod
     from ..operators import markdown as md_mod
@@ -78,43 +76,34 @@ def synth_mixed_documents(docs):
     synth_html, synth_md = html_mod.synth_html, md_mod.synth_md
     wpu = _WORDS_PER_UNIT
 
-    def make(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for d, t, s in zip(b["doc_id"], b["text"], b["source"]):
-                d = int(d)
-                words = ("" if t is None else t).split(" ")
-                units = [
-                    " ".join(words[i : i + wpu])
-                    for i in range(0, len(words), wpu)
-                ] or [""]
-                if d % 4 == 0:
-                    # (d//4) % 3 routes the container flavor: plain
-                    # 1.4 / FlateDecode 1.4 / xref-stream 1.5 (d % 2
-                    # was a dead dial here — d % 4 == 0 is always even)
-                    flavor = (d // 4) % 3
-                    payload = build_pdf(
-                        [split(u) for u in units],
-                        compress=flavor >= 1,
-                        xref_stream=flavor == 2,
-                    )
-                elif d % 4 == 1:
-                    payload = build_docx(units)
-                elif d % 4 == 2:
-                    payload = synth_html(d, t, s).encode("utf-8")
-                else:
-                    payload = synth_md(d, t).encode("utf-8")
-                rows.append((d, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def row(d, t, s):
+        d = int(d)
+        words = ("" if t is None else t).split(" ")
+        units = [" ".join(words[i : i + wpu]) for i in range(0, len(words), wpu)]
+        if d % 4 == 0:
+            # (d//4) % 3 routes the container flavor: plain
+            # 1.4 / FlateDecode 1.4 / xref-stream 1.5 (d % 2
+            # was a dead dial here — d % 4 == 0 is always even)
+            flavor = (d // 4) % 3
+            payload = build_pdf(
+                [split(u) for u in units],
+                compress=flavor >= 1,
+                xref_stream=flavor == 2,
+            )
+        elif d % 4 == 1:
+            payload = build_docx(units)
+        elif d % 4 == 2:
+            payload = synth_html(d, t, s).encode("utf-8")
+        else:
+            payload = synth_md(d, t).encode("utf-8")
+        yield d, payload
 
-    return docs.select("doc_id", "text", "source").mapInPandas(make, schema)
+    return _row_stage(docs, ("doc_id", "text", "source"), schema, row)
 
 
 def extract_documents(media):
     """Sniff → route → extract, one Arrow pass (see module docstring)."""
     import hashlib
-
-    import pandas as pd
 
     from ..operators import docx as docx_mod
     from ..operators import html as html_mod
@@ -124,70 +113,50 @@ def extract_documents(media):
     parse_pdf, docx_text = pdf_mod.parse_pdf, docx_mod.docx_text
     html_py, md_py = html_mod.extract_text_py, md_mod.extract_md_py
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["doc_id"], b["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    if raw.startswith(b"%PDF-"):
-                        kind = "pdf"
-                        pages = parse_pdf(raw)
-                        n_units, text = len(pages), " ".join(pages)
-                    elif raw.startswith(b"PK\x03\x04"):
-                        try:
-                            paras = docx_text(raw)
-                        except ValueError as e:
-                            if "WordprocessingML" in str(e) or "Content_Types" in str(e):
-                                # a real ZIP, wrong package type: count,
-                                # never extract garbage
-                                rows.append((mid, "zip", None, None, None, None))
-                                continue
-                            raise
-                        kind = "docx"
-                        n_units, text = len(paras), " ".join(paras)
-                    elif (
-                        # case-insensitive, whitespace-tolerant HTML sniff
-                        # (r10 advice: real-world `<!doctype html>` and
-                        # BOM/indented pages must not land in 'unknown')
-                        (low := raw[:64].lstrip().lower()).startswith(
-                            b"<!doctype html"
-                        )
-                        or low.startswith(b"<html")
-                    ):
-                        kind = "html"
-                        text = html_py(raw.decode("utf-8"))
-                        n_units = 1
-                    elif raw.startswith(b"# "):
-                        # synth-only convention: corpus Markdown always
-                        # opens with an H1 (`# `); foreign Markdown with
-                        # no magic number is indistinguishable from
-                        # plain text and lands in 'unknown' by design
-                        kind = "markdown"
-                        text = md_py(raw.decode("utf-8"))
-                        n_units = 1
-                    else:
-                        rows.append((mid, "unknown", None, None, None, None))
-                        continue
-                except (ValueError, UnicodeDecodeError):
-                    rows.append((mid, "corrupt", None, None, None, None))
-                    continue
-                rows.append(
-                    (
-                        mid,
-                        kind,
-                        n_units,
-                        len(text),
-                        text,
-                        hashlib.md5(text.encode("utf-8")).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "kind", "n_units", "n_chars", "text", "text_md5"],
-            )
+    def extract(raw):
+        """(kind, n_units, text) of one payload, or (kind, None, None)
+        for a payload that is counted but not extracted."""
+        if raw.startswith(b"%PDF-"):
+            pages = parse_pdf(raw)
+            return "pdf", len(pages), " ".join(pages)
+        if raw.startswith(b"PK\x03\x04"):
+            try:
+                paras = docx_text(raw)
+            except ValueError as e:
+                if "WordprocessingML" in str(e) or "Content_Types" in str(e):
+                    # a real ZIP, wrong package type: count, never
+                    # extract garbage
+                    return "zip", None, None
+                raise
+            return "docx", len(paras), " ".join(paras)
+        # case-insensitive, whitespace-tolerant HTML sniff (r10 advice:
+        # real-world `<!doctype html>` and BOM/indented pages must not
+        # land in 'unknown')
+        low = raw[:64].lstrip().lower()
+        if low.startswith(b"<!doctype html") or low.startswith(b"<html"):
+            return "html", 1, html_py(raw.decode("utf-8"))
+        if raw.startswith(b"# "):
+            # synth-only convention: corpus Markdown always opens with
+            # an H1 (`# `); foreign Markdown with no magic number is
+            # indistinguishable from plain text and lands in 'unknown'
+            # by design
+            return "markdown", 1, md_py(raw.decode("utf-8"))
+        return "unknown", None, None
 
-    return media.select("doc_id", "payload").mapInPandas(run, _OUT_SCHEMA)
+    def row(mid, payload):
+        try:
+            kind, n_units, text = extract(
+                bytes(payload) if payload is not None else b""
+            )
+        except (ValueError, UnicodeDecodeError):
+            kind, n_units, text = "corrupt", None, None
+        if text is None:
+            yield mid, kind, None, None, None, None
+        else:
+            md5 = hashlib.md5(text.encode("utf-8")).hexdigest()
+            yield mid, kind, n_units, len(text), text, md5
+
+    return _row_stage(media, ("doc_id", "payload"), _OUT_SCHEMA, row)
 
 
 def process_documents(spark, media, output: str) -> dict:

@@ -44,7 +44,6 @@ from __future__ import annotations
 import argparse
 import json
 import struct
-from typing import Iterator
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -77,55 +76,46 @@ def synth_mixed_media(docs) -> "F.DataFrame":
 
 def decode_and_condition(media, decimate: bool = True):
     """Sniff → decode → condition → re-container, one Arrow pass."""
+    import numpy as np
+
     from ..operators import flac as _flac
 
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        import numpy as np
-        import pandas as pd
+    def row(mid, payload):
+        raw = bytes(payload) if payload is not None else b""
+        try:
+            if raw[:4] == b"RIFF":
+                kind = "wav"
+                rate, nch, samples = multimodal.parse_wav(raw)
+            elif raw[:4] == b"fLaC":
+                kind = "flac"
+                rate, nch, samples = _flac.parse_flac(raw)
+            else:
+                yield mid, "unknown", None, None, None
+                return
+        except multimodal._PARSE_ERRORS:
+            yield mid, "corrupt", None, None, None
+            return
+        x = np.asarray(samples, dtype=np.int64)
+        n_in = len(x)
+        if nch > 1:
+            # explicit downmix BEFORE decimation: the samples are
+            # channel-interleaved, so letting the decimator
+            # pair-average them would silently mangle stereo into
+            # mono-at-half-rate; per-frame mean keeps rate intact
+            nf = (len(x) // nch) * nch
+            x = x[:nf].reshape(-1, nch).sum(axis=1) // nch
+        if decimate:
+            n2 = (n_in // 2) * 2
+            x = x[:n2].reshape(-1, 2).sum(axis=1) // 2
+            rate //= 2
+        peak = int(np.abs(x).max()) if len(x) else 0
+        if peak:
+            q = (np.abs(x) * _NORM_PEAK) // peak
+            x = np.where(x < 0, -q, q)
+        pcm = struct.pack(f"<{len(x)}h", *(int(v) for v in x))
+        yield mid, kind, n_in, len(x), multimodal.wav_container(pcm, rate)
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    if raw[:4] == b"RIFF":
-                        kind = "wav"
-                        rate, nch, samples = multimodal.parse_wav(raw)
-                    elif raw[:4] == b"fLaC":
-                        kind = "flac"
-                        rate, nch, samples = _flac.parse_flac(raw)
-                    else:
-                        rows.append((mid, "unknown", None, None, None))
-                        continue
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((mid, "corrupt", None, None, None))
-                    continue
-                x = np.asarray(samples, dtype=np.int64)
-                n_in = len(x)
-                if nch > 1:
-                    # explicit downmix BEFORE decimation: the samples are
-                    # channel-interleaved, so letting the decimator
-                    # pair-average them would silently mangle stereo into
-                    # mono-at-half-rate; per-frame mean keeps rate intact
-                    nf = (len(x) // nch) * nch
-                    x = x[:nf].reshape(-1, nch).sum(axis=1) // nch
-                if decimate:
-                    n2 = (n_in // 2) * 2
-                    x = x[:n2].reshape(-1, 2).sum(axis=1) // 2
-                    rate //= 2
-                peak = int(np.abs(x).max()) if len(x) else 0
-                if peak:
-                    q = (np.abs(x) * _NORM_PEAK) // peak
-                    x = np.where(x < 0, -q, q)
-                pcm = struct.pack(f"<{len(x)}h", *(int(v) for v in x))
-                rows.append(
-                    (mid, kind, n_in, len(x), multimodal.wav_container(pcm, rate))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "n_in", "n_out", "payload"]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, _DECODED_SCHEMA)
+    return multimodal._row_stage(media, multimodal._MEDIA_COLS, _DECODED_SCHEMA, row)
 
 
 def process_media(

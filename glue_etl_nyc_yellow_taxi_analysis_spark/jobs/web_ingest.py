@@ -61,47 +61,14 @@ def synth_warc_shards(docs, n_shards: int = 4):
     disk (process_media's --synth-from-docs pattern).  One warcinfo
     head record + one HTTP-response record per doc, page = the
     deterministic synth HTML."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ..operators import html as H
     from ..operators import warc
+    from ..operators.multimodal import _shard_stage
 
-    synth = H.synth_html
-    warcinfo, response = warc.warcinfo_record, warc.response_record
-    http_response, container = warc.http_response, warc.warc_container
-    schema = T.StructType(
-        [
-            T.StructField("shard_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
+    docs = docs.select(
+        (F.col("doc_id") % n_shards).alias("shard_id"), "doc_id", "text", "source"
     )
-
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        records = [warcinfo("software: web-ingest-synth\r\n")]
-        for d, t, s in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
-            page = synth(int(d), t, s).encode("utf-8")
-            records.append(
-                response(
-                    f"https://crawl.example.org/doc/{int(d)}",
-                    http_response(page),
-                )
-            )
-        return pd.DataFrame(
-            [(int(key[0]), container(records))], columns=["shard_id", "payload"]
-        )
-
-    return (
-        docs.select(
-            (F.col("doc_id") % n_shards).alias("shard_id"),
-            "doc_id",
-            "text",
-            "source",
-        )
-        .groupBy("shard_id")
-        .applyInPandas(build, schema)
-    )
+    pack = warc._shard_pack("web-ingest-synth", "https://crawl.example.org/doc/")
+    return _shard_stage(docs, pack)
 
 
 def docs_from_warc(spark, shards):
@@ -117,11 +84,11 @@ def docs_from_warc(spark, shards):
     either way, so retries and re-runs key identically."""
     import hashlib
 
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..operators import html as H
     from ..operators import warc
+    from ..operators.multimodal import _row_stage
 
     parse, split_http = warc.parse_warc, warc.split_http_response
     schema = T.StructType(
@@ -132,37 +99,26 @@ def docs_from_warc(spark, shards):
         ]
     )
 
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for payload in pdf["payload"]:
-                try:
-                    records = parse(bytes(payload))
-                    shard_rows = []
-                    for headers, block in records:
-                        if headers.get("warc-type") != "response":
-                            continue
-                        uri = headers["warc-target-uri"]
-                        _, _, body = split_http(block)
-                        tail = uri.rstrip("/").rsplit("/", 1)[-1]
-                        did = (
-                            int(tail)
-                            if tail.isdigit()
-                            else int.from_bytes(
-                                hashlib.md5(uri.encode()).digest()[:8], "big"
-                            )
-                            >> 4
-                        )
-                        shard_rows.append(
-                            (did, uri, body.decode("utf-8", "replace"))
-                        )
-                except (ValueError, KeyError):
-                    rows.append((None, None, None))  # corrupt-shard marker
-                    continue
-                rows.extend(shard_rows)
-            yield pd.DataFrame(rows, columns=["doc_id", "url", "page"])
+    def doc_id_of(uri):
+        tail = uri.rstrip("/").rsplit("/", 1)[-1]
+        if tail.isdigit():
+            return int(tail)
+        return int.from_bytes(hashlib.md5(uri.encode()).digest()[:8], "big") >> 4
 
-    walked = shards.select("payload").mapInPandas(walk, schema)
+    def walk(payload):
+        try:
+            rows = []
+            for headers, block in parse(bytes(payload)):
+                if headers.get("warc-type") != "response":
+                    continue
+                uri = headers["warc-target-uri"]
+                _, _, body = split_http(block)
+                rows.append((doc_id_of(uri), uri, body.decode("utf-8", "replace")))
+        except (ValueError, KeyError):
+            rows = [(None, None, None)]  # corrupt-shard marker
+        yield from rows
+
+    walked = _row_stage(shards, ("payload",), schema, walk)
     txt = H.extract_text_col(F.col("page"))
     return walked.select(
         "doc_id",

@@ -155,15 +155,3 @@ def range_join_bands(
     return fact.join(
         F.broadcast(bands), (v >= F.col(lo_col)) & (v <= F.col(hi_col)), how
     )
-
-
-def star_join(fact: DataFrame, dims: dict[str, tuple[DataFrame, str]]) -> DataFrame:
-    """Chain broadcast joins of a fact to many dimensions.
-
-    ``dims`` maps alias → (dim_df, key).  All dims broadcast: the fact is
-    never shuffled; the whole chain is one stage of broadcast-hash joins.
-    """
-    out = fact
-    for _alias, (dim, key) in dims.items():
-        out = out.join(F.broadcast(dim), key, "inner")
-    return out

@@ -121,6 +121,33 @@ def _row_stage(df: DataFrame, cols, schema, row, errors=()) -> DataFrame:
     return _map_stage(df, cols, run, schema)
 
 
+_SHARD_SCHEMA = T.StructType(
+    [
+        T.StructField("shard_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+)
+
+
+def _shard_stage(docs: DataFrame, pack) -> DataFrame:
+    """One archive per shard: ``docs`` grouped by ``shard_id``, each
+    shard's rows sorted by ``doc_id`` and handed to ``pack(shard_id,
+    pdf)``, which returns the shard's payload bytes.  One keyed shuffle
+    forms the shards (grouping is inherent to sharding); a shard's walk
+    is a ``row`` passed to ``_row_stage`` over the
+    ``(shard_id, payload)`` rows this returns."""
+    names = _SHARD_SCHEMA.fieldNames()
+
+    # both params annotated: a pdf-only hint is ambiguous to PySpark's
+    # eval-type inference (it warns and falls back on every run)
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        sid = int(key[0])
+        payload = pack(sid, pdf.sort_values("doc_id"))
+        return pd.DataFrame([(sid, payload)], columns=names)
+
+    return docs.groupBy("shard_id").applyInPandas(build, _SHARD_SCHEMA)
+
+
 _DOC_COLS = ("doc_id", "text")
 _MEDIA_COLS = ("media_id", "payload")
 
@@ -140,17 +167,6 @@ _JPEG_ERRORS = _PARSE_ERRORS + (IndexError,)
 
 def _utf8(text) -> bytes:
     return ("" if text is None else text).encode("utf-8")
-
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-    ]
-)
 
 
 def documents_as_media(df: DataFrame) -> DataFrame:

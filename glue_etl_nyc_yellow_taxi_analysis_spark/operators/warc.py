@@ -15,6 +15,9 @@ to the web on-ramp:
 - ``warc_container(records)`` — concatenate records into a .warc file.
 - ``warc_gz_container(records)`` — the wire form: each record its own
   RFC 1952 gzip member, members concatenated (.warc.gz).
+- ``_shard_pack(software, uri_prefix, gz)`` — the shard ``pack`` the
+  WARC lanes hand to ``multimodal._shard_stage``: warcinfo head record
+  plus one response record per doc's synth HTML page.
 - ``parse_warc(data)`` — walk a .warc → [(headers dict, block bytes)].
   Verifies the version line, header syntax, Content-Length framing and
   the record terminator; raises ValueError on truncation/corruption —
@@ -129,6 +132,26 @@ def warc_gz_container(records: list[bytes]) -> bytes:
         co = zlib.compressobj(6, zlib.DEFLATED, 31)  # wbits 31 = gzip frame
         out += co.compress(rec) + co.flush()
     return bytes(out)
+
+
+def _shard_pack(software: str, uri_prefix: str, gz: bool = False):
+    """The ``pack`` of a WARC shard for ``multimodal._shard_stage``:
+    a warcinfo head record naming ``software``, then one response
+    record per (doc_id, text, source) row carrying the doc's synth HTML
+    page at ``{uri_prefix}{doc_id}``; per-record gzip members when
+    ``gz`` (.warc.gz)."""
+    from .html import synth_html
+
+    container = warc_gz_container if gz else warc_container
+
+    def pack(shard_id, pdf):
+        records = [warcinfo_record(f"software: {software}\r\n")]
+        for d, t, s in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
+            page = synth_html(int(d), t, s).encode("utf-8")
+            records.append(response_record(f"{uri_prefix}{int(d)}", http_response(page)))
+        return container(records)
+
+    return pack
 
 
 def parse_warc(data: bytes) -> list[tuple[dict, bytes]]:

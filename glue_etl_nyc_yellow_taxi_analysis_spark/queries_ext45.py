@@ -15,7 +15,7 @@ round trip, FLAC→WAV transcode).  A rice decoder that drops a
 partition, an LPC reconstruction off by one shift, or a CRC gate that
 lets a mangled frame through all fail the samples_md5, not a count.
 
-Scale posture: linear Arrow-batched mapInPandas stages, zero shuffle,
+Scale posture: one fused Arrow-batched mapInPandas pass, zero shuffle,
 payloads executor-local, per-row fail-soft; the libFLAC swap seam is
 documented in flac.py's module docstring.
 """
@@ -42,46 +42,39 @@ def q_flac_roundtrip(spark, sf_dir):
 register(q_flac_roundtrip, SQL_WAV_DECODE)
 
 
+def _flac_to_wav(media):
+    """FLAC payloads decoded and re-containered as PCM16 WAV
+    (parse_flac → wav_container); a corrupt payload yields one
+    ``(media_id, NULL)`` row."""
+    import struct
+
+    from .operators import flac as _flac
+
+    def row(mid, payload):
+        rate, nch, samples = _flac.parse_flac(bytes(payload))
+        pcm = struct.pack(f"<{len(samples)}h", *samples)
+        yield mid, multimodal.wav_container(pcm, rate, nch)
+
+    return multimodal._row_stage(
+        media,
+        multimodal._MEDIA_COLS,
+        multimodal._PAYLOAD_SCHEMA,
+        row,
+        multimodal._PARSE_ERRORS,
+    )
+
+
 def q_flac_transcode(spark, sf_dir):
     """The production transcode path: FLAC payloads decoded and
     re-containered as PCM16 WAV (parse_flac → wav_container), then
     pushed through the WAV lane's own decoder — the two codecs must
     compose on one (rate, channels, int16 samples) contract, and the
     result must be byte-identical to never having left WAV at all
-    (same oracle verbatim)."""
-    import struct
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .operators import flac as _flac
-
+    (same oracle verbatim).  Build, transcode and decode fuse into one
+    Arrow pass."""
     docs = _t(spark, sf_dir, "documents")
     media = multimodal.documents_as_flac(docs, sample_rate=_WAV_RATE)
-
-    def transcode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    rate, nch, samples = _flac.parse_flac(bytes(payload))
-                    pcm = struct.pack(f"<{len(samples)}h", *samples)
-                    rows.append(
-                        (mid, multimodal.wav_container(pcm, rate, nch))
-                    )
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((mid, None))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-    wav = media.mapInPandas(transcode, schema)
-    return multimodal.decode_wav(wav)
+    return multimodal.decode_wav(_flac_to_wav(media))
 
 
 register(q_flac_transcode, SQL_WAV_DECODE)

@@ -14,19 +14,16 @@ sample-rate and loudness conditioning.  Two exact-integer lanes:
   Python and DuckDB agreeing on negatives (their integer divisions
   disagree on sign, so the lane never divides a negative).
 
-Both kernels run on numpy int64 inside one Arrow batch per partition —
-decode, transform, and reduce without the samples ever leaving the
-executor.  Oracles replay the WAV byte-pair sample rule and then the
+Both kernels run on numpy int64 inside the WAV build's own Arrow pass —
+build, decode, transform, and reduce without the samples ever leaving
+the executor.  Oracles replay the WAV byte-pair sample rule and then the
 transform itself, so the md5 pins every output sample.
 """
 
 from __future__ import annotations
 
 import hashlib
-import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import types as T
 
 from .operators import multimodal
@@ -75,49 +72,31 @@ _DSP_SCHEMA = T.StructType(
 )
 
 
-def _dsp_rows(transform):
-    """Shared WAV-decode → numpy transform → exact-stats kernel."""
+def _dsp_stage(media, transform):
+    """Shared WAV-decode → numpy transform → exact-stats kernel; a
+    payload that does not parse yields one NULL-stats row."""
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    rate, _, samples = multimodal.parse_wav(bytes(payload))
-                except (ValueError, NotImplementedError, struct.error):
-                    rows.append((mid,) + (None,) * 6)
-                    continue
-                x = np.asarray(samples, dtype=np.int64)
-                rate_out, y = transform(rate, x)
-                aabs = np.abs(y)
-                rows.append(
-                    (
-                        mid,
-                        rate_out,
-                        len(x),
-                        len(y),
-                        int(aabs.sum()),
-                        int(aabs.max()) if len(y) else 0,
-                        hashlib.md5(
-                            ",".join(str(int(v)) for v in y).encode()
-                        ).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "sample_rate_out",
-                    "n_in",
-                    "n_out",
-                    "sum_abs_out",
-                    "peak_abs_out",
-                    "out_md5",
-                ],
-            )
+    def row(mid, payload):
+        try:
+            rate, _, samples = multimodal.parse_wav(bytes(payload))
+        except multimodal._PARSE_ERRORS:
+            yield (mid,) + (None,) * 6
+            return
+        x = np.asarray(samples, dtype=np.int64)
+        rate_out, y = transform(rate, x)
+        aabs = np.abs(y)
+        yield (
+            mid,
+            rate_out,
+            len(x),
+            len(y),
+            int(aabs.sum()),
+            int(aabs.max()) if len(y) else 0,
+            hashlib.md5(",".join(str(int(v)) for v in y).encode()).hexdigest(),
+        )
 
-    return run
+    return multimodal._row_stage(media, multimodal._MEDIA_COLS, _DSP_SCHEMA, row)
 
 
 def q_audio_decimate(spark, sf_dir):
@@ -132,9 +111,7 @@ def q_audio_decimate(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     media = multimodal.documents_as_wav(docs, sample_rate=_WAV_RATE)
-    return media.select("media_id", "payload").mapInPandas(
-        _dsp_rows(transform), _DSP_SCHEMA
-    )
+    return _dsp_stage(media, transform)
 
 
 SQL_AUDIO_DECIMATE = f"""
@@ -181,9 +158,7 @@ def q_audio_normalize(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     media = multimodal.documents_as_wav(docs, sample_rate=_WAV_RATE)
-    return media.select("media_id", "payload").mapInPandas(
-        _dsp_rows(transform), _DSP_SCHEMA
-    )
+    return _dsp_stage(media, transform)
 
 
 SQL_AUDIO_NORMALIZE = f"""

@@ -23,25 +23,16 @@ walks; shard payloads never shuffle again.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .operators import tar
+from .operators import multimodal, tar
 from .registry import register
 from .tables import _t
 
 
 _N_SHARDS = 8
-
-_SHARD_SCHEMA = T.StructType(
-    [
-        T.StructField("shard_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
 
 _MEMBER_SCHEMA = T.StructType(
     [
@@ -54,61 +45,49 @@ _MEMBER_SCHEMA = T.StructType(
 )
 
 
-def q_tar_shard_roundtrip(spark, sf_dir):
-    """WebDataset-style shard round trip: docs → ustar shards → walk →
-    per-member rows.  See module docstring."""
+def _member_shard_lane(spark, sf_dir, pack, unpack, errors):
+    """The shard round trip every member-archive lane shares: docs →
+    _N_SHARDS archives, ``pack(shard_id, members)`` building one from
+    its ("{doc_id}.txt", utf-8 text) members in doc_id order → each
+    archive walked back by ``unpack(payload)`` → one row per member
+    with its position, byte count and content md5.  Fail-soft per
+    shard: an ``errors`` exception from ``unpack`` yields one NULL
+    marker row, never a dead stage."""
     docs = _t(spark, sf_dir, "documents").select(
         (F.col("doc_id") % _N_SHARDS).alias("shard_id"), "doc_id", "text"
     )
 
-    # both params annotated: a pdf-only hint is ambiguous to PySpark's
-    # eval-type inference (it warns and falls back on every run)
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    def pack_shard(sid, pdf):
         members = [
             (f"{int(d)}.txt", ("" if t is None else t).encode("utf-8"))
             for d, t in zip(pdf["doc_id"], pdf["text"])
         ]
-        return pd.DataFrame(
-            [(int(key[0]), tar.tar_container(members))],
-            columns=["shard_id", "payload"],
-        )
+        return pack(sid, members)
 
-    shards = docs.groupBy("shard_id").applyInPandas(build, _SHARD_SCHEMA)
+    def walk(sid, payload):
+        try:
+            members = unpack(bytes(payload))
+        except errors:
+            yield sid, None, None, None, None
+            return
+        for i, (name, data) in enumerate(members):
+            n = int(name.removesuffix(".txt"))
+            yield sid, i, n, len(data), hashlib.md5(data).hexdigest()
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                # fail-soft per shard: one corrupt archive yields one
-                # marker row, never a dead stage
-                try:
-                    members = tar.parse_tar(bytes(payload))
-                except ValueError:
-                    rows.append((sid, None, None, None, None))
-                    continue
-                for i, (name, data) in enumerate(members):
-                    rows.append(
-                        (
-                            sid,
-                            i,
-                            int(name.removesuffix(".txt")),
-                            len(data),
-                            hashlib.md5(data).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "shard_id",
-                    "member_idx",
-                    "doc_id",
-                    "n_bytes",
-                    "text_md5",
-                ],
-            )
+    shards = multimodal._shard_stage(docs, pack_shard)
+    return multimodal._row_stage(shards, ("shard_id", "payload"), _MEMBER_SCHEMA, walk)
 
-    return shards.mapInPandas(walk, _MEMBER_SCHEMA)
+
+def q_tar_shard_roundtrip(spark, sf_dir):
+    """WebDataset-style shard round trip: docs → ustar shards → walk →
+    per-member rows.  See module docstring."""
+    return _member_shard_lane(
+        spark,
+        sf_dir,
+        lambda sid, members: tar.tar_container(members),
+        tar.parse_tar,
+        ValueError,
+    )
 
 
 SQL_TAR_SHARD_ROUNDTRIP = f"""
@@ -135,56 +114,17 @@ def q_targz_shard_roundtrip(spark, sf_dir):
     oracle — are identical to the uncompressed lane's."""
     import zlib
 
-    docs = _t(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % _N_SHARDS).alias("shard_id"), "doc_id", "text"
-    )
-
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        members = [
-            (f"{int(d)}.txt", ("" if t is None else t).encode("utf-8"))
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
+    def pack(sid, members):
         co = zlib.compressobj(6, zlib.DEFLATED, 31)  # wbits 31 = gzip frame
-        gz = co.compress(tar.tar_container(members)) + co.flush()
-        return pd.DataFrame(
-            [(int(key[0]), gz)], columns=["shard_id", "payload"]
-        )
+        return co.compress(tar.tar_container(members)) + co.flush()
 
-    shards = docs.groupBy("shard_id").applyInPandas(build, _SHARD_SCHEMA)
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                try:
-                    raw = zlib.decompress(bytes(payload), 31)
-                    members = tar.parse_tar(raw)
-                except (ValueError, zlib.error):
-                    rows.append((sid, None, None, None, None))
-                    continue
-                for i, (name, data) in enumerate(members):
-                    rows.append(
-                        (
-                            sid,
-                            i,
-                            int(name.removesuffix(".txt")),
-                            len(data),
-                            hashlib.md5(data).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "shard_id",
-                    "member_idx",
-                    "doc_id",
-                    "n_bytes",
-                    "text_md5",
-                ],
-            )
-
-    return shards.mapInPandas(walk, _MEMBER_SCHEMA)
+    return _member_shard_lane(
+        spark,
+        sf_dir,
+        pack,
+        lambda payload: tar.parse_tar(zlib.decompress(payload, 31)),
+        (ValueError, zlib.error),
+    )
 
 
 register(q_targz_shard_roundtrip, SQL_TAR_SHARD_ROUNDTRIP)

@@ -33,14 +33,12 @@ the HTML lanes are pure projections + one keyed aggregate.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import html as H
-from .operators import warc
+from .operators import multimodal, warc
 from .registry import register
 from .tables import _t
 
@@ -52,13 +50,6 @@ _DOCS_PER_SHARD = 250  # shard count GROWS with the corpus (the 10x-rows
 # exactly how a production writer targets ~1 GB per shard)
 _BAD_SHARD = -1  # shard_id of the injected truncated shard
 _URI_PREFIX = "https://crawl.example.org/doc/"
-
-_SHARD_SCHEMA = T.StructType(
-    [
-        T.StructField("shard_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
 
 _RECORD_SCHEMA = T.StructType(
     [
@@ -77,76 +68,52 @@ def _n_shards(docs) -> int:
     return max(1, -(-docs.count() // _DOCS_PER_SHARD))
 
 
+def _warc_pack(gz: bool):
+    """The batch lanes' WARC shard pack (see warc._shard_pack)."""
+    return warc._shard_pack("glue-etl-nyc-yellow-taxi-analysis-spark", _URI_PREFIX, gz)
+
+
 def _warc_lane(spark, sf_dir, gz: bool):
     # every name a worker closure touches is a LOCAL bound from the
-    # standalone operators.warc / operators.html modules — a closure
-    # referencing a queries_ext48-level helper would make cloudpickle
-    # import this module on the executor, mid-cycle with .queries
+    # standalone operators.warc module, so the executor imports only
+    # that module, never this one and its query dependencies
     base = _t(spark, sf_dir, "documents")
     n_shards = _n_shards(base)
     docs = base.select(
         (F.col("doc_id") % n_shards).alias("shard_id"), "doc_id", "text", "source"
     )
-    synth = H.synth_html
-    warcinfo, response = warc.warcinfo_record, warc.response_record
-    http_response, split_http = warc.http_response, warc.split_http_response
-    container = warc.warc_gz_container if gz else warc.warc_container
+    split_http = warc.split_http_response
     parse = warc.parse_warc_gz if gz else warc.parse_warc
     uri_prefix = _URI_PREFIX
 
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        # warcinfo head record + one response record per doc
-        records = [warcinfo("software: glue-etl-nyc-yellow-taxi-analysis-spark\r\n")]
-        for d, t, s in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
-            page = synth(int(d), t, s).encode("utf-8")
-            records.append(response(f"{uri_prefix}{int(d)}", http_response(page)))
-        return pd.DataFrame(
-            [(int(key[0]), container(records))], columns=["shard_id", "payload"]
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(build, _SHARD_SCHEMA)
+    shards = multimodal._shard_stage(docs, _warc_pack(gz))
     # the hostile row: a shard cut mid-header — the walker must account
     # it as ONE NULL marker row, never kill the stage
     bad = spark.createDataFrame(
-        [(_BAD_SHARD, bytearray(b"WARC/1.0\r\nWARC-Type: resp"))], _SHARD_SCHEMA
+        [(_BAD_SHARD, bytearray(b"WARC/1.0\r\nWARC-Type: resp"))],
+        multimodal._SHARD_SCHEMA,
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                try:
-                    records = parse(bytes(payload))
-                    idx = 0
-                    shard_rows = []
-                    for headers, block in records:
-                        if headers.get("warc-type") != "response":
-                            continue
-                        uri = headers["warc-target-uri"]
-                        _, http_headers, body = split_http(block)
-                        if int(http_headers.get("content-length", -1)) != len(body):
-                            raise ValueError("HTTP Content-Length mismatch")
-                        shard_rows.append(
-                            (
-                                sid,
-                                idx,
-                                int(uri.removeprefix(uri_prefix)),
-                                len(body),
-                                hashlib.md5(body).hexdigest(),
-                            )
-                        )
-                        idx += 1
-                except (ValueError, KeyError):
-                    rows.append((sid, None, None, None, None))
-                    continue
-                rows.extend(shard_rows)
-            yield pd.DataFrame(
-                rows,
-                columns=["shard_id", "record_idx", "doc_id", "n_bytes", "html_md5"],
-            )
+    def walk(sid, payload):
+        idx = 0
+        for headers, block in parse(bytes(payload)):
+            if headers.get("warc-type") != "response":
+                continue
+            uri = headers["warc-target-uri"]
+            _, http_headers, body = split_http(block)
+            if int(http_headers.get("content-length", -1)) != len(body):
+                raise ValueError("HTTP Content-Length mismatch")
+            doc_id = int(uri.removeprefix(uri_prefix))
+            yield sid, idx, doc_id, len(body), hashlib.md5(body).hexdigest()
+            idx += 1
 
-    return shards.unionByName(bad).mapInPandas(walk, _RECORD_SCHEMA)
+    return multimodal._row_stage(
+        shards.unionByName(bad),
+        ("shard_id", "payload"),
+        _RECORD_SCHEMA,
+        walk,
+        (ValueError, KeyError),
+    )
 
 
 def q_warc_ingest(spark, sf_dir):
@@ -278,23 +245,12 @@ def q_stream_warc_ingest(spark, sf_dir):
     docs = base.select(
         (F.col("doc_id") % n_shards).alias("shard_id"), "doc_id", "text", "source"
     )
-    synth = H.synth_html
-    warcinfo, response = warc.warcinfo_record, warc.response_record
-    http_response, split_http = warc.http_response, warc.split_http_response
-    container, parse = warc.warc_container, warc.parse_warc
+    parse, split_http = warc.parse_warc, warc.split_http_response
     uri_prefix = _URI_PREFIX
 
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        records = [warcinfo("software: stream-fixture\r\n")]
-        for d, t, s in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
-            page = synth(int(d), t, s).encode("utf-8")
-            records.append(response(f"{uri_prefix}{int(d)}", http_response(page)))
-        return pd.DataFrame(
-            [(int(key[0]), container(records))], columns=["shard_id", "payload"]
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(build, _SHARD_SCHEMA)
+    shards = multimodal._shard_stage(
+        docs, warc._shard_pack("stream-fixture", uri_prefix)
+    )
     # content-sized source files (the r11 stream-source rule): a file
     # with k shard-rows walks k shards in ONE task, so files track the
     # shard count; half per trigger keeps >=2 micro-batches
@@ -309,26 +265,22 @@ def q_stream_warc_ingest(spark, sf_dir):
         ]
     )
 
-    def walk(batches):
-        for pdf in batches:
-            rows = []
-            for payload in pdf["payload"]:
-                for headers, block in parse(bytes(payload)):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    _, _, body = split_http(block)
-                    rows.append(
-                        (
-                            int(headers["warc-target-uri"].removeprefix(uri_prefix)),
-                            body.decode("utf-8"),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "page"])
+    def walk(payload):
+        for headers, block in parse(bytes(payload)):
+            if headers.get("warc-type") != "response":
+                continue
+            _, _, body = split_http(block)
+            doc_id = int(headers["warc-target-uri"].removeprefix(uri_prefix))
+            yield doc_id, body.decode("utf-8")
 
     stream = stream_files(
-        spark, src_dir, _SHARD_SCHEMA, max_files_per_trigger=max(1, n_files // 2)
+        spark,
+        src_dir,
+        multimodal._SHARD_SCHEMA,
+        max_files_per_trigger=max(1, n_files // 2),
     ).drop("__source_file")
-    pages = stream.mapInPandas(walk, pages_schema)
+    # fail-hard (no errors tuple): the stream carries no hostile shard
+    pages = multimodal._row_stage(stream, ("payload",), pages_schema, walk)
     txt = H.extract_text_col(F.col("page"))
     out = pages.select(
         "doc_id",

@@ -37,14 +37,14 @@ surfaces a crawl/corpus pipeline meets before content processing.
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .operators import pkzip
-from .queries_ext47 import _MEMBER_SCHEMA, _N_SHARDS, _SHARD_SCHEMA, SQL_TAR_SHARD_ROUNDTRIP
+from .operators import multimodal, pkzip, tar
+from .queries_ext47 import SQL_TAR_SHARD_ROUNDTRIP, _member_shard_lane
 from .registry import register
 from .tables import _t
 
@@ -59,54 +59,13 @@ def q_zip_shard_roundtrip(spark, sf_dir):
     method AND framing must both be invisible to the content.  Scale
     shape: one keyed shuffle to form shards, then linear walks;
     payloads never shuffle again."""
-    import hashlib
 
-    docs = _t(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % _N_SHARDS).alias("shard_id"), "doc_id", "text"
-    )
-    container, parse = pkzip.zip_container, pkzip.parse_zip
-
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        members = [
-            (f"{int(d)}.txt", ("" if t is None else t).encode("utf-8"))
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        sid = int(key[0])
+    def pack(sid, members):
         method = "stored" if sid % 2 == 0 else "deflate"
         # shard_id % 4 covers all four method × framing combos
-        return pd.DataFrame(
-            [(sid, container(members, method=method, zip64=sid % 4 >= 2))],
-            columns=["shard_id", "payload"],
-        )
+        return pkzip.zip_container(members, method=method, zip64=sid % 4 >= 2)
 
-    shards = docs.groupBy("shard_id").applyInPandas(build, _SHARD_SCHEMA)
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                try:
-                    members = parse(bytes(payload))
-                except ValueError:
-                    rows.append((sid, None, None, None, None))
-                    continue
-                for i, (name, data) in enumerate(members):
-                    rows.append(
-                        (
-                            sid,
-                            i,
-                            int(name.removesuffix(".txt")),
-                            len(data),
-                            hashlib.md5(data).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["shard_id", "member_idx", "doc_id", "n_bytes", "text_md5"],
-            )
-
-    return shards.mapInPandas(walk, _MEMBER_SCHEMA)
+    return _member_shard_lane(spark, sf_dir, pack, pkzip.parse_zip, ValueError)
 
 
 register(q_zip_shard_roundtrip, SQL_TAR_SHARD_ROUNDTRIP)
@@ -247,6 +206,71 @@ register(q_unicode_normalize, SQL_UNICODE_NORMALIZE)
 
 _PDF_WORDS_PER_PAGE = 40
 
+_PKG_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+)
+
+
+def _package_stage(docs, words_per_unit, make):
+    """(doc_id, text) → (doc_id, payload): each doc's text cut into
+    ``words_per_unit``-word units (at least one), packaged by
+    ``make(doc_id, units)``."""
+    n = words_per_unit
+
+    def row(d, t):
+        words = ("" if t is None else t).split(" ")
+        units = [" ".join(words[i : i + n]) for i in range(0, len(words), n)]
+        yield int(d), make(int(d), units)
+
+    return multimodal._row_stage(docs, ("doc_id", "text"), _PKG_SCHEMA, row)
+
+
+def _text_stage(pkgs, extract, unit_col):
+    """(doc_id, payload) → (doc_id, <unit_col>, n_chars, text_md5):
+    ``extract(payload)`` recovers a package's text units, which rejoin
+    with single spaces; a ValueError yields one NULL marker row."""
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), True),
+            T.StructField(unit_col, T.IntegerType(), True),
+            T.StructField("n_chars", T.LongType(), True),
+            T.StructField("text_md5", T.StringType(), True),
+        ]
+    )
+
+    def row(d, payload):
+        try:
+            units = extract(bytes(payload))
+        except ValueError:
+            yield d, None, None, None
+            return
+        text = " ".join(units)
+        yield d, len(units), len(text), hashlib.md5(text.encode("utf-8")).hexdigest()
+
+    return multimodal._row_stage(pkgs, ("doc_id", "payload"), schema, row)
+
+
+def _pdf_build(docs):
+    """(doc_id, text) → (doc_id, payload) real multi-page PDFs, 40 words
+    per page; doc_id % 4 picks the container flavor."""
+    from .operators import pdf
+
+    build_pdf, split = pdf.pdf_container, pdf.split_lines
+    append_pdf = pdf.pdf_incremental_append
+
+    def make(d, units):
+        pages = [split(u) for u in units]
+        # plain 1.4 / flate 1.4 / xref-stream 1.5 / incremental
+        flavor = d % 4
+        if flavor == 3:
+            return append_pdf(build_pdf(pages[:1], compress=True), pages[1:])
+        return build_pdf(pages, compress=flavor >= 1, xref_stream=flavor == 2)
+
+    return _package_stage(docs, _PDF_WORDS_PER_PAGE, make)
+
 
 def q_pdf_extract(spark, sf_dir):
     """Document-format round trip through the subset-PDF codec
@@ -263,80 +287,13 @@ def q_pdf_extract(spark, sf_dir):
     the documents table: a dropped page, mis-ordered kid, or broken
     escape fails the hash.
 
-    Scale shape: two stateless Arrow map stages (build, parse) — no
-    shuffle at all; payloads stay inside their input partition."""
-    import hashlib
-    import math
-
+    Scale shape: build and parse fuse into one stateless Arrow map
+    stage — no shuffle at all; payloads never leave the Python
+    worker."""
     from .operators import pdf
 
-    build_pdf, parse_pdf, split = pdf.pdf_container, pdf.parse_pdf, pdf.split_lines
-    append_pdf = pdf.pdf_incremental_append
-    wpp = _PDF_WORDS_PER_PAGE
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    pdf_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for d, t in zip(pdf_batch["doc_id"], pdf_batch["text"]):
-                words = ("" if t is None else t).split(" ")
-                pages = [
-                    split(" ".join(words[i : i + wpp]))
-                    for i in range(0, len(words), wpp)
-                ] or [[""]]
-                # plain 1.4 / flate 1.4 / xref-stream 1.5 / incremental
-                flavor = int(d) % 4
-                if flavor == 3:
-                    payload = append_pdf(
-                        build_pdf(pages[:1], compress=True), pages[1:]
-                    )
-                else:
-                    payload = build_pdf(
-                        pages, compress=flavor >= 1, xref_stream=flavor == 2
-                    )
-                rows.append((int(d), payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("n_pages", T.IntegerType(), True),
-            T.StructField("n_chars", T.LongType(), True),
-            T.StructField("text_md5", T.StringType(), True),
-        ]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = []
-            for d, payload in zip(pdf_batch["doc_id"], pdf_batch["payload"]):
-                try:
-                    pages = parse_pdf(bytes(payload))
-                except ValueError:
-                    rows.append((d, None, None, None))  # fail-soft marker
-                    continue
-                text = " ".join(pages)
-                rows.append(
-                    (
-                        d,
-                        len(pages),
-                        len(text),
-                        hashlib.md5(text.encode("utf-8")).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_pages", "n_chars", "text_md5"]
-            )
-
-    return docs.mapInPandas(build, pdf_schema).mapInPandas(extract, out_schema)
+    docs = _t(spark, sf_dir, "documents")
+    return _text_stage(_pdf_build(docs), pdf.parse_pdf, "n_pages")
 
 
 SQL_PDF_EXTRACT = f"""
@@ -365,69 +322,16 @@ def q_docx_extract(spark, sf_dir):
     pkzip walker; 20-word paragraphs, XML-escaped runs), then text is
     re-extracted through the package walk → content-type check →
     ``<w:t>`` run extraction → entity decode.  The oracle replays
-    paragraph count and recovered-text md5 from documents.  Two
-    stateless Arrow map stages, zero shuffle."""
-    import hashlib
-    import math
-
+    paragraph count and recovered-text md5 from documents.  One fused
+    stateless Arrow map stage, zero shuffle."""
     from .operators import docx
 
-    build, extract_text = docx.docx_container, docx.docx_text
-    wpp = _DOCX_WORDS_PER_PARA
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    pkg_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
+    pkgs = _package_stage(
+        _t(spark, sf_dir, "documents"),
+        _DOCX_WORDS_PER_PARA,
+        lambda d, paras: docx.docx_container(paras),
     )
-
-    def make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for d, t in zip(b["doc_id"], b["text"]):
-                words = ("" if t is None else t).split(" ")
-                paras = [
-                    " ".join(words[i : i + wpp])
-                    for i in range(0, len(words), wpp)
-                ] or [""]
-                rows.append((int(d), build(paras)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("n_paragraphs", T.IntegerType(), True),
-            T.StructField("n_chars", T.LongType(), True),
-            T.StructField("text_md5", T.StringType(), True),
-        ]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for d, payload in zip(b["doc_id"], b["payload"]):
-                try:
-                    paras = extract_text(bytes(payload))
-                except ValueError:
-                    rows.append((d, None, None, None))
-                    continue
-                text = " ".join(paras)
-                rows.append(
-                    (
-                        d,
-                        len(paras),
-                        len(text),
-                        hashlib.md5(text.encode("utf-8")).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_paragraphs", "n_chars", "text_md5"]
-            )
-
-    return docs.mapInPandas(make, pkg_schema).mapInPandas(extract, out_schema)
+    return _text_stage(pkgs, docx.docx_text, "n_paragraphs")
 
 
 SQL_DOCX_EXTRACT = f"""
@@ -448,80 +352,31 @@ register(q_docx_extract, SQL_DOCX_EXTRACT)
 # --------------------------------------------------------------------------
 
 
-def _tar_compressed_lane(spark, sf_dir, codec: str):
-    """The ext47 tar round trip through an alternative whole-archive
-    compression frame (xz/LZMA2 or bzip2, both stdlib) — the .tar.xz /
-    .tar.bz2 shard shapes; decoded rows and oracle are the tar lane's
-    verbatim."""
-    import hashlib
-
-    from .operators import tar
-
-    docs = _t(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % _N_SHARDS).alias("shard_id"), "doc_id", "text"
-    )
-    tar_container, parse_tar = tar.tar_container, tar.parse_tar
-
-    if codec == "xz":
-        import lzma as mod
-
-        compress = lambda b: mod.compress(b, preset=6)  # noqa: E731
-        decompress, err = mod.decompress, mod.LZMAError
-    else:
-        import bz2 as mod
-
-        compress = lambda b: mod.compress(b, 6)  # noqa: E731
-        decompress, err = mod.decompress, OSError
-
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        members = [
-            (f"{int(d)}.txt", ("" if t is None else t).encode("utf-8"))
-            for d, t in zip(pdf["doc_id"], pdf["text"])
-        ]
-        return pd.DataFrame(
-            [(int(key[0]), compress(tar_container(members)))],
-            columns=["shard_id", "payload"],
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(build, _SHARD_SCHEMA)
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                try:
-                    members = parse_tar(decompress(bytes(payload)))
-                except (ValueError, err):
-                    rows.append((sid, None, None, None, None))
-                    continue
-                for i, (name, data) in enumerate(members):
-                    rows.append(
-                        (
-                            sid,
-                            i,
-                            int(name.removesuffix(".txt")),
-                            len(data),
-                            hashlib.md5(data).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["shard_id", "member_idx", "doc_id", "n_bytes", "text_md5"],
-            )
-
-    return shards.mapInPandas(walk, _MEMBER_SCHEMA)
-
-
 def q_tarxz_shard_roundtrip(spark, sf_dir):
     """.tar.xz shards (stdlib lzma): the highest-ratio frame corpora
     actually ship in; shares the tar oracle verbatim."""
-    return _tar_compressed_lane(spark, sf_dir, "xz")
+    import lzma
+
+    return _member_shard_lane(
+        spark,
+        sf_dir,
+        lambda sid, members: lzma.compress(tar.tar_container(members), preset=6),
+        lambda payload: tar.parse_tar(lzma.decompress(payload)),
+        (ValueError, lzma.LZMAError),
+    )
 
 
 def q_tarbz2_shard_roundtrip(spark, sf_dir):
     """.tar.bz2 shards (stdlib bz2); shares the tar oracle verbatim."""
-    return _tar_compressed_lane(spark, sf_dir, "bz2")
+    import bz2
+
+    return _member_shard_lane(
+        spark,
+        sf_dir,
+        lambda sid, members: bz2.compress(tar.tar_container(members), 6),
+        lambda payload: tar.parse_tar(bz2.decompress(payload)),
+        (ValueError, OSError),
+    )
 
 
 register(q_tarxz_shard_roundtrip, SQL_TAR_SHARD_ROUNDTRIP)
@@ -782,67 +637,15 @@ def q_epub_extract(spark, sf_dir):
     (stored-first mimetype per OCF, container.xml → OPF → spine,
     30-word XHTML chapters), text re-extracted IN SPINE ORDER.  The
     oracle replays chapter count + recovered-text md5 from documents;
-    two stateless Arrow map stages, zero shuffle."""
-    import hashlib
-    import math
-
+    one fused stateless Arrow map stage, zero shuffle."""
     from .operators import epub
 
-    build, extract_chapters = epub.epub_container, epub.epub_text
-    wpc = _EPUB_WORDS_PER_CH
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pkg_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
+    pkgs = _package_stage(
+        _t(spark, sf_dir, "documents"),
+        _EPUB_WORDS_PER_CH,
+        lambda d, chapters: epub.epub_container(chapters),
     )
-
-    def make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for d, t in zip(b["doc_id"], b["text"]):
-                words = ("" if t is None else t).split(" ")
-                chapters = [
-                    " ".join(words[i : i + wpc])
-                    for i in range(0, len(words), wpc)
-                ] or [""]
-                rows.append((int(d), build(chapters)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), True),
-            T.StructField("n_chapters", T.IntegerType(), True),
-            T.StructField("n_chars", T.LongType(), True),
-            T.StructField("text_md5", T.StringType(), True),
-        ]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for d, payload in zip(b["doc_id"], b["payload"]):
-                try:
-                    chapters = extract_chapters(bytes(payload))
-                except ValueError:
-                    rows.append((d, None, None, None))
-                    continue
-                text = " ".join(chapters)
-                rows.append(
-                    (
-                        d,
-                        len(chapters),
-                        len(text),
-                        hashlib.md5(text.encode("utf-8")).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_chapters", "n_chars", "text_md5"]
-            )
-
-    return docs.mapInPandas(make, pkg_schema).mapInPandas(extract, out_schema)
+    return _text_stage(pkgs, epub.epub_text, "n_chapters")
 
 
 SQL_EPUB_EXTRACT = f"""

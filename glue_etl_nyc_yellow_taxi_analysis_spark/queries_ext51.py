@@ -19,13 +19,10 @@ boundaries) is exact here.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .operators import mp3
+from .operators import mp3, multimodal
 from .registry import register
 from .tables import _t
 
@@ -51,40 +48,28 @@ def _framewalk(docs):
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for d, t in zip(b["doc_id"], b["text"]):
-                d = int(d)
-                n = 1 + (len("" if t is None else t) % 24)
-                frames = [(1 + (d + i) % 14, (d + i) % 2) for i in range(n)]
-                data = build(frames, d % 3, id3_payload=bytes(d % 64))
-                if d % 50 == 7:
-                    data = data[:-1]  # hostile: truncated final frame
-                try:
-                    sr, walked = walk(data)
-                except ValueError:
-                    rows.append((d, None, None, None, None, None))
-                    continue
-                rows.append(
-                    (
-                        d,
-                        sr,
-                        len(walked),
-                        len(data),
-                        len(walked) * spf * 1_000_000 // sr,
-                        sum(k for k, _ in walked) * 100 // len(walked),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sr", "n_frames", "total_bytes",
-                    "duration_us", "avg_centikbps",
-                ],
-            )
+    def row(d, t):
+        d = int(d)
+        n = 1 + (len("" if t is None else t) % 24)
+        frames = [(1 + (d + i) % 14, (d + i) % 2) for i in range(n)]
+        data = build(frames, d % 3, id3_payload=bytes(d % 64))
+        if d % 50 == 7:
+            data = data[:-1]  # hostile: truncated final frame
+        try:
+            sr, walked = walk(data)
+        except ValueError:
+            yield d, None, None, None, None, None
+            return
+        yield (
+            d,
+            sr,
+            len(walked),
+            len(data),
+            len(walked) * spf * 1_000_000 // sr,
+            sum(k for k, _ in walked) * 100 // len(walked),
+        )
 
-    return docs.mapInPandas(run, out_schema)
+    return multimodal._row_stage(docs, ("doc_id", "text"), out_schema, row)
 
 
 def q_mp3_framewalk(spark, sf_dir):
@@ -408,43 +393,33 @@ def q_mp3_metadata(spark, sf_dir):
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for d, lang, src in zip(b["doc_id"], b["lang"], b["source"]):
-                d = int(d)
-                fields = {
-                    "TIT2": f"Document {d}",
-                    "TPE1": "" if src is None else str(src),
-                    "TCON": "" if lang is None else str(lang),
-                }
-                payload = frames_of(fields, utf8=bool(d % 2))
-                # a foreign (non-text) frame the walker must skip by size
-                payload += b"WXXX" + bytes((0, 0, 0, 5)) + b"\x00\x00" + b"url:x"
-                data = build([(1 + d % 14, 0)], d % 3, id3_payload=payload)
-                tag_len = 10 + len(payload)
-                got = parse_tag(data[:tag_len])
-                sr, frames = walk(data)
-                rows.append(
-                    (
-                        d,
-                        got.get("TIT2"),
-                        got.get("TPE1"),
-                        got.get("TCON"),
-                        len(got),
-                        tag_len,
-                        len(data) - tag_len,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "title", "artist", "genre",
-                    "n_text_frames", "tag_bytes", "audio_bytes",
-                ],
-            )
+    def row(d, lang, src):
+        d = int(d)
+        fields = {
+            "TIT2": f"Document {d}",
+            "TPE1": "" if src is None else str(src),
+            "TCON": "" if lang is None else str(lang),
+        }
+        payload = frames_of(fields, utf8=bool(d % 2))
+        # a foreign (non-text) frame the walker must skip by size
+        payload += b"WXXX" + bytes((0, 0, 0, 5)) + b"\x00\x00" + b"url:x"
+        data = build([(1 + d % 14, 0)], d % 3, id3_payload=payload)
+        tag_len = 10 + len(payload)
+        got = parse_tag(data[:tag_len])
+        walk(data)  # fail-hard: the audio frame after the tag must walk
+        yield (
+            d,
+            got.get("TIT2"),
+            got.get("TPE1"),
+            got.get("TCON"),
+            len(got),
+            tag_len,
+            len(data) - tag_len,
+        )
 
-    return docs.mapInPandas(run, out_schema)
+    return multimodal._row_stage(
+        docs, ("doc_id", "lang", "source"), out_schema, row
+    )
 
 
 # tag bytes: 10 (header) + per text frame (10 + 1 enc + len(value)) +
@@ -523,7 +498,7 @@ def q_warc_revisit(spark, sf_dir):
 
     from .operators import html as H
     from .operators import warc
-    from .queries_ext48 import _SHARD_SCHEMA, _URI_PREFIX, _n_shards
+    from .queries_ext48 import _URI_PREFIX, _n_shards
 
     base = _t(spark, sf_dir, "documents")
     n_shards = _n_shards(base)
@@ -538,8 +513,7 @@ def q_warc_revisit(spark, sf_dir):
     uri_prefix = _URI_PREFIX
     mirror_prefix = "https://mirror.example.org/doc/"
 
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
+    def pack(shard_id, pdf):
         records = [warcinfo("software: revisit-lane\r\n")]
         for d, t, s in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
             d = int(d)
@@ -547,18 +521,9 @@ def q_warc_revisit(spark, sf_dir):
             uri = f"{uri_prefix}{d}"
             records.append(response(uri, http_response(page)))
             if d % 3 == 1:
-                records.append(
-                    revisit(
-                        f"{mirror_prefix}{d}",
-                        uri,
-                        hashlib.md5(page).hexdigest(),
-                    )
-                )
-        return pd.DataFrame(
-            [(int(key[0]), container(records))], columns=["shard_id", "payload"]
-        )
-
-    shards = docs.groupBy("shard_id").applyInPandas(build, _SHARD_SCHEMA)
+                digest = hashlib.md5(page).hexdigest()
+                records.append(revisit(f"{mirror_prefix}{d}", uri, digest))
+        return container(records)
 
     out_schema = T.StructType(
         [
@@ -571,51 +536,35 @@ def q_warc_revisit(spark, sf_dir):
         ]
     )
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                try:
-                    records = parse(bytes(payload))
-                    by_rid: dict[str, str] = {}
-                    idx = 0
-                    shard_rows = []
-                    for headers, block in records:
-                        wt = headers.get("warc-type")
-                        if wt == "response":
-                            uri = headers["warc-target-uri"]
-                            _, _, body = split_http(block)
-                            digest = hashlib.md5(body).hexdigest()
-                            by_rid[headers["warc-record-id"]] = digest
-                            shard_rows.append(
-                                (sid, idx, int(uri.removeprefix(uri_prefix)),
-                                 0, len(body), digest)
-                            )
-                            idx += 1
-                        elif wt == "revisit":
-                            ref = headers["warc-refers-to"]
-                            if ref not in by_rid:
-                                raise ValueError("dangling WARC-Refers-To")
-                            claimed = headers["warc-payload-digest"].removeprefix("md5:")
-                            if claimed != by_rid[ref]:
-                                raise ValueError("revisit digest disagreement")
-                            uri = headers["warc-target-uri"]
-                            shard_rows.append(
-                                (sid, idx, int(uri.removeprefix(mirror_prefix)),
-                                 1, 0, by_rid[ref])
-                            )
-                            idx += 1
-                except (ValueError, KeyError):
-                    rows.append((sid, None, None, None, None, None))
-                    continue
-                rows.extend(shard_rows)
-            yield pd.DataFrame(
-                rows,
-                columns=["shard_id", "record_idx", "doc_id", "is_revisit",
-                         "n_bytes", "payload_md5"],
-            )
+    def walk(sid, payload):
+        by_rid: dict[str, str] = {}
+        idx = 0
+        for headers, block in parse(bytes(payload)):
+            wt = headers.get("warc-type")
+            if wt == "response":
+                uri = headers["warc-target-uri"]
+                _, _, body = split_http(block)
+                digest = hashlib.md5(body).hexdigest()
+                by_rid[headers["warc-record-id"]] = digest
+                doc_id = int(uri.removeprefix(uri_prefix))
+                yield sid, idx, doc_id, 0, len(body), digest
+                idx += 1
+            elif wt == "revisit":
+                ref = headers["warc-refers-to"]
+                if ref not in by_rid:
+                    raise ValueError("dangling WARC-Refers-To")
+                claimed = headers["warc-payload-digest"].removeprefix("md5:")
+                if claimed != by_rid[ref]:
+                    raise ValueError("revisit digest disagreement")
+                uri = headers["warc-target-uri"]
+                doc_id = int(uri.removeprefix(mirror_prefix))
+                yield sid, idx, doc_id, 1, 0, by_rid[ref]
+                idx += 1
 
-    return shards.mapInPandas(walk, out_schema)
+    shards = multimodal._shard_stage(docs, pack)
+    return multimodal._row_stage(
+        shards, ("shard_id", "payload"), out_schema, walk, (ValueError, KeyError)
+    )
 
 
 def _sql_warc_revisit():

@@ -10,9 +10,39 @@ Python exchange, UTC session time so results are environment-independent.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+_shipped_to = None  # the SparkContext the package zip was added to
+
+
+def _ship_package(sc) -> None:
+    """Add a zip of this package to ``sc``'s Python path, once per
+    context.  Python workers unpickle kernels that reference package
+    functions by module name; they inherit the driver's environment but
+    not its ``sys.path``, so without the zip they find the package only
+    when the JVM's working directory holds it."""
+    global _shipped_to
+    if _shipped_to is sc:
+        return
+    tmp = tempfile.mkdtemp(prefix="sg_pyfiles_")
+    atexit.register(shutil.rmtree, tmp, True)
+    path = os.path.join(tmp, f"{os.path.basename(_PACKAGE_DIR)}.zip")
+    parent = os.path.dirname(_PACKAGE_DIR)
+    with zipfile.ZipFile(path, "w") as zf:
+        for root, _, files in os.walk(_PACKAGE_DIR):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    zf.write(full, os.path.relpath(full, parent))
+    sc.addPyFile(path)
+    _shipped_to = sc
 
 
 def default_parallelism() -> int:
@@ -60,4 +90,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark.sparkContext)
     return spark

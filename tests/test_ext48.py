@@ -139,45 +139,26 @@ def test_warc_lane_fail_soft_marker_row(spark, sf_dir):
 
 
 def test_warc_shards_are_real_archives(spark, sf_dir):
-    """Pull one shard's payload pre-walk and re-parse it here: warcinfo
-    head record, response records in doc_id order, HTTP envelopes."""
+    """Pull one shard's payload pre-walk, built by the lane's own pack
+    through _shard_stage, and re-parse it here: warcinfo head record,
+    response records in doc_id order, HTTP envelopes."""
+    from glue_etl_nyc_yellow_taxi_analysis_spark.operators.multimodal import (
+        _shard_stage,
+    )
     from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext48 import (
-        _SHARD_SCHEMA,
         _URI_PREFIX,
+        _warc_pack,
     )
 
-    _N_SHARDS = 4  # the test builds its OWN shard; any modulus works
+    _N_SHARDS = 4  # the test forms its OWN shard; any modulus works
 
-    docs = (
+    shard = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select((F.col("doc_id") % _N_SHARDS).alias("shard_id"), "doc_id", "text", "source")
         .filter(F.col("shard_id") == 0)
-        .toPandas()
-        .sort_values("doc_id")
     )
-    import pandas as pd
-
-    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        records = [warc.warcinfo_record("software: t\r\n")]
-        for d, t, s in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
-            records.append(
-                warc.response_record(
-                    f"{_URI_PREFIX}{int(d)}",
-                    warc.http_response(H.synth_html(int(d), t, s).encode()),
-                )
-            )
-        return pd.DataFrame(
-            [(int(key[0]), warc.warc_container(records))],
-            columns=["shard_id", "payload"],
-        )
-
-    payload = bytes(
-        spark.createDataFrame(docs)
-        .groupBy("shard_id")
-        .applyInPandas(build, _SHARD_SCHEMA)
-        .collect()[0]["payload"]
-    )
+    docs = shard.toPandas().sort_values("doc_id")
+    payload = bytes(_shard_stage(shard, _warc_pack(gz=False)).collect()[0]["payload"])
     parsed = warc.parse_warc(payload)
     assert parsed[0][0]["warc-type"] == "warcinfo"
     uris = [h["warc-target-uri"] for h, _ in parsed[1:]]

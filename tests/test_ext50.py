@@ -83,7 +83,7 @@ def test_pdf_lane_fail_soft_and_no_shuffle(spark, sf_dir):
     )
 
     plan = _plan(q_pdf_extract(spark, sf_dir))
-    # two map stages, zero shuffles beyond the input spread
+    # one fused map stage, zero shuffles beyond the input spread
     assert plan.count("+- Exchange") <= 1
     rows = q_pdf_extract(spark, sf_dir).collect()
     docs = dict(

@@ -95,22 +95,54 @@ def test_fused_matches_two_stage_chain(spark):
         assert fused == two_stage
 
 
+def _y4m_chain(docs, between):
+    return mm.decode_y4m(between(mm.documents_as_y4m(docs, width=6, height=4)))
+
+
+def _pdf_chain(docs, between):
+    """q_pdf_extract's build → extract pair."""
+    from glue_etl_nyc_yellow_taxi_analysis_spark.operators import pdf
+    from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext50 import (
+        _pdf_build,
+        _text_stage,
+    )
+
+    return _text_stage(between(_pdf_build(docs)), pdf.parse_pdf, "n_pages")
+
+
+def _flac_transcode_chain(docs, between):
+    """q_flac_transcode's three stages: FLAC build → WAV transcode →
+    WAV decode."""
+    from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext45 import _flac_to_wav
+
+    flac = between(mm.documents_as_flac(docs, sample_rate=16000))
+    return mm.decode_wav(between(_flac_to_wav(flac)))
+
+
 def test_auto_fusion_collapses_chain_to_one_python_stage(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(_TEXTS)], "doc_id long, text string"
     )
-    chained = mm.decode_y4m(mm.documents_as_y4m(docs, width=6, height=4))
-    plan = chained._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
-    # ... and a JVM boundary between stages keeps them separate
-    staged = mm.decode_y4m(
-        mm.documents_as_y4m(docs, width=6, height=4).select("media_id", "payload")
+    # the subset PDF codec's build rejects non-Latin-1 text
+    ascii_docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(_TEXTS) if (t or "").isascii()],
+        "doc_id long, text string",
     )
-    plan2 = staged._jdf.queryExecution().executedPlan().toString()
-    assert plan2.count("MapInPandas") == 2, plan2
-    assert sorted(map(tuple, chained.collect())) == sorted(
-        map(tuple, staged.collect())
-    )
+    for chain, inputs, n_stages in (
+        (_y4m_chain, docs, 2),
+        (_pdf_chain, ascii_docs, 2),
+        (_flac_transcode_chain, docs, 3),
+    ):
+        chained = chain(inputs, lambda df: df)
+        plan = chained._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, (chain.__name__, plan)
+        # ... and a JVM boundary between stages keeps them separate
+        staged = chain(inputs, lambda df: df.select(*df.columns))
+        plan2 = staged._jdf.queryExecution().executedPlan().toString()
+        assert plan2.count("MapInPandas") == n_stages, (chain.__name__, plan2)
+        assert sorted(map(tuple, chained.collect())) == sorted(
+            map(tuple, staged.collect())
+        ), chain.__name__
 
 
 def test_fusion_rejects_a_column_the_parent_never_produced(spark):

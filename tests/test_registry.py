@@ -44,3 +44,34 @@ def test_every_query_has_an_oracle():
 def test_headline_lanes_are_registered_queries():
     assert len(HEADLINE) == len(set(HEADLINE)) == 243
     assert set(HEADLINE) <= set(QUERIES)
+
+
+_WORKER_PROBE = """
+import sys
+sys.path.insert(0, {repo!r})
+from glue_etl_nyc_yellow_taxi_analysis_spark.operators import multimodal as mm
+from glue_etl_nyc_yellow_taxi_analysis_spark.session import get_spark
+
+spark = get_spark(app_name="worker-imports", cpus=1)
+docs = spark.createDataFrame([(1, "ab"), (2, "cdef")], "doc_id long, text string")
+lane = mm.decode_wav(mm.documents_as_wav(docs))
+print("n_samples", sorted(r["n_samples"] for r in lane.collect()))
+"""
+
+
+def test_python_workers_import_the_package_from_any_cwd(tmp_path):
+    """A kernel lane must run when neither the JVM's working directory
+    nor PYTHONPATH holds the repo (only the driver's sys.path does):
+    get_spark ships the package to the Python workers."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    r = subprocess.run(
+        [sys.executable, "-c", _WORKER_PROBE.format(repo=REPO)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "n_samples [1, 2]" in r.stdout, r.stdout[-2000:]
