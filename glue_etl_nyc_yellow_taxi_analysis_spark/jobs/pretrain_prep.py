@@ -42,7 +42,7 @@ Scale posture: every stage is a keyed shuffle (fingerprint, band
 bucket, shingle, (doc_id, b), source, split) or a broadcast of a
 bounded table (bench shingles, B=256 DSIR buckets, |sources| quotas);
 survivor frames persist across exactly one stage boundary and unpersist
-behind themselves; the CC survivor set is localCheckpointed so the
+behind themselves; the CC survivor set is materialized so the
 iterative lineage never re-enters downstream plans.
 
     python -m glue_etl_nyc_yellow_taxi_analysis_spark.jobs.pretrain_prep \\
@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup, text
 from ..operators.indexing import global_running_sum, keyed_running_sum
+from ..operators.materialize import materialize
 from ..session import get_spark
 from .notify import JobNotifier, jsonl_sink, run_with_notification, stderr_sink
 
@@ -147,7 +148,7 @@ def prepare(
 
     # 3. fuzzy dedup — banded MinHash candidates, verified pairs,
     #    connected components; keep each cluster's smallest id.  The
-    #    survivor frame is localCheckpointed: CC's O(log² n)-round
+    #    survivor frame is materialized: CC's O(log² n)-round
     #    lineage must not re-enter every downstream stage plan.
     pairs = dedup.minhash_dedup_pairs(exact_kept, threshold=threshold)
     comp = dedup.connected_components(
@@ -156,7 +157,10 @@ def prepare(
     dupes = comp.filter(F.col("u") != F.col("label")).select(
         F.col("u").alias("doc_id")
     )
-    near_kept = exact_kept.join(dupes, "doc_id", "left_anti").localCheckpoint()
+    near_kept = materialize(
+        exact_kept.join(dupes, "doc_id", "left_anti"),
+        "fuzzy-dedup survivors: every later stage reads them",
+    )
     n_near = near_kept.count()
     exact_kept.unpersist()
     lap("fuzzy_dedup")

@@ -39,6 +39,7 @@ import json
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.materialize import materialize
 from ..operators.multimodal import _row_stage
 from ..session import get_spark
 from .notify import JobNotifier, jsonl_sink, run_with_notification, stderr_sink
@@ -162,7 +163,10 @@ def extract_documents(media):
 def process_documents(spark, media, output: str) -> dict:
     """Run the pipeline; returns the accounting card."""
     n_in = media.count()
-    extracted = extract_documents(media).localCheckpoint()
+    extracted = materialize(
+        extract_documents(media),
+        "extracted documents: the kind counts and the output read them",
+    )
     kind_counts = {
         r["kind"]: r["n"]
         for r in extracted.groupBy("kind").agg(F.count("*").alias("n")).collect()

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import multimodal
+from ..operators.materialize import materialize
 from ..session import get_spark
 from .notify import JobNotifier, jsonl_sink, run_with_notification, stderr_sink
 
@@ -130,7 +131,10 @@ def process_media(
     from ..queries_ext41 import _shingle_pairs
 
     n_media = media.count()
-    decoded = decode_and_condition(media, decimate=decimate).localCheckpoint()
+    decoded = materialize(
+        decode_and_condition(media, decimate=decimate),
+        "decoded media: the kind counts, totals and dedup read it",
+    )
 
     kind_counts = {
         r["kind"]: r["n"]

@@ -51,6 +51,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators import text
+from ..operators.materialize import materialize
 from ..session import get_spark
 from .notify import JobNotifier, jsonl_sink, run_with_notification, stderr_sink
 
@@ -153,9 +154,9 @@ def run_ingest(
     walked = None
     if from_warc:
         walked = docs_from_warc(spark, spark.read.parquet(docs_path))
-        # one pass materializes walk results for the corrupt count +
-        # the pipeline (codec work must not run once per consumer)
-        walked = walked.localCheckpoint()
+        walked = materialize(
+            walked, "WARC walk: the corrupt count, the pipeline and the frontier"
+        )
         n_corrupt_shards = walked.filter(F.col("doc_id").isNull()).count()
         docs = walked.filter(F.col("doc_id").isNotNull()).drop("page")
     else:
@@ -252,7 +253,10 @@ def run_ingest(
             rules = spark.createDataFrame(
                 [], "host string, is_allow int, prefix string"
             )
-        gated = R.gate_frontier(links, rules, ["url"]).localCheckpoint()
+        gated = materialize(
+            R.gate_frontier(links, rules, ["url"]),
+            "gated links: the frontier write and two counts read them",
+        )
         fetched = docs.select(F.col("url").alias("f_url")).distinct()
         frontier = (
             gated.filter(F.col("is_allowed") == 1)

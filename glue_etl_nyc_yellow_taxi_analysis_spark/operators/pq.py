@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 __all__ = [
     "pq_subvectors",
     "pq_train",
@@ -156,20 +158,23 @@ def pq_train(
     per subspace (reproducible across runs/partitionings).  Update:
     per-(sub, cluster, dim) DECIMAL(27,18) sums, mean = ONE double
     division of the exact sum (order-free).  Assignment ties break
-    toward the lower cluster id; empty clusters drop out.  Lineage is
-    truncated per round (localCheckpoint) so iters don't stack plans.
+    toward the lower cluster id; empty clusters drop out.  Each round's
+    codebook is materialized, so iters don't stack plans.
     """
-    pts = pq_subvectors(embeddings, m, id_col, vec_col).localCheckpoint()
+    pts = materialize(
+        pq_subvectors(embeddings, m, id_col, vec_col),
+        "PQ subvectors: read by every training round",
+    )
     w = Window.partitionBy("sub").orderBy("id")
-    cents = (
+    cents = materialize(
         pts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select(
             "sub",
             (F.col("rn") - 1).cast("long").alias("cluster"),
             F.col("sx").alias("centroid"),
-        )
-        .localCheckpoint()
+        ),
+        "PQ initial codebook",
     )
     for _ in range(iters):
         # nearest-centroid assignment as a pure expression over the
@@ -186,7 +191,7 @@ def pq_train(
             .select("id", "sub", F.col("__best.c").alias("cluster"), "sx")
         )
         cells = assigned.select("sub", "cluster", F.posexplode("sx").alias("dim", "v"))
-        cents = (
+        cents = materialize(
             cells.groupBy("sub", "cluster", "dim")
             .agg(
                 F.sum(F.col("v").cast("decimal(27,18)")).alias("s"),
@@ -201,8 +206,8 @@ def pq_train(
                 F.transform(F.col("cells"), lambda c: c.getField("mn")).alias(
                     "centroid"
                 ),
-            )
-            .localCheckpoint()
+            ),
+            "PQ codebook: read by the next round's assignment",
         )
     return cents
 

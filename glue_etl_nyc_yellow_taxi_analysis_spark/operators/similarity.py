@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ in double precision, sequential fold (deterministic)."""
@@ -470,12 +472,15 @@ def kmeans_train(
         .map(lambda t: (t[1], [float(x) for x in t[0].centroid])),
         "cluster bigint, centroid array<double>",
     )
-    cents = init.localCheckpoint()
+    cents = materialize(init, "k-means initial centroids")
     for _ in range(max_iter):
         assigned = assign_clusters(
             embeddings.drop("cluster"), cents, id_col, vec_col
         )
-        new_cents = centroids_by(assigned, "cluster", vec_col).localCheckpoint()
+        new_cents = materialize(
+            centroids_by(assigned, "cluster", vec_col),
+            "k-means centroids: read by the shift check and the next round",
+        )
         moved = (
             new_cents.join(cents.withColumnRenamed("centroid", "old"), "cluster")
             .withColumn(
@@ -532,14 +537,14 @@ def kmeans_train_exact(
         F.transform(vec_col, lambda v: v.cast("double")).alias("x"),
     )
     w = Window.orderBy("id")
-    cents = (
+    cents = materialize(
         emb.orderBy("id")
         .limit(k)
         .select(
             (F.row_number().over(w) - 1).cast("long").alias("cluster"),
             F.col("x").alias("centroid"),
-        )
-        .localCheckpoint()
+        ),
+        "exact k-means initial centroids",
     )
     dist = F.aggregate(
         F.zip_with("x", "centroid", lambda a, b: (a - b) * (a - b)),
@@ -560,7 +565,7 @@ def kmeans_train_exact(
             .select("id", F.col("best.c").alias("cluster"), F.col("best.d").alias("d"), "x")
         )
         cells = assigned.select("cluster", F.posexplode("x").alias("dim", "v"))
-        cents = (
+        cents = materialize(
             cells.groupBy("cluster", "dim")
             .agg(
                 F.sum(F.col("v").cast("decimal(27,18)")).alias("s"),
@@ -572,8 +577,8 @@ def kmeans_train_exact(
             .select(
                 "cluster",
                 F.transform(F.col("cells"), lambda c: c.getField("m")).alias("centroid"),
-            )
-            .localCheckpoint()
+            ),
+            "exact k-means centroids: read by the next round's assignment",
         )
     # final pass: re-assign against the last centroids so sizes/inertia
     # describe the returned model, then summarize
@@ -627,8 +632,8 @@ def pca_power_exact(
 
     Init is the all-ones vector (deterministic; not orthogonal to the top
     eigenvector of a nonnegative-diagonal Gram matrix in practice), sign
-    is therefore deterministic too.  ``localCheckpoint`` flattens lineage
-    per iteration.  Returns one row per dimension:
+    is therefore deterministic too.  Each iteration's vector is
+    materialized, which flattens lineage.  Returns one row per dimension:
     (dim, loading_e9 BIGINT, eigval_e6 BIGINT) — loadings of the unit
     top direction and the Rayleigh-quotient eigenvalue estimate
     ‖X v_{last}‖² (both scaled-integer outputs, floor(x·10^k + 0.5)).
@@ -672,12 +677,15 @@ def pca_power_exact(
         # an all-zero matrix (e.g. every vector zero) has no principal
         # direction: NULL loadings, never an ANSI DIVIDE_BY_ZERO (the
         # q_lsa_topic guard; degenerate-corpus sweep finding)
-        vdf = arr.select(
-            F.transform(
-                "sv", lambda e: F.try_divide(e, F.sqrt(norm2))
-            ).alias("v"),
-            norm2.alias("norm2"),
-        ).localCheckpoint()
+        vdf = materialize(
+            arr.select(
+                F.transform(
+                    "sv", lambda e: F.try_divide(e, F.sqrt(norm2))
+                ).alias("v"),
+                norm2.alias("norm2"),
+            ),
+            "power-iteration vector: read by the next iteration",
+        )
     # ‖X v_{k-1}‖ = the power-iteration eigenvalue estimate for the
     # uncentered Gram matrix (v_{k-1} is unit by construction)
     out = vdf.select(

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .operators.materialize import materialize
 from .plans import star
 from .registry import register
 from .tables import _COSINE_SQL, TOKS_SQL, _t, _taxi_fixture
@@ -204,8 +205,8 @@ def lsh_ann_topk_md5(spark, sf_dir, tables: int = _LSH_TABLES,
     zip_with/aggregate sequential fold, and sign bits pack as an exact
     sum of disjoint powers of two, so signatures — and the oracle hash —
     are bit-identical to the literal form.  The signature table is
-    localCheckpointed: both consumers (the query side and the data
-    side of the bucket join) read it instead of recomputing."""
+    materialized: both consumers (the query side and the data side of
+    the bucket join) read it instead of recomputing."""
     from .operators import similarity
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -217,7 +218,7 @@ def lsh_ann_topk_md5(spark, sf_dir, tables: int = _LSH_TABLES,
         ],
         "t int, i int, p array<double>",
     )
-    sigs = (
+    sigs = materialize(
         emb.select("vec_id", "embedding")
         .crossJoin(F.broadcast(plane_rows))
         .groupBy("vec_id", "t")
@@ -230,8 +231,8 @@ def lsh_ann_topk_md5(spark, sf_dir, tables: int = _LSH_TABLES,
             )
             .cast("long")
             .alias("__sig")
-        )
-        .localCheckpoint()
+        ),
+        "LSH signatures: read by the query and the data side of the join",
     )
     data = emb.select("vec_id", "embedding").join(sigs, "vec_id").select(
         "vec_id", "embedding", F.col("t").alias("__tbl"), "__sig"
@@ -476,15 +477,13 @@ def q_doc_logprob(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(text.tokens("text")).alias("tok"))
     # ONE scan+tokenize pass (r12): the corpus vocabulary is the integer
-    # rollup of the per-doc count table, so both derive from one
-    # checkpoint instead of re-running scan+tokenize+explode each.
-    # N = Σ cc off the (vocab-sized) corpus table, broadcast back
-    # in-plan (the r6 fix: a separate count() ACTION was a third full
-    # pass).  Same integers, same double, same ROUND, hash-identical.
-    doc_counts = (
-        toks.groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+    # rollup of the per-doc count table.  N = Σ cc off the (vocab-sized)
+    # corpus table, broadcast back in-plan (the r6 fix: a separate
+    # count() ACTION was a third full pass).  Same integers, same
+    # double, same ROUND, hash-identical.
+    doc_counts = materialize(
+        toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c")),
+        "per-doc token counts: the corpus vocabulary rolls up from them",
     )
     corpus = doc_counts.groupBy("tok").agg(
         F.sum("c").cast("bigint").alias("cc")

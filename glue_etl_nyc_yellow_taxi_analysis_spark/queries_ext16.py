@@ -32,6 +32,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import similarity, text
+from .operators.materialize import materialize
 from .registry import register
 from .tables import _COSINE_SQL, TOKS_SQL, _t
 
@@ -91,12 +92,13 @@ def q_semdedup(spark, sf_dir):
     cos_rep = F.round(similarity.cosine(F.col("embedding"), F.col("centroid")), 6)
     # keyed argmax as a row_number window, RESTORED after the r11
     # min(struct) aggregate measured slower at sf0.1 AND sf1 (interleaved
-    # A/B, tools/semdedup_ab.py: window med 3.38/11.56s vs minstruct
-    # 3.71/13.73s; driver r11 measured 0.65x).  The aggregate's premise
-    # ("the window shuffles n·k embedding-carrying rows") was wrong in
-    # Spark 3.5+/4: WindowGroupLimit prunes to top-1 per vec_id MAP-SIDE
-    # before the exchange, while min(struct)/first(array) buffers are not
-    # hash-aggregable and fall to SortAggregate (plan evidence:
+    # A/B recorded in OPTIMIZATION_r12.md: window med 3.38/11.56s vs
+    # minstruct 3.71/13.73s; driver r11 measured 0.65x).  The
+    # aggregate's premise ("the window shuffles n·k embedding-carrying
+    # rows") was wrong in Spark 3.5+/4: WindowGroupLimit prunes to top-1
+    # per vec_id MAP-SIDE before the exchange, while min(struct)/
+    # first(array) buffers are not hash-aggregable and fall to
+    # SortAggregate (plan evidence:
     # plans/r12/q_semdedup_assign_{window,minstruct}.txt).
     w = Window.partitionBy("vec_id").orderBy(
         F.desc("cos_rep"), F.col("cluster"), F.col("rep_id")
@@ -114,12 +116,11 @@ def q_semdedup(spark, sf_dir):
         # (and the oracle hash) are bit-identical
         .select("vec_id", "embedding", "cluster", "rep_id",
                 similarity.l2_norm(F.col("embedding")).alias("nrm"))
-        # the assignment table feeds THREE consumers (both self-join sides
-        # + the verdict projection); without materialization Spark re-runs
-        # the k×N cosine cross join per consumer (measured 18 exchanges /
-        # 3.9s → 6 / 1.1s).  A real pipeline persists the quantization
-        # output anyway — same pattern as q_dedup_clusters.
-        .localCheckpoint()
+    )
+    # without the cut Spark re-runs the k×N cosine cross join per
+    # consumer (measured 18 exchanges / 3.9s → 6 / 1.1s)
+    assigned = materialize(
+        assigned, "rep assignment: both self-join sides and the verdict"
     )
     # the in-cluster pairwise prune runs as a vectorized Arrow kernel
     # (similarity.semdedup_dups): the old self-join materialized every
@@ -309,15 +310,14 @@ def _bpe_train(spark, sf_dir):
     Each iteration's argmax is a 1-row bounded collect whose literals
     feed the next iteration's plan (the k-means trainer pattern)."""
     docs = _t(spark, sf_dir, "documents")
-    words = (
+    # the corpus tokenize pass runs ONCE, not once per iteration
+    # (measured 10.7s -> ~2s for q_bpe_apply)
+    words = materialize(
         docs.select(F.explode(text.tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .withColumn("spaced", _spaced(F.col("word")))
-        # vocab-bounded table consumed by 3 argmax actions + the final
-        # plan: checkpoint so the corpus tokenize pass runs ONCE, not
-        # once per iteration (measured 10.7s -> ~2s for q_bpe_apply)
-        .localCheckpoint()
+        .withColumn("spaced", _spaced(F.col("word"))),
+        "BPE word types: read by every merge argmax and the final plan",
     )
     merges = []
     for it in range(1, _BPE_ITERS + 1):

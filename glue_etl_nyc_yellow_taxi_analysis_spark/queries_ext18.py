@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from .operators import text
 from .operators.dedup import containment_pairs
+from .operators.materialize import materialize
 from .operators.similarity import pca_power_exact
 from .registry import register
 from .tables import TOKS_SQL, _t
@@ -399,10 +400,13 @@ def q_doc_ppl_bigram(spark, sf_dir):
     # tokenize ONCE: the old plan re-ran scan+tokenize per count table
     # (c2, c1, doc_bg, vocab — 4 corpus passes) and pulled the vocab
     # scalar to the driver with a collect() in the query path; every
-    # table now derives from the tokenized checkpoint, with the corpus
+    # table now derives from the tokenized docs, with the corpus
     # counts rolled up from the materialized doc_bg (integer sums —
     # exact) and vocab riding as a broadcast 1-row aggregate.
-    tok = d.select("doc_id", toks.alias("toks")).localCheckpoint()
+    tok = materialize(
+        d.select("doc_id", toks.alias("toks")),
+        "tokenized docs: every count table and the vocab derive from them",
+    )
     n = F.size("toks")
     pairs = F.arrays_zip(
         F.slice("toks", 1, n - 1).alias("w1"),
@@ -411,15 +415,15 @@ def q_doc_ppl_bigram(spark, sf_dir):
     bg = tok.select(
         "doc_id", F.explode(pairs).alias("p")
     ).select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    doc_bg = (
-        bg.groupBy("doc_id", "w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+    doc_bg = materialize(
+        bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("c")),
+        "per-doc bigram counts: the corpus counts and the scores read them",
+        eager=False,
     )
-    c2 = (
-        doc_bg.groupBy("w1", "w2")
-        .agg(F.sum("c").cast("bigint").alias("c2"))
-        .localCheckpoint(eager=False)
+    c2 = materialize(
+        doc_bg.groupBy("w1", "w2").agg(F.sum("c").cast("bigint").alias("c2")),
+        "corpus bigram counts: c1 rolls up from them, the scores read them",
+        eager=False,
     )
     c1 = c2.groupBy("w1").agg(F.sum("c2").cast("bigint").alias("c1"))
     vocab = tok.select(F.explode("toks").alias("t")).agg(

@@ -31,6 +31,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import dedup
+from .operators.materialize import materialize
 from .queries_ext13 import (
     _BAND_COLS_SQL,
     _BAND_UNION_SQL,
@@ -375,13 +376,11 @@ def q_pmi_bigrams(spark, sf_dir):
         F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
     )
     # ONE scan+tokenize pass: the margins and the total are integer
-    # rollups of the bigram count table, so they derive from its
-    # checkpoint instead of re-running scan+tokenize+explode each
-    # (4 corpus passes -> 1; log2 inputs stay the same exact integers)
-    c2 = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint()
+    # rollups of the bigram count table (4 corpus passes -> 1; log2
+    # inputs stay the same exact integers)
+    c2 = materialize(
+        bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")),
+        "bigram counts: the margins and the total roll up from them",
     )
     cl = c2.groupBy("w1").agg(F.sum("c2").cast("bigint").alias("cl"))
     cr = c2.groupBy("w2").agg(F.sum("c2").cast("bigint").alias("cr"))

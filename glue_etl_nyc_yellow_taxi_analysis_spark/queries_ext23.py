@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
+from .operators.materialize import materialize
 from .registry import register
 from .tables import TOKS_SQL, _t
 
@@ -354,10 +355,9 @@ def q_image_blockhash_neardup(spark, sf_dir):
             )
         ).alias("band_idx", "band_key"),
     )
-    # materialize before the self-join: whole-stage codegen would
-    # otherwise re-derive the full per-byte fold PER JOINED ROW (the
-    # semdedup checkpoint lesson — measured as a hang at sf0.001)
-    band = band.localCheckpoint()
+    # without the cut, whole-stage codegen re-derives the full per-byte
+    # fold PER JOINED ROW (measured as a hang at sf0.001)
+    band = materialize(band, "band keys: read by both self-join sides")
     a, b = band.alias("a"), band.alias("b")
     pairs = (
         a.join(

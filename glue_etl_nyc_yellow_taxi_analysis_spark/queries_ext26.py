@@ -27,6 +27,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import text
+from .operators.materialize import materialize
 from .registry import register
 from .tables import TOKS_SQL, _t
 
@@ -61,7 +62,7 @@ def dsir_weights_of(d):
 
     Plan shape at 100 TB: ONE tokenize+explode pass builds the per-doc
     bucket counts (keyed shuffle on (doc_id, b) — the only corpus-sized
-    shuffle), localCheckpointed so the expensive tokenize/hash chain
+    shuffle), materialized so the expensive tokenize/hash chain
     never re-runs; the B-row bucket table and the two corpus totals
     derive from it (a 256-row aggregate, collected — bounded by B, not
     the corpus) and join back as a broadcast.  Every log is of an
@@ -78,10 +79,9 @@ def dsir_weights_of(d):
     )
     # lang is functionally dependent on doc_id — carrying it through the
     # grouping lets the bucket table derive from doc_counts
-    doc_counts = (
-        toks.groupBy("doc_id", "lang", "b")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+    doc_counts = materialize(
+        toks.groupBy("doc_id", "lang", "b").agg(F.count(F.lit(1)).alias("c")),
+        "per-doc bucket counts: the bucket table and totals roll up from them",
     )
     bucket_rows = (
         doc_counts.groupBy("b")

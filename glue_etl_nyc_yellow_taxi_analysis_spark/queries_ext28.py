@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import joins, sketches, text
+from .operators.materialize import materialize
 from .registry import register
 from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
@@ -290,16 +291,16 @@ def q_sketch_merge(spark, sf_dir):
     # whole) each re-ran scan+tokenize+explode (and the three Bloom
     # builds re-scanned for ids) — 6 corpus scans per run.  The shared
     # exact base is the per-(half, token) count table; the whole-corpus
-    # counts are its integer rollup, so every sketch derives from the
-    # checkpoint bit-identically.
-    tc = (
+    # counts are its integer rollup, so every sketch derives from it
+    # bit-identically.
+    tc = materialize(
         docs.select(
             (F.col("doc_id") % 2 == 0).alias("even"),
             F.explode(text.tokens("text")).alias("token"),
         )
         .groupBy("even", "token")
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint()
+        .agg(F.count("*").alias("n")),
+        "per-(half, token) counts: every sketch derives from them",
     )
 
     def cms_of(counts):
@@ -322,10 +323,13 @@ def q_sketch_merge(spark, sf_dir):
         F.coalesce(F.col("w.counter"), F.lit(0)).alias("wc"),
     )
 
-    ids = docs.select(
-        (F.col("doc_id") % 2 == 0).alias("even"),
-        F.col("doc_id").cast("string").alias("k"),
-    ).localCheckpoint()
+    ids = materialize(
+        docs.select(
+            (F.col("doc_id") % 2 == 0).alias("even"),
+            F.col("doc_id").cast("string").alias("k"),
+        ),
+        "doc ids: read by the three Bloom builds",
+    )
     keys = ids.select("k")
     even_k = ids.filter("even").select("k")
     odd_k = ids.filter("NOT even").select("k")

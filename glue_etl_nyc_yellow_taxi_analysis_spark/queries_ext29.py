@@ -58,6 +58,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from .operators import indexing, layout, sketches, text
+from .operators.materialize import materialize
 from .registry import register
 from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
@@ -126,16 +127,15 @@ def q_kn_bigram_ppl(spark, sf_dir):
     # count table (5 corpus scans / 18 exchanges, no runtime exchange
     # reuse — plans/r12/q_kn_bigram_ppl_before.txt); doc_bg is the
     # narrowest exact base (all counts are integer sums of it), so every
-    # table derives from the checkpoint: 1 scan, lane 2.5s -> ~1.3s
-    doc_bg = (
-        bg.groupBy("doc_id", "w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+    # table derives from it: 1 scan, lane 2.5s -> ~1.3s
+    doc_bg = materialize(
+        bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("c")),
+        "per-doc bigram counts: every count table rolls up from them",
     )
-    c2 = (
-        doc_bg.groupBy("w1", "w2")
-        .agg(F.sum("c").cast("bigint").alias("c2"))
-        .localCheckpoint(eager=False)
+    c2 = materialize(
+        doc_bg.groupBy("w1", "w2").agg(F.sum("c").cast("bigint").alias("c2")),
+        "corpus bigram counts: the margins and the scores read them",
+        eager=False,
     )
     c1 = c2.groupBy("w1").agg(
         F.sum("c2").cast("bigint").alias("c1"), F.count(F.lit(1)).alias("n1l")
@@ -479,7 +479,8 @@ def q_lsa_topic(spark, sf_dir):
     )
     dfc = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    a = (
+    # at 100 TB this is the inverted index you'd persist anyway
+    a = materialize(
         tf.join(dfc, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
@@ -489,24 +490,20 @@ def q_lsa_topic(spark, sf_dir):
                 F.col("tf")
                 * (F.log2(F.col("n_docs")) - F.log2(F.col("df")))
             ).alias("w"),
-        )
-        # the triples table feeds 2 half-steps × 2 iterations plus the
-        # norm aggregates (~9 consumers): materialize the tokenize+tf
-        # chain ONCE (the ext23/ext26 localCheckpoint pattern) — at
-        # 100 TB this is the inverted index you'd persist anyway
-        .localCheckpoint()
+        ),
+        "tf-idf triples: ~9 consumers across the power iterations",
     )
     v = dfc.select("term", F.lit(1.0).alias("v"))
     dec = lambda c: F.sum(c.cast("decimal(38,15)")).cast("double")  # noqa: E731
     for _ in range(_LSA_ITERS):
-        u_raw = (
+        # lazy: the norm's job fills the half-step once instead of
+        # re-running the join+agg per consumer
+        u_raw = materialize(
             a.join(F.broadcast(v), "term")
             .groupBy("doc_id")
-            .agg(dec(F.col("w") * F.col("v")).alias("u"))
-            # two consumers (the norm aggregate + the normalized u):
-            # truncate lazily so the norm's job materializes the half-
-            # step once instead of re-running the join+agg per consumer
-            .localCheckpoint(eager=False)
+            .agg(dec(F.col("w") * F.col("v")).alias("u")),
+            "LSA half-step u: read by its norm and the normalized u",
+            eager=False,
         )
         un2 = u_raw.agg(dec(F.col("u") * F.col("u")).alias("un2"))
         # an all-zero tf-idf matrix (single doc / identical docs ⇒ every
@@ -516,13 +513,12 @@ def q_lsa_topic(spark, sf_dir):
             "doc_id",
             F.when(F.col("un2") != 0, F.col("u") / F.sqrt("un2")).alias("u"),
         )
-        s = (
+        s = materialize(
             a.join(u, "doc_id")
             .groupBy("term")
-            .agg(dec(F.col("w") * F.col("u")).alias("s"))
-            # same two-consumer shape as u_raw (norm2 + normalized v,
-            # plus the final sigma projection after the loop)
-            .localCheckpoint(eager=False)
+            .agg(dec(F.col("w") * F.col("u")).alias("s")),
+            "LSA half-step s: read by norm2, the normalized v and sigma",
+            eager=False,
         )
         norm2 = s.agg(dec(F.col("s") * F.col("s")).alias("norm2"))
         v = s.crossJoin(F.broadcast(norm2)).select(

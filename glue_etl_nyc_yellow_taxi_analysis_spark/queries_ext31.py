@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import indexing, text
+from .operators.materialize import materialize
 from .operators.sketches import DUCK_HASH32, hash32
 from .queries_ext29 import _BG_SQL
 from .registry import register
@@ -91,15 +92,14 @@ def q_hll_distinct(spark, sf_dir):
     # distinct all consumed the exploded shingles separately (5 corpus
     # scans).  The shared exact base is the per-(half, shingle) DISTINCT
     # table — register maxes are duplicate-insensitive and the exact
-    # count is a distinct over it, so every consumer derives from the
-    # checkpoint bit-identically.
-    sh = (
+    # count is a distinct over it, so every consumer derives from it
+    # bit-identically.
+    sh = materialize(
         docs.select(
             (F.col("doc_id") % 2 == 0).alias("even"),
             F.explode(text.shingles("text")).alias("s"),
-        )
-        .distinct()
-        .localCheckpoint()
+        ).distinct(),
+        "distinct (half, shingle): read by three registers and the exact count",
     )
     whole = _hll_regs(sh)
     merged = (
@@ -229,12 +229,8 @@ def quality_auc_of(d):
         # this guard, 0.59 with it)
         .where((F.col("w1") != "dup") & (F.col("w2") != "dup"))
         .distinct()
-        # both consumers (the df count and the per-doc score join) read
-        # this table: materialize the tokenize+explode+distinct chain
-        # once (the q_semdedup finding — without it Spark re-runs the
-        # whole subtree per consumer)
-        .localCheckpoint()
     )
+    bg = materialize(bg, "per-doc bigrams: read by the df count and the score join")
     dfreq = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("df"))
     score = (
         bg.join(dfreq, ["w1", "w2"])

@@ -34,6 +34,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import similarity
+from .operators.materialize import materialize
 from .operators.partitioning import spread
 from .registry import register
 from .tables import _COSINE_SQL, _t
@@ -267,7 +268,7 @@ def q_embedding_neardup_banded(spark, sf_dir):
     # sign bits are disjoint powers of two, so SUM packs them exactly
     # like the bitwiseOR of the literal form; the dot is the same
     # zip_with/aggregate sequential fold, so every sign agrees bit-wise
-    sigs = (
+    sigs = materialize(
         base.select("id", "block", "v")
         .crossJoin(F.broadcast(planes))
         .groupBy("id", "block", "tbl")
@@ -282,11 +283,8 @@ def q_embedding_neardup_banded(spark, sf_dir):
             )
             .cast("long")
             .alias("sig")
-        )
-        # the self-join below references sigs on BOTH sides — without a
-        # checkpoint the plane fan-out + fold runs twice (the q_semdedup
-        # multi-consumer lesson); the table is |vectors|·tables rows
-        .localCheckpoint()
+        ),
+        "banded signatures: both self-join sides",
     )
     sa, sb = sigs.alias("sa"), sigs.alias("sb")
     cand = (

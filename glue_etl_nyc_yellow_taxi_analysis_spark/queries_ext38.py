@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
+from .operators.materialize import materialize
 from .registry import register
 from .tables import TOKS_SQL, _t
 
@@ -85,11 +86,9 @@ def _train(spark, d, n_merges: int | None = None):
     real scale |types| is millions of rows — size this to
     |types| / a few hundred thousand instead of 1, the loop cost stays
     bounded by the TYPE table either way (never the corpus)."""
-    w = (
-        _word_types(d)
-        .withColumn("seg", F.expr(_SEG0))
-        .coalesce(1)
-        .localCheckpoint()
+    w = materialize(
+        _word_types(d).withColumn("seg", F.expr(_SEG0)).coalesce(1),
+        "BPE type table: read by every merge step",
     )
     merges = []
     for step in range(1, (n_merges or N_MERGES) + 1):
@@ -112,14 +111,18 @@ def _train(spark, d, n_merges: int | None = None):
         # materialization job itself can ride the NEXT step's argmax:
         # eager=False truncates the plan now and persists the step's
         # partitions on their first use, halving the loop's job count
-        w = w.withColumn(
-            "seg",
-            F.replace(
-                F.col("seg"),
-                F.lit(f"{_S1}{l}{_S2}{_S1}{r}{_S2}"),
-                F.lit(f"{_S1}{l}{r}{_S2}"),
+        w = materialize(
+            w.withColumn(
+                "seg",
+                F.replace(
+                    F.col("seg"),
+                    F.lit(f"{_S1}{l}{_S2}{_S1}{r}{_S2}"),
+                    F.lit(f"{_S1}{l}{r}{_S2}"),
+                ),
             ),
-        ).localCheckpoint(eager=False)
+            f"BPE merge step {step}",
+            eager=False,
+        )
     return w, merges
 
 

@@ -50,6 +50,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import pq
+from .operators.materialize import materialize
 from .operators.similarity import dot as _dot  # noqa: F401 (parity import)
 from .registry import register
 from .tables import _t
@@ -260,14 +261,14 @@ def q_pq_recall(spark, sf_dir):
     nor score as a neighbor, and the exact brute-force side would
     otherwise rank it with a NULL distance — Spark sorts NULLs FIRST
     ascending, DuckDB LAST (degenerate-corpus gate find)."""
-    # the valid-vector corpus feeds NINE subtrees (train, encode, both
-    # searches' queries, the exact brute-force side, the rerank
-    # read-back, the final left-join spine) and each re-ran the
-    # scan+spread+filter — materialize it once
-    emb = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull() & (F.size("embedding") >= _PQ_M))
-        .localCheckpoint()
+    # NINE subtrees read it: train, encode, both searches' queries,
+    # the exact brute-force side, the rerank read-back, the final
+    # left-join spine
+    emb = materialize(
+        _t(spark, sf_dir, "embeddings").filter(
+            F.col("embedding").isNotNull() & (F.size("embedding") >= _PQ_M)
+        ),
+        "valid-vector corpus: nine subtrees read it",
     )
     queries = emb.filter(F.col("vec_id").isin(*_PQ_QIDS)).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -280,7 +281,11 @@ def q_pq_recall(spark, sf_dir):
     # lane's win — measured ~0.5s SLOWER here interleaved: the lazy
     # checkpoint folds the encode into the first search's job, and the
     # coalesce serializes that whole chain into one task.)
-    codes = pq.pq_encode(emb, cb, m=_PQ_M).localCheckpoint(eager=False)
+    codes = materialize(
+        pq.pq_encode(emb, cb, m=_PQ_M),
+        "PQ codes: read by the raw-ADC and the rerank search",
+        eager=False,
+    )
     adc = pq.pq_adc_topk(
         emb, queries, cb, k=_PQ_TOPK, m=_PQ_M, codes=codes
     ).select("query_id", "vec_id")
@@ -518,14 +523,13 @@ def q_ann_ivfpq_oracle(spark, sf_dir):
         .filter(F.col("__rn") == 1)
         .select(F.col("label").alias("ccluster"), F.col("x").alias("centroid"))
     )
-    resid = (
-        base.join(F.broadcast(reps), base.label == reps.ccluster)
-        .select(
+    resid = materialize(
+        base.join(F.broadcast(reps), base.label == reps.ccluster).select(
             "vec_id",
             "label",
             F.zip_with("x", "centroid", lambda a, b: a - b).alias("res"),
-        )
-        .localCheckpoint()  # train, encode and the cluster map all consume it
+        ),
+        "residuals: read by train, encode and the cluster map",
     )
     cb = pq.pq_train(
         resid, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS, vec_col="res"
@@ -684,7 +688,10 @@ def q_stream_ann_enrich(spark, sf_dir):
     # corpus, so a real index stays wide)
     n_base = base.count()
     n_parts = max(1, -(-(n_base * _PQ_M) // _PQI_CODES_ROWS_PER_FILE))
-    codes = pq.pq_encode(base, cb, m=_PQ_M).coalesce(n_parts).localCheckpoint()
+    codes = materialize(
+        pq.pq_encode(base, cb, m=_PQ_M).coalesce(n_parts),
+        "in-memory PQ index: probed once per micro-batch",
+    )
 
     incoming = (
         emb.filter(_PQI_QPRED)

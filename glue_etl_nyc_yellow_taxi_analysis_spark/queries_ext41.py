@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import multimodal
+from .operators.materialize import materialize
 from .registry import register
 from .tables import _t
 
@@ -155,7 +156,10 @@ def _shingle_pairs(fh):
         .filter(F.col("df") > _AF_DFCAP)
         .select("sh")
     )
-    kept = shingles.join(F.broadcast(hot), "sh", "left_anti").localCheckpoint()
+    kept = materialize(
+        shingles.join(F.broadcast(hot), "sh", "left_anti"),
+        "kept shingles: read by the size table and both self-join sides",
+    )
     sizes = kept.groupBy("media_id").agg(F.count(F.lit(1)).alias("nsh"))
     a, b = kept.alias("a"), kept.alias("b")
     pairs = (

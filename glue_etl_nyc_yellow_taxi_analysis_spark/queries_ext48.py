@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 
 from .operators import html as H
 from .operators import multimodal, warc
+from .operators.materialize import materialize
 from .registry import register
 from .tables import _t
 
@@ -336,7 +337,7 @@ def _robots_frontier(spark, sf_dir, materialize_hosts=False):
     """Shared synth for the REP lanes: the link frontier (doc_id, url,
     host, path) and the per-host robots.txt bodies.
 
-    ``materialize_hosts`` checkpoints the |hosts|-bounded distinct-host
+    ``materialize_hosts`` materializes the |hosts|-bounded distinct-host
     table the robots bodies hang off (r12 multi-scan rule: the base is
     FAR narrower than its corpus-sized derivation).  Lanes that consume
     ``robots`` twice (rule engine + Crawl-delay pacing — schedule/
@@ -355,7 +356,7 @@ def _robots_frontier(spark, sf_dir, materialize_hosts=False):
     )
     hosts = frontier.select("host").distinct()
     if materialize_hosts:
-        hosts = hosts.localCheckpoint()
+        hosts = materialize(hosts, "distinct hosts: read by the rule engine and pacing")
     k = F.regexp_extract("host", "^m([0-9])", 1)
     robots = (
         hosts

@@ -41,6 +41,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import similarity
+from .operators.materialize import materialize
 from .queries_ext16 import _SD_TARGET, _SD_TAU
 from .registry import register
 from .tables import _COSINE_SQL, _t
@@ -52,13 +53,13 @@ _NPROBE = 3
 def _assign_ivf(emb, target=_SD_TARGET):
     """The probe+assign stages (pre-materialization) — separated so the
     plan-contract test can pin THIS plan broadcast-only; the lane's
-    ``localCheckpoint`` would otherwise swallow it from explain().
+    ``materialize`` would otherwise swallow it from explain().
     ``target`` dials rep density: reps per cell = max(1, cnt//target),
     so a SMALL target forces the multi-rep regime at shipped SFs (the
     q_semdedup_multirep lane) while the production default keeps
     ~n/_SD_TARGET reps."""
     wlab = Window.partitionBy("label")
-    reps = (
+    reps = materialize(
         emb.withColumn("cnt", F.count(F.lit(1)).over(wlab))
         .withColumn("rep_rn", F.row_number().over(wlab.orderBy("vec_id")))
         .filter(
@@ -69,10 +70,8 @@ def _assign_ivf(emb, target=_SD_TARGET):
             F.col("vec_id").alias("rep_id"),
             F.col("embedding").alias("centroid"),
             F.col("rep_rn"),
-        )
-        # consumed twice (routers + probed-cell join) and the window
-        # chain above is one narrow label-keyed pass — materialize once
-        .localCheckpoint()
+        ),
+        "IVF reps: read by the routers and the probed-cell join",
     )
     routers = reps.filter(F.col("rep_rn") == 1).select("cluster", "centroid")
 
@@ -169,10 +168,10 @@ def _assign_ivf(emb, target=_SD_TARGET):
 
 def _semdedup_ivf_lane(spark, sf_dir, target):
     emb = _t(spark, sf_dir, "embeddings")
-    # the assignment feeds both self-join sides + the verdict
-    # projection (the q_semdedup materialization finding: 18 exchanges
-    # → 6 without) — materialize once
-    assigned = _assign_ivf(emb, target).localCheckpoint()
+    assigned = materialize(
+        _assign_ivf(emb, target),
+        "IVF assignment: both self-join sides and the verdict",
+    )
 
     # stage 4: prune within the assigned sub-cluster (q_semdedup rule),
     # as the vectorized Arrow pair kernel — see similarity.semdedup_dups

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .operators.materialize import materialize
 from .registry import register
 from .tables import DSUM_SQL, _t, dsum
 
@@ -168,13 +169,11 @@ def bm25_parts(d, terms=_BM25_TERMS):
         "doc_id",
         F.explode(F.split(F.lower("text"), "[^a-z0-9]+")).alias("token"),
     ).filter("token != ''")
-    # tf is the shared exact base (r12 multi-scan sweep): dl/avgdl are
-    # its integer rollups and the term filter reads it twice — the old
-    # plan re-ran scan+tokenize+explode per table (4 corpus passes)
-    tf = (
-        toks.groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
+    # the old plan re-ran scan+tokenize+explode per table (4 corpus
+    # passes)
+    tf = materialize(
+        toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")),
+        "term frequencies: dl/avgdl roll up from them, the filter reads twice",
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     n_docs = d.select(F.count(F.lit(1)).alias("n_docs"))
@@ -751,23 +750,22 @@ def q_triangle_count(spark, sf_dir):
     constraint is what keeps the distributed join tree skew-bounded
     (every wedge is generated once, at its smallest vertex).
 
-    The edge table is localCheckpoint'd (r12 multi-scan rule): it is
-    two ints per edge while its derivation is a scan + distinct +
-    within-order self-join + distinct, and SIX consumers re-ran that
-    subtree (nodes ×2, e1/e2/e3, the edge count) — runtime exchange
-    reuse never fires across them."""
+    The edge table is materialized: it is two ints per edge while its
+    derivation is a scan + distinct + within-order self-join + distinct,
+    and SIX consumers re-ran that subtree (nodes ×2, e1/e2/e3, the edge
+    count) — runtime exchange reuse never fires across them."""
     li = _t(spark, sf_dir, "lineitem").filter("l_orderkey % 20 = 0")
     op = li.select("l_orderkey", "l_partkey").distinct()
     a = op.alias("a")
     b = op.alias("b")
-    edges = (
+    edges = materialize(
         a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))
         .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
         .select(
             F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "part co-occurrence edges: six consumers",
     )
     nodes = (
         edges.select(F.col("u").alias("x"))
@@ -828,36 +826,33 @@ def q_graph_bfs(spark, sf_dir):
     Iterative frontier expansion — each round is ONE distinct-join
     (frontier ⋈ edges, anti-join against settled nodes), the same
     broadcast-loop discipline as q_pagerank; rounds are bounded (3), and
-    the frontier is localCheckpoint'd so lineage stays flat.  Oracle:
+    the frontier is materialized so lineage stays flat.  Oracle:
     DuckDB recursive CTE with UNION dedup + MIN(hop).
     """
     li = _t(spark, sf_dir, "lineitem").filter("l_orderkey % 20 = 0")
     op = li.select("l_orderkey", "l_partkey").distinct()
     a, b = op.alias("a"), op.alias("b")
-    # half is checkpointed for the same reason as q_triangle_count's
-    # edge table: nodes + the 3 BFS rounds each re-ran the scan +
-    # self-join + distinct derivation of a two-int table
-    half = (
+    half = materialize(
         a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))
         .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "part co-occurrence edges: nodes and the three BFS rounds",
     )
     edges = half.unionAll(half.select(F.col("v").alias("u"), F.col("u").alias("v")))
     nodes = edges.select("u").distinct()
     seeds = nodes.filter("u % 500 = 0").select(F.col("u").alias("node"))
 
-    dist = seeds.withColumn("hop", F.lit(0)).localCheckpoint()
+    dist = materialize(seeds.withColumn("hop", F.lit(0)), "BFS seeds")
     frontier = dist.select("node")
     for h in (1, 2, 3):
-        nxt = (
+        nxt = materialize(
             frontier.join(edges, frontier.node == edges.u)
             .select(F.col("v").alias("node"))
             .distinct()
             .join(dist.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint()
+            .withColumn("hop", F.lit(h)),
+            f"BFS frontier, hop {h}",
         )
         if not nxt.take(1):
             break

@@ -510,7 +510,7 @@ def test_embedding_neardup_banded_bucket_join(spark, sf_dir):
     measured 6.0s at sf0.1, almost all codegen of a 4096-literal tree."""
     plan = _plan(QUERIES["q_embedding_neardup_banded"](spark, sf_dir))
     assert "CartesianProduct" not in plan
-    # signatures are localCheckpointed (computed ONCE for both self-join
+    # signatures are materialized (computed ONCE for both self-join
     # sides), so the final plan joins two scans of the checkpointed
     # table with an equi-join on the signature keys
     assert "BroadcastNestedLoopJoin" not in plan
