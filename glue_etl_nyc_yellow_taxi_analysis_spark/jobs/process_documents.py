@@ -60,7 +60,9 @@ _OUT_SCHEMA = T.StructType(
 
 def synth_mixed_documents(docs):
     """Mixed-format corpus from a documents table: doc_id % 4 → PDF /
-    DOCX / HTML page / Markdown page, all carrying the SAME doc text."""
+    DOCX / HTML page / Markdown page, all carrying the SAME doc text.
+    A doc its format cannot carry (a ValueError, e.g. non-Latin-1 text
+    in a PDF) gets a NULL payload."""
     from ..operators import docx as docx_mod
     from ..operators import html as html_mod
     from ..operators import markdown as md_mod
@@ -99,7 +101,7 @@ def synth_mixed_documents(docs):
             payload = synth_md(d, t).encode("utf-8")
         yield d, payload
 
-    return _row_stage(docs, ("doc_id", "text", "source"), schema, row)
+    return _row_stage(docs, ("doc_id", "text", "source"), schema, row, (ValueError,))
 
 
 def extract_documents(media):

@@ -22,8 +22,6 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -32,6 +30,7 @@ from .functions import peak_band_id
 from .operators import dedup, multimodal, sessionize, similarity, text
 from .operators.joins import anti_join, broadcast_dim_join, semi_join
 from .operators.transforms import dedup_exact
+from .paths import scratch
 from .plans import dims, star, warehouse
 from .registry import ORACLE, QUERIES, register  # noqa: F401  (ORACLE/QUERIES re-exported)
 from .sources.writers import write_partitioned_parquet
@@ -1429,7 +1428,7 @@ def q_csv_lookup(spark, sf_dir):
 
     from .plans.dims import dim_taxi_zone_lookup
 
-    d = tempfile.mkdtemp(prefix="sg_csv_")
+    d = scratch("sg_csv_")
     path = os.path.join(d, "taxi_zone_lookup.csv")
     with open(path, "w") as f:
         f.write("LocationID,Borough,Zone,service_zone\n")
@@ -1575,7 +1574,7 @@ def q_partitioned_write_prune(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("int")
     )
-    out = tempfile.mkdtemp(prefix="sg_prune_")
+    out = scratch("sg_prune_")
     write_partitioned_parquet(li, out, partition_by=["ship_year"])
     # explicit schema on the read-back (the catalog would supply it in
     # production): an EMPTY write leaves no files to infer from, which
@@ -1647,30 +1646,18 @@ def q_stream_ingest(spark, sf_dir):
     boundaries in SESSION-LOCAL time, so a half-hour-offset host tz would
     shift every window (all queries in this inventory are engineered to
     be tz-independent, so the pin is side-effect-free)."""
-    import os
-
-    from .streaming.ingest import ensure_event_time, stream_files, windowed_event_counts
+    from .streaming.ingest import (
+        drain,
+        ensure_event_time,
+        stream_table,
+        windowed_event_counts,
+    )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src_dir = tempfile.mkdtemp(prefix="sg_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = stream_files(spark, src_dir, raw_schema)
-    stream = ensure_event_time(stream)
-    agg = windowed_event_counts(stream.drop("__source_file"))
-    sink = "sg_stream_counts"
-    ckpt = tempfile.mkdtemp(prefix="sg_ckpt_")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    events = ensure_event_time(stream_table(spark, sf_dir, "events"))
+    agg = windowed_event_counts(events)
+    return drain(agg, "sg_stream_counts", "complete").select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n_events",

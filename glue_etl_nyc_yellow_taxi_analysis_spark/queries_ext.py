@@ -15,12 +15,11 @@ every output column is aliased identically on both sides.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import text
+from .paths import scratch
 from .registry import register
 from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
@@ -1050,35 +1049,22 @@ def q_stream_join(spark, sf_dir):
     aggregated to per-user pair counts.  Oracle-checked: the availableNow
     drain is a single micro-batch (no late data to drop), so the batch
     self-join replays it exactly."""
-    import os
-
-    from .streaming.ingest import ensure_event_time, interval_join_streams, stream_files
+    from .streaming.ingest import (
+        drain,
+        ensure_event_time,
+        interval_join_streams,
+        stream_table,
+    )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src_dir = tempfile.mkdtemp(prefix="sg_sjoin_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def one_side(event_type):
-        from pyspark.sql import types as T
-
-        s = stream_files(spark, src_dir, raw_schema)
-        s = ensure_event_time(s)
-        return s.drop("__source_file").filter(F.col("event_type") == event_type)
+        s = ensure_event_time(stream_table(spark, sf_dir, "events"))
+        return s.filter(F.col("event_type") == event_type)
 
     joined = interval_join_streams(one_side("click"), one_side("view"))
-    sink = "sg_stream_join"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_sjoin_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(sink)
+        drain(joined, "sg_stream_join")
         .groupBy("user_id")
         .agg(F.count("*").alias("n_pairs"))
     )
@@ -1110,7 +1096,7 @@ def q_jsonl_source(spark, sf_dir):
     extra pass at scale), aggregate.  Doubles survive the text roundtrip
     exactly (shortest-decimal representation)."""
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    out_dir = tempfile.mkdtemp(prefix="sg_jsonl_") + "/data"
+    out_dir = scratch("sg_jsonl_") + "/data"
     ev.coalesce(4).write.mode("overwrite").json(out_dir)
     back = spark.read.schema("event_id bigint, event_type string, value double").json(
         out_dir
@@ -1131,7 +1117,7 @@ def q_orc_roundtrip(spark, sf_dir):
     """ORC sink + source roundtrip (the second columnar format the engine
     speaks natively); same explicit-schema discipline as JSONL."""
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    out_dir = tempfile.mkdtemp(prefix="sg_orc_") + "/data"
+    out_dir = scratch("sg_orc_") + "/data"
     ev.coalesce(4).write.mode("overwrite").orc(out_dir)
     back = spark.read.orc(out_dir)
     return back.groupBy("event_type").agg(

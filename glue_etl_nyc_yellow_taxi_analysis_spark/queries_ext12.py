@@ -24,10 +24,9 @@ remaining layout levers open-source Spark adds.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
+from .paths import scratch
 from .registry import register
 from .tables import DSUM_SQL, _t, dsum
 
@@ -103,7 +102,7 @@ def q_zstd_roundtrip(spark, sf_dir):
     record for petabyte archives — better ratio than snappy at
     comparable decode throughput, and splittable the same way."""
     o = _t(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="sg_zstd_") + "/orders"
+    out = scratch("sg_zstd_") + "/orders"
     o.write.mode("overwrite").option("compression", "zstd").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("o_orderstatus").agg(
@@ -186,24 +185,24 @@ register(q_cached_multi_agg, SQL_CACHED_MULTI_AGG, bench=False)
 def q_stream_sessions(spark, sf_dir):
     """Gap-based sessionization THROUGH the streaming engine:
     session_window under a watermark, availableNow catch-up, append-mode
-    parquet sink.  The state store merges per-user sessions as events
+    memory sink.  The state store merges per-user sessions as events
     arrive and finalizes them when the watermark passes — bounded state
     keyed by (user, open session), the scale path for clickstream
     sessionization.  Batch-equivalence of per-user session counts vs
     q_session_window_native is asserted in tests, and the per-user session
     counts are oracle-checked (gap merging is pure event-time, tz-free)."""
+    import datetime as dt
     import os
 
     from .streaming.ingest import (
+        drain,
         ensure_event_time,
         session_window_counts,
         stream_files,
     )
 
-    import datetime as dt
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src_dir = tempfile.mkdtemp(prefix="sg_ssw_src_")
+    src_dir = scratch("sg_ssw_src_")
     os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/aa_events.parquet")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     raw_schema = raw.schema
@@ -258,25 +257,9 @@ def q_stream_sessions(spark, sf_dir):
             (1_900_000_000 + i, 1_900_000_000 + i),
         )
 
-    s = (
-        spark.readStream.format("parquet")
-        .schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(src_dir)
-    )
-    s = ensure_event_time(s)
-    sessions = session_window_counts(s)
-    out = tempfile.mkdtemp(prefix="sg_ssw_out_") + "/rows"
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_ssw_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    done = spark.read.parquet(out).filter("user_id >= 0")
+    s = stream_files(spark, src_dir, raw_schema, max_files_per_trigger=1)
+    sessions = session_window_counts(ensure_event_time(s))
+    done = drain(sessions, "sg_stream_sessions").filter("user_id >= 0")
     return done.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_sessions"),
         F.sum("n_events").cast("long").alias("n_events"),
@@ -323,17 +306,12 @@ def q_stream_static_join(spark, sf_dir):
     state: Spark broadcasts it into every micro-batch.  Batch twin
     equivalence is asserted in tests AND oracle-checked at the gate
     (session tz pinned to UTC so day windows match date_trunc)."""
-    import os
-
-    from .streaming.ingest import ensure_event_time, stream_files
+    from .streaming.ingest import drain, ensure_event_time, stream_table
 
     # F.window('1 day') aligns to SESSION-LOCAL midnight; pin UTC so the
     # day boundaries match the oracle's date_trunc under any host tz
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src_dir = tempfile.mkdtemp(prefix="sg_ssj_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     dim = spark.createDataFrame(
         [
@@ -346,8 +324,7 @@ def q_stream_static_join(spark, sf_dir):
         "event_type string, category string, weight int",
     )
 
-    s = stream_files(spark, src_dir, raw_schema).drop("__source_file")
-    s = ensure_event_time(s)
+    s = ensure_event_time(stream_table(spark, sf_dir, "events"))
     enriched = s.join(F.broadcast(dim), "event_type")
     agg = (
         enriched.withWatermark("ts", "2 hours")
@@ -363,17 +340,7 @@ def q_stream_static_join(spark, sf_dir):
             "sum_weight",
         )
     )
-    sink = "sg_stream_static_join"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_ssj_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(sink).groupBy("category").agg(
+    return drain(agg, "sg_stream_static_join", "complete").groupBy("category").agg(
         F.count(F.lit(1)).alias("n_windows"),
         F.sum("n_events").cast("long").alias("n_events"),
         F.sum("sum_weight").cast("long").alias("sum_weight"),
@@ -420,17 +387,17 @@ def q_stream_upsert_apply(spark, sf_dir):
     import os
 
     from .operators.merge import merge_upsert
-    from .streaming.ingest import run_ingest
+    from .streaming.ingest import drain, stream_files
 
     base_cols = ["o_orderkey", "o_orderstatus", "o_totalprice"]
     o = _t(spark, sf_dir, "orders").select(*base_cols)
 
-    snap_dir = tempfile.mkdtemp(prefix="sg_cdc_snap_") + "/orders"
+    snap_dir = scratch("sg_cdc_snap_") + "/orders"
     o.write.mode("overwrite").parquet(snap_dir)
 
     # three ordered change files: re-price every 13th order (+10),
     # cancel every 17th (status 'X'), insert clones of every 19th
-    src_dir = tempfile.mkdtemp(prefix="sg_cdc_src_")
+    src_dir = scratch("sg_cdc_src_")
     changes = [
         o.filter("o_orderkey % 13 = 0").withColumn(
             "o_totalprice", F.col("o_totalprice") + F.lit(10.0)
@@ -459,12 +426,8 @@ def q_stream_upsert_apply(spark, sf_dir):
     # semantics are last-writer-wins, so change batches must apply in
     # arrival order, never fused into one unioned update set (keys in
     # two change sets would collide inside a single merge)
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(spark.read.parquet(snap_dir).schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(f"{src_dir}/b*")
-    )
+    schema = spark.read.parquet(snap_dir).schema
+    stream = stream_files(spark, f"{src_dir}/b*", schema, max_files_per_trigger=1)
 
     def apply_batch(batch_df, batch_id):
         base = spark.read.parquet(snap_dir)
@@ -475,13 +438,7 @@ def q_stream_upsert_apply(spark, sf_dir):
         merged.write.mode("overwrite").parquet(tmp)
         spark.read.parquet(tmp).write.mode("overwrite").parquet(snap_dir)
 
-    q = run_ingest(
-        stream,
-        apply_batch,
-        checkpoint_dir=tempfile.mkdtemp(prefix="sg_cdc_ckpt_"),
-        available_now=True,
-    )
-    q.awaitTermination(180)
+    drain(stream, apply_batch)
     final = spark.read.parquet(snap_dir)
     return final.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),

@@ -11,10 +11,6 @@
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from .operators import text
@@ -118,10 +114,9 @@ def q_stream_quality_filter(spark, sf_dir):
     the batch SQL.  At scale this is the admission-control topology:
     score-on-arrival, keep-rate observability per source, no second
     pass over the corpus."""
-    src_dir = tempfile.mkdtemp(prefix="sg_qf_src_")
-    os.symlink(f"{sf_dir}/documents.parquet", f"{src_dir}/documents.parquet")
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(src_dir)
+    from .streaming.ingest import drain, stream_table
+
+    stream = stream_table(spark, sf_dir, "documents")
 
     toks = text.tokens("text")
     sw = F.array(*[F.lit(s) for s in _QF_STOPWORDS])
@@ -149,24 +144,7 @@ def q_stream_quality_filter(spark, sf_dir):
         F.sum("keep").alias("n_keep"),
         F.sum("logit_centi").alias("sum_logit_centi"),
     )
-    sink = "sg_stream_quality"
-    ckpt = tempfile.mkdtemp(prefix="sg_qf_ckpt_")
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # the drained memory sink survives; the per-invocation scratch
-        # dirs must not (bench/gate runs invoke this repeatedly)
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(sink)
+    return drain(agg, "sg_stream_quality", "complete")
 
 
 _QF_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")

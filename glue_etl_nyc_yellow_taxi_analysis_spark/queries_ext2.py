@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .paths import scratch
 from .registry import register
 from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
@@ -802,32 +803,15 @@ def q_stream_dedup(spark, sf_dir):
     at the row level AND oracle-checked at the driver gate (the distinct
     count is drain-order independent).
     """
-    import os
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from .streaming.ingest import dedup_stream, ensure_event_time, stream_files
+    from .streaming.ingest import dedup_stream, drain, ensure_event_time, stream_table
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src_dir = tempfile.mkdtemp(prefix="sg_sdedup_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    s = stream_files(spark, src_dir, raw_schema).drop("__source_file")
-    s = ensure_event_time(s)
+    s = ensure_event_time(stream_table(spark, sf_dir, "events"))
     deduped = dedup_stream(
         s, ["user_id", "event_type"], ts_col="ts", watermark="1 hour"
     )
-    out = tempfile.mkdtemp(prefix="sg_sdedup_out_") + "/rows"
-    q = (
-        deduped.writeStream.foreachBatch(
-            lambda b, _id: b.write.mode("append").parquet(out)
-        )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_sdedup_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = scratch("sg_sdedup_out_") + "/rows"
+    drain(deduped, lambda b, _id: b.write.mode("append").parquet(out))
     return (
         spark.read.parquet(out)
         .groupBy("event_type")

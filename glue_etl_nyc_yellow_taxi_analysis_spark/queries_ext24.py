@@ -13,10 +13,6 @@ streaming path shares that query's DuckDB oracle verbatim.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from .operators import dedup
@@ -38,7 +34,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
     (an in-stream distinct would need state for exactly-once no
     benefit).  The drained summary is byte-identical to
     q_dedup_incremental, hence shares its oracle verbatim."""
-    from .streaming.ingest import stream_files
+    from .streaming.ingest import drain, stream_table
 
     docs = _t(spark, sf_dir, "documents")
     base_sigs = dedup.minhash_signatures(
@@ -53,14 +49,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
         {"id": "base_id", "shingles": "sh_b"}
     )
 
-    src_dir = tempfile.mkdtemp(prefix="sg_sdi_src_")
-    os.symlink(f"{sf_dir}/documents.parquet", f"{src_dir}/documents.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    s_docs = (
-        stream_files(spark, src_dir, raw_schema)
-        .drop("__source_file")
-        .filter("doc_id % 7 = 0")
-    )
+    s_docs = stream_table(spark, sf_dir, "documents").filter("doc_id % 7 = 0")
     s_sigs = dedup.minhash_signatures(
         s_docs, num_hashes=_MH_K, shingle_n=_MH_N, lane="md5",
         spread_input=False,
@@ -86,30 +75,9 @@ def q_stream_dedup_incremental(spark, sf_dir):
             F.expr("inter * 1000000 div uni").alias("jacc_ppm"),
         )
     )
-    sink = "sg_stream_dedup_incremental"
-    ckpt_dir = tempfile.mkdtemp(prefix="sg_sdi_ckpt_")
-    try:
-        q = (
-            ver.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # awaitTermination(timeout) returns False on timeout — a partial
-        # drain would silently under-report duplicates, so fall back to an
-        # unbounded wait rather than read an incomplete sink.
-        if not q.awaitTermination(120):
-            q.awaitTermination()
-    finally:
-        # memory-sink rows live in the driver after the drain; the source
-        # symlink dir and checkpoint are per-invocation scratch (leaked
-        # across bench/oracle reruns otherwise).
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-
-    drained = spark.table(sink).dropDuplicates(["new_id", "base_id"])
+    drained = drain(ver, "sg_stream_dedup_incremental").dropDuplicates(
+        ["new_id", "base_id"]
+    )
     summary = drained.groupBy("new_id").agg(
         F.min("base_id").alias("match_id"),
         F.max("jacc_ppm").alias("best_jacc_ppm"),

@@ -466,11 +466,7 @@ def q_stream_bloom_admission(spark, sf_dir):
     admission control exists to catch), guaranteeing both verdict paths
     are exercised.  This is jobs/corpus_stats.py's persisted index in
     its operational role."""
-    import os
-    import shutil
-    import tempfile
-
-    from .streaming.ingest import stream_files
+    from .streaming.ingest import drain, stream_table
 
     docs = _t(spark, sf_dir, "documents")
     base = (
@@ -480,12 +476,8 @@ def q_stream_bloom_admission(spark, sf_dir):
     )
     bloom = sketches.bloom_build(base, "fp", _BLOOM_M, _BLOOM_K)
 
-    src_dir = tempfile.mkdtemp(prefix="sg_sba_src_")
-    os.symlink(f"{sf_dir}/documents.parquet", f"{src_dir}/documents.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     s_fp = (
-        stream_files(spark, src_dir, raw_schema)
-        .drop("__source_file")
+        stream_table(spark, sf_dir, "documents")
         .filter("doc_id % 3 = 0")
         .select(
             "doc_id", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fp")
@@ -502,23 +494,7 @@ def q_stream_bloom_admission(spark, sf_dir):
             "truly_seen"
         ),
     )
-    sink = "sg_stream_bloom_admission"
-    ckpt_dir = tempfile.mkdtemp(prefix="sg_sba_ckpt_")
-    try:
-        q = (
-            ver.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return spark.table(sink)
+    return drain(ver, "sg_stream_bloom_admission")
 
 
 _FP_EXPR = "md5(COALESCE(text, ''))"

@@ -53,12 +53,11 @@ two-phase index already pays.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from .operators import indexing, layout, sketches, text
 from .operators.materialize import materialize
+from .paths import scratch
 from .registry import register
 from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
@@ -265,7 +264,7 @@ def q_zonemap_prune(spark, sf_dir):
     manifest-pruning move of Iceberg/Delta: the footer walk is one
     metadata entry per file, never a data read."""
     orders = _t(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="sg_zonemap_") + "/orders"
+    out = scratch("sg_zonemap_") + "/orders"
     (
         orders.repartitionByRange(_ZM_FILES, "o_totalprice")
         .write.mode("overwrite")

@@ -20,6 +20,7 @@ reference's SQL-over-tables surface; SURVEY §3.3).
 
 from __future__ import annotations
 
+from .paths import scratch
 from .queries_ext import SQL_DOC_CHUNK
 from .registry import register, sql_query
 from .tables import TOKS_SQL
@@ -540,14 +541,12 @@ def q_xml_roundtrip(spark, sf_dir):
     the config/feed interchange format; rowTag framing, explicit schema
     on read-back like the JSONL/ORC twins).  XML stays a small-dim
     format: row-oriented, no pushdown — never the fact path."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from .tables import _t
 
     n = _t(spark, sf_dir, "nation")
-    out_dir = tempfile.mkdtemp(prefix="sg_xml_") + "/data"
+    out_dir = scratch("sg_xml_") + "/data"
     n.coalesce(1).write.mode("overwrite").format("xml").option("rowTag", "nation").save(out_dir)
     back = (
         spark.read.format("xml")

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import multimodal
+from .paths import scratch
 from .registry import register
 from .tables import _t
 
@@ -199,9 +200,7 @@ def q_stream_png_ingest(spark, sf_dir):
     work, zero shuffle, payload bytes never leave the decoding
     executor; the fixture shard write is an executor-side Spark write,
     not a driver loop."""
-    import tempfile
-
-    from .streaming.ingest import stream_files
+    from .streaming.ingest import drain, stream_files
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # content-sized source files (the r11 stream-source rule: file
@@ -214,27 +213,16 @@ def q_stream_png_ingest(spark, sf_dir):
     # files made each micro-batch one ~1.5 s single-task stage — the
     # per-file budget is per-doc codec cost, not a row-count convention
     n_files = max(2, -(-d.count() // 500))
-    src_dir = tempfile.mkdtemp(prefix="sg_png_src_")
+    src_dir = scratch("sg_png_src_")
     d.repartition(n_files).write.mode("overwrite").parquet(src_dir)
 
     stream = stream_files(
         spark, src_dir, d.schema, max_files_per_trigger=max(1, n_files // 2)
-    ).drop("__source_file")
+    )
     decoded = multimodal.decode_png(
         multimodal.documents_as_png(stream, width=_PW, interlace_every=3)
     )
-    sink = "sg_stream_png_ingest"
-    ckpt = tempfile.mkdtemp(prefix="sg_png_ckpt_")
-    q = (
-        decoded.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(decoded, "sg_stream_png_ingest")
 
 
 register(q_stream_png_ingest, SQL_PNG_DECODE)

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from .operators import pq
 from .operators.materialize import materialize
 from .operators.similarity import dot as _dot  # noqa: F401 (parity import)
+from .paths import scratch
 from .registry import register
 from .tables import _t
 
@@ -673,9 +674,7 @@ def q_stream_ann_enrich(spark, sf_dir):
     q_pq_index_persist's batch output row for row — this lane shares
     that oracle VERBATIM (the q_stream_png_ingest convention),
     extending stream/batch equivalence to the vector-search stack."""
-    import tempfile
-
-    from .streaming.ingest import run_ingest, stream_files
+    from .streaming.ingest import drain, stream_files
 
     emb = _t(spark, sf_dir, "embeddings")
     base = emb.filter(_PQI_BASE)
@@ -699,19 +698,17 @@ def q_stream_ann_enrich(spark, sf_dir):
         .limit(_PQI_BATCH)
         .select("vec_id", "embedding")
     )
-    src = tempfile.mkdtemp(prefix="sg_annstream_src_")
+    src = scratch("sg_annstream_src_")
     incoming.repartition(2).write.mode("overwrite").parquet(src)
 
-    out = tempfile.mkdtemp(prefix="sg_annstream_out_") + "/hits"
+    out = scratch("sg_annstream_out_") + "/hits"
     # schema template so an EMPTY arrival backlog still reads back as
     # zero rows instead of failing parquet schema inference
     spark.createDataFrame(
         [], "query_id bigint, vec_id bigint, adc_dist double, rank int"
     ).write.mode("overwrite").parquet(out)
 
-    stream = stream_files(
-        spark, src, incoming.schema, max_files_per_trigger=1
-    ).drop("__source_file")
+    stream = stream_files(spark, src, incoming.schema, max_files_per_trigger=1)
 
     def probe(batch_df, _batch_id):
         q = batch_df.select(F.col("vec_id").alias("query_id"), "embedding")
@@ -719,9 +716,7 @@ def q_stream_ann_enrich(spark, sf_dir):
             emb, q, cb, k=_PQI_TOPK, m=_PQ_M, codes=codes
         ).write.mode("append").parquet(out)
 
-    run_ingest(
-        stream, probe, checkpoint_dir=tempfile.mkdtemp(prefix="sg_annstream_ck_")
-    ).awaitTermination()
+    drain(stream, probe)
     return spark.read.parquet(out)
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from .operators import multimodal
 from .operators.materialize import materialize
+from .paths import scratch
 from .registry import register
 from .tables import _t
 
@@ -258,9 +259,7 @@ def q_stream_audio_fingerprint(spark, sf_dir):
     extending the stream/batch-equivalence family from codecs (PNG) to
     the audio DSP path.  Scale posture: per-batch linear kernel work,
     zero shuffle; payloads never leave the decoding executor."""
-    import tempfile
-
-    from .streaming.ingest import stream_files
+    from .streaming.ingest import drain, stream_files
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # content-sized source files (the r11 stream-source rule: file
@@ -268,29 +267,18 @@ def q_stream_audio_fingerprint(spark, sf_dir):
     # ~1 task per micro-batch while per-doc work grew with the corpus
     # — q_stream_mp3_ingest measured 7.6x at 10x rows before the fix)
     n_files = max(2, -(-d.count() // 2500))
-    src_dir = tempfile.mkdtemp(prefix="sg_afp_src_")
+    src_dir = scratch("sg_afp_src_")
     d.repartition(n_files).write.mode("overwrite").parquet(src_dir)
 
     stream = stream_files(
         spark, src_dir, d.schema, max_files_per_trigger=max(1, n_files // 2)
-    ).drop("__source_file")
+    )
     fp = multimodal.audio_fingerprint(
         multimodal.documents_as_wav(stream),
         frame_samples=_AF_FRAME,
         bands=_AF_BANDS,
     )
-    sink = "sg_stream_audio_fingerprint"
-    ckpt = tempfile.mkdtemp(prefix="sg_afp_ckpt_")
-    q = (
-        fp.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(fp, "sg_stream_audio_fingerprint")
 
 
 register(q_stream_audio_fingerprint, SQL_AUDIO_FINGERPRINT)

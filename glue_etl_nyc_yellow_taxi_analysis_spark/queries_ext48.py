@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 from .operators import html as H
 from .operators import multimodal, warc
 from .operators.materialize import materialize
+from .paths import scratch
 from .registry import register
 from .tables import _t
 
@@ -237,9 +238,7 @@ def q_stream_warc_ingest(spark, sf_dir):
     equivalence through the whole WARC→HTML→text chain).  Scale
     posture: per-batch linear walks, zero shuffle, shard payloads never
     leave the walking executor."""
-    import tempfile
-
-    from .streaming.ingest import stream_files
+    from .streaming.ingest import drain, stream_files
 
     base = _t(spark, sf_dir, "documents")
     n_shards = max(2, _n_shards(base))  # content-sized, floor 2
@@ -255,7 +254,7 @@ def q_stream_warc_ingest(spark, sf_dir):
     # content-sized source files (the r11 stream-source rule): a file
     # with k shard-rows walks k shards in ONE task, so files track the
     # shard count; half per trigger keeps >=2 micro-batches
-    src_dir = tempfile.mkdtemp(prefix="sg_warc_src_")
+    src_dir = scratch("sg_warc_src_")
     n_files = max(2, n_shards)
     shards.repartition(n_files).write.mode("overwrite").parquet(src_dir)
 
@@ -279,7 +278,7 @@ def q_stream_warc_ingest(spark, sf_dir):
         src_dir,
         multimodal._SHARD_SCHEMA,
         max_files_per_trigger=max(1, n_files // 2),
-    ).drop("__source_file")
+    )
     # fail-hard (no errors tuple): the stream carries no hostile shard
     pages = multimodal._row_stage(stream, ("payload",), pages_schema, walk)
     txt = H.extract_text_col(F.col("page"))
@@ -290,18 +289,7 @@ def q_stream_warc_ingest(spark, sf_dir):
         F.size(F.split(txt, " ")).cast("bigint").alias("n_tokens"),
         F.md5(txt).alias("text_md5"),
     )
-    sink = "sg_stream_warc_ingest"
-    ckpt = tempfile.mkdtemp(prefix="sg_warc_ckpt_")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(out, "sg_stream_warc_ingest")
 
 
 register(q_stream_warc_ingest, SQL_HTML_EXTRACT)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .paths import scratch
 from .registry import register
 from .tables import _t
 
@@ -43,10 +44,8 @@ def q_text_roundtrip(spark, sf_dir):
     Scale shape: text write/read is narrow (no shuffle); the parse is
     whole-stage codegen (split + element_at + cast, no UDF).
     """
-    import tempfile
-
     ev = _t(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="sg_text_rt_") + "/lines"
+    out = scratch("sg_text_rt_") + "/lines"
     # NULL fields serialize as EXPLICIT empty strings: concat_ws SKIPS
     # nulls, which would shift the pipe positions so the parse reads
     # 'view' as a long (ANSI crash) where the oracle just aggregates the
@@ -95,10 +94,8 @@ def q_csv_roundtrip(spark, sf_dir):
     CSV with header, back in with an explicit schema, then per-source text
     integrity aggregates (recomputed char lengths must survive quoting).
     """
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="sg_csv_rt_") + "/docs"
+    out = scratch("sg_csv_rt_") + "/docs"
     docs.select("doc_id", "text", "lang", "source").write.mode(
         "overwrite"
     ).option("header", True).option("quoteAll", True).csv(out)
@@ -320,33 +317,23 @@ def q_stream_stateful(spark, sf_dir):
     Rows-only: streaming execution + Python state has no SQL oracle; the
     batch twin equality is asserted in tests/test_bucketing_stateful.py.
     """
-    import os
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from .streaming.ingest import ensure_event_time, stateful_user_totals, stream_files
+    from .streaming.ingest import (
+        drain,
+        ensure_event_time,
+        stateful_user_totals,
+        stream_table,
+    )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src_dir = tempfile.mkdtemp(prefix="sg_sstate_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    s = stream_files(spark, src_dir, raw_schema).drop("__source_file")
-    s = ensure_event_time(s)
-    totals = stateful_user_totals(s)
-    out = tempfile.mkdtemp(prefix="sg_sstate_out_") + "/rows"
-    q = (
-        totals.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda b, bid: b.withColumn("batch_id", F.lit(bid))
-            .write.mode("append")
-            .parquet(out)
-        )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_sstate_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    events = ensure_event_time(stream_table(spark, sf_dir, "events"))
+    out = scratch("sg_sstate_out_") + "/rows"
+    drain(
+        stateful_user_totals(events),
+        lambda b, bid: b.withColumn("batch_id", F.lit(bid))
+        .write.mode("append")
+        .parquet(out),
+        "update",
     )
-    q.awaitTermination()
     w = Window.partitionBy("user_id").orderBy(F.desc("batch_id"))
     return (
         spark.read.parquet(out)

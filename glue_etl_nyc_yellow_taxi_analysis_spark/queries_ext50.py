@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import multimodal, pkzip, tar
+from .paths import scratch
 from .queries_ext47 import SQL_TAR_SHARD_ROUNDTRIP, _member_shard_lane
 from .registry import register
 from .tables import _t
@@ -217,7 +218,8 @@ _PKG_SCHEMA = T.StructType(
 def _package_stage(docs, words_per_unit, make):
     """(doc_id, text) → (doc_id, payload): each doc's text cut into
     ``words_per_unit``-word units (at least one), packaged by
-    ``make(doc_id, units)``."""
+    ``make(doc_id, units)``.  A ValueError (text the format cannot
+    carry) yields a NULL payload."""
     n = words_per_unit
 
     def row(d, t):
@@ -225,13 +227,16 @@ def _package_stage(docs, words_per_unit, make):
         units = [" ".join(words[i : i + n]) for i in range(0, len(words), n)]
         yield int(d), make(int(d), units)
 
-    return multimodal._row_stage(docs, ("doc_id", "text"), _PKG_SCHEMA, row)
+    return multimodal._row_stage(
+        docs, ("doc_id", "text"), _PKG_SCHEMA, row, (ValueError,)
+    )
 
 
 def _text_stage(pkgs, extract, unit_col):
     """(doc_id, payload) → (doc_id, <unit_col>, n_chars, text_md5):
     ``extract(payload)`` recovers a package's text units, which rejoin
-    with single spaces; a ValueError yields one NULL marker row."""
+    with single spaces; a NULL payload or a ValueError yields one NULL
+    marker row."""
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType(), True),
@@ -243,8 +248,10 @@ def _text_stage(pkgs, extract, unit_col):
 
     def row(d, payload):
         try:
-            units = extract(bytes(payload))
+            units = None if payload is None else extract(bytes(payload))
         except ValueError:
+            units = None
+        if units is None:
             yield d, None, None, None
             return
         text = " ".join(units)
@@ -676,12 +683,10 @@ def q_jsonlgz_source(spark, sf_dir):
     table.  Scale shape: gzip is splittable-by-FILE, not by block —
     at 100 TB the file count is the parallelism (the same
     size-shards-by-content rule as the WARC lanes)."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    out_dir = tempfile.mkdtemp(prefix="sg_jsonlgz_") + "/data"
+    out_dir = scratch("sg_jsonlgz_") + "/data"
     docs.coalesce(4).write.mode("overwrite").option("compression", "gzip").json(
         out_dir
     )

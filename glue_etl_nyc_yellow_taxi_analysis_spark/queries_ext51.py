@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import mp3, multimodal
+from .paths import scratch
 from .registry import register
 from .tables import _t
 
@@ -94,9 +95,7 @@ def q_stream_mp3_ingest(spark, sf_dir):
     row for row, so this lane shares its oracle VERBATIM.  Scale
     posture: per-batch linear demux work, zero shuffle; payload bytes
     never leave the walking executor."""
-    import tempfile
-
-    from .streaming.ingest import stream_files
+    from .streaming.ingest import drain, stream_files
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # content-sized source files (the ext48 shard rule: file count is
@@ -105,25 +104,13 @@ def q_stream_mp3_ingest(spark, sf_dir):
     # micro-batch ran ~1 task while per-doc demux work grew 10×);
     # half the files per trigger keeps ≥2 micro-batches at every SF
     n_files = max(2, -(-d.count() // 2500))
-    src_dir = tempfile.mkdtemp(prefix="sg_mp3_src_")
+    src_dir = scratch("sg_mp3_src_")
     d.repartition(n_files).write.mode("overwrite").parquet(src_dir)
 
     stream = stream_files(
         spark, src_dir, d.schema, max_files_per_trigger=max(1, n_files // 2)
-    ).drop("__source_file")
-    walked = _framewalk(stream)
-    sink = "sg_stream_mp3_ingest"
-    ckpt = tempfile.mkdtemp(prefix="sg_mp3_ckpt_")
-    q = (
-        walked.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(_framewalk(stream), "sg_stream_mp3_ingest")
 
 
 SQL_MP3_FRAMEWALK = f"""
@@ -239,13 +226,13 @@ def q_stream_crawl_pacing(spark, sf_dir):
     Scale shape: state is one integer per host (|hosts|-bounded store);
     each micro-batch shuffles only its own arrivals by host."""
     import os
-    import tempfile
     import time
 
     from pyspark.sql import types as T2
 
     from .operators import robots as R
     from .queries_ext48 import _robots_frontier
+    from .streaming.ingest import drain, stream_files
 
     frontier, robots = _robots_frontier(spark, sf_dir, materialize_hosts=True)
     rules = R.parse_robots(robots)
@@ -265,8 +252,8 @@ def q_stream_crawl_pacing(spark, sf_dir):
     # measured the per-wave loop re-running the whole robots gate three
     # times — gate + distinct + pacing join per wave); the frontier
     # pipeline itself runs exactly once.
-    src_dir = tempfile.mkdtemp(prefix="sg_pacing_src_")
-    pdir = tempfile.mkdtemp(prefix="sg_pacing_part_")
+    src_dir = scratch("sg_pacing_src_")
+    pdir = scratch("sg_pacing_part_")
     (
         allowed.withColumn("wave", (F.length("url") % 3).cast("int"))
         .coalesce(1)
@@ -316,16 +303,10 @@ def q_stream_crawl_pacing(spark, sf_dir):
             base += n
         state.update((base,))
 
-    stream = (
-        spark.readStream.schema(allowed.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    stream = stream_files(spark, src_dir, allowed.schema, max_files_per_trigger=1)
     paced = stream.groupBy("host").applyInPandasWithState(
         grant, out_schema, state_schema, "append", "NoTimeout"
     )
-    sink = "crawl_pacing_" + os.path.basename(src_dir).split("_")[-1]
-    ckpt = tempfile.mkdtemp(prefix="sg_pacing_ckpt_")
     # size the state store by KEY CARDINALITY, not the session's batch
     # shuffle width: state is one integer per host, so a partition per
     # ~64 hosts is plenty — with the session default every micro-batch
@@ -345,18 +326,9 @@ def q_stream_crawl_pacing(spark, sf_dir):
     n_state = max(1, min(shuffle_n, -(-n_hosts // 64)))
     spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
     try:
-        q = (
-            paced.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return drain(paced, "sg_stream_crawl_pacing")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_conf)
-    return spark.table(sink)
 
 
 register(

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .paths import scratch
 from .registry import register
 from .tables import _t
 
@@ -174,10 +175,8 @@ def q_schema_evolution(spark, sf_dir):
     Oracle recomputes the same aggregate from the source table, so the
     hash proves the evolved read is lossless.
     """
-    import tempfile
-
     ev = _t(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="sg_evo_") + "/t"
+    out = scratch("sg_evo_") + "/t"
     # the v1/v2 split is EXHAUSTIVE: a NULL event_type fails both IN and
     # NOT IN (3-valued logic) and would silently vanish from the merged
     # table while the oracle keeps its NULL group (review r4)

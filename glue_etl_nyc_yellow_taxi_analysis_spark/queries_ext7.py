@@ -24,12 +24,12 @@ earlier batches don't cover:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from .operators.indexing import global_index
 from .operators.skyline import skyline_2d
+from .paths import scratch
 from .registry import register
 from .tables import _t
 
@@ -243,7 +243,7 @@ def q_csv_malformed(spark, sf_dir):
     raw text in the corrupt-record column with parseable fields kept,
     empty cells are legal NULLs — nothing is dropped.  The oracle is the
     semantics VALUES table this contract pins."""
-    d = tempfile.mkdtemp(prefix="sg_csv_mal_")
+    d = scratch("sg_csv_mal_")
     path = os.path.join(d, "m.csv")
     with open(path, "w") as f:
         f.write(_CSV_RAW)

@@ -44,6 +44,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators.materialize import materialize
+from .paths import scratch
 from .registry import register
 from .tables import DSUM_SQL, _t, dsum
 
@@ -620,10 +621,9 @@ def q_binaryfile_source(spark, sf_dir):
     binaryFile gives distributed file listing + content loading with no
     Python in the read path."""
     import os
-    import tempfile
 
     d = _t(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="sg_binsrc_")
+    out = scratch("sg_binsrc_")
 
     def _write_partition(rows):  # closure: cloudpickled by value
         for r in rows:

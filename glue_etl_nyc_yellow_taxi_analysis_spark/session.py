@@ -10,13 +10,12 @@ Python exchange, UTC session time so results are environment-independent.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+from .paths import scratch
 
 _PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
 _shipped_to = None  # the SparkContext the package zip was added to
@@ -31,9 +30,7 @@ def _ship_package(sc) -> None:
     global _shipped_to
     if _shipped_to is sc:
         return
-    tmp = tempfile.mkdtemp(prefix="sg_pyfiles_")
-    atexit.register(shutil.rmtree, tmp, True)
-    path = os.path.join(tmp, f"{os.path.basename(_PACKAGE_DIR)}.zip")
+    path = os.path.join(scratch("sg_pyfiles_"), f"{os.path.basename(_PACKAGE_DIR)}.zip")
     parent = os.path.dirname(_PACKAGE_DIR)
     with zipfile.ZipFile(path, "w") as zf:
         for root, _, files in os.walk(_PACKAGE_DIR):

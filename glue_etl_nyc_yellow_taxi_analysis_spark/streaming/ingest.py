@@ -8,15 +8,30 @@ micro-batches; ``foreachBatch`` runs the star build per batch;
 ``trigger(availableNow=True)`` gives catch-up-then-stop batch semantics.
 Exactly-once bookkeeping comes from the checkpoint dir (replaces Glue job
 bookmarks).
+
+The drain rule: every query lane drains its stream through ``drain``
+and nowhere else.  ``drain`` starts the query with the availableNow
+trigger, so it processes the backlog present at start and stops; waits
+for it without a timeout, so a failed batch raises instead of leaving a
+partial sink to be read; and gives it a checkpoint dir of its own, which
+it removes once the query ends, failed or not.  The lane's other scratch
+(source files, foreachBatch output) comes from ``paths.scratch`` and is
+removed when the interpreter exits, since the lane's result reads it
+lazily.  ``monthly_star_ingest`` is the one query with a caller-owned
+checkpoint: it is resumable, so the caller keeps the dir and the query.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..paths import scratch
 
 
 def ensure_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -55,38 +70,49 @@ def stream_files(
     spark: SparkSession,
     source_dir: str,
     schema: T.StructType,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream: one micro-batch per arriving file set.
-
-    ``input_file_name`` travels with the rows so per-file parameters (the
-    year/month the Lambda used to regex out of the S3 key) stay derivable
-    via ``paths.year_month_from_path``.  ``max_files_per_trigger`` paces
-    backlog drain (and lets tests exercise multi-batch recovery).
-    """
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", True)
+    """Parquet file-source stream: one micro-batch per arriving file set.
+    ``max_files_per_trigger`` paces backlog drain (and lets tests exercise
+    multi-batch recovery)."""
+    reader = spark.readStream.format("parquet").schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(source_dir).withColumn("__source_file", F.input_file_name())
+    return reader.load(source_dir)
 
 
-def run_ingest(
+def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream over one table file of ``sf_dir``: the file is
+    linked into a fresh scratch dir, so its whole backlog is that file."""
+    src = f"{sf_dir}/{table}.parquet"
+    src_dir = scratch(f"sg_{table}_stream_")
+    os.symlink(src, f"{src_dir}/{table}.parquet")
+    return stream_files(spark, src_dir, spark.read.parquet(src).schema)
+
+
+def drain(
     stream: DataFrame,
-    process_batch: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """foreachBatch ingest loop (micro-batch == the reference's 'one Lambda
-    invocation'); availableNow processes the backlog then stops."""
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    sink: str | Callable[[DataFrame, int], None],
+    mode: str = "append",
+) -> DataFrame | None:
+    """Run ``stream`` to the end of its backlog (see the module docstring).
+    ``sink`` is a memory-table name, whose table is returned, or a
+    ``foreachBatch(batch_df, batch_id)`` callable.  A memory table holds
+    its rows in the driver until a drain under the same name replaces
+    it, so each lane drains into one fixed name."""
+    writer = stream.writeStream.outputMode(mode)
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format("memory").queryName(sink)
+    ckpt = scratch("sg_ckpt_")
+    try:
+        writer.option("checkpointLocation", ckpt).trigger(
+            availableNow=True
+        ).start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return None if callable(sink) else stream.sparkSession.table(sink)
 
 
 def monthly_star_ingest(
@@ -95,7 +121,6 @@ def monthly_star_ingest(
     database: str,
     schema: T.StructType,
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
     on_file=None,
 ):
@@ -103,7 +128,8 @@ def monthly_star_ingest(
     files → star fact build → partitioned catalog append, one micro-batch at
     a time.  This is the whole Lambda + EventBridge + Glue-job chain
     (lambda-process-s3-raw-nyc-files/lambda_function.py:8-22) as ~20 lines
-    of Structured Streaming.
+    of Structured Streaming.  Returns the started query; the caller owns
+    ``checkpoint_dir``, so a restart resumes where the last run stopped.
 
     Each batch may contain several monthly files; the per-file (year, month)
     the Lambda regexed out of the S3 key is derived the same way from
@@ -138,8 +164,13 @@ def monthly_star_ingest(
 
     stream = stream_files(
         spark, source_dir, schema, max_files_per_trigger=max_files_per_trigger
+    ).withColumn("__source_file", F.input_file_name())
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    return run_ingest(stream, process_batch, checkpoint_dir, available_now)
 
 
 def stateful_user_totals(

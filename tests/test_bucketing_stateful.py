@@ -84,7 +84,7 @@ def test_stateful_totals_accumulate_across_batches(spark):
             for r in batch.collect():
                 collected[r.user_id] = (r.n_events, r.total_value)
 
-        stream = stream_files(spark, src, schema).drop("__source_file")
+        stream = stream_files(spark, src, schema)
         out = stateful_user_totals(stream)
         q = (
             out.writeStream.outputMode("update")

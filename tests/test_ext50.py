@@ -99,6 +99,44 @@ def test_pdf_lane_fail_soft_and_no_shuffle(spark, sf_dir):
         assert r["n_chars"] == len(docs[r["doc_id"]] or "")
 
 
+def test_pdf_build_fails_soft_on_text_the_codec_cannot_carry(spark):
+    """A document the Latin-1 subset PDF cannot carry ("€") yields the
+    NULL marker row in q_pdf_extract's stages and a NULL payload in the
+    job's mixed-format synth; the ASCII documents around it are
+    unaffected."""
+    import hashlib
+
+    from glue_etl_nyc_yellow_taxi_analysis_spark.jobs.process_documents import (
+        extract_documents,
+        synth_mixed_documents,
+    )
+    from glue_etl_nyc_yellow_taxi_analysis_spark.operators import pdf
+    from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext50 import (
+        _pdf_build,
+        _text_stage,
+    )
+
+    texts = {d: f"plain ascii words for doc {d}" for d in range(9)}
+    texts[1] = texts[8] = "costs 5 € today"
+    docs = spark.createDataFrame(
+        [(d, t, "web") for d, t in texts.items()],
+        "doc_id long, text string, source string",
+    )
+    rows = {
+        r["doc_id"]: tuple(r)
+        for r in _text_stage(_pdf_build(docs), pdf.parse_pdf, "n_pages").collect()
+    }
+    for d, t in texts.items():
+        want = (d, 1, len(t), hashlib.md5(t.encode()).hexdigest())
+        assert rows[d] == ((d, None, None, None) if "€" in t else want)
+
+    extracted = extract_documents(synth_mixed_documents(docs)).collect()
+    got = {r["doc_id"]: (r["kind"], r["text"]) for r in extracted}
+    assert got[8] == ("unknown", None)  # the PDF synth could not carry it
+    assert got[4] == ("pdf", texts[4])
+    assert got[1] == ("docx", texts[1])
+
+
 def test_markdown_extraction_semantics(spark):
     """Row-level pins: fenced code and inline code must not leak, the
     image is dropped, the link keeps its TEXT, markers/emphasis strip,

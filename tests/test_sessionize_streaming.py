@@ -67,7 +67,7 @@ def test_streaming_matches_batch(spark, sf_dir):
     os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     stream = stream_files(spark, src, raw.schema)
     stream = _fix_ts(stream)
-    agg = windowed_event_counts(stream.drop("__source_file"))
+    agg = windowed_event_counts(stream)
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
@@ -109,7 +109,7 @@ def test_streaming_sliding_matches_batch(spark, sf_dir):
     stream = stream_files(spark, src, raw.schema)
     stream = _fix_ts(stream)
     agg = windowed_event_counts(
-        stream.drop("__source_file"),
+        stream,
         window_duration="10 minutes",
         slide_duration="5 minutes",
     )
@@ -160,7 +160,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     def side(et):
         s = stream_files(spark, src, raw.schema)
         s = _fix_ts(s)
-        return s.drop("__source_file").filter(F.col("event_type") == et)
+        return s.filter(F.col("event_type") == et)
 
     joined = interval_join_streams(side("click"), side("view"))
     q = (

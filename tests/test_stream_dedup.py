@@ -32,7 +32,7 @@ def test_dedup_stream_suppresses_in_and_cross_batch_dups(spark):
 
     def run_once():
         schema = spark.read.parquet(f"{src}/b1.parquet").schema
-        s = stream_files(spark, src, schema).drop("__source_file")
+        s = stream_files(spark, src, schema)
         deduped = dedup_stream(s, ["k"], ts_col="ts", watermark="30 minutes")
         q = deduped.writeStream.foreachBatch(
             lambda b, _id: b.write.mode("append").parquet(out)
