@@ -12,6 +12,8 @@ Unity-style catalog with zero changes.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -97,15 +99,19 @@ def save_bucketed_table(
 
 def create_table_if_not_exists(
     spark: SparkSession,
-    df: DataFrame,
+    build: Callable[[SparkSession], DataFrame],
     database: str,
     table: str,
     partition_by: list[str] | None = None,
 ) -> bool:
-    """Idempotent dimension create (DM:89-100). Returns True if created."""
+    """Idempotent dimension create (DM:89-100). Returns True if created.
+
+    ``build`` makes the table's DataFrame and is called only when the table
+    is missing, so a re-run builds nothing.
+    """
     if table_exists(spark, database, table):
         return False
-    save_table(df, database, table, partition_by=partition_by, mode="errorifexists")
+    save_table(build(spark), database, table, partition_by=partition_by, mode="errorifexists")
     return True
 
 

@@ -1,6 +1,9 @@
 """Warehouse load — Job-2 semantics (``etl-glue-load-to-postgres.py``).
 
-For each dimension: existence probe → first-time create (PG:62-71).
+One catalog listing per load answers every existence question, then the
+missing dimensions are created one after another.  The reference probes
+``pg_catalog.pg_tables`` once per table (PG:62-71); the one listing gives
+the same answers in one round trip.
 For the fact: catalog scan → partition-pruned month filter → append
 (PG:78-88).  The ``Warehouse`` abstraction (sources/writers.py) supplies
 JDBC or parquet-directory implementations; the plan is identical either way.
@@ -40,6 +43,11 @@ def load_star_to_warehouse(
 ) -> dict[str, str]:
     """Load dims (create-if-missing) + one fact month (append).
 
+    ``wh.list_tables()`` is read once and answers for the dimensions and
+    the fact; a warehouse without a known catalog (``None``) is probed one
+    table at a time.  A failed dimension create propagates before the fact
+    is touched, so it leaves no fact month behind.
+
     The fact filter hits the write-partition columns, so Catalyst prunes to
     one partition directory — the read scans a month, not the table (F4).
     Returns {table: action} for observability.
@@ -50,9 +58,14 @@ def load_star_to_warehouse(
     downstream aggregate (the reference's Job 2 appends blindly,
     PG:86-88; pass ``skip_if_loaded=False`` for that exact behavior).
     """
+    listed = wh.list_tables()
+
+    def exists(t: str) -> bool:
+        return wh.table_exists(t) if listed is None else wh.catalog_name(t) in listed
+
     actions: dict[str, str] = {}
     for t in dim_tables if dim_tables is not None else DIM_TABLES:
-        if wh.table_exists(t):
+        if exists(t):
             actions[t] = "exists"
         else:
             wh.create(read_table(spark, database, t), t)
@@ -61,7 +74,7 @@ def load_star_to_warehouse(
         (F.col("processed_year") == processed_year)
         & (F.col("processed_month") == processed_month)
     )
-    if skip_if_loaded and wh.table_exists(fact_table):
+    if skip_if_loaded and exists(fact_table):
         already = (
             wh.read(spark, fact_table)
             .filter(

@@ -20,7 +20,6 @@ with a full DuckDB oracle:
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import text

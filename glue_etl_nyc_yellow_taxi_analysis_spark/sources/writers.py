@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import StringType
 
 
@@ -35,12 +35,22 @@ def write_partitioned_parquet(
 
 
 class Warehouse:
-    """Abstract warehouse sink: exists / create / append / read.
+    """Abstract warehouse sink: list / exists / create / append / read.
 
     Mirrors Job 2's surface: probe ``pg_catalog.pg_tables`` (PG:62-67),
     first-time ``write.jdbc`` create (PG:71, S8), incremental
     ``mode("append").jdbc`` (PG:86-88, S9).
     """
+
+    def list_tables(self) -> set[str] | None:
+        """Every table of the warehouse, from one catalog query, spelled as
+        ``catalog_name`` spells them; ``None`` when there is no known
+        catalog to list (callers probe each table with ``table_exists``)."""
+        return None
+
+    def catalog_name(self, table: str) -> str:
+        """How the warehouse's catalog spells ``table``."""
+        return table
 
     def table_exists(self, table: str) -> bool:
         raise NotImplementedError
@@ -75,6 +85,31 @@ class JdbcWarehouse(Warehouse):
             return "derby"
         return "generic"
 
+    def catalog_name(self, table: str) -> str:
+        # Spark's write.jdbc ships unquoted identifiers to Derby, which
+        # normalizes them to uppercase in SYS.SYSTABLES
+        return table.upper() if self.dialect(self.url) == "derby" else table
+
+    def catalog_list_sql(self, schema: str = "public") -> str | None:
+        """Dialect-gated listing of every table, one subquery-as-table.
+
+        The reference's ``pg_catalog.pg_tables`` probe
+        (``etl-glue-load-to-postgres.py:62-66``) without its per-table
+        ``tablename`` predicate, or Derby's ``SYS.SYSTABLES``.  ``None`` →
+        unknown dialect.
+        """
+        if any(c in schema for c in "'\";"):
+            raise ValueError(f"suspicious identifier: {schema!r}")
+        d = self.dialect(self.url)
+        if d == "postgresql":
+            return (
+                "(SELECT tablename FROM pg_catalog.pg_tables "
+                f"WHERE schemaname = '{schema}')"
+            )
+        if d == "derby":
+            return "(SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLETYPE = 'T')"
+        return None
+
     def catalog_probe_sql(self, table: str, schema: str = "public") -> str | None:
         """Dialect-gated existence probe, shipped to the DB as a
         subquery-as-table (S6 JDBC query pushdown).
@@ -95,39 +130,38 @@ class JdbcWarehouse(Warehouse):
                 f"WHERE schemaname = '{schema}' AND tablename = '{table}')"
             )
         if d == "derby":
-            # Spark's write.jdbc ships unquoted identifiers to Derby, which
-            # normalizes them to uppercase in SYS.SYSTABLES
             return (
                 "(SELECT TABLENAME FROM SYS.SYSTABLES "
-                f"WHERE TABLETYPE = 'T' AND TABLENAME = '{table.upper()}')"
+                f"WHERE TABLETYPE = 'T' AND TABLENAME = '{self.catalog_name(table)}')"
             )
         return None
+
+    def _reader(self, spark: SparkSession, dbtable: str) -> DataFrameReader:
+        reader = spark.read.format("jdbc").option("url", self.url).option("dbtable", dbtable)
+        for k, v in self.properties.items():
+            reader = reader.option(k, v)
+        return reader
+
+    def _subquery(self, sql: str) -> DataFrame:
+        return self._reader(self.spark, f"{sql} subquery_t").load()
+
+    def list_tables(self) -> set[str] | None:
+        list_sql = self.catalog_list_sql()
+        if list_sql is None:
+            return None
+        return {r[0] for r in self._subquery(list_sql).collect()}
 
     def table_exists(self, table: str) -> bool:
         probe_sql = self.catalog_probe_sql(table)
         if probe_sql is not None:
             # the reference's probe shape: catalog subquery pushed down,
             # then a count() action (PG:62-67, S6+A1)
-            reader = (
-                self.spark.read.format("jdbc")
-                .option("url", self.url)
-                .option("dbtable", f"{probe_sql} probe_t")
-            )
-            for k, v in self.properties.items():
-                reader = reader.option(k, v)
-            return reader.load().count() > 0
+            return self._subquery(probe_sql).count() > 0
         # unknown dialect: zero-row probe — works on any DBMS (information
         # schema layouts differ, but SELECT-WHERE-1=0 is universal and the
         # schema fetch reads no rows)
-        probe = (
-            self.spark.read.format("jdbc")
-            .option("url", self.url)
-            .option("query", f"SELECT * FROM {table} WHERE 1 = 0")
-        )
-        for k, v in self.properties.items():
-            probe = probe.option(k, v)
         try:
-            probe.load().schema
+            self._subquery(f"(SELECT * FROM {table} WHERE 1 = 0)")
             return True
         except Exception:
             return False
@@ -158,10 +192,7 @@ class JdbcWarehouse(Warehouse):
         df.write.mode("append").jdbc(self.url, table, properties=self._write_properties(df))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        reader = spark.read.format("jdbc").option("url", self.url).option("dbtable", table)
-        for k, v in self.properties.items():
-            reader = reader.option(k, v)
-        return reader.load()
+        return self._reader(spark, table).load()
 
 
 class ParquetWarehouse(Warehouse):

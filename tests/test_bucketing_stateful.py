@@ -4,7 +4,6 @@ import contextlib
 import io
 import os
 import shutil
-import tempfile
 from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
@@ -56,15 +55,16 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
-def test_stateful_totals_accumulate_across_batches(spark):
+def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
     """State must survive micro-batch boundaries: deliver two files in two
     availableNow runs sharing a checkpoint; totals accumulate."""
-    src = tempfile.mkdtemp(prefix="sg_state_src_")
-    ckpt = tempfile.mkdtemp(prefix="sg_state_ckpt_")
+    (tmp_path / "src").mkdir()
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
 
     def drop(name, rows):
         df = spark.createDataFrame(rows, "user_id long, value double")
-        tmp = tempfile.mkdtemp()
+        tmp = str(tmp_path / f"tmp_{name}")
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
         shutil.copy(f"{tmp}/{part}", f"{src}/{name}")

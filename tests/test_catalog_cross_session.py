@@ -69,7 +69,7 @@ def test_second_session_sees_catalog_tables(sf_dir, tmp_path):
         catalog.ensure_database(spark, "xdb")
         catalog.save_table(fact, "xdb", "fact_li", partition_by=["ship_year"])
         nation = spark.read.parquet({sf_dir!r} + "/nation.parquet")
-        assert catalog.create_table_if_not_exists(spark, nation, "xdb", "dim_nation")
+        assert catalog.create_table_if_not_exists(spark, lambda s: nation, "xdb", "dim_nation")
         print("A_ROWS", fact.count())
         spark.stop()
         """,

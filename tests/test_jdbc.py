@@ -248,3 +248,27 @@ def test_dialect_gated_catalog_probe_sql(spark):
 
     with _pytest.raises(ValueError):
         pg.catalog_probe_sql("t'; DROP TABLE x --")
+
+
+def test_dialect_gated_catalog_list_sql(spark):
+    """One listing per load: the reference's pg_catalog.pg_tables probe
+    without its per-table predicate, Derby's SYS.SYSTABLES, no listing for
+    an unknown dialect; catalog names are uppercase on Derby only."""
+    from glue_etl_nyc_yellow_taxi_analysis_spark.sources.writers import JdbcWarehouse
+
+    pg = JdbcWarehouse(spark, "jdbc:postgresql://host:5432/nyc")
+    assert pg.catalog_list_sql() == (
+        "(SELECT tablename FROM pg_catalog.pg_tables WHERE schemaname = 'public')"
+    )
+    assert pg.catalog_name("dim_vendors") == "dim_vendors"
+    derby = JdbcWarehouse(spark, "jdbc:derby:memory:x;create=true")
+    assert derby.catalog_list_sql() == (
+        "(SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLETYPE = 'T')"
+    )
+    assert derby.catalog_name("dim_vendors") == "DIM_VENDORS"
+    generic = JdbcWarehouse(spark, "jdbc:mysql://h/db")
+    assert generic.catalog_list_sql() is None and generic.list_tables() is None
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError):
+        pg.catalog_list_sql("public'; DROP TABLE x --")

@@ -2,7 +2,6 @@
 
 import datetime as dt
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -52,7 +51,7 @@ def test_tumbling_agg(spark):
     assert by[(1, 10)] == 3 and by[(1, 11)] == 2 and by[(2, 10)] == 1
 
 
-def test_streaming_matches_batch(spark, sf_dir):
+def test_streaming_matches_batch(spark, sf_dir, tmp_path):
     """The streaming windowed aggregate must reproduce the batch F.window
     plan (same counts per (window, type))."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -63,7 +62,8 @@ def test_streaming_matches_batch(spark, sf_dir):
         for r in sessionize.tumbling_agg(batch, group_cols=["event_type"]).collect()
     }
 
-    src = tempfile.mkdtemp(prefix="sg_stream_test_")
+    (tmp_path / "src").mkdir()
+    src = str(tmp_path / "src")
     os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     stream = stream_files(spark, src, raw.schema)
     stream = _fix_ts(stream)
@@ -72,7 +72,7 @@ def test_streaming_matches_batch(spark, sf_dir):
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName("sg_test_stream")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_ckpt_test_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -84,7 +84,7 @@ def test_streaming_matches_batch(spark, sf_dir):
     assert got == expected
 
 
-def test_streaming_sliding_matches_batch(spark, sf_dir):
+def test_streaming_sliding_matches_batch(spark, sf_dir, tmp_path):
     """Hopping windows (10 min / 5 min slide) through the STREAMING path
     must reproduce the batch F.window plan — each event in exactly 2
     windows on both paths."""
@@ -104,7 +104,8 @@ def test_streaming_sliding_matches_batch(spark, sf_dir):
     }
     assert sum(expected.values()) == 2 * batch.count()  # 2 windows per event
 
-    src = tempfile.mkdtemp(prefix="sg_slide_test_")
+    (tmp_path / "src").mkdir()
+    src = str(tmp_path / "src")
     os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     stream = stream_files(spark, src, raw.schema)
     stream = _fix_ts(stream)
@@ -117,7 +118,7 @@ def test_streaming_sliding_matches_batch(spark, sf_dir):
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName("sg_slide_stream")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_ckpt_slide_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -129,7 +130,7 @@ def test_streaming_sliding_matches_batch(spark, sf_dir):
     assert got == expected
 
 
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
+def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
     """Watermarked stream-stream interval join == the same join expression
     on static frames."""
     from glue_etl_nyc_yellow_taxi_analysis_spark.streaming.ingest import (
@@ -154,7 +155,8 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
         .collect()
     )
 
-    src = tempfile.mkdtemp(prefix="sg_sjoin_test_")
+    (tmp_path / "src").mkdir()
+    src = str(tmp_path / "src")
     os.symlink(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
 
     def side(et):
@@ -167,7 +169,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
         joined.writeStream.outputMode("append")
         .format("memory")
         .queryName("sg_sjoin_parity")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_sjoin_ck_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -176,7 +178,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     assert got == expected
 
 
-def test_transform_with_state_gated(spark):
+def test_transform_with_state_gated(spark, tmp_path):
     """transformWithStateInPandas (Spark 4's arbitrary-state successor to
     applyInPandasWithState — ValueState/ListState/MapState, timers, TTL)
     requires protobuf for its state-server protocol, which this container
@@ -189,8 +191,6 @@ def test_transform_with_state_gated(spark):
         "google.protobuf",
         reason="transformWithStateInPandas state server needs protobuf",
     )
-    import tempfile
-
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     class Count(StatefulProcessor):
@@ -210,7 +210,7 @@ def test_transform_with_state_gated(spark):
             pass
 
     df = spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], "k string, v int")
-    src = tempfile.mkdtemp(prefix="sg_tws_")
+    src = str(tmp_path / "src")
     df.write.mode("overwrite").parquet(src)
     s = spark.readStream.schema(df.schema).parquet(src)
     out = s.groupBy("k").transformWithStateInPandas(
@@ -223,7 +223,7 @@ def test_transform_with_state_gated(spark):
         out.writeStream.outputMode("update")
         .format("memory")
         .queryName("sg_tws_sink")
-        .option("checkpointLocation", tempfile.mkdtemp())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )

@@ -1,7 +1,6 @@
 """Streaming watermark dedup: state-bounded exactly-once-per-key."""
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -22,12 +21,13 @@ def _write_batch(spark, src_dir, name, rows):
     os.rename(f"{src_dir}/_tmp_{name}/{part}", f"{src_dir}/{name}.parquet")
 
 
-def test_dedup_stream_suppresses_in_and_cross_batch_dups(spark):
+def test_dedup_stream_suppresses_in_and_cross_batch_dups(spark, tmp_path):
     import datetime as dt
 
-    src = tempfile.mkdtemp(prefix="sg_dedup_src_")
-    ckpt = tempfile.mkdtemp(prefix="sg_dedup_ckpt_")
-    out = tempfile.mkdtemp(prefix="sg_dedup_out_") + "/rows"
+    (tmp_path / "src").mkdir()
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out" / "rows")
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
     def run_once():

@@ -4,7 +4,6 @@ its partition; a newly arriving month is picked up from the checkpoint."""
 
 import os
 import shutil
-import tempfile
 from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
@@ -14,18 +13,19 @@ from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
 from glue_etl_nyc_yellow_taxi_analysis_spark.streaming.ingest import monthly_star_ingest
 
 
-def test_monthly_star_ingest_end_to_end(spark):
+def test_monthly_star_ingest_end_to_end(spark, tmp_path):
     db = "sg_test_stream_star"
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
 
     raw = _taxi_fixture(spark)
-    src = tempfile.mkdtemp(prefix="sg_ingest_src_")
-    ckpt = tempfile.mkdtemp(prefix="sg_ingest_ckpt_")
+    (tmp_path / "src").mkdir()
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
 
     def drop_month(df, name):
-        tmp = tempfile.mkdtemp(prefix="sg_ingest_tmp_")
+        tmp = str(tmp_path / f"tmp_{name}")
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
         shutil.copy(f"{tmp}/{part}", f"{src}/{name}")
@@ -61,7 +61,7 @@ def test_monthly_star_ingest_end_to_end(spark):
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
-def test_restart_recovery_no_double_append(spark):
+def test_restart_recovery_no_double_append(spark, tmp_path):
     """r5 verdict item 5: drain half a two-month backlog, kill the query
     mid-stream, restart from the SAME checkpoint — the committed month
     must not be reprocessed, the failed month must be replayed exactly
@@ -74,11 +74,12 @@ def test_restart_recovery_no_double_append(spark):
     shutil.rmtree(f"{wh}/{db}.db", ignore_errors=True)
 
     raw = _taxi_fixture(spark)
-    src = tempfile.mkdtemp(prefix="sg_recover_src_")
-    ckpt = tempfile.mkdtemp(prefix="sg_recover_ckpt_")
+    (tmp_path / "src").mkdir()
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
 
     def drop_month(df, name):
-        tmp = tempfile.mkdtemp(prefix="sg_recover_tmp_")
+        tmp = str(tmp_path / f"tmp_{name}")
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
         shutil.copy(f"{tmp}/{part}", f"{src}/{name}")
