@@ -19,7 +19,6 @@ __all__ = [
     "minutes_between",
     "peak_band_id",
     "uuid_pk",
-    "canonical_ts_string",
 ]
 
 
@@ -71,11 +70,3 @@ def uuid_pk() -> Column:
     """Non-deterministic surrogate primary key (DM:279)."""
     return F.expr("uuid()")
 
-
-def canonical_ts_string(c: Column | str) -> Column:
-    """Edge-formatting of a timestamp to 'yyyy-MM-dd HH:mm:ss' (DM:245-250).
-
-    The engine keeps TimestampType internally (SURVEY §4 quirk 3); this
-    exists only for sinks that demand the reference's string shape.
-    """
-    return F.date_format(c, "yyyy-MM-dd HH:mm:ss")

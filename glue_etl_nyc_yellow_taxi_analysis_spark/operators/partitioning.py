@@ -3,8 +3,6 @@
 ``spread``  — widen a narrow input before a compute-bound stage.
 ``salt``    — explode a skewed join/group key into ``n`` subkeys (classic
               skew mitigation when AQE's runtime splitting isn't enough).
-``coalesce_output`` — shrink partition count before a sink to avoid
-              thousand-small-file outputs.
 """
 
 from __future__ import annotations
@@ -176,11 +174,6 @@ def explode_salt(dim: DataFrame, buckets: int, salt_col: str = "__salt") -> Data
     return dim.withColumn(
         salt_col, F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
     )
-
-
-def coalesce_output(df: DataFrame, max_partitions: int) -> DataFrame:
-    """Cap output file count before a sink (no shuffle — narrow coalesce)."""
-    return df.coalesce(max_partitions)
 
 
 def range_partition_sorted(df: DataFrame, cols: list[str], num_partitions: int) -> DataFrame:

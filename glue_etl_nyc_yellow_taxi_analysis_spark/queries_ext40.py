@@ -701,13 +701,7 @@ def q_stream_ann_enrich(spark, sf_dir):
     src = scratch("sg_annstream_src_")
     incoming.repartition(2).write.mode("overwrite").parquet(src)
 
-    out = scratch("sg_annstream_out_") + "/hits"
-    # schema template so an EMPTY arrival backlog still reads back as
-    # zero rows instead of failing parquet schema inference
-    spark.createDataFrame(
-        [], "query_id bigint, vec_id bigint, adc_dist double, rank int"
-    ).write.mode("overwrite").parquet(out)
-
+    out = scratch("sg_annstream_out_")
     stream = stream_files(spark, src, incoming.schema, max_files_per_trigger=1)
 
     def probe(batch_df, _batch_id):
@@ -717,7 +711,11 @@ def q_stream_ann_enrich(spark, sf_dir):
         ).write.mode("append").parquet(out)
 
     drain(stream, probe)
-    return spark.read.parquet(out)
+    # explicit schema: an EMPTY arrival backlog leaves no parquet file
+    # to infer from, and still reads back as zero rows
+    return spark.read.schema(
+        "query_id bigint, vec_id bigint, adc_dist double, rank int"
+    ).parquet(out)
 
 
 register(q_stream_ann_enrich, SQL_PQ_INDEX_PERSIST)

@@ -4,7 +4,6 @@ from .readers import (  # noqa: F401
     from_rows,
     sequence_dates,
     sequence_seconds,
-    read_jdbc_query,
 )
 from .writers import (  # noqa: F401
     write_partitioned_parquet,

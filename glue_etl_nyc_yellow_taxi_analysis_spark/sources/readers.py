@@ -59,16 +59,3 @@ def sequence_seconds(spark: SparkSession, day: str = "2000-01-01") -> DataFrame:
         ).alias("ts")
     )
 
-
-def read_jdbc_query(
-    spark: SparkSession, url: str, query: str, properties: dict | None = None
-) -> DataFrame:
-    """S6 — JDBC scan with whole-subquery pushdown (PG:62-66).
-
-    The subquery executes inside the external database; Spark sees only its
-    result.  Used for existence probes and pushdown-friendly dimension reads.
-    """
-    reader = spark.read.format("jdbc").option("url", url).option("query", query)
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()

@@ -17,7 +17,6 @@ corpus where the ONLY source of ''-tokens/shingles is a NULL-text doc
 
 import os
 import re
-import tempfile
 
 import duckdb
 import pyarrow as pa
@@ -73,9 +72,9 @@ def _norm(v):
 
 
 @pytest.fixture(scope="module", params=sorted(_CORPORA))
-def corpus_dir(request):
+def corpus_dir(request, tmp_path_factory):
     rows = _CORPORA[request.param]
-    d = tempfile.mkdtemp(prefix=f"sg_degen_{request.param}_")
+    d = str(tmp_path_factory.mktemp(f"degen_{request.param}"))
     docs = pa.table(
         {
             "doc_id": pa.array(range(len(rows)), pa.int64()),
@@ -173,9 +172,9 @@ def _events_only_lanes():
 
 
 @pytest.fixture(scope="module", params=sorted(_EVENT_CORPORA))
-def events_dir(request):
+def events_dir(request, tmp_path_factory):
     rows = _EVENT_CORPORA[request.param]
-    d = tempfile.mkdtemp(prefix=f"sg_degen_{request.param}_")
+    d = str(tmp_path_factory.mktemp(f"degen_{request.param}"))
     ev = pa.table(
         {
             "event_id": pa.array(range(len(rows)), pa.int64()),
@@ -246,9 +245,9 @@ def _emb_only_lanes():
 
 
 @pytest.fixture(scope="module", params=sorted(_EMB_CORPORA))
-def emb_dir(request):
+def emb_dir(request, tmp_path_factory):
     rows, _ = _EMB_CORPORA[request.param]
-    d = tempfile.mkdtemp(prefix=f"sg_degen_{request.param}_")
+    d = str(tmp_path_factory.mktemp(f"degen_{request.param}"))
     emb = pa.table(
         {
             "vec_id": pa.array(range(len(rows)), pa.int64()),

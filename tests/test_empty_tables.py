@@ -11,7 +11,6 @@ tool (too slow for the suite).
 """
 
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 import pytest
@@ -42,8 +41,8 @@ _DRIVER_LOGIC_LANES = (
 
 
 @pytest.fixture(scope="module")
-def empty_dir(sf_dir):
-    d = tempfile.mkdtemp(prefix="sg_empty_gate_")
+def empty_dir(sf_dir, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("empty_gate"))
     for t in _TABLES:
         tb = pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, 0)
         pq.write_table(tb, os.path.join(d, f"{t}.parquet"))

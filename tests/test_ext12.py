@@ -46,13 +46,11 @@ def test_bucketed_join_matches_plain_and_reruns(spark, sf_dir):
 
 # ------------------------------------------------------------ zstd roundtrip
 
-def test_zstd_files_actually_use_zstd(spark, sf_dir):
-    import tempfile
-
+def test_zstd_files_actually_use_zstd(spark, sf_dir, tmp_path):
     import pyarrow.parquet as pq
 
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").limit(100)
-    out = tempfile.mkdtemp(prefix="sg_zstd_test_") + "/o"
+    out = str(tmp_path / "o")
     o.write.mode("overwrite").option("compression", "zstd").parquet(out)
     files = glob.glob(f"{out}/*.parquet")
     assert files

@@ -157,7 +157,7 @@ def test_markdown_extraction_semantics(spark):
     assert "  " not in txt and txt == txt.strip()
 
 
-def test_sft_mask_semantics(spark):
+def test_sft_mask_semantics(spark, tmp_path):
     """Row-level pins on a hand-sized doc: alternating roles, assistant
     turns trainable, counts exact."""
     from glue_etl_nyc_yellow_taxi_analysis_spark.queries_ext50 import (
@@ -167,9 +167,7 @@ def test_sft_mask_semantics(spark):
     # 35 words -> 3 turns (15/15/5): user, assistant, user
     text = " ".join(f"w{i}" for i in range(35))
     d = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    import tempfile
-
-    sf = tempfile.mkdtemp(prefix="sg_sft_")
+    sf = str(tmp_path)
     d.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
     r = q_sft_chat_mask(spark, sf).collect()[0]
     assert r["n_turns"] == 3

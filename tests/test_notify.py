@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 import pytest
 
@@ -62,14 +61,15 @@ def test_jsonl_sink_appends_one_line_per_state(tmp_path):
     ]
 
 
-def test_streaming_listener_reports_termination(spark, sf_dir):
+def test_streaming_listener_reports_termination(spark, sf_dir, tmp_path):
     import time
 
     got: list[dict] = []
     notifier = JobNotifier([got.append])
     listener = attach_streaming_listener(spark, notifier, job="ingest")
     try:
-        src = tempfile.mkdtemp(prefix="sg_notify_src_")
+        src = str(tmp_path / "src")
+        os.mkdir(src)
         os.symlink(f"{sf_dir}/documents.parquet", f"{src}/documents.parquet")
         schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
         q = (
@@ -77,7 +77,7 @@ def test_streaming_listener_reports_termination(spark, sf_dir):
             .parquet(src)
             .writeStream.format("noop")
             .trigger(availableNow=True)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sg_notify_ck_"))
+            .option("checkpointLocation", str(tmp_path / "ck"))
             .start()
         )
         assert q.awaitTermination(120)

@@ -141,17 +141,17 @@ def test_kmeans_exact_lane_properties(spark, sf_dir):
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
-def test_lsh_signatures_fail_soft_on_mismatched_dims(spark):
+def test_lsh_signatures_fail_soft_on_mismatched_dims(spark, tmp_path):
     """A vector whose length differs from the plane matrix (ragged or
     empty embedding) must drop from every LSH bucket — NULL signature,
     never a numpy shape error through the Arrow batch (round-6 probe)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import tempfile, os
+    import os
 
     from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES
 
-    d = tempfile.mkdtemp(prefix="sg_lsh_ragged_")
+    d = str(tmp_path)
     emb = pa.table(
         {
             "vec_id": pa.array(range(5), pa.int64()),

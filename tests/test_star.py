@@ -1,7 +1,6 @@
 """Pipeline golden tests: full Job-1 equivalent on the deterministic fixture
 (SURVEY §5.3) + partitioned-write pruning + idempotent dims."""
 
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -36,11 +35,11 @@ def test_build_fact_golden(spark):
     assert all(len(r.tpep_pickup_time_id) == 6 for r in rows)
 
 
-def test_partitioned_write_prunes(spark, sf_dir):
+def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").withColumn(
         "ship_year", F.year("l_shipdate")
     )
-    out = tempfile.mkdtemp(prefix="sg_test_prune_")
+    out = str(tmp_path)
     write_partitioned_parquet(li, out, partition_by=["ship_year"])
     back = spark.read.parquet(out).filter(F.col("ship_year") == 1996)
     expected = li.filter(F.col("ship_year") == 1996).count()

@@ -1,5 +1,6 @@
 """streaming/ingest.drain: the one way a query lane drains a stream, and
-paths.scratch: the one way the package makes a temporary directory.
+paths.scratch: the one way the package, tools/ and bench.py make a
+temporary directory.
 
 ``drain`` owns its checkpoint and removes it however the query ends;
 ``scratch`` directories are removed when the interpreter exits.
@@ -20,17 +21,24 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "glue_etl_nyc_yellow_taxi_analysis_spark")
 
 
-def _offenders(pattern, home):
+def _py_files(roots):
+    for top in roots:
+        if top.endswith(".py"):
+            yield top
+            continue
+        for root, _dirs, files in os.walk(top):
+            yield from (os.path.join(root, f) for f in files if f.endswith(".py"))
+
+
+def _offenders(pattern, home, roots=(PKG,)):
     found = []
-    for root, _dirs, files in os.walk(PKG):
-        for f in files:
-            path = os.path.join(root, f)
-            if not f.endswith(".py") or path == os.path.join(PKG, home):
-                continue
-            with open(path, encoding="utf-8") as fh:
-                for i, line in enumerate(fh, 1):
-                    if re.search(pattern, line):
-                        found.append(f"{os.path.relpath(path, REPO)}:{i}")
+    for path in _py_files(roots):
+        if path == os.path.join(PKG, home):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            for i, line in enumerate(fh, 1):
+                if re.search(pattern, line):
+                    found.append(f"{os.path.relpath(path, REPO)}:{i}")
     return found
 
 
@@ -40,7 +48,11 @@ def test_streams_start_and_wait_only_in_the_ingest_module():
 
 
 def test_temporary_dirs_come_only_from_the_scratch_helper():
-    found = _offenders(r"tempfile\.mkdtemp\(", "paths.py")
+    found = _offenders(
+        r"tempfile\.mkdtemp\(",
+        "paths.py",
+        (PKG, os.path.join(REPO, "tools"), os.path.join(REPO, "bench.py")),
+    )
     assert found == [], "make temporary dirs with paths.scratch: " + ", ".join(found)
 
 

@@ -1,15 +1,13 @@
 """Warehouse-load semantics + multimodal binary plumbing."""
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from glue_etl_nyc_yellow_taxi_analysis_spark.operators import multimodal
 from glue_etl_nyc_yellow_taxi_analysis_spark.sources.writers import ParquetWarehouse
 
 
-def test_warehouse_create_append_read(spark, sf_dir):
-    wh = ParquetWarehouse(tempfile.mkdtemp(prefix="sg_test_wh_"))
+def test_warehouse_create_append_read(spark, sf_dir, tmp_path):
+    wh = ParquetWarehouse(str(tmp_path))
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     assert not wh.table_exists("dim_nation")
     wh.create(nation, "dim_nation")

@@ -28,11 +28,12 @@ import hashlib
 import json
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-MARKER_DIR = tempfile.mkdtemp(prefix="sg_retry_marker_")
+from glue_etl_nyc_yellow_taxi_analysis_spark.paths import scratch
+
+MARKER_DIR = scratch("sg_retry_marker_")
 
 
 def _flaky_wrap(df, marker_dir: str):

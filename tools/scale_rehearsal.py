@@ -21,12 +21,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import time_lane, warm
 from glue_etl_nyc_yellow_taxi_analysis_spark.operators import dedup
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES
 from glue_etl_nyc_yellow_taxi_analysis_spark.session import get_spark
@@ -71,12 +71,10 @@ def profile_sf(spark, sf_dir: str) -> dict:
     )
     sigs.unpersist()
 
-    times = {}
-    for name in REHEARSAL_QUERIES:
-        spark.catalog.clearCache()
-        t0 = time.time()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times[name] = round(time.time() - t0, 2)
+    times = {
+        name: round(time_lane(spark, name, sf_dir, 1)[0], 2)
+        for name in REHEARSAL_QUERIES
+    }
 
     return {
         "sf_dir": sf_dir,
@@ -90,24 +88,16 @@ def profile_sf(spark, sf_dir: str) -> dict:
 
 
 def time_suite(spark, sf_dir: str, names) -> dict:
-    """One timed noop-sink run per query (bench.py's loop without the
+    """One timed noop-sink run per query (bench's lane timer without the
     median-of-3 — the rehearsal wants growth FACTORS, not anchors)."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(10).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm(spark, sf_dir)
     times = {}
     for name in names:
-        spark.catalog.clearCache()
-        t0 = time.time()
         try:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            times[name] = round(time_lane(spark, name, sf_dir, 1)[0], 2)
         except Exception as exc:  # registry-wide sweeps hit env-gated lanes
             print(f"ERR {name} @ {sf_dir}: {type(exc).__name__}", file=sys.stderr)
             times[name] = float("nan")
-            continue
-        times[name] = round(time.time() - t0, 2)
     return times
 
 

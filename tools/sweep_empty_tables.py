@@ -12,12 +12,12 @@ pinned by tests/test_empty_tables.py.
 
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow.parquet as pq
 
+from glue_etl_nyc_yellow_taxi_analysis_spark.paths import scratch
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES
 from glue_etl_nyc_yellow_taxi_analysis_spark.session import get_spark
 
@@ -26,7 +26,7 @@ def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="sweep-empty", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    d = tempfile.mkdtemp(prefix="sg_empty_")
+    d = scratch("sg_empty_")
     tables = (
         "region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings",
