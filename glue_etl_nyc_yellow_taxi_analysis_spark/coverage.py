@@ -30,10 +30,18 @@ import re
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Must re-earn a driver row this round: only queries whose Spark or
-# oracle side changed since their latest committed driver row.  Moving
-# every media, document, audio and shard kernel onto the one kernel
-# path (_row_stage/_shard_stage) rewrote far more lanes than the 10-pin
-# cap, so the pins take ONE lane per changed MECHANISM:
+# oracle side changed since their latest committed driver row, at most
+# 10, so the pins take ONE lane per changed MECHANISM.
+#
+# Folding the package's three Lloyd's k-means trainers into
+# operators/pq.pq_fit changed three lanes:
+#   * q_kmeans_oracle — k-means is now the PQ loop at m=1;
+#   * q_ann_pq_oracle — the m>1 path, whose rounds now materialize the
+#     one-row codebook map instead of the codebook table;
+#   * q_kmeans_train — its float-mean trainer is gone; it trains
+#     through the same loop at k=8, 3 rounds.
+# Moving every media, document, audio and shard kernel onto the one
+# kernel path (_row_stage/_shard_stage) keeps its pins:
 #   * q_jpeg_resize — a media builder's per-row kernel, fused with its
 #     decode (the media-kernel consolidation);
 #   * q_pdf_extract — a document build → extract pair fused into one
@@ -45,22 +53,24 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #     varies method and ZIP64 framing by shard_id);
 #   * q_warc_ingest — the shared WARC pack and a whole-row fail-soft
 #     walk with the hostile marker shard;
-#   * q_stream_warc_ingest — the same pack feeding a fail-hard walk
-#     in a stream;
-#   * q_warc_revisit — a lane-specific pack through _shard_stage;
 #   * q_mp3_framewalk — build + walk in one row, its fail-soft scoped
 #     to the walk.
-# Left out deliberately: the other member-shard, document and media
-# lanes share a pinned lane's code path and are oracle-proven locally.
+# Dropped to stay within 10: q_stream_warc_ingest (the same WARC pack
+# as q_warc_ingest, read by a stream) and q_warc_revisit (its own pack
+# through the _shard_stage that q_zip_shard_roundtrip already pins).
+# Left out deliberately: the other member-shard, document, media and
+# PQ lanes share a pinned lane's code path and are oracle-proven
+# locally.
 PINNED: tuple[str, ...] = (
+    "q_kmeans_oracle",
+    "q_ann_pq_oracle",
+    "q_kmeans_train",
     "q_jpeg_resize",
     "q_pdf_extract",
     "q_flac_transcode",
     "q_audio_decimate",
     "q_zip_shard_roundtrip",
     "q_warc_ingest",
-    "q_stream_warc_ingest",
-    "q_warc_revisit",
     "q_mp3_framewalk",
 )
 

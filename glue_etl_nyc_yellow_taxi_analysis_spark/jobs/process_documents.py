@@ -215,7 +215,7 @@ def main(argv: list[str] | None = None) -> None:
             media = synth_mixed_documents(spark.read.parquet(args.synth_from_docs))
         return process_documents(spark, media, args.output)
 
-    run_with_notification("process_documents", _run, notifier)
+    run_with_notification("process-documents", _run, notifier)
 
 
 if __name__ == "__main__":

@@ -200,7 +200,7 @@ def main(argv: list[str] | None = None) -> None:
             spark, media, args.output, decimate=not args.no_decimate
         )
 
-    run_with_notification("process_media", _run, notifier)
+    run_with_notification("process-media", _run, notifier)
 
 
 if __name__ == "__main__":

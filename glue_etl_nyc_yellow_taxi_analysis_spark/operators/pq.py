@@ -22,13 +22,14 @@ Neighbor Search", TPAMI 2011 — public):
   precomputed once, and a database vector's approximate squared L2
   distance is the sum of its ``m`` looked-up cells (``pq_adc_topk``).
 
-Everything here rides the repo's exact-lane discipline
-(``similarity.kmeans_train_exact``): deterministic init (the k
-lowest-id vectors per subspace), ties toward the lower cluster id,
-DECIMAL(27,18)-summed centroid updates (order-free under any
-partitioning), and ADC sums accumulated in decimal — so the whole
+Everything here rides the repo's exact-lane discipline: deterministic
+init (the k lowest-id vectors per subspace), ties toward the lower
+cluster id, DECIMAL(27,18)-summed centroid updates (order-free under
+any partitioning), and ADC sums accumulated in decimal — so the whole
 train → encode → search pipeline is bit-replicable by an external SQL
-oracle (``queries_ext40``).
+oracle (``queries_ext40``).  ``pq_fit`` is the package's one Lloyd's
+k-means loop: plain k-means (``similarity.kmeans_train_exact``, the
+q_kmeans_oracle and q_kmeans_train lanes) is the same loop at m=1.
 
 Scale posture:
 
@@ -54,6 +55,7 @@ from .materialize import materialize
 
 __all__ = [
     "pq_subvectors",
+    "pq_fit",
     "pq_train",
     "pq_encode",
     "pq_adc_topk",
@@ -75,21 +77,29 @@ def _codebook_map(codebook: DataFrame) -> DataFrame:
     """Fold the m·k-row codebook into ONE row holding a
     sub → [(cluster, centroid)] map — the broadcast shape that lets
     nearest-centroid assignment run as a pure array expression (no
-    join, no keyed argmin exchange).  Same bytes the per-row broadcast
-    join already shipped; `array_sort` pins the in-cell order so the
-    plan is deterministic regardless of collect order."""
-    return (
-        codebook.groupBy("sub")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("cluster", "centroid"))
-            ).alias("cell")
-        )
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("sub", "cell"))
-            ).alias("__cb")
-        )
+    join, no keyed argmin exchange).  One global aggregate collects the
+    cells; the per-sub grouping is array work on that one row, so the
+    fold costs a single exchange.  `array_sort` pins the in-cell order
+    (by cluster) so the plan is deterministic regardless of collect
+    order."""
+    subs = F.array_distinct(F.transform("__all", lambda e: e["sub"]))
+    return codebook.agg(
+        F.array_sort(
+            F.collect_list(F.struct("sub", "cluster", "centroid"))
+        ).alias("__all")
+    ).select(
+        F.map_from_arrays(
+            subs,
+            F.transform(
+                subs,
+                lambda s: F.transform(
+                    F.filter("__all", lambda e: e["sub"] == s),
+                    lambda e: F.struct(
+                        e["cluster"].alias("cluster"), e["centroid"].alias("centroid")
+                    ),
+                ),
+            ),
+        ).alias("__cb")
     )
 
 
@@ -141,6 +151,103 @@ def pq_subvectors(
     )
 
 
+def _assign(pts: DataFrame, cb_map: DataFrame) -> DataFrame:
+    """(id, sub, cluster, d, sx): each subvector's nearest centroid in the
+    one-row codebook map and its squared distance ``d``.
+
+    Nearest-centroid assignment as a pure expression over the broadcast
+    map row: no join and no keyed argmin exchange (guide §2.4) — the
+    ordering is the ``min(struct(d, c))`` of a groupBy argmin.  A NULL
+    best (sub missing from a malformed codebook) drops out, as a
+    broadcast join's non-match would."""
+    return (
+        pts.crossJoin(F.broadcast(cb_map))
+        .withColumn("__best", _nearest_code("sx"))
+        .filter(F.col("__best").isNotNull())
+        .select(
+            "id",
+            "sub",
+            F.col("__best.c").alias("cluster"),
+            F.col("__best.d").alias("d"),
+            "sx",
+        )
+    )
+
+
+def _update(assigned: DataFrame) -> DataFrame:
+    """(sub, cluster, centroid): the exact centroid update — per-(sub,
+    cluster, dim) DECIMAL(27,18) sums, mean = ONE double division of the
+    exact sum, so the result is order-free under any partitioning.
+    Clusters no point chose drop out."""
+    cells = assigned.select("sub", "cluster", F.posexplode("sx").alias("dim", "v"))
+    return (
+        cells.groupBy("sub", "cluster", "dim")
+        .agg(
+            F.sum(F.col("v").cast("decimal(27,18)")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .withColumn("mn", F.col("s").cast("double") / F.col("n"))
+        .groupBy("sub", "cluster")
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "mn"))).alias("cells"))
+        .select(
+            "sub",
+            "cluster",
+            F.transform(F.col("cells"), lambda c: c.getField("mn")).alias("centroid"),
+        )
+    )
+
+
+def pq_fit(
+    embeddings: DataFrame,
+    m: int = 4,
+    k: int = 16,
+    iters: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, DataFrame]:
+    """The one Lloyd's k-means loop on the exact lane, per subspace →
+    (codebook, assignment).
+
+    ``codebook`` is (sub, cluster, centroid array<double>) — what
+    ``pq_train`` returns; ``assignment`` is (id, sub, cluster, d, sx),
+    every subvector against that final codebook (lazy: it costs nothing
+    unless read).  Plain k-means is ``m=1``.
+
+    All ``m`` subspaces train in the SAME DataFrame pass — ``sub`` is
+    just another grouping key — so the iteration count, not m, sets the
+    number of Spark jobs.  Init: the k lowest-id vectors' subvectors
+    per subspace (reproducible across runs/partitionings).  Each round
+    assigns (``_assign``, ties toward the lower cluster id) and updates
+    (``_update``, empty clusters drop out), and materializes the
+    one-row codebook map the next round broadcasts, so iters don't
+    stack plans.
+    """
+    pts = materialize(
+        pq_subvectors(embeddings, m, id_col, vec_col),
+        "PQ subvectors: read by every training round",
+    )
+    w = Window.partitionBy("sub").orderBy("id")
+    init = (
+        pts.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(
+            "sub",
+            (F.col("rn") - 1).cast("long").alias("cluster"),
+            F.col("sx").alias("centroid"),
+        )
+    )
+    cb_map = materialize(_codebook_map(init), "PQ initial codebook")
+    for _ in range(iters):
+        cb_map = materialize(
+            _codebook_map(_update(_assign(pts, cb_map))),
+            "PQ codebook: read by the next round's assignment",
+        )
+    codebook = cb_map.select(F.explode("__cb").alias("sub", "cell")).select(
+        "sub", F.inline("cell")
+    )
+    return codebook, _assign(pts, cb_map)
+
+
 def pq_train(
     embeddings: DataFrame,
     m: int = 4,
@@ -150,66 +257,8 @@ def pq_train(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-subspace Lloyd's k-means on the exact lane → codebook
-    (sub, cluster, centroid array<double>).
-
-    All ``m`` subspaces train in the SAME DataFrame pass — ``sub`` is
-    just another grouping key — so the iteration count, not m, sets the
-    number of Spark jobs.  Init: the k lowest-id vectors' subvectors
-    per subspace (reproducible across runs/partitionings).  Update:
-    per-(sub, cluster, dim) DECIMAL(27,18) sums, mean = ONE double
-    division of the exact sum (order-free).  Assignment ties break
-    toward the lower cluster id; empty clusters drop out.  Each round's
-    codebook is materialized, so iters don't stack plans.
-    """
-    pts = materialize(
-        pq_subvectors(embeddings, m, id_col, vec_col),
-        "PQ subvectors: read by every training round",
-    )
-    w = Window.partitionBy("sub").orderBy("id")
-    cents = materialize(
-        pts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            "sub",
-            (F.col("rn") - 1).cast("long").alias("cluster"),
-            F.col("sx").alias("centroid"),
-        ),
-        "PQ initial codebook",
-    )
-    for _ in range(iters):
-        # nearest-centroid assignment as a pure expression over the
-        # one-row codebook map: the old broadcast-join + groupBy(id,
-        # sub) argmin shuffled every subvector once per iteration just
-        # to keep one row per point — the argmin needs no exchange at
-        # all (guide §2.4); ordering is the identical min(struct(d, c))
-        assigned = (
-            pts.crossJoin(F.broadcast(_codebook_map(cents)))
-            .withColumn("__best", _nearest_code("sx"))
-            # NULL __best (sub missing from a malformed codebook) drops
-            # out exactly like the old broadcast join's non-match
-            .filter(F.col("__best").isNotNull())
-            .select("id", "sub", F.col("__best.c").alias("cluster"), "sx")
-        )
-        cells = assigned.select("sub", "cluster", F.posexplode("sx").alias("dim", "v"))
-        cents = materialize(
-            cells.groupBy("sub", "cluster", "dim")
-            .agg(
-                F.sum(F.col("v").cast("decimal(27,18)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .withColumn("mn", F.col("s").cast("double") / F.col("n"))
-            .groupBy("sub", "cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "mn"))).alias("cells"))
-            .select(
-                "sub",
-                "cluster",
-                F.transform(F.col("cells"), lambda c: c.getField("mn")).alias(
-                    "centroid"
-                ),
-            ),
-            "PQ codebook: read by the next round's assignment",
-        )
-    return cents
+    (sub, cluster, centroid array<double>); see ``pq_fit``."""
+    return pq_fit(embeddings, m, k, iters, id_col, vec_col)[0]
 
 
 def pq_encode(
@@ -223,16 +272,10 @@ def pq_encode(
 
     One pure-expression pass over the corpus's subvectors with the
     m·k-row codebook folded into a single broadcast map row — a single
-    linear scan, zero shuffle and zero keyed argmin (the per-row
-    ``array_min`` replays the old min(struct) ordering exactly)."""
+    linear scan, zero shuffle and zero keyed argmin."""
     pts = pq_subvectors(embeddings, m, id_col, vec_col)
-    return (
-        pts.crossJoin(F.broadcast(_codebook_map(codebook)))
-        .withColumn("__best", _nearest_code("sx"))
-        # NULL __best (sub missing from a malformed codebook) drops out
-        # exactly like the old broadcast join's non-match
-        .filter(F.col("__best").isNotNull())
-        .select("id", "sub", F.col("__best.c").alias("code"))
+    return _assign(pts, _codebook_map(codebook)).select(
+        "id", "sub", F.col("cluster").alias("code")
     )
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .materialize import materialize
+from .pq import pq_fit
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -411,104 +412,6 @@ def embedding_neardup_topk(
     )
 
 
-def assign_clusters(
-    embeddings: DataFrame,
-    cents: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the centroid table, score every
-    row against all k centroids in one JVM pass, arg-min by (distance,
-    cluster) struct — deterministic under ties.  Adds ``cluster``."""
-    cand = embeddings.crossJoin(
-        F.broadcast(cents.select(F.col("cluster").alias("__c"), "centroid"))
-    ).withColumn(
-        "__dist",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec_col),
-                    F.col("centroid"),
-                    lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ),
-    )
-    best = F.min(F.struct(F.col("__dist").alias("d"), F.col("__c").alias("c")))
-    assigned = (
-        cand.groupBy(id_col)
-        .agg(best.getField("c").alias("cluster"))
-    )
-    return embeddings.join(assigned, id_col)
-
-
-def kmeans_train(
-    embeddings: DataFrame,
-    k: int = 8,
-    max_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tol: float = 1e-6,
-) -> DataFrame:
-    """Lloyd's k-means on a DataFrame — the IVF coarse-quantizer trainer.
-
-    Deterministic init (k rows with the smallest ids — reproducible across
-    runs and partitionings, unlike sampling).  Each iteration: broadcast
-    k×dim centroids, one assignment pass, one (cluster × dim)-cell shuffle
-    to re-average (``centroids_by``).  Converges when no assignment moves
-    more than ``tol`` in centroid space; lineage is truncated per round.
-    Returns (cluster, centroid, n_points).
-    """
-    # explicit schema: toDF's type inference CANNOT_DETERMINE_TYPE on an
-    # empty corpus (degenerate-corpus sweep finding) — an empty input
-    # trains an empty centroid table instead of crashing
-    init = embeddings.sparkSession.createDataFrame(
-        embeddings.orderBy(id_col)
-        .limit(k)
-        .select(F.col(vec_col).alias("centroid"))
-        .rdd.zipWithIndex()
-        .map(lambda t: (t[1], [float(x) for x in t[0].centroid])),
-        "cluster bigint, centroid array<double>",
-    )
-    cents = materialize(init, "k-means initial centroids")
-    for _ in range(max_iter):
-        assigned = assign_clusters(
-            embeddings.drop("cluster"), cents, id_col, vec_col
-        )
-        new_cents = materialize(
-            centroids_by(assigned, "cluster", vec_col),
-            "k-means centroids: read by the shift check and the next round",
-        )
-        moved = (
-            new_cents.join(cents.withColumnRenamed("centroid", "old"), "cluster")
-            .withColumn(
-                "shift",
-                F.aggregate(
-                    F.zip_with(
-                        "centroid", "old", lambda a, b: (a - b) * (a - b)
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-            )
-            .agg(F.max("shift"))
-            .collect()[0][0]
-        )
-        cents = new_cents
-        if moved is not None and moved < tol * tol:
-            break
-    sizes = (
-        # same drop('cluster') guard as the loop: an input that already
-        # carries a 'cluster' column must not collide with the assignment
-        assign_clusters(embeddings.drop("cluster"), cents, id_col, vec_col)
-        .groupBy("cluster")
-        .agg(F.count("*").alias("n_points"))
-    )
-    return cents.join(sizes, "cluster", "left").fillna(0, subset=["n_points"])
-
-
 def kmeans_train_exact(
     embeddings: DataFrame,
     k: int = 8,
@@ -519,92 +422,29 @@ def kmeans_train_exact(
     """Lloyd's k-means on the EXACT lane: bit-deterministic under any
     partitioning and fully SQL-replayable (q_kmeans_oracle).
 
-    The one source of nondeterminism in distributed k-means is the
-    centroid update — a float mean accumulates in partition order.  Here
-    per-(cluster, dim) sums go through DECIMAL(27,18) (exact, order-free)
-    and the mean is ONE double division of the exact sum; everything else
-    (distances, argmin) is per-row double math with a fixed fold order,
-    identical in any engine.  Init = the k lowest-id vectors; ties on
-    distance break toward the lower cluster id; empty clusters drop out
-    (both rules replicated by the oracle).
+    The trainer is ``pq.pq_fit`` with one subspace: k lowest-id init,
+    ties toward the lower cluster id, DECIMAL(27,18)-summed centroid
+    updates (the one order-dependent float accumulation of distributed
+    k-means, made exact), empty clusters dropping out.  NULL and empty
+    vectors take no part.
 
     Returns (cluster, n_points, centroid_norm, inertia): sizes, the L2
     norm of each final centroid, and the decimal-summed within-cluster
     squared-distance total — the convergence scorecard of the trainer.
     """
-    emb = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda v: v.cast("double")).alias("x"),
-    )
-    w = Window.orderBy("id")
-    cents = materialize(
-        emb.orderBy("id")
-        .limit(k)
-        .select(
-            (F.row_number().over(w) - 1).cast("long").alias("cluster"),
-            F.col("x").alias("centroid"),
-        ),
-        "exact k-means initial centroids",
-    )
-    dist = F.aggregate(
-        F.zip_with("x", "centroid", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    assigned = None
-    for _ in range(iters):
-        scored = emb.crossJoin(F.broadcast(cents)).withColumn("d", dist)
-        assigned = (
-            scored.groupBy("id")
-            .agg(
-                F.min(
-                    F.struct(F.col("d").alias("d"), F.col("cluster").alias("c"))
-                ).alias("best"),
-                F.first("x").alias("x"),
-            )
-            .select("id", F.col("best.c").alias("cluster"), F.col("best.d").alias("d"), "x")
-        )
-        cells = assigned.select("cluster", F.posexplode("x").alias("dim", "v"))
-        cents = materialize(
-            cells.groupBy("cluster", "dim")
-            .agg(
-                F.sum(F.col("v").cast("decimal(27,18)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .withColumn("m", F.col("s").cast("double") / F.col("n"))
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("cells"))
-            .select(
-                "cluster",
-                F.transform(F.col("cells"), lambda c: c.getField("m")).alias("centroid"),
-            ),
-            "exact k-means centroids: read by the next round's assignment",
-        )
-    # final pass: re-assign against the last centroids so sizes/inertia
-    # describe the returned model, then summarize
-    scored = emb.crossJoin(F.broadcast(cents)).withColumn("d", dist)
-    assigned = (
-        scored.groupBy("id")
-        .agg(
-            F.min(F.struct(F.col("d").alias("d"), F.col("cluster").alias("c"))).alias("best")
-        )
-        .select("id", F.col("best.c").alias("cluster"), F.col("best.d").alias("d"))
-    )
-    norm = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.transform("centroid", lambda v: v * v), F.lit(0.0), lambda a, v: a + v
-            )
-        ),
-        6,
-    )
+    cents, assigned = pq_fit(embeddings, 1, k, iters, id_col, vec_col)
     stats = assigned.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_points"),
         F.round(F.sum(F.col("d").cast("decimal(27,12)")), 4).cast("double").alias("inertia"),
     )
     return (
         cents.join(stats, "cluster")
-        .select("cluster", "n_points", norm.alias("centroid_norm"), "inertia")
+        .select(
+            "cluster",
+            "n_points",
+            F.round(l2_norm(F.col("centroid")), 6).alias("centroid_norm"),
+            "inertia",
+        )
     )
 
 

@@ -32,7 +32,7 @@ from .operators.joins import anti_join, broadcast_dim_join, semi_join
 from .operators.transforms import dedup_exact
 from .paths import scratch
 from .plans import dims, star, warehouse
-from .registry import ORACLE, QUERIES, register  # noqa: F401  (ORACLE/QUERIES re-exported)
+from .registry import ORACLE, QUERIES, register, sql_query  # noqa: F401  (ORACLE/QUERIES re-exported)
 from .sources.writers import write_partitioned_parquet
 from .sql import PRICING_SUMMARY_SQL, SHIPPING_PRIORITY_SQL
 from .tables import (
@@ -1016,24 +1016,6 @@ GROUP BY token ORDER BY n DESC, token LIMIT 20
 """
 
 
-def q_sql_pricing_summary(spark, sf_dir):
-    """§3.3 ad-hoc SQL layer: raw SQL through Spark's parser (TPC-H Q1
-    shape).  The oracle is the SAME query string — dialect-neutral SQL."""
-    from .sql import PRICING_SUMMARY_SQL, register_views, run_sql
-
-    register_views(spark, sf_dir, tables=("lineitem",))
-    return run_sql(spark, PRICING_SUMMARY_SQL)
-
-
-def q_sql_shipping_priority(spark, sf_dir):
-    """§3.3 ad-hoc SQL layer: join + agg + top-10 (TPC-H Q3 shape), same
-    string on both engines."""
-    from .sql import SHIPPING_PRIORITY_SQL, register_views, run_sql
-
-    register_views(spark, sf_dir, tables=("lineitem", "orders", "customer"))
-    return run_sql(spark, SHIPPING_PRIORITY_SQL)
-
-
 def q_centroids(spark, sf_dir):
     """Per-cluster embedding centroids as (cluster, dim, mean) cells — the
     IVF coarse-quantizer build, oracle-checked (the array re-assembly step
@@ -1774,8 +1756,22 @@ register(q_json_extract, SQL_JSON_EXTRACT)
 register(q_salted_join, SQL_SALTED_JOIN, bench=False)
 register(q_word_count, SQL_WORD_COUNT)
 # the ad-hoc SQL layer's oracle is the very same dialect-neutral string
-register(q_sql_pricing_summary, PRICING_SUMMARY_SQL, bench=False)
-register(q_sql_shipping_priority, SHIPPING_PRIORITY_SQL, bench=False)
+sql_query(
+    "q_sql_pricing_summary",
+    PRICING_SUMMARY_SQL,
+    ("lineitem",),
+    """§3.3 ad-hoc SQL layer: raw SQL through Spark's parser (TPC-H Q1
+    shape).  The oracle is the SAME query string — dialect-neutral SQL.""",
+    bench=False,
+)
+sql_query(
+    "q_sql_shipping_priority",
+    SHIPPING_PRIORITY_SQL,
+    ("lineitem", "orders", "customer"),
+    """§3.3 ad-hoc SQL layer: join + agg + top-10 (TPC-H Q3 shape), same
+    string on both engines.""",
+    bench=False,
+)
 register(q_centroids, SQL_CENTROIDS, bench=False)
 register(q_normalize_embeddings, SQL_NORMALIZE_EMBEDDINGS, bench=False)
 register(q_winnow_fingerprints, SQL_WINNOW_FINGERPRINTS)

@@ -347,12 +347,12 @@ register(q_multimodal_framesample, SQL_MULTIMODAL_FRAMESAMPLE)
 
 def q_kmeans_oracle(spark, sf_dir):
     """Lloyd's k-means (k=8, 3 iterations) on the exact lane
-    (operators/similarity.kmeans_train_exact): decimal-summed centroid
-    updates remove the one order-dependent float accumulation in
-    distributed k-means, so the whole trainer — init, assignment, update,
-    final model stats — is replayed by a generated chained-CTE oracle.
-    The production trainer (q_kmeans_train) keeps float means + fixpoint
-    stopping; this is its verification twin."""
+    (operators/similarity.kmeans_train_exact — the package's one loop,
+    operators/pq.pq_fit, at m=1): decimal-summed centroid updates remove
+    the one order-dependent float accumulation in distributed k-means,
+    so the whole trainer — init, assignment, update, final model stats —
+    is replayed by a generated chained-CTE oracle.  q_kmeans_train runs
+    the same trainer against a bounds oracle."""
     from .operators.similarity import kmeans_train_exact
 
     emb = _t(spark, sf_dir, "embeddings")

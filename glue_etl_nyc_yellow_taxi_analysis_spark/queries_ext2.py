@@ -21,7 +21,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .paths import scratch
-from .registry import register
+from .registry import register, sql_query
 from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
 
@@ -726,19 +726,6 @@ ORDER BY supp_nation, cust_nation, l_year
 """
 
 
-def q_sql_volume_shipping(spark, sf_dir):
-    """§3.3 ad-hoc SQL: bidirectional two-nation trade volume by year
-    (TPC-H Q7 shape) — the fact shuffles once for orders⋈lineitem; both
-    nation joins broadcast.  Oracle is the same string."""
-    from .sql import register_views, run_sql
-
-    register_views(
-        spark, sf_dir,
-        tables=("supplier", "lineitem", "orders", "customer", "nation"),
-    )
-    return run_sql(spark, VOLUME_SHIPPING_SQL)
-
-
 PROMO_REVENUE_SQL = f"""
 SELECT CAST(ROUND(
          100.0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
@@ -757,15 +744,6 @@ WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 """
 
 
-def q_sql_promo_revenue(spark, sf_dir):
-    """§3.3 ad-hoc SQL: promo revenue share (TPC-H Q14 shape) — decimal
-    sums, one double division at the end.  Oracle is the same string."""
-    from .sql import register_views, run_sql
-
-    register_views(spark, sf_dir, tables=("lineitem", "part"))
-    return run_sql(spark, PROMO_REVENUE_SQL)
-
-
 DISCOUNTED_REVENUE_SQL = f"""
 SELECT CAST(ROUND({_REV}, 2) AS DOUBLE) AS revenue,
        COUNT(*) AS n_lines
@@ -778,17 +756,6 @@ WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
    OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 35
        AND l.l_quantity BETWEEN 20 AND 40)
 """
-
-
-def q_sql_discounted_revenue(spark, sf_dir):
-    """§3.3 ad-hoc SQL: disjunctive multi-band predicate revenue (TPC-H
-    Q19 shape).  The OR-of-ANDs stays a single scan+join — Catalyst keeps
-    the common join key equi (hashable) and evaluates the disjunction as
-    a post-join residual.  Oracle is the same string."""
-    from .sql import register_views, run_sql
-
-    register_views(spark, sf_dir, tables=("lineitem", "part"))
-    return run_sql(spark, DISCOUNTED_REVENUE_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -934,6 +901,29 @@ LIMIT 20
 
 register(q_bigram_topk, SQL_BIGRAM_TOPK)
 
-register(q_sql_volume_shipping, VOLUME_SHIPPING_SQL)
-register(q_sql_promo_revenue, PROMO_REVENUE_SQL, bench=False)
-register(q_sql_discounted_revenue, DISCOUNTED_REVENUE_SQL, bench=False)
+sql_query(
+    "q_sql_volume_shipping",
+    VOLUME_SHIPPING_SQL,
+    ("supplier", "lineitem", "orders", "customer", "nation"),
+    """§3.3 ad-hoc SQL: bidirectional two-nation trade volume by year
+    (TPC-H Q7 shape) — the fact shuffles once for orders⋈lineitem; both
+    nation joins broadcast.  Oracle is the same string.""",
+)
+sql_query(
+    "q_sql_promo_revenue",
+    PROMO_REVENUE_SQL,
+    ("lineitem", "part"),
+    """§3.3 ad-hoc SQL: promo revenue share (TPC-H Q14 shape) — decimal
+    sums, one double division at the end.  Oracle is the same string.""",
+    bench=False,
+)
+sql_query(
+    "q_sql_discounted_revenue",
+    DISCOUNTED_REVENUE_SQL,
+    ("lineitem", "part"),
+    """§3.3 ad-hoc SQL: disjunctive multi-band predicate revenue (TPC-H
+    Q19 shape).  The OR-of-ANDs stays a single scan+join — Catalyst keeps
+    the common join key equi (hashable) and evaluates the disjunction as
+    a post-join residual.  Oracle is the same string.""",
+    bench=False,
+)

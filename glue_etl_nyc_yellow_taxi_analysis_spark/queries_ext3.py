@@ -521,19 +521,17 @@ ORDER BY m
 """
 
 
-def q_sql_recursive_months(spark, sf_dir):
+sql_query(
+    "q_sql_recursive_months",
+    RECURSIVE_MONTHS_SQL,
+    ("orders",),
     """WITH RECURSIVE month spine (Spark 4 recursive CTE) left-joined to
     order counts — the SQL-native calendar densification (the DataFrame
     twin is q_gap_fill's sequence()).  The recursion is driver-tiny (80
     rows); the fact side aggregates on the join key, so the month spine
-    broadcasts.  Oracle is the same string (DuckDB WITH RECURSIVE)."""
-    from .sql import register_views, run_sql
-
-    register_views(spark, sf_dir, tables=("orders",))
-    return run_sql(spark, RECURSIVE_MONTHS_SQL)
-
-
-register(q_sql_recursive_months, RECURSIVE_MONTHS_SQL, bench=False)
+    broadcasts.  Oracle is the same string (DuckDB WITH RECURSIVE).""",
+    bench=False,
+)
 
 
 def q_xml_roundtrip(spark, sf_dir):

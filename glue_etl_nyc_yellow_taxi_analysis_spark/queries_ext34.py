@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text
-from .registry import register
+from .registry import register, sql_query
 from .tables import DSUM_SQL, TOKS_SQL, _t, dsum
 
 
@@ -179,13 +179,12 @@ ORDER BY ALL
 """
 
 
-def q_sql_group_by_all(spark, sf_dir):
+sql_query(
+    "q_sql_group_by_all",
+    SQL_GROUP_BY_ALL,
+    ("lineitem",),
     """The ONE SQL string runs verbatim on both engines (GROUP BY ALL /
     ORDER BY ALL are dialect-shared with DuckDB): shipping-year rollup
     with the decimal-routed revenue sum.  Registered as a temp view +
-    spark.sql, the reference's Athena-style front door."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(SQL_GROUP_BY_ALL)
-
-
-register(q_sql_group_by_all, SQL_GROUP_BY_ALL)
+    spark.sql, the reference's Athena-style front door.""",
+)

@@ -18,8 +18,9 @@ index:
   3. assign — score only the reps INSIDE the probed cells:
      O(n·nprobe·k/|cells|) instead of O(n·k) — the per-vector work
      drops by |cells|/nprobe, and with a trained coarse quantizer
-     (``similarity.kmeans_train``) whose |cells| grows ~√k the
-     assignment is O(n·√k): the standard two-level production shape.
+     (``pq.pq_train`` at m=1, the package's k-means) whose |cells|
+     grows ~√k the assignment is O(n·√k): the standard two-level
+     production shape.
      The swap is mechanical (routers := trained centroids); labels keep
      this lane fully SQL-replayable.
   4. prune — unchanged from q_semdedup: within each assigned

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from .operators.materialize import materialize
 from .paths import scratch
-from .registry import register
+from .registry import register, sql_query
 from .tables import DSUM_SQL, _t, dsum
 
 
@@ -553,19 +553,17 @@ FROM nation n, LATERAL (
 """
 
 
-def q_sql_lateral_topn(spark, sf_dir):
+sql_query(
+    "q_sql_lateral_topn",
+    LATERAL_TOPN_SQL,
+    ("nation", "customer"),
     """§3.3 ad-hoc SQL: top-3 customers by balance per nation via a
     correlated LATERAL subquery (Spark 4 lateral join).  Catalyst
     decorrelates this to a ranked window under the hood — the same plan
     q_window_rank hand-writes — so declaring it in SQL costs nothing at
-    scale.  Oracle is the same string."""
-    from .sql import register_views, run_sql
-
-    register_views(spark, sf_dir, tables=("nation", "customer"))
-    return run_sql(spark, LATERAL_TOPN_SQL)
-
-
-register(q_sql_lateral_topn, LATERAL_TOPN_SQL, bench=False)
+    scale.  Oracle is the same string.""",
+    bench=False,
+)
 
 
 # --------------------------------------------------------------------------

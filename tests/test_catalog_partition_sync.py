@@ -25,7 +25,6 @@ pytestmark = pytest.mark.slow  # multi-session e2e; excluded from the driver-win
 import os
 import subprocess
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -86,8 +85,8 @@ def _run(script: str, work: str) -> str:
     return r.stdout
 
 
-def test_partition_catalog_sync_across_sessions():
-    work = tempfile.mkdtemp(prefix="sg_catsync_")
+def test_partition_catalog_sync_across_sessions(tmp_path):
+    work = str(tmp_path)
 
     out1 = _run(_STEP1, work)
     assert "WROTE1 10" in out1

@@ -11,15 +11,14 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_corpus_stats_cli(spark, sf_dir):
-    work = tempfile.mkdtemp(prefix="sg_stats_")
+def test_corpus_stats_cli(spark, sf_dir, tmp_path):
+    work = str(tmp_path)
     out = f"{work}/release"
     notify = f"{work}/state.jsonl"
     docs_path = f"{sf_dir}/documents.parquet"

@@ -13,13 +13,12 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_curate_corpus_cli(spark, sf_dir):
-    work = tempfile.mkdtemp(prefix="sg_curate_")
+def test_curate_corpus_cli(spark, sf_dir, tmp_path):
+    work = str(tmp_path)
     out = f"{work}/curated"
     notify = f"{work}/state.jsonl"
     r = subprocess.run(

@@ -30,7 +30,7 @@ _DRIVER_LOGIC_LANES = (
     "q_stream_sessions",      # watermark flush from max(ts)
     "q_bpe_merge_train",      # argmax .first() per iteration
     "q_bpe_apply",
-    "q_kmeans_train",         # centroid init toDF
+    "q_kmeans_train",         # training loop on an empty corpus
     "q_kmeans_oracle",
     "q_mmr_rerank",           # greedy loop over collected candidates
     "q_lsa_topic",            # norm divisions per half-step

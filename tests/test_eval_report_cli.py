@@ -11,15 +11,14 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 from glue_etl_nyc_yellow_taxi_analysis_spark.queries import QUERIES
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_eval_report_cli(spark, sf_dir):
-    work = tempfile.mkdtemp(prefix="sg_eval_")
+def test_eval_report_cli(spark, sf_dir, tmp_path):
+    work = str(tmp_path)
     out = f"{work}/report"
     notify = f"{work}/state.jsonl"
     docs_path = f"{sf_dir}/documents.parquet"

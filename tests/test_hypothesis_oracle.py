@@ -19,7 +19,6 @@ pytestmark = pytest.mark.slow  # multi-session e2e; excluded from the driver-win
 
 import os
 import shutil
-import tempfile
 
 import duckdb
 import pyarrow as pa
@@ -176,8 +175,8 @@ _EVENT_LANES = (
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(corpus=_events_corpus)
-def test_random_events_cross_engine_agreement(corpus):
-    d = tempfile.mkdtemp(prefix="sg_hyp_ev_")
+def test_random_events_cross_engine_agreement(tmp_path_factory, corpus):
+    d = str(tmp_path_factory.mktemp("sg_hyp_ev"))
     try:
         ev = pa.table(
             {
@@ -224,8 +223,8 @@ def test_random_events_cross_engine_agreement(corpus):
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(corpus=_corpus)
-def test_random_corpus_cross_engine_agreement(corpus):
-    d = tempfile.mkdtemp(prefix="sg_hyp_")
+def test_random_corpus_cross_engine_agreement(tmp_path_factory, corpus):
+    d = str(tmp_path_factory.mktemp("sg_hyp"))
     try:
         docs = pa.table(
             {

@@ -15,7 +15,6 @@ pytestmark = pytest.mark.slow  # multi-session e2e; excluded from the driver-win
 import os
 import subprocess
 import sys
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -27,8 +26,8 @@ def _props():
     return {"driver": DERBY}
 
 
-def test_jdbc_roundtrip_and_pushdown(spark, sf_dir):
-    db = tempfile.mkdtemp(prefix="sg_jdbc_") + "/db"
+def test_jdbc_roundtrip_and_pushdown(spark, sf_dir, tmp_path):
+    db = f"{tmp_path}/db"
     url = f"jdbc:derby:{db};create=true"
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
@@ -46,8 +45,8 @@ def test_jdbc_roundtrip_and_pushdown(spark, sf_dir):
     assert "PushedFilters" in plan and "o_orderstatus" in plan.split("PushedFilters")[1][:200]
 
 
-def test_jdbc_partitioned_parallel_read(spark, sf_dir):
-    db = tempfile.mkdtemp(prefix="sg_jdbc_") + "/db"
+def test_jdbc_partitioned_parallel_read(spark, sf_dir, tmp_path):
+    db = f"{tmp_path}/db"
     url = f"jdbc:derby:{db};create=true"
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
@@ -72,12 +71,12 @@ def test_jdbc_partitioned_parallel_read(spark, sf_dir):
     assert part.subtract(o).count() == 0
 
 
-def test_jdbc_warehouse_load_cli(spark):
+def test_jdbc_warehouse_load_cli(spark, tmp_path):
     """Job 1 (build star) then Job 2 with --jdbc-url against embedded
     Derby — the reference's exact two-job chain, warehouse included."""
     from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
 
-    work = tempfile.mkdtemp(prefix="sg_jdbc_cli_")
+    work = str(tmp_path)
     raw_dir = f"{work}/raw"
     _taxi_fixture(spark).coalesce(1).write.mode("overwrite").parquet(raw_dir)
     part = [f for f in os.listdir(raw_dir) if f.endswith(".parquet")][0]

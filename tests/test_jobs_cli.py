@@ -11,7 +11,6 @@ pytestmark = pytest.mark.slow  # multi-session e2e; excluded from the driver-win
 import os
 import subprocess
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -27,10 +26,10 @@ def _run(args, cwd):
     )
 
 
-def test_build_and_load_cli(spark):
+def test_build_and_load_cli(spark, tmp_path):
     from glue_etl_nyc_yellow_taxi_analysis_spark.tables import _taxi_fixture
 
-    work = tempfile.mkdtemp(prefix="sg_cli_")
+    work = str(tmp_path)
     raw_dir = f"{work}/raw"
     _taxi_fixture(spark).coalesce(1).write.mode("overwrite").parquet(raw_dir)
     part = [f for f in os.listdir(raw_dir) if f.endswith(".parquet")][0]

@@ -11,7 +11,6 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -20,8 +19,8 @@ from glue_etl_nyc_yellow_taxi_analysis_spark.operators import layout
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_maintain_layout_cli(spark):
-    work = tempfile.mkdtemp(prefix="sg_maintain_")
+def test_maintain_layout_cli(spark, tmp_path):
+    work = str(tmp_path)
     src = f"{work}/fragmented"
     out = f"{work}/maintained"
     notify = f"{work}/state.jsonl"
@@ -94,10 +93,10 @@ def test_maintain_layout_cli(spark):
     assert payloads[-1]["job"] == "maintain-layout"
 
 
-def test_maintain_layout_cli_failure_notifies(spark):
+def test_maintain_layout_cli_failure_notifies(spark, tmp_path):
     """A bad invocation must exit non-zero AND write a FAILED payload —
     the exit-code + notification contract schedulers depend on."""
-    work = tempfile.mkdtemp(prefix="sg_maintain_fail_")
+    work = str(tmp_path)
     notify = f"{work}/state.jsonl"
     r = subprocess.run(
         [

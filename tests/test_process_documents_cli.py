@@ -12,7 +12,6 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -25,8 +24,8 @@ from glue_etl_nyc_yellow_taxi_analysis_spark.jobs.process_documents import (
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_process_documents_cli(spark, sf_dir):
-    work = tempfile.mkdtemp(prefix="sg_docjob_")
+def test_process_documents_cli(spark, sf_dir, tmp_path):
+    work = str(tmp_path)
     out = f"{work}/out"
     notify = f"{work}/state.jsonl"
     r = subprocess.run(
@@ -58,6 +57,7 @@ def test_process_documents_cli(spark, sf_dir):
     assert table.filter(F.col("text_md5").isNull()).count() == 0
     states = [json.loads(l) for l in open(notify)]
     assert states[-1]["state"] == "SUCCEEDED"
+    assert states[-1]["job"] == "process-documents"
 
 
 def test_format_invariance_pdf_vs_docx(spark, sf_dir):

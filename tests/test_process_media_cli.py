@@ -12,7 +12,6 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -25,8 +24,8 @@ from glue_etl_nyc_yellow_taxi_analysis_spark.operators import multimodal
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_process_media_cli(spark, sf_dir):
-    work = tempfile.mkdtemp(prefix="sg_media_")
+def test_process_media_cli(spark, sf_dir, tmp_path):
+    work = str(tmp_path)
     out = f"{work}/out"
     notify = f"{work}/state.jsonl"
     docs_path = f"{sf_dir}/documents.parquet"
@@ -68,6 +67,7 @@ def test_process_media_cli(spark, sf_dir):
 
     state = [json.loads(l) for l in open(notify)]
     assert state[-1]["state"] == "SUCCEEDED"
+    assert state[-1]["job"] == "process-media"
 
 
 def test_container_invariance_and_fail_soft(spark, sf_dir):

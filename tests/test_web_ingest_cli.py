@@ -11,7 +11,6 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -24,8 +23,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _BUDGET = 150
 
 
-def test_web_ingest_cli(spark, sf_dir):
-    work = tempfile.mkdtemp(prefix="sg_web_")
+def test_web_ingest_cli(spark, sf_dir, tmp_path):
+    work = str(tmp_path)
     out = f"{work}/web"
     notify = f"{work}/state.jsonl"
     docs_path = f"{sf_dir}/documents.parquet"
